@@ -21,12 +21,15 @@ import graft.streaming.Batcher
   * inside foreachBatch is correct at any scale — the data files
   * themselves are read and written entirely on executors.
   *
-  * Shutdown note: `query.stop()` interrupts the micro-batch thread; an
-  * in-flight ledger append then surfaces as a logged TASK_WRITE_FAILED
-  * (InterruptedIOException). This is the designed teardown path, not
-  * data loss: the interrupted trigger never reaches the streaming
-  * commit log, so it replays on restart — the commit registry makes
-  * the JDBC load a no-op and the ledger append re-runs.
+  * Shutdown note: `query.stop()` interrupts the micro-batch thread. The
+  * interrupt (InterruptedException from the load's wait on its targets,
+  * InterruptedIOException from a ledger write) propagates out of the
+  * trigger rather than becoming an `error` batch outcome, so shutdown
+  * writes no error row, sends no failure notification and takes no
+  * auto-reprocess. This is the designed teardown path, not data loss:
+  * the interrupted trigger never reaches the streaming commit log, so
+  * it replays on restart — the commit registry makes the JDBC load a
+  * no-op and the ledger append re-runs.
   */
 object Pipeline {
 
@@ -120,10 +123,14 @@ object Pipeline {
     graft.streaming.CurationIngest.start(spark, docs, cfg,
       labeledDir, manifestDir, checkpointDir, triggerInterval, availableNow)
 
-  private def writeManifest(dir: String, batchId: String, json: String): String = {
-    val p = java.nio.file.Paths.get(dir, s"$batchId.json")
-    java.nio.file.Files.createDirectories(p.getParent)
-    java.nio.file.Files.writeString(p, json)
+  /** Through the ledger path's Hadoop `FileSystem`, like the ledger
+    * itself: a URI `ledgerDir` (`file:`, `hdfs:`, …) keeps its manifests
+    * beside its ledger. */
+  private def writeManifest(spark: SparkSession, dir: String, batchId: String,
+                            json: String): String = {
+    val p = new org.apache.hadoop.fs.Path(dir, s"$batchId.json")
+    val out = p.getFileSystem(spark.sparkContext.hadoopConfiguration).create(p, true)
+    try out.write(json.getBytes(java.nio.charset.StandardCharsets.UTF_8)) finally out.close()
     p.toString
   }
 
@@ -169,11 +176,12 @@ object Pipeline {
 
     // S5 manifest audit artifact; S12 failed-manifest copy on error
     val manifestJson = Loader.manifestJson(outcome.manifest)
-    val manifestPath = writeManifest(
+    val manifestPath = writeManifest(spark,
       s"${settings.ledgerDir}/manifests", cmd.batchId, manifestJson)
     val failedManifestPath =
       if (outcome.status == "error")
-        Some(writeManifest(s"${settings.ledgerDir}/failed-manifests", cmd.batchId, manifestJson))
+        Some(writeManifest(spark, s"${settings.ledgerDir}/failed-manifests", cmd.batchId,
+          manifestJson))
       else None
 
     val targetStatus = outcome.results.map(r =>

@@ -83,14 +83,15 @@ object Prefix {
 
   /** Filename admission filter with the reference's fail-open semantics
     * (`index.js:212-238`, SURVEY §7.5.3): a malformed regex or any
-    * evaluation error ⇒ treated as a MATCH (load rather than silently
-    * drop). `None` regex ⇒ match.
+    * non-fatal evaluation error ⇒ treated as a MATCH (load rather than
+    * silently drop). Fatal errors and interrupts propagate. `None`
+    * regex ⇒ match.
     */
   def filenameMatches(key: String, filterRegex: Option[String]): Boolean =
     filterRegex match {
       case None => true
       case Some(rx) =>
         try java.util.regex.Pattern.compile(rx).matcher(key).find()
-        catch { case _: Throwable => true }
+        catch { case scala.util.control.NonFatal(_) => true }
     }
 }

@@ -1,8 +1,15 @@
 package graft.ledger
 
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.hadoop.mapreduce.{Job, TaskAttemptID}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.encoders.encoderFor
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types.StructType
 import graft.core._
 
 /** Durable, queryable batch + processed-file ledger — the Spark-native
@@ -20,6 +27,17 @@ import graft.core._
   * per call (use [[appendFiles]] for a whole flush's file set), and
   * [[compact]] rewrites the log to latest-state rows so the file count
   * and the window-scan cost stay bounded over a long-lived pipeline.
+  *
+  * An append is control-plane work of a few rows, so it runs no Spark
+  * job: the driver writes one parquet file per `eventDate` under a
+  * hidden in-progress name and makes it visible with one atomic rename,
+  * keeping it near the milliseconds the reference's per-event DynamoDB
+  * write costs — a job's scheduling alone outweighs the rows. Only
+  * [[compact]] runs a Spark job. The writer is Spark's own
+  * `ParquetFileFormat` output writer, reached through
+  * `org.apache.spark.sql.execution.datasources`, so appended files carry
+  * the same parquet schema and footer metadata as a Spark write and the
+  * log reads back as one table whichever path wrote each file.
   *
   * Every append carries a monotonic `seq` (single-writer): `lastUpdate`
   * has millisecond grain, and transitions like reprocessing→reprocessed
@@ -83,24 +101,28 @@ class Ledger(spark: SparkSession, dir: String) {
   }
 
   /** A stop() that interrupts an in-flight append can leave the log dir
-    * existing but holding only uncommitted droppings (_temporary, no
-    * parquet footer anywhere). `spark.read.parquet` on such a dir throws
-    * UNABLE_TO_INFER_SCHEMA — from the CONSTRUCTOR's seq resume, which
-    * would brick pipeline restart (the exact recovery moment the
+    * existing but holding only uncommitted droppings (a hidden
+    * in-progress file, or `_temporary` from a log written by a Spark
+    * job). `spark.read.parquet` skips those and, finding no footer,
+    * throws UNABLE_TO_INFER_SCHEMA — from the CONSTRUCTOR's seq resume,
+    * which would brick pipeline restart (the exact recovery moment the
     * interrupted append makes inevitable). A log counts as present only
-    * when at least one committed parquet file exists; the listing is
-    * metadata-only and the log's file count is bounded by compaction.
+    * when at least one visible parquet file exists, hidden meaning a
+    * name starting with `.` or `_` as in Spark's file listing; the
+    * listing is metadata-only and the log's file count is bounded by
+    * compaction.
     */
   private def hasData(p: String): Boolean = {
-    val hp = new org.apache.hadoop.fs.Path(p)
+    val hp = new Path(p)
     val f = fs(hp)
     // listStatus recursion, not listFiles(recursive): the flat iterator
     // resolves child paths through the default FS and breaks on wrapper
     // filesystems (LedgerCrashSpec's fault-injecting scheme)
-    def anyParquet(d: org.apache.hadoop.fs.Path): Boolean =
+    def anyParquet(d: Path): Boolean =
       f.listStatus(d).exists { s =>
-        if (s.isFile) s.getPath.getName.endsWith(".parquet")
-        else s.getPath.getName != "_temporary" && anyParquet(s.getPath)
+        val name = s.getPath.getName
+        !name.startsWith(".") && !name.startsWith("_") &&
+          (if (s.isFile) name.endsWith(".parquet") else anyParquet(s.getPath))
       }
     f.exists(hp) && anyParquet(hp)
   }
@@ -110,7 +132,9 @@ class Ledger(spark: SparkSession, dir: String) {
 
   /** Hadoop signals most rename failures by returning false, not
     * throwing; a silent false here followed by a delete would destroy the
-    * only complete copy of the log, so every swap step must abort on it.
+    * only complete copy of the log, so every swap step must abort on it —
+    * and so must an append, whose events would otherwise be reported
+    * written while still invisible.
     */
   private def renameOrAbort(f: org.apache.hadoop.fs.FileSystem,
                             src: org.apache.hadoop.fs.Path,
@@ -169,18 +193,15 @@ class Ledger(spark: SparkSession, dir: String) {
     * deleteBatches) write one file, not one per doomed row.
     */
   def appendBatches(recs: Seq[BatchRecord], reason: String = ""): Unit =
-    if (recs.nonEmpty) {
-      recs.map { rec =>
-        BatchLedgerEvent(
-          rec.s3Prefix, rec.batchId, rec.status,
-          rec.entries.map(_.file), rec.entries.map(_.size), rec.sizeBytes,
-          rec.manifestFile.getOrElse(""), rec.targetStatus,
-          rec.errorMessage.getOrElse(""),
-          if (reason.nonEmpty) reason else rec.updateReason.getOrElse(""),
-          rec.lastUpdate, seqCounter.incrementAndGet(), today(rec.lastUpdate))
-      }.toDS().coalesce(1).write.mode(SaveMode.Append)
-        .partitionBy("eventDate").parquet(batchDir)
-    }
+    appendRows(batchDir, batchCodec, recs.map { rec =>
+      BatchLedgerEvent(
+        rec.s3Prefix, rec.batchId, rec.status,
+        rec.entries.map(_.file), rec.entries.map(_.size), rec.sizeBytes,
+        rec.manifestFile.getOrElse(""), rec.targetStatus,
+        rec.errorMessage.getOrElse(""),
+        if (reason.nonEmpty) reason else rec.updateReason.getOrElse(""),
+        rec.lastUpdate, seqCounter.incrementAndGet(), today(rec.lastUpdate))
+    })
 
   def appendFile(ev: ProcessedFile, atMs: Long): Unit = appendFiles(Seq(ev), atMs)
 
@@ -188,18 +209,10 @@ class Ledger(spark: SparkSession, dir: String) {
     * one file, not one file per entry (small-files control at scale).
     */
   def appendFiles(evs: Seq[ProcessedFile], atMs: Long): Unit =
-    if (evs.nonEmpty) {
-      evs.map(ev => FileLedgerEvent(ev.loadFile, ev.receiveDateTime, ev.timesReceived,
-          ev.batchId.getOrElse(""), ev.previousBatches, deleted = false,
-          seqCounter.incrementAndGet(), today(atMs)))
-        .toDS().coalesce(1).write.mode(SaveMode.Append)
-        .partitionBy("eventDate").parquet(fileDir)
-    }
+    appendRows(fileDir, fileCodec, evs.map(ev => FileLedgerEvent(ev.loadFile, ev.receiveDateTime,
+      ev.timesReceived, ev.batchId.getOrElse(""), ev.previousBatches, deleted = false,
+      seqCounter.incrementAndGet(), today(atMs))))
 
-  /** Tombstone one file's dedup/audit entry (processedFiles --delete,
-    * `processedFiles.js:30-53`): hidden from [[processedFiles]]
-    * immediately, physically dropped at [[compact]].
-    */
   /** Append committed (file, target) facts — one parquet file per call
     * (the [[appendFiles]] small-files rule). Written by the pipeline
     * only under `perTargetFileDedup`; no compaction applies (immutable
@@ -207,12 +220,58 @@ class Ledger(spark: SparkSession, dir: String) {
     */
   def appendTargetFiles(evs: Seq[(String, String, String, String)],
                         atMs: Long): Unit =
-    if (evs.nonEmpty) {
-      evs.map { case (file, url, table, batchId) =>
-        TargetFileLedgerEvent(file, url, table, batchId, atMs,
-          seqCounter.incrementAndGet(), today(atMs))
-      }.toDS().coalesce(1).write.mode(SaveMode.Append)
-        .partitionBy("eventDate").parquet(targetFileDir)
+    appendRows(targetFileDir, targetFileCodec, evs.map { case (file, url, table, batchId) =>
+      TargetFileLedgerEvent(file, url, table, batchId, atMs,
+        seqCounter.incrementAndGet(), today(atMs))
+    })
+
+  /** One log's row codec: the case-class encoder's generated serializer
+    * and its split into parquet data columns and the `eventDate`
+    * partition value. Built once per log, since building an encoder and
+    * generating its serializer costs more than writing a flush's rows.
+    */
+  private final class LogCodec[T: Encoder] {
+    private val enc = encoderFor(implicitly[Encoder[T]])
+    private val toRow = enc.createSerializer()
+    private val dateIdx = enc.schema.fieldIndex("eventDate")
+    private val dataFields = enc.schema.fields.indices.filter(_ != dateIdx)
+    val dataSchema: StructType = StructType(dataFields.map(enc.schema.fields(_)))
+
+    /** Data rows grouped by the encoded date's epoch day. Synchronized:
+      * the serializer reuses one output row. */
+    def encode(events: Seq[T]): Map[Int, Seq[InternalRow]] = synchronized {
+      events.map(toRow(_).copy()).groupBy(_.getInt(dateIdx)).map { case (day, rows) =>
+        day -> rows.map(r => InternalRow.fromSeq(
+          dataFields.map(i => r.get(i, enc.schema.fields(i).dataType))))
+      }
+    }
+  }
+  private lazy val batchCodec = new LogCodec[BatchLedgerEvent]
+  private lazy val fileCodec = new LogCodec[FileLedgerEvent]
+  private lazy val targetFileCodec = new LogCodec[TargetFileLedgerEvent]
+
+  /** Write `events` as one parquet file per `eventDate` partition on the
+    * driver. Each file is written under a hidden in-progress name inside
+    * its `eventDate=` directory, then renamed to a visible `part-` name:
+    * a crash before the rename leaves a file every reader ignores (see
+    * [[hasData]]) and the next [[compact]] drops. The directory name is
+    * formatted from the encoded date's epoch day — the value the column
+    * reads back as — never from the JVM time zone.
+    */
+  private def appendRows[T](dir: String, codec: LogCodec[T], events: Seq[T]): Unit =
+    if (events.nonEmpty) {
+      val job = Job.getInstance(spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+        .sessionState.newHadoopConf())
+      val writers = new ParquetFileFormat().prepareWrite(spark, job, Map.empty, codec.dataSchema)
+      val ctx = new TaskAttemptContextImpl(job.getConfiguration, new TaskAttemptID())
+      val name = s"part-00000-${java.util.UUID.randomUUID()}.c000${writers.getFileExtension(ctx)}"
+      codec.encode(events).foreach { case (day, rows) =>
+        val part = new Path(dir, s"eventDate=${java.time.LocalDate.ofEpochDay(day)}")
+        val inProgress = new Path(part, s".$name.inprogress")
+        val w = writers.newInstance(inProgress.toString, codec.dataSchema, ctx)
+        try rows.foreach(w.write) finally w.close()
+        renameOrAbort(fs(part), inProgress, new Path(part, name))
+      }
     }
 
   def targetFileLog: Dataset[TargetFileLedgerEvent] =
@@ -234,11 +293,13 @@ class Ledger(spark: SparkSession, dir: String) {
       .filter($"count" === files.size.toLong)
       .collect().map(r => (r.getString(0), r.getString(1))).toSet
 
+  /** Tombstone one file's dedup/audit entry (processedFiles --delete,
+    * `processedFiles.js:30-53`): hidden from [[processedFiles]]
+    * immediately, physically dropped at [[compact]].
+    */
   def tombstoneFile(loadFile: String, atMs: Long): Unit =
-    Seq(FileLedgerEvent(loadFile, atMs, 0, "", Seq.empty, deleted = true,
-        seqCounter.incrementAndGet(), today(atMs)))
-      .toDS().coalesce(1).write.mode(SaveMode.Append)
-      .partitionBy("eventDate").parquet(fileDir)
+    appendRows(fileDir, fileCodec, Seq(FileLedgerEvent(loadFile, atMs, 0, "", Seq.empty,
+      deleted = true, seqCounter.incrementAndGet(), today(atMs))))
 
   /** Pre-upgrade on-disk logs lack columns later schema versions added
     * (`seq`, `deleted`): backfill read-side defaults so an existing

@@ -210,7 +210,7 @@ object JdbcWriter {
       val (committed, rows) = retry() { commit(t, password, batchId, queryTimeoutSecs) }
       LoadResult(t.jdbcUrl, ok = true, rows, skipped = !committed, None)
     } catch {
-      case e: Throwable =>
+      case scala.util.control.NonFatal(e) =>
         LoadResult(t.jdbcUrl, ok = false, 0L, skipped = false,
           Some(Option(e.getMessage).getOrElse(e.getClass.getName)))
     }

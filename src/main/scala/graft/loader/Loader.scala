@@ -54,6 +54,8 @@ object Loader {
     // Any failure before/at the fan-out (e.g. a manifest file missing —
     // every entry is mandatory, as in the reference's manifests) must
     // yield an error outcome for the failBatch path, not an exception.
+    // An interrupt is not a failure of the batch: it propagates, so a
+    // stopped query replays the batch on restart.
     try {
       val df = Formats.read(spark, cfg, paths, schema)
 
@@ -82,7 +84,7 @@ object Loader {
       BatchLoadOutcome(cmd.batchId, cmd.s3Prefix,
         if (allOk) "complete" else "error", results, manifest)
     } catch {
-      case e: Throwable =>
+      case scala.util.control.NonFatal(e) =>
         BatchLoadOutcome(cmd.batchId, cmd.s3Prefix, "error",
           Seq(LoadResult("(read)", ok = false, 0L, skipped = false,
             Some(Option(e.getMessage).getOrElse(e.getClass.getName)))), manifest)

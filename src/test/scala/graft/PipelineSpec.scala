@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths}
 import java.sql.DriverManager
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
@@ -20,6 +21,14 @@ class PipelineSpec extends AnyFunSuite {
     .config("spark.sql.shuffle.partitions", "4")
     .config("spark.ui.enabled", "false")
     .getOrCreate()
+
+  /** Manifest files in `dir`, without the `.crc` siblings a checksummed
+    * Hadoop filesystem writes beside them. */
+  private def jsonFiles(dir: String): Seq[String] = {
+    val s = Files.list(Paths.get(dir))
+    try s.iterator().asScala.map(_.getFileName.toString).filter(_.endsWith(".json")).toSeq
+    finally s.close()
+  }
 
   test("files → batches → Derby rows → ledger complete → success notifications") {
     val root = Files.createTempDirectory("graft-pipe").toString
@@ -84,9 +93,7 @@ class PipelineSpec extends AnyFunSuite {
       assert(okTopic.received.forall(_.error.isEmpty))
       assert(notifier.received.isEmpty)
       // S5: every completed batch has a manifest audit artifact on disk
-      val manifests = java.nio.file.Files.list(
-        java.nio.file.Paths.get(s"$ledgerDir/manifests")).count()
-      assert(manifests == 3)
+      assert(jsonFiles(s"$ledgerDir/manifests").size == 3)
     } finally q.stop()
   }
 
@@ -133,9 +140,7 @@ class PipelineSpec extends AnyFunSuite {
       assert(failTopic.received.size == 1)
       assert(failTopic.received.forall(n =>
         n.s3Prefix == "bucket/inputb" && n.status == "error"))
-      val failed = java.nio.file.Files.list(
-        java.nio.file.Paths.get(s"$ledgerDir/failed-manifests")).count()
-      assert(failed >= 2)
+      assert(jsonFiles(s"$ledgerDir/failed-manifests").size >= 2)
       val ledger = new Ledger(spark, ledgerDir)
       assert(ledger.queryBatches("error").count() == 2)
     } finally q.stop()
@@ -180,6 +185,42 @@ class PipelineSpec extends AnyFunSuite {
       assert(okB.received.map(n => (n.s3Prefix, n.status)) == Seq(("bucket/inputb", "error")))
       assert(notifier.received.map(n => (n.s3Prefix, n.status)) == Seq(("bucket/inputb", "error")),
         "default notifier carries only the unconfigured failure leg")
+    } finally q.stop()
+  }
+
+  test("a file: URI ledger dir keeps the ledger and its manifests under that path") {
+    val root = Files.createTempDirectory("graft-pipeu").toString
+    val ledgerPath = Files.createTempDirectory("graft-pipeu-ledger").toString
+    val ledgerDir = s"file://$ledgerPath"
+    val ckpt = Files.createTempDirectory("graft-pipeu-ckpt").toString
+    Files.createDirectories(Paths.get(s"$root/bucket/input"))
+    val url = "jdbc:derby:memory:pipeuri;create=true"
+    val c0 = DriverManager.getConnection(url)
+    c0.createStatement().execute("CREATE TABLE uri_target(column_a INT)")
+    val cfg = LoadConfig(s3Prefix = "bucket/input", dataFormat = DataFormat.Csv,
+      batchSize = 1, targets = Seq(LoadTarget(url, "", "", "uri_target")))
+    Files.write(Paths.get(s"$root/bucket/input/u.csv"), "5\n".getBytes)
+
+    val q = Pipeline.start(spark,
+      Pipeline.Settings(root, ledgerDir, ckpt, triggerInterval = "1 second",
+        schemas = Map("uri_target" -> StructType(Seq(StructField("column_a", IntegerType))))),
+      Map("bucket/input" -> cfg), new CollectingNotifier)
+    try {
+      val ledger = new Ledger(spark, ledgerDir)
+      def complete(): Array[org.apache.spark.sql.Row] =
+        try ledger.queryBatches("complete").collect() catch { case _: Throwable => Array.empty }
+      val deadline = System.currentTimeMillis() + 90000
+      while (complete().isEmpty && System.currentTimeMillis() < deadline) Thread.sleep(500)
+      val batchId = complete().head.getAs[String]("batchId")
+      // the manifest lands beside the ledger, not in a relative
+      // directory named after the URI
+      assert(jsonFiles(s"$ledgerPath/manifests") == Seq(s"$batchId.json"))
+      assert(Files.readString(Paths.get(s"$ledgerPath/manifests/$batchId.json"))
+        .contains("bucket/input/u.csv"))
+      val manifestFile = ledger.describeBatch("bucket/input", batchId).collect().head
+        .getAs[String]("manifestFile")
+      assert(Paths.get(new java.net.URI(manifestFile)) ==
+        Paths.get(s"$ledgerPath/manifests/$batchId.json"))
     } finally q.stop()
   }
 }

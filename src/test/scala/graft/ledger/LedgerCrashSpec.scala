@@ -1,15 +1,17 @@
 package graft.ledger
 
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import graft.core._
 
 /** Hadoop signals most rename failures by RETURNING FALSE, not throwing.
-  * This local filesystem makes the two compaction-swap renames do exactly
-  * that (selected by name shape, so parquet write-commit renames inside
-  * the `.compact` dir are untouched), driving the real swap code through
-  * the failure mode the crash seams can't reach.
+  * This local filesystem makes the two compaction-swap renames, or an
+  * append's in-progress → visible rename, do exactly that (selected by
+  * name shape, so parquet write-commit renames inside the `.compact` dir
+  * are untouched), driving the real swap and append code through the
+  * failure mode the crash seams can't reach.
   */
 class FlakyRenameFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
   override def getScheme: String = "flaky"
@@ -21,6 +23,9 @@ class FlakyRenameFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
     FlakyRenameFileSystem.mode match {
       case "fail-aside" if aside => false
       case "fail-in" if in => false
+      // an append's in-progress file never made visible: the state a
+      // crash between its write and its rename leaves behind
+      case "fail-append" if src.getName.startsWith(".") => false
       case _ => super.rename(src, dst)
     }
   }
@@ -129,5 +134,89 @@ class LedgerCrashSpec extends AnyFunSuite {
     l.appendBatch(rec("b1", BatchStatus.Error, 2000)) // same ms as old latest
     assert(l.describeBatch("b/k", "b1").collect().head.getAs[String]("status") == "error",
       "new event wins the same-millisecond tie via seq > 0")
+  }
+
+  private def flakyDir(prefix: String): (String, java.nio.file.Path) = {
+    spark.sparkContext.hadoopConfiguration.set(
+      "fs.flaky.impl", classOf[FlakyRenameFileSystem].getName)
+    val local = Files.createTempDirectory(prefix)
+    ("flaky:" + local, local)
+  }
+
+  /** Files under `d` by name, hidden ones included. */
+  private def fileNames(d: java.nio.file.Path): Seq[String] =
+    if (!Files.exists(d)) Seq.empty
+    else {
+      val s = Files.walk(d)
+      try s.iterator().asScala.filter(Files.isRegularFile(_))
+        .map(_.getFileName.toString).toSeq
+      finally s.close()
+    }
+
+  test("appends on the flaky: scheme land one visible file per eventDate") {
+    val (dir, local) = flakyDir("graft-flaky-append")
+    val day = 86400000L
+    try {
+      // the swap-rename faults touch compaction only: appends still commit
+      for (mode <- Seq("off", "fail-aside", "fail-in")) {
+        FlakyRenameFileSystem.mode = mode
+        val l = new Ledger(spark, dir)
+        l.appendBatches(Seq(rec(s"$mode-a", BatchStatus.Open, 1000),
+          rec(s"$mode-b", BatchStatus.Open, 3 * day + 1000)))
+        l.appendFiles(Seq(ProcessedFile(s"b/k/$mode.csv", 1000, 1, Some(s"$mode-a"))), 1000)
+        l.tombstoneFile(s"b/k/$mode.csv", 2000)
+        l.appendTargetFiles(Seq((s"b/k/$mode.csv", "jdbc:x", "t", s"$mode-a")), 1000)
+      }
+      FlakyRenameFileSystem.mode = "off"
+      val l = new Ledger(spark, dir)
+      assert(l.currentBatches.count() == 6)
+      assert(l.fileLog.count() == 6 && l.processedFiles.count() == 0)
+      assert(l.targetFileLog.count() == 3)
+      // a two-day appendBatches call wrote one file into each day's dir
+      val batchDirs = Files.list(local.resolve("batches")).iterator().asScala
+        .filter(Files.isDirectory(_)).map(_.getFileName.toString).toSeq.sorted
+      assert(batchDirs == Seq(0L, 3 * day).map(ms =>
+        s"eventDate=${new java.sql.Date(ms).toLocalDate}"))
+      batchDirs.foreach { d =>
+        assert(fileNames(local.resolve("batches").resolve(d)).count(_.endsWith(".parquet")) == 3)
+      }
+      assert(fileNames(local).forall(n => !n.startsWith(".")), "no in-progress file left")
+    } finally FlakyRenameFileSystem.mode = "off"
+  }
+
+  test("an append cut between write and rename stays invisible until compaction drops it") {
+    def inProgress(local: java.nio.file.Path) =
+      fileNames(local.resolve("batches")).filter(_.startsWith("."))
+    try {
+      // alone in a fresh log: construction and reads see an empty log
+      val (fresh, freshLocal) = flakyDir("graft-flaky-cut0")
+      FlakyRenameFileSystem.mode = "fail-append"
+      intercept[java.io.IOException] {
+        new Ledger(spark, fresh).appendBatch(rec("b0", BatchStatus.Open, 500))
+      }
+      FlakyRenameFileSystem.mode = "off"
+      assert(inProgress(freshLocal).size == 1)
+      val f2 = new Ledger(spark, fresh) // seq resume must not read it
+      assert(f2.batchLog.count() == 0 && f2.currentBatches.count() == 0)
+
+      // beside committed events: seeded() uses seq 1..5
+      val (dir, local) = flakyDir("graft-flaky-cut")
+      val l = seeded(dir)
+      FlakyRenameFileSystem.mode = "fail-append"
+      val ex = intercept[java.io.IOException](l.appendBatch(rec("b3", BatchStatus.Open, 4000)))
+      assert(ex.getMessage.contains("rename"))
+      FlakyRenameFileSystem.mode = "off"
+      assert(inProgress(local).size == 1)
+      val l2 = new Ledger(spark, dir)
+      assert(l2.currentBatches.count() == 2)
+      assert(l2.describeBatch("b/k", "b3").count() == 0)
+      // the cut append took seq 6; a resume that read it would hand out 7
+      l2.appendBatch(rec("b3", BatchStatus.Open, 4000))
+      assert(l2.batchLog.filter(_.batchId == "b3").collect().map(_.seq).toSeq == Seq(6L))
+      l2.compact()
+      assert(inProgress(local).isEmpty)
+      val l3 = new Ledger(spark, dir)
+      assert(l3.currentBatches.count() == 3 && l3.processedFiles.count() == 2)
+    } finally FlakyRenameFileSystem.mode = "off"
   }
 }

@@ -1,6 +1,7 @@
 package graft.ledger
 
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import graft.core._
@@ -149,6 +150,68 @@ class LedgerOpsSpec extends AnyFunSuite {
       .map(_.next().toString).count(_.endsWith(".parquet"))
     assert(partFiles == 1, s"expected 1 part file for 20 entries, got $partFiles")
     assert(ledger.processedFiles.count() == 20)
+  }
+
+  test("ledger: a log mixing Spark-job appends and driver appends reads as one") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-mixed").toString
+    val day = 86400000L
+    val (d1, d2) = (1000L, 3 * day + 1000L)
+    def date(ms: Long) = new java.sql.Date(ms - ms % day)
+    def sparkAppend[T](ds: org.apache.spark.sql.Dataset[T], sub: String): Unit =
+      ds.coalesce(1).write.mode(org.apache.spark.sql.SaveMode.Append)
+        .partitionBy("eventDate").parquet(s"$dir/$sub")
+    // the fixture: events appended by a Spark job, as the log was written before
+    sparkAppend(Seq(
+      BatchLedgerEvent("b/k", "b1", "open", Seq("b/k/b1.csv"), Seq(10L), 10L, "",
+        Map.empty, "", "", d1, 1L, date(d1)),
+      BatchLedgerEvent("b/k", "b2", "open", Seq("b/k/b2.csv"), Seq(10L), 10L, "",
+        Map.empty, "", "", d2, 2L, date(d2))).toDS(), "batches")
+    sparkAppend(Seq(FileLedgerEvent("b/k/b1.csv", d1, 1, "b1", Seq.empty,
+      deleted = false, 3L, date(d1))).toDS(), "files")
+    def listing(sub: String): Map[String, Seq[java.nio.file.Path]] = {
+      val dirs = Files.list(java.nio.file.Paths.get(dir, sub)).iterator().asScala
+        .filter(Files.isDirectory(_)).toSeq
+      dirs.map(d => d.getFileName.toString -> Files.list(d).iterator().asScala
+        .filter(_.getFileName.toString.endsWith(".parquet")).toSeq.sorted).toMap
+    }
+    val sparkDirs = listing("batches").keySet
+
+    val ledger = new Ledger(spark, dir)
+    ledger.appendBatch(rec("b1", BatchStatus.Complete, at = d1 + 1))
+    ledger.appendBatch(rec("b2", BatchStatus.Error, at = d2 + 1))
+    ledger.appendFiles(Seq(ProcessedFile("b/k/b2.csv", d2, 1, Some("b2"))), d2)
+    // the driver appends joined Spark's own eventDate= directories
+    val after = listing("batches")
+    assert(after.keySet == sparkDirs && sparkDirs.size == 2)
+    assert(after.values.forall(_.size == 2))
+    assert(listing("files").keySet.size == 2)
+    // same parquet schema and footer metadata whichever path wrote a file
+    val conf = spark.sparkContext.hadoopConfiguration
+    def footer(p: java.nio.file.Path) = {
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(p.toUri), conf))
+      try {
+        val m = r.getFooter.getFileMetaData
+        (m.getSchema, m.getKeyValueMetaData.asScala.toMap)
+      } finally r.close()
+    }
+    after.values.foreach { files =>
+      val Seq(a, b) = files.map(footer)
+      assert(a == b)
+    }
+    // seq resumed past the fixture's events: appends win every tie
+    assert(ledger.batchLog.collect().map(_.seq).sorted.toSeq == Seq(1L, 2L, 4L, 5L))
+    val states = () => ledger.currentBatches.collect().map(r =>
+      r.getAs[String]("batchId") -> r.getAs[String]("status")).toMap
+    assert(states() == Map("b1" -> "complete", "b2" -> "error"))
+    assert(ledger.processedFiles.collect().map(_.getAs[String]("loadFile")).toSet ==
+      Set("b/k/b1.csv", "b/k/b2.csv"))
+    ledger.compact()
+    assert(ledger.batchLog.count() == 2)
+    assert(states() == Map("b1" -> "complete", "b2" -> "error"))
+    assert(ledger.processedFiles.count() == 2)
   }
 
   test("ledger: corrupted log surfaces an error instead of reading empty") {

@@ -119,6 +119,29 @@ class LoaderSpec extends AnyFunSuite {
     assert(queryLong("SELECT count(*) FROM rollback_t") == 2)
   }
 
+  test("an interrupted loadBatch propagates the interrupt instead of an error outcome") {
+    // query.stop() interrupts the micro-batch thread while it waits on
+    // the target fan-out: the batch must replay on restart, not be
+    // recorded (and notified, and auto-reprocessed) as an error
+    val entered = new java.util.concurrent.CountDownLatch(1)
+    val release = new java.util.concurrent.CountDownLatch(1)
+    @volatile var outcome: Either[Throwable, Loader.BatchLoadOutcome] = null
+    val loading = new Thread(() =>
+      outcome =
+        try Right(Loader.loadBatch(spark, cfg.copy(targets = Seq(target("interrupt_t"))),
+          cmd("ib1", Seq("sample0.csv")), root, Some(schema),
+          skipTarget = _ => { entered.countDown(); release.await(); true }))
+        catch { case e: Throwable => Left(e) })
+    loading.start()
+    try {
+      assert(entered.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      loading.interrupt()
+      loading.join(60000)
+    } finally release.countDown()
+    assert(!loading.isAlive)
+    assert(outcome.left.exists(_.isInstanceOf[InterruptedException]), s"got $outcome")
+  }
+
   test("multi-target fan-out: one bad target fails the batch, good target still commits (§7.5.7 wart)") {
     sql("CREATE TABLE fan_good(column_a INT, column_b INT, column_c INT)")
     val bad = LoadTarget("jdbc:derby:memory:nonexistent", "", "", "fan_bad")
