@@ -1,12 +1,13 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main — driver contract: one JSON line
   * `{"metric":...,"value":N,"unit":"sec","queries":{...},"sf":...}`.
   *
   * Each query is fully materialized through the noop sink (all columns,
   * no count-star shortcuts) and timed over `SPARK_GRAFT_BENCH_RUNS`
-  * (default 3) runs; the reported per-query number is the BEST run.
+  * (default 3) runs; the reported per-query number is the BEST run. A
+  * query that throws is left out of the total and listed, with its
+  * message, under `failed`; both summary lines carry `n_failed`.
   * Single-shot timings on a shared box are noise-dominated (external
   * load bursts inflated untouched queries 1.3-2× round-over-round);
   * best-of-N is the standard arbiter — min is robust to additive noise
@@ -25,20 +26,13 @@ object Bench {
     val loadBefore = java.lang.management.ManagementFactory
       .getOperatingSystemMXBean.getSystemLoadAverage
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt.max(1)
     // SPARK_GRAFT_BENCH_ONLY=q113_edit_pairs,q114_pagerank re-checks a
     // family without a full ~9-minute sweep (regression triage; the
     // committed artifact should still come from an unfiltered run)
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(GraftSession.envCpus)
     spark.sparkContext.setLogLevel("WARN")
     // warm up the session (codegen compiler, parquet footer reads) so the
     // first timed query doesn't absorb JVM startup
@@ -46,13 +40,13 @@ object Bench {
     SparkEntry.queries.headOption.foreach { case (_, fn) =>
       try fn(spark, sfDir).limit(1).collect() catch { case _: Throwable => () }
     }
-    def timeOnce(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      val t0 = System.nanoTime()
-      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] $name failed: ${e.getMessage}")
-      }
-      (System.nanoTime() - t0) / 1e9
+    // best of `runs`, or the failure: a failed query gets no time (it
+    // would add ~0 s and flatter the total) and is listed under "failed"
+    def timeQuery(name: String): Either[String, Double] = {
+      val r = BenchRef.bestOf(runs)(() =>
+        SparkEntry.queries(name)(spark, sfDir).write.format("noop").mode("overwrite").save())
+      r.left.foreach(m => System.err.println(s"[bench] $name failed: $m"))
+      r
     }
     // (load_before is sampled at the very top of main — see there)
     def loadAvg(): Double =
@@ -72,12 +66,14 @@ object Bench {
     // execution. ~12 gate-style queries' r10 numbers were flattered by
     // runs 2..N reading run 1's cache entry; their r11 numbers are the
     // true per-execution cost (see SURVEY round-11 notes).
-    val swept = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .map { case (name, fn) =>
+    val measured = SparkEntry.queries.keys.toSeq.sorted
+      .filter(name => only.forall(_.contains(name)))
+      .map { name =>
         spark.catalog.clearCache()
-        name -> (1 to runs).map(_ => timeOnce(name, fn)).min
+        name -> timeQuery(name)
       }
+    val swept = measured.collect { case (name, Right(s)) => name -> s }
+    val failed = measured.collect { case (name, Left(m)) => name -> m }
     // SELF-DEFENSE against external load bursts: pollution hits a
     // contiguous block of queries, so best-of-N within the block still
     // reads high. Any query whose best exceeds 2× its committed
@@ -107,17 +103,18 @@ object Bench {
         catch { case _: Throwable => None }
       }.getOrElse(Map.empty)
     }
-    val fnOf = SparkEntry.queries
     val (results, remeasured) = BenchRef.remeasurePass(swept, refQueries,
       retry = { name =>
         System.err.println(s"[bench] $name > 2x ref — re-measuring")
         spark.catalog.clearCache()
-        (1 to runs).map(_ => timeOnce(name, fnOf(name))).min
+        timeQuery(name).getOrElse(Double.PositiveInfinity)
       })
     val loadAfter = loadAvg()
     val qs = results.map { case (k, v) => "\"" + k + f"""\":$v%.3f""" }
       .mkString("{", ",", "}")
     val remeasuredJson = remeasured.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val failedJson = failed.map { case (k, m) => s"${Verify.jsonString(k)}:${Verify.jsonString(m)}" }
+      .mkString("{", ",", "}")
     val total = results.map(_._2).sum
     // field order matters for the driver's tail capture: stdout is
     // scraped from the END, so the summary scalars (metric/value/sf)
@@ -125,7 +122,7 @@ object Bench {
     // truncate the total and keep only the per-query map (JSON object
     // key order is semantically irrelevant to any parser)
     val line =
-      f"""{"queries":$qs,"load_before":$loadBefore%.2f,"load_after":$loadAfter%.2f,"runs":$runs,"remeasured":$remeasuredJson,"sf":"$sfDir","metric":"total","unit":"sec","value":$total%.3f}"""
+      f"""{"queries":$qs,"load_before":$loadBefore%.2f,"load_after":$loadAfter%.2f,"runs":$runs,"remeasured":$remeasuredJson,"failed":$failedJson,"sf":"$sfDir","metric":"total","unit":"sec","value":$total%.3f,"n_failed":${failed.size}}"""
     println(line)
     // SECOND, SHORT summary line (r16 finding): the driver scrapes a
     // ~2-3 KB stdout tail and at 205 queries the full contract line is
@@ -136,7 +133,7 @@ object Bench {
     // full per-query line above and the BENCH_LOCAL.json artifact are
     // unchanged, so nothing existing is removed or renamed.
     println(
-      f"""{"metric":"total","unit":"sec","value":$total%.3f,"sf":"$sfDir","runs":$runs,"n_queries":${results.size}}""")
+      f"""{"metric":"total","unit":"sec","value":$total%.3f,"sf":"$sfDir","runs":$runs,"n_queries":${results.size},"n_failed":${failed.size}}""")
     // first-class artifact: the driver's tail capture (2000 chars) can
     // truncate the head of the one-line contract once the query count
     // grows past ~75, losing q01/q02 and the total from the round

@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.control.NonFatal
+
 /** Reference-parsing + re-measure policy for [[Bench]]'s self-defense
   * pass, factored out so both pieces unit-test without a SparkSession.
   *
@@ -26,6 +28,21 @@ object BenchRef {
     m.findAllMatchIn(txt)
       .map(x => x.group(1) -> x.group(2).toDouble).toMap
   }
+
+  /** Best (minimum) seconds over `runs` executions of `once`, or the
+    * first failure's message (its first line). A failed query has no
+    * time: timing it anyway would add ~0 s and flatter the sweep total.
+    */
+  def bestOf(runs: Int)(once: () => Unit): Either[String, Double] =
+    try Right((1 to runs.max(1)).map { _ =>
+      val t0 = System.nanoTime()
+      once()
+      (System.nanoTime() - t0) / 1e9
+    }.min)
+    catch { case NonFatal(e) =>
+      Left(Option(e.getMessage).getOrElse(e.getClass.getName)
+        .linesIterator.nextOption().getOrElse(e.getClass.getName))
+    }
 
   /** A measured best above 2× its committed reference is presumed
     * load-polluted (pollution hits contiguous sweep blocks, so

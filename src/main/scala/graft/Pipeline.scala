@@ -106,23 +106,6 @@ object Pipeline {
       .start()
   }
 
-  /** The CURATION ingest on the same foreachBatch discipline as
-    * [[start]]'s loader: one streaming query drives micro-batches of
-    * raw documents through the composed chain — normalize → PII scrub
-    * → stored-index dedup admission → stored-LM quality gate → split
-    * → offset-continued packing — with all state in stored tables
-    * (dedup corpus, LM model, pack offsets). See
-    * [[graft.streaming.CurationIngest]] for the parity contract; this
-    * is the batch q204 pipeline's streaming dual on the ingest path.
-    */
-  def startCurationIngest(spark: SparkSession, docs: org.apache.spark.sql.DataFrame,
-      cfg: graft.streaming.CurationIngest.Config,
-      labeledDir: String, manifestDir: String, checkpointDir: String,
-      triggerInterval: String = "5 seconds",
-      availableNow: Boolean = false): StreamingQuery =
-    graft.streaming.CurationIngest.start(spark, docs, cfg,
-      labeledDir, manifestDir, checkpointDir, triggerInterval, availableNow)
-
   /** Through the ledger path's Hadoop `FileSystem`, like the ledger
     * itself: a URI `ledgerDir` (`file:`, `hdfs:`, …) keeps its manifests
     * beside its ledger. */

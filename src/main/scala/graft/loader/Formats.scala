@@ -1,6 +1,6 @@
 package graft.loader
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameReader, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import graft.core.{DataFormat, LoadConfig}
@@ -35,34 +35,41 @@ object Formats {
     */
   def read(spark: SparkSession, cfg: LoadConfig, paths: Seq[String],
            schema: Option[StructType], decrypt: Option[Decryptor] = None): DataFrame = {
-    decrypt match {
+    val df = decrypt match {
       case Some(d) => readEncrypted(spark, cfg, paths, schema, d)
       case None    => readPlain(spark, cfg, paths, schema)
     }
+    withShims(projectJsonPaths(df, cfg), cfg)
+  }
+
+  /** The reader both inputs share: target schema, the config's reader
+    * options, then the CSV directives. */
+  private def reader(spark: SparkSession, cfg: LoadConfig,
+                     schema: Option[StructType]): DataFrameReader = {
+    val r = spark.read
+    schema.foreach(r.schema)
+    cfg.readerOptions.foreach { case (k, v) => r.option(k, v) }
+    if (cfg.dataFormat == DataFormat.Csv)
+      r.option("delimiter", cfg.csvDelimiter)
+        .option("header", cfg.ignoreCsvHeader.toString)
+    r
   }
 
   private def readPlain(spark: SparkSession, cfg: LoadConfig, paths: Seq[String],
                         schema: Option[StructType]): DataFrame = {
-    val reader = spark.read
-    schema.foreach(reader.schema)
-    cfg.readerOptions.foreach { case (k, v) => reader.option(k, v) }
-    val df = cfg.dataFormat match {
-      case DataFormat.Csv =>
-        reader
-          .option("delimiter", cfg.csvDelimiter)
-          .option("header", cfg.ignoreCsvHeader.toString)
-          .csv(paths: _*)
-      case DataFormat.Json    => reader.json(paths: _*)
+    val r = reader(spark, cfg, schema)
+    cfg.dataFormat match {
+      case DataFormat.Csv  => r.csv(paths: _*)
+      case DataFormat.Json => r.json(paths: _*)
       case DataFormat.Avro =>
         // avro-core container reader (spark-avro module not in the distro);
         // the writer schema travels in each file's header, so the
         // target-table schema is applied as a projection afterwards.
         val raw = graft.sources.AvroReader.read(spark, paths)
         schema.map(st => raw.select(st.fieldNames.map(col).toSeq: _*)).getOrElse(raw)
-      case DataFormat.Parquet => reader.parquet(paths: _*)
-      case DataFormat.Orc     => reader.orc(paths: _*)
+      case DataFormat.Parquet => r.parquet(paths: _*)
+      case DataFormat.Orc     => r.orc(paths: _*)
     }
-    withShims(projectJsonPaths(df, cfg), cfg)
   }
 
   /** Encrypted-file path: binaryFile scan → per-file decrypt (+ gunzip
@@ -90,18 +97,8 @@ object Formats {
             } else plain0
           new String(plain, "UTF-8").linesIterator
         }
-    val reader = spark.read
-    schema.foreach(reader.schema)
-    cfg.readerOptions.foreach { case (k, v) => reader.option(k, v) }
-    val df = cfg.dataFormat match {
-      case DataFormat.Csv =>
-        reader
-          .option("delimiter", cfg.csvDelimiter)
-          .option("header", cfg.ignoreCsvHeader.toString)
-          .csv(lines)
-      case _ => reader.json(lines)
-    }
-    withShims(projectJsonPaths(df, cfg), cfg)
+    val r = reader(spark, cfg, schema)
+    if (cfg.dataFormat == DataFormat.Csv) r.csv(lines) else r.json(lines)
   }
 
   /** jsonpaths-file parity (`index.js:1178-1185`): an ordered list of

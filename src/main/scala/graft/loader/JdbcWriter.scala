@@ -114,13 +114,25 @@ object JdbcWriter {
             s"CREATE TABLE ${stagingTable(t.targetTable)} (" +
               cols.mkString(", ") + s", $BatchIdCol VARCHAR(128))")
         }
-        if (!tableExists(conn, CommitTable)) {
-          stmt.executeUpdate(
-            s"CREATE TABLE $CommitTable (batch_id VARCHAR(128) PRIMARY KEY, " +
-              "target_table VARCHAR(128), committed_at TIMESTAMP)")
-        }
+        // keyed per (batch, table): one prefix may load several tables
+        // of one database, and each table commits the batch once
+        if (!tableExists(conn, CommitTable)) createRacing(conn, CommitTable,
+          s"CREATE TABLE $CommitTable (batch_id VARCHAR(128) NOT NULL, " +
+            "target_table VARCHAR(128) NOT NULL, committed_at TIMESTAMP, " +
+            "PRIMARY KEY (batch_id, target_table))")
       } finally stmt.close()
     }
+
+  /** CREATE that tolerates losing the race to a concurrent creator:
+    * targets of one batch sharing a database ensure the registry in
+    * parallel.
+    */
+  private def createRacing(conn: Connection, table: String, ddl: String): Unit = {
+    val stmt = conn.createStatement()
+    try stmt.executeUpdate(ddl)
+    catch { case _: java.sql.SQLException if tableExists(conn, table) => () }
+    finally stmt.close()
+  }
 
   /** Stage rows in parallel from executors. Staging appends happen
     * outside the commit transaction, so a retried load must first purge
@@ -144,7 +156,10 @@ object JdbcWriter {
   }
 
   /** The control-connection transaction. Returns (committed?, rowsMoved).
-    * A batch_id already present in the registry ⇒ replay ⇒ clean no-op.
+    * A (batch_id, target_table) already present in the registry ⇒
+    * replay ⇒ clean no-op. A unique violation without that row means a
+    * registry keyed on batch_id alone (created before the composite key)
+    * refused another table's commit: that fails the load, never skips it.
     */
   def commit(t: LoadTarget, password: String, batchId: String,
              queryTimeoutSecs: Int = 0): (Boolean, Long) =
@@ -157,6 +172,14 @@ object JdbcWriter {
       }
       // idempotence guard: PK violation on replay → rollback + skip.
       // (no `return` in this closure — see Batcher for why)
+      def committedBefore: Boolean = {
+        val q = prep(s"SELECT 1 FROM $CommitTable WHERE batch_id = ? AND target_table = ?")
+        try {
+          q.setString(1, batchId); q.setString(2, t.targetTable)
+          val rs = q.executeQuery()
+          try rs.next() finally rs.close()
+        } finally { q.close(); conn.rollback() } // end the read's transaction
+      }
       val fresh = {
         val ins = prep(s"INSERT INTO $CommitTable VALUES (?, ?, CURRENT_TIMESTAMP)")
         try {
@@ -168,7 +191,12 @@ object JdbcWriter {
               if e.isInstanceOf[java.sql.SQLIntegrityConstraintViolationException] ||
                  e.getSQLState == "23505" /* unique violation: drivers (e.g.
                    Postgres) that don't throw the subclass */ =>
-            conn.rollback(); false
+            conn.rollback()
+            if (!committedBefore) throw new IllegalStateException(
+              s"$CommitTable refused batch $batchId for ${t.targetTable}: it is " +
+                "keyed on batch_id alone and another table committed this batch; " +
+                s"recreate it with PRIMARY KEY (batch_id, target_table)", e)
+            false
         } finally ins.close()
       }
       if (!fresh) (false, 0L)

@@ -32,6 +32,14 @@ import org.apache.spark.sql.functions._
   * `localCheckpoint` ([[Clusters]]' pattern): without it the plan nests
   * one map per merge and Catalyst lineage blows up long before data
   * size matters.
+  *
+  * Measured deep fit (sf0.1, local[32], batch 64): the word-level vocab
+  * of the synthetic corpus saturates at ~89 merges, so the fit ran at
+  * DOCUMENT granularity — each document's first 512 chars as one symbol
+  * sequence, via [[fitWithRounds]] with minCount 2. Exact parity mode:
+  * 1024 merges in 564 rounds, ~440 s (Zipfian ties collapse the strict
+  * margin); approximate mode: 1024 merges in 36 rounds, ~275 s — the
+  * O(numMerges/batch) scale path.
   */
 object BpeFit {
 

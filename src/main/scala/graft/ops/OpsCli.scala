@@ -34,10 +34,8 @@ object OpsCli {
 
   def main(args: Array[String]): Unit = {
     if (args.length < 2) { System.err.println(usage); sys.exit(2) }
-    val spark = SparkSession.builder()
+    val spark = graft.GraftSession.builder(4)
       .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[4]"))
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
       .appName("graft-ops")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -182,7 +180,7 @@ object OpsCli {
         // one refusal line, not a foreachBatch stack — print the root
         // cause and exit 3 (distinct from usage=2 / generic failure=1).
         try {
-          val q = graft.Pipeline.startCurationIngest(spark, docs, cfg,
+          val q = graft.streaming.CurationIngest.start(spark, docs, cfg,
             labeledDir, manifestDir, checkpointDir, availableNow = once)
           try q.awaitTermination()
           // deterministic release before the JVM exits: the stream's own

@@ -89,9 +89,15 @@ object Queries {
     * session's shuffle width — at production scale this IS
     * numShufflePartitions, and the only behavior change is at corpus
     * sizes AQE would otherwise serialize.
+    *
+    * The input bytes are the bare scan's plan statistics (the file
+    * index's total size), so a table stored as a directory of files or
+    * on a non-local filesystem sizes the same way a single local file
+    * does.
     */
-  private def textWidth(s: SparkSession, dir: String, tableName: String): Int = {
-    val bytes = new java.io.File(s"$dir/$tableName.parquet").length.max(1L)
+  private[graft] def textWidth(s: SparkSession, dir: String, tableName: String): Int = {
+    val bytes = s.read.parquet(s"$dir/$tableName.parquet")
+      .queryExecution.optimizedPlan.stats.sizeInBytes.toLong.max(1L)
     val perTask = 64L * 1024L
     math.min(s.sessionState.conf.numShufflePartitions.toLong,
       (bytes + perTask - 1L) / perTask).toInt.max(1)

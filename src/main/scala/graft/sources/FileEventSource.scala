@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.FileEvent
 
@@ -40,7 +40,6 @@ object FileEventSource {
     * control marker, never loaded.
     */
   val ControlDir = "graft-control"
-  private val LegacyControlDir = ".graft-control"
 
   def encodeControlTarget(loadFile: String): String =
     "t-" + java.net.URLEncoder.encode(loadFile, "UTF-8")
@@ -65,15 +64,9 @@ object FileEventSource {
       if (decodeS3Keys) java.net.URLDecoder.decode(stripped.replace("+", "%2B"), "UTF-8")
       else stripped
     decoded.split("/", 2) match {
-      case Array(dir @ (ControlDir | LegacyControlDir), rest) if rest.startsWith("unlink/") =>
-        // Only new-namespace markers carry the "t-" filename prefix (it
-        // exists to defeat InMemoryFileIndex's dot/underscore hiding);
-        // legacy .graft-control markers never did, so stripping there
-        // would corrupt an encoded target that legitimately starts with
-        // "t-" and clear the wrong dedup entry.
-        val enc = rest.stripPrefix("unlink/")
+      case Array(ControlDir, rest) if rest.startsWith("unlink/") =>
         val target = java.net.URLDecoder.decode(
-          if (dir == ControlDir) enc.stripPrefix("t-") else enc, "UTF-8")
+          rest.stripPrefix("unlink/").stripPrefix("t-"), "UTF-8")
         target.split("/", 2) match {
           case Array(b, k) => FileEvent(b, k, size, modMs, unlink = true)
           case Array(b)    => FileEvent(b, "", size, modMs, unlink = true)
@@ -93,26 +86,25 @@ object FileEventSource {
     StructField("content", BinaryType)))
 
   /** Streaming dataset of file events under `watchRoot/<bucket>/<key...>`. */
-  def stream(spark: SparkSession, watchRoot: String, globFilter: Option[String] = None): Dataset[FileEvent] = {
-    import spark.implicits._
-    val reader = spark.readStream.format("binaryFile").schema(BinaryFileSchema)
-      .option("recursiveFileLookup", "true")
-    globFilter.foreach(g => reader.option("pathGlobFilter", g))
-    reader.load(watchRoot)
-      .select(col("path"), col("length"), col("modificationTime").cast("long") * 1000)
-      .as[(String, Long, Long)]
-      .map { case (p, len, ts) => toEvent(watchRoot)(p, len, ts) }
-  }
+  def stream(spark: SparkSession, watchRoot: String, globFilter: Option[String] = None): Dataset[FileEvent] =
+    toEvents(spark.readStream.format("binaryFile").schema(BinaryFileSchema)
+      .options(listing(globFilter)).load(watchRoot), watchRoot)
 
   /** Batch listing of the same shape — used by reprocessing ops (S4) and
     * tests. */
-  def list(spark: SparkSession, watchRoot: String, globFilter: Option[String] = None): Dataset[FileEvent] = {
-    import spark.implicits._
-    val reader = spark.read.format("binaryFile")
-      .option("recursiveFileLookup", "true")
-    globFilter.foreach(g => reader.option("pathGlobFilter", g))
-    reader.load(watchRoot)
-      .select(col("path"), col("length"), col("modificationTime").cast("long") * 1000)
+  def list(spark: SparkSession, watchRoot: String, globFilter: Option[String] = None): Dataset[FileEvent] =
+    toEvents(spark.read.format("binaryFile")
+      .options(listing(globFilter)).load(watchRoot), watchRoot)
+
+  /** The listing options both readers share. */
+  private def listing(globFilter: Option[String]): Map[String, String] =
+    Map("recursiveFileLookup" -> "true") ++ globFilter.map("pathGlobFilter" -> _)
+
+  /** The projection both readers share: binaryFile rows → events,
+    * metadata only (content is never read). */
+  private def toEvents(files: DataFrame, watchRoot: String): Dataset[FileEvent] = {
+    import files.sparkSession.implicits._
+    files.select(col("path"), col("length"), col("modificationTime").cast("long") * 1000)
       .as[(String, Long, Long)]
       .map { case (p, len, ts) => toEvent(watchRoot)(p, len, ts) }
   }

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.{DedupIndex, NgramLM, Packing}
 import graft.streaming.CurationIngest
@@ -36,14 +36,8 @@ object DrainScale {
     val sliceOrder = args.lift(2).map(_.split(",").map(_.trim.toInt).toSeq)
       .getOrElse(Seq(1, 8))
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val work = java.nio.file.Files.createTempDirectory("graft_drain").toString
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val spark = graft.GraftSession.builder(graft.GraftSession.envCpus)
       .config("spark.sql.warehouse.dir", s"$work/warehouse")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.functions.{Curation, TextFunctions}
 import graft.operators.{DedupIndex, NgramLM, Packing, StoredMerge}
@@ -51,14 +51,8 @@ object DrainStages {
     // per-stage growth) doesn't need it
     val skipAb = args.contains("--skipAb")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val work = java.nio.file.Files.createTempDirectory("graft_stages").toString
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val spark = graft.GraftSession.builder(graft.GraftSession.envCpus)
       .config("spark.sql.warehouse.dir", s"$work/warehouse")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -116,7 +110,8 @@ object DrainStages {
       val warmDir = s"$work/docs_warm"
       spark.read.parquet(docsDir).limit(math.min(20000, docsCount.toInt))
         .repartition(8).write.mode("overwrite").parquet(warmDir)
-      DedupIndex.saveCorpus(spark, seed, "doc_id", "clean", "stages_dedup_warm")
+      DedupIndex.saveCorpus(spark, seed, "doc_id", "clean", "stages_dedup_warm",
+        k = cfgBase.k, bands = cfgBase.bands, shingleN = cfgBase.shingleN)
       val cfg = cfgBase.copy(dedupTable = "stages_dedup_warm",
         offsetsPath = s"$work/offsets_warm")
       CurationIngest.initOffsets(spark, cfg)
@@ -130,7 +125,8 @@ object DrainStages {
     }
 
     // ---- 1. the END-TO-END denominator: one real drain --------------
-    DedupIndex.saveCorpus(spark, seed, "doc_id", "clean", "stages_dedup_e2e")
+    DedupIndex.saveCorpus(spark, seed, "doc_id", "clean", "stages_dedup_e2e",
+      k = cfgBase.k, bands = cfgBase.bands, shingleN = cfgBase.shingleN)
     CurationIngest.initOffsets(spark, cfgBase)
     val e2e = timed("e2e_drain") {
       val docs = spark.readStream.schema("doc_id BIGINT, text STRING")
@@ -146,7 +142,8 @@ object DrainStages {
     // ---- 2. whole-batch A/B: pre-r15 vs r15 processBatch shape ------
     var sideN = 0
     def freshSide(tag: String): CurationIngest.Config = {
-      DedupIndex.saveCorpus(spark, seed, "doc_id", "clean", s"stages_ab_$tag")
+      DedupIndex.saveCorpus(spark, seed, "doc_id", "clean", s"stages_ab_$tag",
+        k = cfgBase.k, bands = cfgBase.bands, shingleN = cfgBase.shingleN)
       val c = cfgBase.copy(dedupTable = s"stages_ab_$tag",
         offsetsPath = s"$work/offsets_ab_$tag")
       CurationIngest.initOffsets(spark, c)
@@ -213,7 +210,8 @@ object DrainStages {
     // the documented measurement ("bloom-pruned vs the disjoint seed")
     // never intended, and a maxResultSize abort at 16M (r17 finding;
     // the 2M-8M r16 numbers carried that hidden broadcast cost)
-    DedupIndex.saveCorpus(spark, seed, "doc_id", "clean", "stages_dedup_iso")
+    DedupIndex.saveCorpus(spark, seed, "doc_id", "clean", "stages_dedup_iso",
+      k = cfgBase.k, bands = cfgBase.bands, shingleN = cfgBase.shingleN)
     val tProbe = timed("dedup_probe") {
       noop(DedupIndex.dedupAgainstStored(spark, "stages_dedup_iso", cleaned,
         "doc_id", "clean", cfgBase.threshold, cfgBase.k, cfgBase.bands,
@@ -280,7 +278,8 @@ object DrainStages {
       labeled.write.mode("overwrite").parquet(s"$work/labeled_iso/batch_id=0")
       manifest.write.mode("overwrite").parquet(s"$work/manifest_iso/batch_id=0")
     }
-    DedupIndex.saveCorpus(spark, seed, "doc_id", "clean", "stages_dedup_app")
+    DedupIndex.saveCorpus(spark, seed, "doc_id", "clean", "stages_dedup_app",
+      k = cfgBase.k, bands = cfgBase.bands, shingleN = cfgBase.shingleN)
     val tAppend = timed("corpus_append") {
       DedupIndex.appendCorpus(spark, admitted.select(col("doc_id"), col("clean")),
         "doc_id", "clean", "stages_dedup_app", cfgBase.k, cfgBase.bands,

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.{DedupIndex, NgramLM, StoredMerge, WriterLease}
 import graft.streaming.CurationIngest
@@ -35,14 +35,9 @@ import graft.streaming.CurationIngest
 object FleetSoak {
   def main(args: Array[String]): Unit = {
     val outJson = args.headOption.getOrElse("FLEET_LOCAL.json")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val work = java.nio.file.Files.createTempDirectory("graft_fleet").toString
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
+    val spark = graft.GraftSession.builder(graft.GraftSession.envCpus)
       .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .config("spark.sql.warehouse.dir", s"$work/warehouse")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

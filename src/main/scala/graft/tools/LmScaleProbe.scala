@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.functions.Curation
 import graft.operators.NgramLM
@@ -37,14 +37,8 @@ object LmScaleProbe {
     val maxDocs = args.headOption.map(_.toInt).getOrElse(8000000)
     val outJson = args.lift(1).getOrElse("LM_SCALE_LOCAL.json")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val work = java.nio.file.Files.createTempDirectory("graft_lmscale").toString
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val spark = graft.GraftSession.builder(graft.GraftSession.envCpus)
       .config("spark.sql.warehouse.dir", s"$work/warehouse")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

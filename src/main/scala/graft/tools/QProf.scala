@@ -1,20 +1,27 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.FormattedMode
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import scala.collection.mutable
 
-/** Per-query wall-time decomposition (optimization-round measurement
-  * tool, guide §1): where does a declared query's bench time GO at
-  * sf0.1 — query construction (driver-side work run eagerly while the
-  * DataFrame is being built: localCheckpoint jobs, catalog ops,
-  * stored-index writes), the timed noop action's jobs, and the DRIVER
-  * GAPS between jobs (planning/optimizing, codegen, commit)?
+/** Per-query wall-time decomposition and plans (optimization-round
+  * measurement tool, guide §1): where does a declared query's bench
+  * time GO at sf0.1 — query construction (driver-side work run eagerly
+  * while the DataFrame is being built: localCheckpoint jobs, catalog
+  * ops, stored-index writes), the timed noop action's jobs, and the
+  * DRIVER GAPS between jobs (planning/optimizing, codegen, commit)?
   *
   * For each job: duration, stage count, task count, summed executor
   * run time (so `duration × cores ÷ taskRun` reads as parallelism).
   *
-  * Usage: runMain graft.tools.QProf <sfDir> <query> [query...]
+  * Per query it also prints the formatted physical plan (with shuffle
+  * and broadcast counts) before the first timed action, and after the
+  * last run the FINAL adaptive plan — AQEShuffleRead coalesced
+  * partition counts and runtime join rewrites, which `explain` cannot
+  * show before execution (guide §7.2).
+  *
+  * Usage: runMain graft.tools.QProf <sfDir> <query...|ALL>
   * Runs each query TWICE (cold then warm) — compare decompositions.
   */
 object QProf {
@@ -25,14 +32,11 @@ object QProf {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val names = args.drop(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val names =
+      if (args.drop(1).sameElements(Array("ALL")))
+        graft.SparkEntry.queries.keys.toSeq.sorted
+      else args.drop(1).toSeq
+    val spark = graft.GraftSession.local(graft.GraftSession.envCpus)
     spark.sparkContext.setLogLevel("WARN")
     spark.range(1000000).selectExpr("sum(id)").collect()
 
@@ -80,14 +84,22 @@ object QProf {
         val c0 = System.nanoTime()
         val df = fn(spark, sfDir)
         val c1 = System.nanoTime()
+        if (run == 1) {
+          val plan = df.queryExecution.explainString(FormattedMode)
+          val exchanges = "Exchange".r.findAllIn(plan).size
+          val broadcasts = "BroadcastExchange".r.findAllIn(plan).size
+          println(s"\n========== $n formatted plan ==========\n$plan")
+          println(s"--- shuffles=${exchanges - broadcasts} broadcasts=$broadcasts")
+        }
         phase = "action"
+        val a0 = System.nanoTime()
         df.write.format("noop").mode("overwrite").save()
         val c2 = System.nanoTime()
         spark.sparkContext.removeSparkListener(listener) // settle
         spark.sparkContext.addSparkListener(listener)
         val constructS = (c1 - c0) / 1e9
-        val actionS = (c2 - c1) / 1e9
-        println(f"%nQPROF $n run$run total=${(c2 - c0) / 1e9}%.3f construct=$constructS%.3f action=$actionS%.3f")
+        val actionS = (c2 - a0) / 1e9
+        println(f"%nQPROF $n run$run total=${constructS + actionS}%.3f construct=$constructS%.3f action=$actionS%.3f")
         val js = jobs.synchronized(jobs.values.toSeq.sortBy(_.t0))
         var prevEnd = 0L
         var jobSum = 0L; var gapSum = 0L
@@ -99,6 +111,18 @@ object QProf {
           println(f"  job ${j.id}%3d [${j.group}%9s] dur=${dur / 1000.0}%7.3f gap_before=${gap / 1000.0}%7.3f stages=${j.stages}%2d tasks=${j.tasks}%4d taskRun=${j.taskRunMs / 1000.0}%8.3f  ${j.site.take(60)}")
         }
         println(f"  SUM jobs=${jobSum / 1000.0}%.3f inter-job-gaps=${gapSum / 1000.0}%.3f (wall not in jobs = driver planning/codegen/commit)")
+        if (run == nRuns) {
+          // the noop write wraps the plan in its own QueryExecution, so
+          // execute the df's own tree (collect — results are small at test
+          // SF) to drive ITS AdaptiveSparkPlanExec to the final plan
+          phase = "final-plan"
+          df.collect()
+          val finalPlan = df.queryExecution.executedPlan match {
+            case a: AdaptiveSparkPlanExec => a.executedPlan.treeString
+            case p => p.treeString
+          }
+          println(s"\n========== $n final plan ==========\n${finalPlan.take(20000)}")
+        }
       }
     }
     spark.stop()

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.{DedupIndex, NgramLM, StoredMerge, WriterLease}
 import graft.streaming.CurationIngest
@@ -36,15 +36,9 @@ object SoakIngest {
   def main(args: Array[String]): Unit = {
     val nBatches = args.headOption.map(_.toInt).getOrElse(200)
     val outJson = args.lift(1).getOrElse("SOAK_LOCAL.json")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val t0 = System.nanoTime()
     val work = java.nio.file.Files.createTempDirectory("graft_soak").toString
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val spark = graft.GraftSession.builder(graft.GraftSession.envCpus)
       .config("spark.sql.warehouse.dir", s"$work/warehouse")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -61,4 +61,16 @@ class BenchRefSpec extends AnyFunSuite {
     assert(!BenchRef.needsRemeasure(2.0, 1.0))
     assert(BenchRef.needsRemeasure(2.001, 1.0))
   }
+
+  test("bestOf: a throwing query has no time, only its message") {
+    var calls = 0
+    val failed = BenchRef.bestOf(3) { () =>
+      calls += 1
+      throw new IllegalStateException("boom: table missing\nplan detail")
+    }
+    assert(failed == Left("boom: table missing"))
+    assert(calls == 1, "a failed query is not re-run")
+    val timed = BenchRef.bestOf(3) { () => Thread.sleep(5) }
+    assert(timed.exists(_ >= 0.005), s"got $timed")
+  }
 }

@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 import java.sql.DriverManager
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.core._
@@ -19,11 +18,7 @@ import graft.notify.CollectingNotifier
   */
 class PipelineRestartSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark = GraftSession.local(4)
 
   test("restart from checkpoint: no reload of processed files, new files load once") {
     val root = Files.createTempDirectory("graft-restart").toString

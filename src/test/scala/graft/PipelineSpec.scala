@@ -3,7 +3,6 @@ package graft
 import java.nio.file.{Files, Paths}
 import java.sql.DriverManager
 import scala.jdk.CollectionConverters._
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.core._
@@ -16,11 +15,7 @@ import graft.notify.CollectingNotifier
   */
 class PipelineSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark = GraftSession.local(4)
 
   /** Manifest files in `dir`, without the `.crc` siblings a checksummed
     * Hadoop filesystem writes beside them. */

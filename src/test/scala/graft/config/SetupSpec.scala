@@ -2,11 +2,11 @@ package graft.config
 
 import java.nio.file.{Files, Paths}
 import java.sql.DriverManager
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.core._
 import graft.config.Setup.SetupException
+import graft.GraftSession
 
 /** File-driven setup parity (`setup-file.js`, `setup.js:213-258`):
   * validation rules, field translation, URL assembly + override escape,
@@ -14,11 +14,7 @@ import graft.config.Setup.SetupException
   */
 class SetupSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark = GraftSession.local(4)
 
   private def setupJson(extra: String = "",
                         df: String = "CSV",

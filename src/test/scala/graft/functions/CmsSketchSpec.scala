@@ -1,8 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.GraftSession
 
 /** CMS union + probe over Spark's built-in count_min_sketch binaries:
   * the union must equal a single whole-corpus sketch (cell-wise sums
@@ -10,11 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class CmsSketchSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark = GraftSession.local(4)
   import spark.implicits._
 
   private val rows: Seq[(Int, String)] =

@@ -1,8 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.GraftSession
 
 /** SQL registration: every registered function must agree with its
   * DataFrame Column wrapper on real data — same Catalyst expression
@@ -11,11 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class GraftFunctionsSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark = GraftSession.local(4)
 
   private def registered(): Unit = GraftFunctions.register(spark)
 

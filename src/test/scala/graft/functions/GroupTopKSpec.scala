@@ -1,9 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.GraftSession
 
 /** Exact per-group top-k aggregate vs a window-rank reference: same
   * rows under the (key desc, id asc) total order, with the state
@@ -11,11 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class GroupTopKSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark = GraftSession.local(4)
   import spark.implicits._
   import graft.functions.expressions.group_top_k
 

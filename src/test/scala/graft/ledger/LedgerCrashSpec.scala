@@ -2,9 +2,9 @@ package graft.ledger
 
 import java.nio.file.Files
 import scala.jdk.CollectionConverters._
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import graft.core._
+import graft.GraftSession
 
 /** Hadoop signals most rename failures by RETURNING FALSE, not throwing.
   * This local filesystem makes the two compaction-swap renames, or an
@@ -38,11 +38,7 @@ object FlakyRenameFileSystem { @volatile var mode: String = "off" }
   */
 class LedgerCrashSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark = GraftSession.local(4)
 
   private def rec(id: String, status: BatchStatus, at: Long) =
     BatchRecord("b/k", id, status.name, Seq(BatchEntry(s"b/k/$id.csv", 10, at)), 10L, at)

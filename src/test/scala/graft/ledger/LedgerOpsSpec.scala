@@ -2,19 +2,15 @@ package graft.ledger
 
 import java.nio.file.Files
 import scala.jdk.CollectionConverters._
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import graft.core._
 import graft.ops.Ops
 import graft.crypto.Keystore
+import graft.GraftSession
 
 class LedgerOpsSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark = GraftSession.local(4)
 
   private def freshLedger() = new Ledger(spark, Files.createTempDirectory("graft-ledger").toString)
 

@@ -1,21 +1,17 @@
 package graft.loader
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.core._
+import graft.GraftSession
 
 /** Format directives coverage (S6-S10): JSON auto + jsonpaths, Avro,
   * gzip-compressed CSV, header skip, EMPTYASNULL/BLANKSASNULL shims.
   */
 class FormatsSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark = GraftSession.local(4)
   import spark.implicits._
 
   private def tmp(name: String, content: Array[Byte]): String = {

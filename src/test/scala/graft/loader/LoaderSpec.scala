@@ -2,10 +2,10 @@ package graft.loader
 
 import java.nio.file.{Files, Paths}
 import java.sql.DriverManager
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.core._
+import graft.GraftSession
 
 /** End-to-end load tests against embedded Derby — the closest local
   * stand-in for the reference's Redshift target. Reproduces the sample
@@ -14,26 +14,24 @@ import graft.core._
   */
 class LoaderSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark = GraftSession.local(4)
 
   private val dbUrl = "jdbc:derby:memory:loaderspec;create=true"
 
-  private def sql(q: String): Unit = {
-    val c = DriverManager.getConnection(dbUrl)
+  private def sqlAt(url: String, q: String): Unit = {
+    val c = DriverManager.getConnection(url)
     try { val s = c.createStatement(); try s.execute(q) finally s.close() }
     finally c.close()
   }
-  private def queryLong(q: String): Long = {
-    val c = DriverManager.getConnection(dbUrl)
+  private def queryLongAt(url: String, q: String): Long = {
+    val c = DriverManager.getConnection(url)
     try {
       val s = c.createStatement()
       try { val rs = s.executeQuery(q); rs.next(); rs.getLong(1) } finally s.close()
     } finally c.close()
   }
+  private def sql(q: String): Unit = sqlAt(dbUrl, q)
+  private def queryLong(q: String): Long = queryLongAt(dbUrl, q)
 
   private lazy val root: String = {
     val dir = Files.createTempDirectory("graft-loader").toString
@@ -87,6 +85,37 @@ class LoaderSpec extends AnyFunSuite {
     val replay = Loader.loadBatch(spark, c, cmd("rb1", Seq("sample0.csv")), root, Some(schema))
     assert(replay.status == "complete" && replay.results.head.skipped)
     assert(queryLong("SELECT count(*) FROM replay_t") == 2)
+  }
+
+  test("one batch into two tables of one database: both get their rows; a replay is a no-op for both") {
+    // a fresh database: both targets also ensure its registry at once
+    val url = "jdbc:derby:memory:twintables;create=true"
+    val tables = Seq("twin_a", "twin_b")
+    tables.foreach(t => sqlAt(url, s"CREATE TABLE $t(column_a INT, column_b INT, column_c INT)"))
+    val c = cfg.copy(targets = tables.map(LoadTarget(url, "", "", _)))
+    val first = Loader.loadBatch(spark, c, cmd("tw1", Seq("sample0.csv")), root, Some(schema))
+    assert(first.status == "complete", first.results)
+    assert(first.results.forall(r => r.ok && !r.skipped && r.rows == 2), first.results)
+    tables.foreach(t =>
+      assert(queryLongAt(url, s"SELECT count(*) FROM ${t}_graft_stage") == 0, t))
+    val replay = Loader.loadBatch(spark, c, cmd("tw1", Seq("sample0.csv")), root, Some(schema))
+    assert(replay.status == "complete" && replay.results.forall(_.skipped), replay.results)
+    tables.foreach(t => assert(queryLongAt(url, s"SELECT count(*) FROM $t") == 2, t))
+  }
+
+  test("a registry keyed on batch_id alone fails the second table's load instead of skipping it") {
+    val url = "jdbc:derby:memory:legacyregistry;create=true"
+    sqlAt(url, s"CREATE TABLE ${JdbcWriter.CommitTable} (batch_id VARCHAR(128) PRIMARY KEY, " +
+      "target_table VARCHAR(128), committed_at TIMESTAMP)")
+    sqlAt(url, "CREATE TABLE legacy_a(column_a INT, column_b INT, column_c INT)")
+    sqlAt(url, "CREATE TABLE legacy_b(column_a INT, column_b INT, column_c INT)")
+    val c = cfg.copy(targets = Seq("legacy_a", "legacy_b").map(LoadTarget(url, "", "", _)))
+    val out = Loader.loadBatch(spark, c, cmd("lg1", Seq("sample0.csv")), root, Some(schema))
+    assert(out.status == "error")
+    assert(out.results.count(r => r.ok && !r.skipped && r.rows == 2) == 1, out.results)
+    val failed = out.results.filter(!_.ok)
+    assert(failed.size == 1 && failed.head.error.exists(_.contains("keyed on batch_id alone")),
+      out.results)
   }
 
   test("presql/postsql run inside the same transaction; truncate honored (T10)") {
@@ -157,19 +186,6 @@ class LoaderSpec extends AnyFunSuite {
     // second target lives in its OWN database (clusters are separate
     // DBs); its table doesn't exist yet, so the first attempt fails
     val fixUrl = "jdbc:derby:memory:ptfix;create=true"
-    def sqlAt(url: String, q: String): Unit = {
-      val c = DriverManager.getConnection(url)
-      try { val s = c.createStatement(); try s.execute(q) finally s.close() }
-      finally c.close()
-    }
-    def countAt(url: String, table: String): Long = {
-      val c = DriverManager.getConnection(url)
-      try {
-        val s = c.createStatement()
-        try { val rs = s.executeQuery(s"SELECT count(*) FROM $table"); rs.next(); rs.getLong(1) }
-        finally s.close()
-      } finally c.close()
-    }
     sql("CREATE TABLE pt_good(column_a INT, column_b INT, column_c INT)")
     val other = LoadTarget(fixUrl, "", "", "pt_other")
     val c = cfg.copy(targets = Seq(target("pt_good"), other))
@@ -201,7 +217,8 @@ class LoaderSpec extends AnyFunSuite {
       "the committed target must be skipped, not re-loaded")
     assert(queryLong("SELECT count(*) FROM pt_good") == 2,
       "per-target gate must prevent the double load")
-    assert(countAt(fixUrl, "pt_other") == 2, "the failed target must load on retry")
+    assert(queryLongAt(fixUrl, "SELECT count(*) FROM pt_other") == 2,
+      "the failed target must load on retry")
 
     // DEFAULT behavior unchanged — the reference's faithful wart: a
     // reprocess without the gate re-loads the committed cluster
@@ -251,13 +268,7 @@ class LoaderSpec extends AnyFunSuite {
     // in b, proving resolution happens per-connection, not at setup
     val urlA = "jdbc:derby:memory:ovrspecA;create=true"
     val urlB = "jdbc:derby:memory:ovrspecB;create=true"
-    def ddl(url: String): Unit = {
-      val c = DriverManager.getConnection(url)
-      try c.createStatement().execute(
-        "CREATE TABLE ovr_t(column_a INT, column_b INT, column_c INT)")
-      finally c.close()
-    }
-    ddl(urlA); ddl(urlB)
+    Seq(urlA, urlB).foreach(sqlAt(_, "CREATE TABLE ovr_t(column_a INT, column_b INT, column_c INT)"))
     val c = cfg.copy(targets = Seq(
       LoadTarget(urlA, "", "", "ovr_t")))
     System.setProperty(graft.config.Setup.OverrideEnvVar, urlB)
@@ -265,13 +276,7 @@ class LoaderSpec extends AnyFunSuite {
       val out = Loader.loadBatch(spark, c, cmd("ov1", Seq("sample0.csv")), root, Some(schema))
       assert(out.status == "complete")
     } finally System.clearProperty(graft.config.Setup.OverrideEnvVar)
-    def count(url: String): Long = {
-      val conn = DriverManager.getConnection(url)
-      try {
-        val rs = conn.createStatement().executeQuery("SELECT count(*) FROM ovr_t")
-        rs.next(); rs.getLong(1)
-      } finally conn.close()
-    }
+    def count(url: String): Long = queryLongAt(url, "SELECT count(*) FROM ovr_t")
     assert(count(urlB) == 2, "override target received the load")
     assert(count(urlA) == 0, "configured target untouched while override active")
   }

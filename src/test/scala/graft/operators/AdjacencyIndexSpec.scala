@@ -5,6 +5,7 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.SparkPlan
 import org.scalatest.funsuite.AnyFunSuite
+import graft.GraftSession
 
 /** The stored census must be a pure re-serving of the live one: same
   * rows bit-for-bit from both readouts, the stored adjacency reaching
@@ -13,11 +14,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class AdjacencyIndexSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark = GraftSession.local(4)
   import spark.implicits._
 
   private def edgesDf = {

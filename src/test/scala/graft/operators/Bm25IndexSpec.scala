@@ -2,18 +2,16 @@ package graft.operators
 
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+import graft.GraftSession
 
 /** Stored BM25 inverted index: live-scan parity, append ≡ rebuild
   * accretion, and the bucket-pruned query plan.
   */
 class Bm25IndexSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
+  lazy val spark: SparkSession = GraftSession.builder(4)
     .config("spark.sql.warehouse.dir",
       java.nio.file.Files.createTempDirectory("bm25idx").toString)
-    .config("spark.ui.enabled", "false")
     .getOrCreate()
   import spark.implicits._
 

@@ -1,8 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.GraftSession
 
 /** Stored tokenizer dictionary vs the live dictionary encode: identical
   * rows seen-or-new, incremental extension, and the bucketed stored
@@ -10,11 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class BpeDictSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark = GraftSession.local(4)
   import spark.implicits._
 
   private val trainDocs = Seq(

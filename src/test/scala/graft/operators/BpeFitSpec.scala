@@ -1,7 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+import graft.GraftSession
 
 /** BPE merge fitting vs a driver-side sequential reference: the
   * distributed fit must learn the exact same merge table (pairs, order
@@ -11,11 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class BpeFitSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark = GraftSession.local(4)
 
   // ---- independent sequential reference --------------------------------
 

@@ -1,7 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+import graft.GraftSession
 
 /** Connected-components correctness vs a driver-side union-find oracle,
   * including the shapes that break naive label propagation (long chains)
@@ -9,11 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class ClustersSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark = GraftSession.local(4)
 
   private def unionFind(n: Int, edges: Seq[(Long, Long)]): Map[Long, Long] = {
     val parent = scala.collection.mutable.Map[Long, Long]()

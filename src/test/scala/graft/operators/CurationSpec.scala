@@ -1,8 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.GraftSession
 
 /** Curation-pass operators: PII scrubbing, deterministic splits,
   * line-level boilerplate dedup, sequence packing, semantic dedup.
@@ -12,11 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class CurationSpec extends AnyFunSuite {
   import graft.functions.Curation
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark = GraftSession.local(4)
 
   private def scrub(s: String): String = {
     import spark.implicits._

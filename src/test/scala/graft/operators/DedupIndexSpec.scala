@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.GraftSession
 
 /** Incremental dedup against a stored corpus: correctness vs the batch
   * operator over the unioned corpus, the admission filter, and the
@@ -10,10 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class DedupIndexSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
+  lazy val spark: SparkSession = GraftSession.builder(4)
     .config("spark.sql.warehouse.dir",
       java.nio.file.Files.createTempDirectory("graft-dix-wh").toString)
     .getOrCreate()

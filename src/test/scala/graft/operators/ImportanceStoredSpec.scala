@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.GraftSession
 
 /** Stored-counts importance scoring: a batch scored against a persisted
   * reference count table must reproduce the masses the inline operator
@@ -11,10 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class ImportanceStoredSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
+  lazy val spark: SparkSession = GraftSession.builder(4)
     .config("spark.sql.warehouse.dir",
       java.nio.file.Files.createTempDirectory("graft-imp-wh").toString)
     .getOrCreate()

@@ -1,7 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+import graft.GraftSession
 
 /** Bigram LM vs a driver-side reference: count tables, likelihood
   * masses, and the transcendental perplexity (which the DuckDB oracle
@@ -9,11 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class NgramLMSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark = GraftSession.local(4)
   import spark.implicits._
 
   private val corpus = Seq(

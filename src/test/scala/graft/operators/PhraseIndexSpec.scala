@@ -2,15 +2,13 @@ package graft.operators
 
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+import graft.GraftSession
 
 class PhraseIndexSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
+  lazy val spark: SparkSession = GraftSession.builder(4)
     .config("spark.sql.warehouse.dir",
       java.nio.file.Files.createTempDirectory("phrase-wh").toString)
-    .config("spark.ui.enabled", "false")
     .getOrCreate()
   import spark.implicits._
 

@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.FormattedMode
 import org.scalatest.funsuite.AnyFunSuite
+import graft.GraftSession
 
 /** Plan-shape regression guards for the scale claims the docs make:
   * which key an exchange partitions on is THE 100 TB design decision
@@ -12,11 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class PlanAuditSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark = GraftSession.local(4)
 
   private val sf = "/root/testdata/sf0.001"
 

@@ -1,8 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.GraftSession
 
 /** Product quantization: encoding compresses to m bytes, ADC ranks
   * compatibly with exact cosine, and the two-stage search recovers the
@@ -10,11 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class PqIndexSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark = GraftSession.local(4)
 
   private val dir = "/root/testdata/sf0.001"
 

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+import graft.GraftSession
 
 /** Hadoop signals most rename failures by RETURNING FALSE, not throwing
   * (the LedgerCrashSpec recipe). This local filesystem makes the two
@@ -27,10 +28,7 @@ object FlakyMergeRenameFileSystem { @volatile var mode: String = "off" }
 
 class StoredMergeSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
+  lazy val spark: SparkSession = GraftSession.builder(4)
     .config("spark.sql.warehouse.dir",
       java.nio.file.Files.createTempDirectory("graft-merge-wh").toString)
     .getOrCreate()

@@ -1,8 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.GraftSession
 
 /** Row validation: null-as-violation semantics, multi-rule annotation
   * order, the clean/quarantine split, and the one-pass profile.
@@ -10,11 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class ValidateSpec extends AnyFunSuite {
   import Validate.Rule
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark = GraftSession.local(4)
   import spark.implicits._
 
   private def rows = Seq(

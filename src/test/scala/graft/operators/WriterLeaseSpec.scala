@@ -1,7 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+import graft.GraftSession
 
 /** The single-writer lease on stored-state paths: loud second-writer
   * refusal, same-owner re-entrancy, crashed-holder expiry, and the
@@ -10,11 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class WriterLeaseSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark = GraftSession.local(4)
   import spark.implicits._
 
   private def tmpDir(tag: String): String =

@@ -1,21 +1,17 @@
 package graft.ops
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import graft.core._
 import graft.ledger.Ledger
+import graft.GraftSession
 
 /** Mass prefix reprocess, bulk-delete append behavior, and the CLI
   * dispatch over a seeded ledger.
   */
 class OpsCliSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark = GraftSession.local(4)
 
   private def rec(id: String, status: BatchStatus, at: Long) =
     BatchRecord("b/k", id, status.name, Seq(BatchEntry(s"b/k/$id.csv", 10, at)), 10L, at)

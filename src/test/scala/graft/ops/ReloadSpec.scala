@@ -2,20 +2,16 @@ package graft.ops
 
 import java.nio.file.{Files, Paths}
 import java.sql.DriverManager
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.core._
 import graft.ledger.Ledger
 import graft.streaming.Batcher
+import graft.GraftSession
 
 class ReloadSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark = GraftSession.local(4)
 
   test("reloadBatch loads an errored batch's files under a fresh id (T7/T8)") {
     val root = Files.createTempDirectory("graft-reload").toString

@@ -1,7 +1,7 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+import graft.GraftSession
 
 /** Stage-coverage pin for the composed pretraining pipeline (q204):
   * the sf0.01 oracle certifies VALUES; this certifies that every
@@ -12,11 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class ComposedPipelineSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark = GraftSession.local(4)
 
   test("q204: all eight stage buckets fire at sf0.001 and conserve the corpus") {
     val rows = Queries.q204PretrainPipeline(spark, "/root/testdata/sf0.001")

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+import graft.GraftSession
 
 /** Whole-surface plan police: every declared query's physical plan is
   * swept for the two 100 TB anti-patterns — cartesian/nested-loop
@@ -12,12 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class QueryPlanPoliceSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark = GraftSession.local(4)
 
   private val sf = "/root/testdata/sf0.001"
 
@@ -177,5 +173,23 @@ class QueryPlanPoliceSpec extends AnyFunSuite {
       }
     }
     assert(failures.isEmpty, "\n" + failures.mkString("\n"))
+  }
+
+  test("no java.io.File in query or operator sources: table sizes come from plan statistics") {
+    // a local-file probe (File.length) reads a directory or hdfs: table
+    // as ~0 bytes and pins its exchanges to one partition
+    val banned = """java\.io\.(File\b|_)|import java\.io\.\{[^}]*\bFile\b""".r
+    val offenders = Seq("queries", "operators").flatMap { pkg =>
+      val dir = new java.io.File(s"src/main/scala/graft/$pkg")
+      assert(dir.isDirectory, s"run from the repository root: $dir")
+      dir.listFiles().filter(_.getName.endsWith(".scala")).sortBy(_.getName).toSeq.flatMap { f =>
+        val src = scala.io.Source.fromFile(f, "UTF-8")
+        try src.getLines().zipWithIndex.collect {
+          case (line, i) if banned.findFirstIn(line).isDefined => s"$f:${i + 1}: ${line.trim}"
+        }.toList
+        finally src.close()
+      }
+    }
+    assert(offenders.isEmpty, "\n" + offenders.mkString("\n"))
   }
 }

@@ -1,8 +1,8 @@
 package graft.sources
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+import graft.GraftSession
 
 /** Discovery-level tests: control markers must survive Spark's file
   * listing (InMemoryFileIndex drops `.`/`_`-prefixed path components),
@@ -11,11 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class FileEventSourceSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark = GraftSession.local(4)
 
   test("unlink marker written by Ops is DISCOVERED by the batch listing") {
     val root = Files.createTempDirectory("graft-fes").toString
@@ -59,23 +55,8 @@ class FileEventSourceSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  test("legacy dot-dir control paths still parse as unlink events") {
-    val e = FileEventSource.toEvent("/watch")(
-      "/watch/.graft-control/unlink/" +
-        java.net.URLEncoder.encode("bucket/input/x.csv", "UTF-8"),
-      0L, 1000L)
-    assert(e.unlink && e.bucket == "bucket" && e.key == "input/x.csv")
-  }
-
   test("'t-' is a FILENAME prefix of the new namespace, not part of any legacy target") {
-    // legacy marker whose encoded target legitimately starts with "t-":
-    // stripping there would clear the WRONG dedup entry
-    val legacy = FileEventSource.toEvent("/watch")(
-      "/watch/.graft-control/unlink/" +
-        java.net.URLEncoder.encode("t-bucket/input/t-file.csv", "UTF-8"),
-      0L, 1000L)
-    assert(legacy.unlink && legacy.bucket == "t-bucket" && legacy.key == "input/t-file.csv")
-    // the new namespace round-trips the same target through its t- prefix
+    // the namespace round-trips a target that itself starts with "t-"
     val fresh = FileEventSource.toEvent("/watch")(
       "/watch/graft-control/unlink/" +
         FileEventSource.encodeControlTarget("t-bucket/input/t-file.csv"),

@@ -1,20 +1,15 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.api.java.Optional
 import org.apache.spark.sql.streaming.TestGroupState
 import org.scalatest.funsuite.AnyFunSuite
 import graft.core._
+import graft.GraftSession
 
 class BatcherSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+  lazy val spark = GraftSession.local(4)
 
   private val cfg = LoadConfig(
     s3Prefix = "bucket/input", batchSize = 2,

@@ -1,12 +1,13 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.GraftSession
 
 /** The composed-ingest seam the solo streaming specs leave untested:
   * normalize → scrub → stored-index dedup admission → stored-LM gate →
@@ -18,11 +19,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class CurationIngestSpec extends AnyFunSuite {
   import graft.operators.{DedupIndex, NgramLM, StoredMerge}
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark = GraftSession.local(4)
   import spark.implicits._
 
   // ---- day-0 corpus: the stored state both runs start from ----------
@@ -157,10 +154,10 @@ class CurationIngestSpec extends AnyFunSuite {
     val input = MemoryStream[(Long, String)]
     val tmp = java.nio.file.Files.createTempDirectory("ci_out").toString
     val pinnedBefore = spark.sparkContext.getPersistentRDDs.keySet
-    val q = graft.Pipeline.startCurationIngest(spark,
+    val q = CurationIngest.start(spark,
       input.toDF().toDF("doc_id", "text"), streamCfg,
       s"$tmp/labeled", s"$tmp/manifest", s"$tmp/ckpt",
-      triggerInterval = "1 seconds")
+      trigger = "1 seconds")
     try {
       val (b1, rest) = day1.splitAt(4)
       val (b2, b3) = rest.splitAt(30)
@@ -499,10 +496,10 @@ class CurationIngestSpec extends AnyFunSuite {
     val input = MemoryStream[(Long, String)]
     val tmp = java.nio.file.Files.createTempDirectory("ci_restart").toString
     val (h1, h2) = day1.splitAt(40)
-    def startQuery() = graft.Pipeline.startCurationIngest(spark,
+    def startQuery() = CurationIngest.start(spark,
       input.toDF().toDF("doc_id", "text"), cfg,
       s"$tmp/labeled", s"$tmp/manifest", s"$tmp/ckpt",
-      triggerInterval = "1 seconds")
+      trigger = "1 seconds")
     // first query: half the corpus, clean stop
     val q1 = startQuery()
     try { input.addData(h1); q1.processAllAvailable() } finally q1.stop()
@@ -549,16 +546,16 @@ class CurationIngestSpec extends AnyFunSuite {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(Long, String)]
     val tmp = java.nio.file.Files.createTempDirectory("ci_joblease").toString
-    def startAt(ckpt: String) = graft.Pipeline.startCurationIngest(spark,
+    def startAt(ckpt: String) = CurationIngest.start(spark,
       input.toDF().toDF("doc_id", "text"), cfg,
-      s"$tmp/labeled", s"$tmp/manifest", ckpt, triggerInterval = "1 seconds")
+      s"$tmp/labeled", s"$tmp/manifest", ckpt, trigger = "1 seconds")
     // a FAILED start (bad trigger here; bad checkpoint/source the same
     // way) must not strand the lease for the TTL
     intercept[IllegalArgumentException] {
-      graft.Pipeline.startCurationIngest(spark,
+      CurationIngest.start(spark,
         input.toDF().toDF("doc_id", "text"), cfg,
         s"$tmp/labeled", s"$tmp/manifest", s"$tmp/ckptFail",
-        triggerInterval = "not a duration")
+        trigger = "not a duration")
     }
     assert(graft.operators.WriterLease.holder(spark, cfg.offsetsPath).isEmpty,
       "a start() failure must release the lease immediately")
@@ -610,10 +607,10 @@ class CurationIngestSpec extends AnyFunSuite {
       implicit val sqlCtx = spark.sqlContext
       val input = MemoryStream[(Long, String)]
       val tmp = java.nio.file.Files.createTempDirectory("ci_decon").toString
-      val q = graft.Pipeline.startCurationIngest(spark,
+      val q = CurationIngest.start(spark,
         input.toDF().toDF("doc_id", "text"), streamCfg,
         s"$tmp/labeled", s"$tmp/manifest", s"$tmp/ckpt",
-        triggerInterval = "1 seconds")
+        trigger = "1 seconds")
       try {
         val (b1, b2) = day1.splitAt(20)
         for (b <- Seq(b1, b2)) { input.addData(b); q.processAllAvailable() }

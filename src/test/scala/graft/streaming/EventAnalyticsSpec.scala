@@ -1,18 +1,13 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 import EventAnalytics._
+import graft.GraftSession
 
 class EventAnalyticsSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+  lazy val spark = GraftSession.local(4)
 
   private def ts(min: Int) = new java.sql.Timestamp(1700000000000L + min * 60000L)
 

@@ -2,10 +2,10 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.GraftSession
 
 /** Stream-STREAM interval join under real IncrementalExecution — the
   * two-live-sources leg of the attribution family (q159/q171 join a
@@ -20,12 +20,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class StreamStreamJoinSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark = GraftSession.local(4)
 
   final case class Conv(cid: Long, u: Long, ts: Timestamp)
   final case class Touch(tid: Long, u: Long, ts: Timestamp, ch: String)

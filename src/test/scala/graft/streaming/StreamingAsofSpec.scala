@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
+import graft.GraftSession
 
 /** Stream-static as-of enrichment: per-batch semantics must equal the
   * oracle-checked batch operator's, and a reference table that GROWS
@@ -11,11 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class StreamingAsofSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark = GraftSession.local(4)
 
   final case class Tick(id: Long, sym: String, t: Long)
 

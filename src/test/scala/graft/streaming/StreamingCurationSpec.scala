@@ -1,10 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import StreamingDedup.{Doc, Admitted}
+import graft.GraftSession
 
 /** The streaming curation pipeline: the stateless curation columns
   * (PII scrub, quality verdict, split) are ordinary projections, so
@@ -15,11 +15,7 @@ import StreamingDedup.{Doc, Admitted}
 class StreamingCurationSpec extends AnyFunSuite {
   import graft.functions.Curation
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark = GraftSession.local(4)
 
   private def awaitCount(table: String, n: Long, timeoutMs: Long = 60000): Long = {
     val deadline = System.currentTimeMillis() + timeoutMs

@@ -1,9 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 import StreamingDedup._
+import graft.GraftSession
 
 /** Streaming dedup duals of the batch Dedup family: exact first-seen
   * admission by content fingerprint, and MinHash-band near-dup
@@ -11,11 +11,7 @@ import StreamingDedup._
   */
 class StreamingDedupSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark = GraftSession.local(4)
 
   private def awaitCount(table: String, n: Long, timeoutMs: Long = 60000): Long = {
     val deadline = System.currentTimeMillis() + timeoutMs

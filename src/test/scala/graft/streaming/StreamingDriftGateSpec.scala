@@ -5,6 +5,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import StreamingDedup.Doc
+import graft.GraftSession
 
 /** The composed streaming MONITORING path — scrub → stored-profile
   * gate → quarantine split — proven under real IncrementalExecution,
@@ -25,10 +26,7 @@ class StreamingDriftGateSpec extends AnyFunSuite {
   import graft.functions.Curation
   import graft.operators.{Drift, Outliers}
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
+  lazy val spark: SparkSession = GraftSession.builder(4)
     .config("spark.sql.warehouse.dir",
       java.nio.file.Files.createTempDirectory("graft-driftgate-wh").toString)
     .getOrCreate()

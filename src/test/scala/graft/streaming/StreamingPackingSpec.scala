@@ -1,10 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import StreamingPacking.{Doc, Packed}
+import graft.GraftSession
 
 /** Streaming packing must assign the SAME sequence coordinates the
   * batch packer computes over the same arrival order — the state (one
@@ -13,11 +13,7 @@ import StreamingPacking.{Doc, Packed}
   */
 class StreamingPackingSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark = GraftSession.local(4)
 
   private def awaitCount(table: String, n: Long, timeoutMs: Long = 60000): Long = {
     val deadline = System.currentTimeMillis() + timeoutMs

@@ -1,11 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.Repetition
+import graft.GraftSession
 
 case class RepDoc(doc_id: Long, text: String)
 
@@ -16,11 +16,7 @@ case class RepDoc(doc_id: Long, text: String)
   */
 class StreamingRepetitionSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark = GraftSession.local(4)
   import spark.implicits._
 
   private val docs = Seq(

@@ -1,9 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.GraftSession
 
 /** The mergeable-sketch family under real IncrementalExecution: the
   * same TypedImperativeAggregate buffers that fold map-side in batch
@@ -16,11 +16,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class StreamingSketchSpec extends AnyFunSuite {
   import graft.functions.{expressions => gx}
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark = GraftSession.local(4)
 
   test("streaming KMV sketch ≡ batch sketch over the union, after every micro-batch") {
     implicit val sqlCtx = spark.sqlContext

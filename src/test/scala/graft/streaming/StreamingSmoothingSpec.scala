@@ -1,18 +1,14 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
 import StreamingSmoothing.Point
+import graft.GraftSession
 
 class StreamingSmoothingSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark = GraftSession.local(4)
   import spark.implicits._
 
   test("streaming ewma = batch cleared rationals across micro-batches") {
