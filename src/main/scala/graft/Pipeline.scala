@@ -1,8 +1,11 @@
 package graft
 
+import java.util.concurrent.{Callable, ExecutionException, Executors, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
+import graft.config.Setup
 import graft.core._
 import graft.ledger.Ledger
 import graft.loader.Loader
@@ -21,10 +24,26 @@ import graft.streaming.Batcher
   * inside foreachBatch is correct at any scale — the data files
   * themselves are read and written entirely on executors.
   *
-  * Shutdown note: `query.stop()` interrupts the micro-batch thread. The
-  * interrupt (InterruptedException from the load's wait on its targets,
-  * InterruptedIOException from a ledger write) propagates out of the
-  * trigger rather than becoming an `error` batch outcome, so shutdown
+  * Lanes: the reference runs one Lambda invocation per S3 event, so
+  * batches of different prefixes load at the same time. A trigger's
+  * commands are split into lanes — connected components of commands that
+  * share a target (resolved JDBC URL, lower-cased table) — so every batch
+  * of one prefix, and every prefix loading one table, keeps `collect()`
+  * order in one lane (`truncateTarget` and `presql` see the same order as
+  * before). Different lanes run at the same time on threads of a pool
+  * made for the trigger; a trigger with one lane runs it inline on the
+  * micro-batch thread. The trigger returns only once every lane has
+  * ended; a lane failure is rethrown then, and replays like any failed
+  * trigger: the commit registry makes a target that already committed a
+  * no-op and the ledger appends re-run. Ledger compaction runs after that
+  * join, so its directory swap never races a lane's append.
+  *
+  * Shutdown note: `query.stop()` interrupts the micro-batch thread, which
+  * interrupts every lane and waits for all of them to end, so no lane
+  * writes a ledger row or sends a notification after `stop()` returns.
+  * The interrupt (InterruptedException from the load's wait on its
+  * targets, InterruptedIOException from a ledger write) propagates out of
+  * the trigger rather than becoming an `error` batch outcome, so shutdown
   * writes no error row, sends no failure notification and takes no
   * auto-reprocess. This is the designed teardown path, not data loss:
   * the interrupted trigger never reaches the streaming commit log, so
@@ -89,22 +108,100 @@ object Pipeline {
     val events = FileEventSource.stream(spark, settings.watchRoot)
     val flushes: Dataset[FlushCommand] = Batcher.run(spark, events, configs)
 
-    val flushed = new java.util.concurrent.atomic.AtomicLong(0L)
+    var flushed = 0L // touched only by the micro-batch thread
     flushes.writeStream
       .outputMode("append")
       .option("checkpointLocation", settings.checkpointDir)
       .trigger(Trigger.ProcessingTime(settings.triggerInterval))
       .foreachBatch { (batch: Dataset[FlushCommand], _: Long) =>
-        batch.collect().foreach { cmd =>
+        val cmds = batch.collect().toSeq
+        runLanes(lanes(cmds, configs)) { cmd =>
           runOne(spark, settings, configs, ledger, notifier, topicNotifiers,
             resolvePassword, cmd, attempt = 0)
-          if (settings.compactEvery > 0 &&
-              flushed.incrementAndGet() % settings.compactEvery == 0)
-            ledger.compact()
         }
+        // once per trigger, after the join: at most one compaction, and
+        // only when the flush count crossed a multiple of compactEvery
+        val before = flushed
+        flushed += cmds.size
+        if (settings.compactEvery > 0 &&
+            before / settings.compactEvery != flushed / settings.compactEvery)
+          ledger.compact()
       }
       .start()
   }
+
+  private def configFor(prefix: String, configs: Map[String, LoadConfig]): Option[LoadConfig] =
+    configs.get(prefix).orElse(Prefix.resolve(prefix, configs).map(_._2))
+
+  /** Split a trigger's commands into lanes: the connected components of
+    * commands that share a target, a target being the (resolved JDBC URL,
+    * lower-cased table) pair. Lanes come in the order of their first
+    * command, and each keeps its commands in the given order. A command
+    * whose prefix has no config is a lane of its own (its run reports the
+    * missing config).
+    */
+  private[graft] def lanes(cmds: Seq[FlushCommand],
+                           configs: Map[String, LoadConfig]): Seq[Seq[FlushCommand]] = {
+    // union-find over command indices, joined through each target's first user
+    val parent = Array.tabulate(cmds.size)(identity)
+    def root(i: Int): Int = {
+      if (parent(i) != i) parent(i) = root(parent(i))
+      parent(i)
+    }
+    val firstUser = scala.collection.mutable.Map.empty[(String, String), Int]
+    cmds.indices.foreach { i =>
+      configFor(cmds(i).s3Prefix, configs).toSeq.flatMap(_.targets).foreach { t =>
+        val key = (Setup.resolveJdbcUrl(t.jdbcUrl), t.targetTable.toLowerCase)
+        firstUser.get(key) match {
+          case Some(j) => parent(root(i)) = root(j)
+          case None => firstUser(key) = i
+        }
+      }
+    }
+    cmds.indices.groupBy(root).values.toSeq.sortBy(_.head).map(_.map(cmds))
+  }
+
+  /** Run each lane's items in order and the lanes at the same time, and
+    * return only once every lane has ended. A single lane runs inline on
+    * the calling thread. Several run on a pool made for this call, whose
+    * threads inherit the caller's Spark local properties (job group,
+    * active session) as inline code would see them. If lanes fail, the
+    * first lane's failure is rethrown after all lanes end, the others
+    * suppressed onto it. An interrupt of the calling thread interrupts
+    * every lane and waits for all of them to end before it propagates.
+    */
+  private[graft] def runLanes[A](lanes: Seq[Seq[A]])(run: A => Unit): Unit =
+    if (lanes.size <= 1) lanes.foreach(_.foreach(run))
+    else {
+      val made = new AtomicInteger(0)
+      val pool = Executors.newFixedThreadPool(lanes.size, (r: Runnable) => {
+        val t = new Thread(r, s"$LaneThreadPrefix${made.incrementAndGet()}")
+        t.setDaemon(true)
+        t
+      })
+      try {
+        val ends = lanes.map(lane => pool.submit(new Callable[Unit] {
+          def call(): Unit = lane.foreach(run)
+        }))
+        val failures = ends.flatMap { end =>
+          try { end.get(); None } catch { case e: ExecutionException => Some(e.getCause) }
+        }
+        failures.headOption.foreach { first =>
+          failures.tail.foreach(first.addSuppressed)
+          throw first
+        }
+      } finally {
+        pool.shutdownNow() // interrupts lanes still running: only after an interrupt here
+        var interrupted = false
+        while (!pool.isTerminated)
+          try pool.awaitTermination(1, TimeUnit.MINUTES)
+          catch { case _: InterruptedException => interrupted = true }
+        if (interrupted) Thread.currentThread().interrupt()
+      }
+    }
+
+  /** Name prefix of lane threads. */
+  private[graft] val LaneThreadPrefix = "graft-lane-"
 
   /** Through the ledger path's Hadoop `FileSystem`, like the ledger
     * itself: a URI `ledgerDir` (`file:`, `hdfs:`, …) keeps its manifests
@@ -127,9 +224,8 @@ object Pipeline {
       resolvePassword: Loader.PasswordResolver,
       cmd: FlushCommand,
       attempt: Int): Unit = {
-    val cfg = configs.getOrElse(cmd.s3Prefix,
-      Prefix.resolve(cmd.s3Prefix, configs).map(_._2).getOrElse(
-        throw new IllegalStateException(s"no config for flushed prefix ${cmd.s3Prefix}")))
+    val cfg = configFor(cmd.s3Prefix, configs).getOrElse(
+      throw new IllegalStateException(s"no config for flushed prefix ${cmd.s3Prefix}"))
 
     // lock → load → complete|error, ledger rows for each (T4/T7 lifecycle)
     ledger.appendBatch(BatchRecord(cmd.s3Prefix, cmd.batchId, BatchStatus.Locked.name,

@@ -42,7 +42,9 @@ import graft.core._
   * Every append carries a monotonic `seq` (single-writer): `lastUpdate`
   * has millisecond grain, and transitions like reprocessing→reprocessed
   * land inside the same millisecond — `seq` makes the latest-event
-  * window deterministic.
+  * window deterministic. The pipeline's lanes append at the same time;
+  * that keeps the order each key needs, since every event of one batch or
+  * one file comes from a single lane and `seq` is drawn atomically.
   */
 final case class BatchLedgerEvent(
     s3Prefix: String,

@@ -1,6 +1,6 @@
 package graft.loader
 
-import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.{Await, ExecutionContext, Future, blocking}
 import scala.concurrent.duration._
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types.StructType
@@ -59,9 +59,13 @@ object Loader {
     try {
       val df = Formats.read(spark, cfg, paths, schema)
 
+      // `blocking`: a target body holds a global-pool thread through its
+      // JDBC and Spark waits; marked, the pool adds threads instead of
+      // queueing one lane's target loads behind another lane's, which
+      // would eat into their `timeoutSecs` budget
       implicit val ec: ExecutionContext = ExecutionContext.global
       val futures = cfg.targets.map { t =>
-        Future {
+        Future(blocking {
           if (skipTarget(t))
             LoadResult(t.jdbcUrl, ok = true, 0L, skipped = true, None)
           else {
@@ -77,7 +81,7 @@ object Loader {
               resolvePassword(t.encryptedPassword), cmd.batchId,
               queryTimeoutSecs = timeoutSecs)
           }
-        }
+        })
       }
       val results = Await.result(Future.sequence(futures), timeoutSecs.seconds)
       val allOk = results.forall(_.ok)

@@ -15,6 +15,10 @@ final case class Notification(
     failedManifest: Option[String])
 
 trait Notifier {
+  /** Deliver one notification. The pipeline loads a trigger's disjoint
+    * target sets in parallel lanes, so `notify` may be called at the same
+    * time from different lanes: an implementation must be thread-safe.
+    */
   def notify(n: Notification): Unit
 
   /** `SuppressFailureStatusOnSuccessfulNotification`
@@ -32,8 +36,10 @@ class LogNotifier extends Notifier {
         n.error.map(e => s" error=$e").getOrElse(""))
 }
 
-/** Test double: collects notifications in memory. */
+/** Test double: collects notifications in memory. `received` is a
+  * snapshot, safe to read while lanes deliver. */
 class CollectingNotifier extends Notifier {
-  val received = scala.collection.mutable.ArrayBuffer.empty[Notification]
-  override def notify(n: Notification): Unit = synchronized { received += n }
+  private val got = scala.collection.mutable.ArrayBuffer.empty[Notification]
+  def received: Seq[Notification] = synchronized { got.toList }
+  override def notify(n: Notification): Unit = synchronized { got += n }
 }

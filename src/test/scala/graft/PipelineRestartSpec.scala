@@ -70,8 +70,8 @@ class PipelineRestartSpec extends AnyFunSuite {
       val deadline = System.currentTimeMillis() + 120000
       while (rows() < 3 && System.currentTimeMillis() < deadline) Thread.sleep(500)
       assert(rows() == 3, "exactly the new file's row arrived")
-      // settle one more trigger to catch any duplicate load
-      Thread.sleep(3000)
+      // settle the trigger in flight and one more to catch any duplicate load
+      StreamProgress.awaitTriggers(q2, 2)
       assert(rows() == 3, "processed file must not reload after restart")
       val rs = c0.createStatement().executeQuery(
         "SELECT sum(column_a)+sum(column_b)+sum(column_c) FROM restart_target")

@@ -124,7 +124,9 @@ class PipelineSpec extends AnyFunSuite {
       while ((notifier.received.size < 2 || failTopic.received.isEmpty) &&
              System.currentTimeMillis() < deadline)
         Thread.sleep(500)
-      Thread.sleep(2000) // allow any trailing auto-reprocess attempt to finish
+      // let the trigger in flight end, and one more run, so any trailing
+      // auto-reprocess attempt has finished
+      StreamProgress.awaitTriggers(q, 2)
       // default notifier saw ONLY prefix A: one failure + one auto-retry
       assert(notifier.received.size == 2)
       assert(notifier.received.forall(n =>
