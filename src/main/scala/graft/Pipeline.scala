@@ -1,7 +1,5 @@
 package graft
 
-import java.util.concurrent.{Callable, ExecutionException, Executors, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
@@ -30,17 +28,20 @@ import graft.streaming.Batcher
   * share a target (resolved JDBC URL, lower-cased table) — so every batch
   * of one prefix, and every prefix loading one table, keeps `collect()`
   * order in one lane (`truncateTarget` and `presql` see the same order as
-  * before). Different lanes run at the same time on threads of a pool
-  * made for the trigger; a trigger with one lane runs it inline on the
-  * micro-batch thread. The trigger returns only once every lane has
-  * ended; a lane failure is rethrown then, and replays like any failed
-  * trigger: the commit registry makes a target that already committed a
-  * no-op and the ledger appends re-run. Ledger compaction runs after that
-  * join, so its directory swap never races a lane's append.
+  * before). Lanes run through [[Fanout.all]]: different lanes at the
+  * same time on threads made for the trigger, a trigger's only lane
+  * inline on the micro-batch thread. The trigger returns only once every
+  * lane has ended; a lane failure is rethrown then, and replays like any
+  * failed trigger: the commit registry makes a target that already
+  * committed a no-op and the ledger appends re-run. Ledger compaction
+  * runs after that join, so its directory swap never races a lane's
+  * append.
   *
   * Shutdown note: `query.stop()` interrupts the micro-batch thread, which
-  * interrupts every lane and waits for all of them to end, so no lane
-  * writes a ledger row or sends a notification after `stop()` returns.
+  * interrupts every lane and waits for all of them to end; a lane's
+  * batch load in turn interrupts its target loads and waits for them
+  * (see [[Loader.loadBatch]]). So no target load runs, and no lane
+  * writes a ledger row or sends a notification, after `stop()` returns.
   * The interrupt (InterruptedException from the load's wait on its
   * targets, InterruptedIOException from a ledger write) propagates out of
   * the trigger rather than becoming an `error` batch outcome, so shutdown
@@ -65,23 +66,14 @@ object Pipeline {
         * (failedBatchReprocessingLambda.js:7-10). */
       reprocessSupported: String => Boolean = _ => true,
       maxAutoReprocess: Int = 1,
-      /** Compact the ledger to latest-state rows every N flushed batches
-        * (0 = never): bounds the event log's file count and the
-        * latest-state window's scan cost over a long-lived pipeline. */
-      compactEvery: Int = 64,
-      /** Back the Batcher's keyed state with RocksDB instead of the
-        * default in-memory HDFS-backed store: for deployments watching
-        * many prefixes with large dedup ledgers, state no longer has to
-        * fit on the executor heap (rocksdbjni ships with Spark). */
-      rocksDbState: Boolean = false,
       /** SURVEY §7.5-7 opt-in fix: gate the T9 fan-out on per-
         * (file, target) ledger rows, so reprocessing a partially-failed
         * multi-target batch loads ONLY the targets that never committed
         * its files. Off by default — the reference's dedup is per-file
         * only, and faithful parity re-loads committed clusters.
         * Loads are bounded by statement-level query timeouts (see
-        * Loader) so an over-budget target rolls back rather than
-        * committing after the fan-out gave up; the residual
+        * Loader) and the fan-out never gives up on a running load, so
+        * an over-budget target rolls back and reports it; the residual
         * two-generals window (commit acked but the ack lost) degrades
         * to the default re-load behavior, never to a skipped load. */
       perTargetFileDedup: Boolean = false)
@@ -100,10 +92,6 @@ object Pipeline {
       topicNotifiers: Map[String, Notifier] = Map.empty,
       resolvePassword: Loader.PasswordResolver = identity): StreamingQuery = {
 
-    if (settings.rocksDbState)
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-
     val ledger = new Ledger(spark, settings.ledgerDir)
     val events = FileEventSource.stream(spark, settings.watchRoot)
     val flushes: Dataset[FlushCommand] = Batcher.run(spark, events, configs)
@@ -115,20 +103,22 @@ object Pipeline {
       .trigger(Trigger.ProcessingTime(settings.triggerInterval))
       .foreachBatch { (batch: Dataset[FlushCommand], _: Long) =>
         val cmds = batch.collect().toSeq
-        runLanes(lanes(cmds, configs)) { cmd =>
-          runOne(spark, settings, configs, ledger, notifier, topicNotifiers,
-            resolvePassword, cmd, attempt = 0)
-        }
+        Fanout.all(LaneThreadPrefix, lanes(cmds, configs).map(lane => () =>
+          lane.foreach(cmd => runOne(spark, settings, configs, ledger, notifier,
+            topicNotifiers, resolvePassword, cmd, attempt = 0))))
         // once per trigger, after the join: at most one compaction, and
-        // only when the flush count crossed a multiple of compactEvery
+        // only when the flush count crossed a multiple of CompactEvery
         val before = flushed
         flushed += cmds.size
-        if (settings.compactEvery > 0 &&
-            before / settings.compactEvery != flushed / settings.compactEvery)
-          ledger.compact()
+        if (before / CompactEvery != flushed / CompactEvery) ledger.compact()
       }
       .start()
   }
+
+  /** Compact the ledger to latest-state rows every this many flushed
+    * batches: bounds the event log's file count and the latest-state
+    * window's scan cost over a long-lived pipeline. */
+  private val CompactEvery = 64
 
   private def configFor(prefix: String, configs: Map[String, LoadConfig]): Option[LoadConfig] =
     configs.get(prefix).orElse(Prefix.resolve(prefix, configs).map(_._2))
@@ -160,45 +150,6 @@ object Pipeline {
     }
     cmds.indices.groupBy(root).values.toSeq.sortBy(_.head).map(_.map(cmds))
   }
-
-  /** Run each lane's items in order and the lanes at the same time, and
-    * return only once every lane has ended. A single lane runs inline on
-    * the calling thread. Several run on a pool made for this call, whose
-    * threads inherit the caller's Spark local properties (job group,
-    * active session) as inline code would see them. If lanes fail, the
-    * first lane's failure is rethrown after all lanes end, the others
-    * suppressed onto it. An interrupt of the calling thread interrupts
-    * every lane and waits for all of them to end before it propagates.
-    */
-  private[graft] def runLanes[A](lanes: Seq[Seq[A]])(run: A => Unit): Unit =
-    if (lanes.size <= 1) lanes.foreach(_.foreach(run))
-    else {
-      val made = new AtomicInteger(0)
-      val pool = Executors.newFixedThreadPool(lanes.size, (r: Runnable) => {
-        val t = new Thread(r, s"$LaneThreadPrefix${made.incrementAndGet()}")
-        t.setDaemon(true)
-        t
-      })
-      try {
-        val ends = lanes.map(lane => pool.submit(new Callable[Unit] {
-          def call(): Unit = lane.foreach(run)
-        }))
-        val failures = ends.flatMap { end =>
-          try { end.get(); None } catch { case e: ExecutionException => Some(e.getCause) }
-        }
-        failures.headOption.foreach { first =>
-          failures.tail.foreach(first.addSuppressed)
-          throw first
-        }
-      } finally {
-        pool.shutdownNow() // interrupts lanes still running: only after an interrupt here
-        var interrupted = false
-        while (!pool.isTerminated)
-          try pool.awaitTermination(1, TimeUnit.MINUTES)
-          catch { case _: InterruptedException => interrupted = true }
-        if (interrupted) Thread.currentThread().interrupt()
-      }
-    }
 
   /** Name prefix of lane threads. */
   private[graft] val LaneThreadPrefix = "graft-lane-"

@@ -380,7 +380,7 @@ class Ledger(spark: SparkSession, dir: String) {
     latestFileEvents.filter(!$"deleted")
 
   /** Rewrite both logs to their latest-state rows. Run periodically (the
-    * Pipeline does, every `Settings.compactEvery` flushes): an
+    * Pipeline does, every `Pipeline.CompactEvery` flushes): an
     * append-per-event log accretes one small parquet file per state
     * change, and the latest-event window re-reads all of them on every
     * ops query. Compaction = the DynamoDB tables' current-state shape,

@@ -34,6 +34,11 @@ object JdbcWriter {
   def stagingTable(target: String): String = target + "_graft_stage"
   val CommitTable = "graft_batch_commits"
 
+  /** The load budget, per statement: every staging purge, staging write
+    * and commit statement is cancelled database-side past it (the
+    * reference's `statement_timeout`, `index.js:1085-1096`). */
+  val StatementTimeoutSecs = 600
+
   /** Quadratic backoff with cap, reference-style (`index.js:385,53`):
     * min(try² · 10, 200) ms.
     */
@@ -145,13 +150,16 @@ object JdbcWriter {
       // it, never splice it into SQL text.
       val s = conn.prepareStatement(
         s"DELETE FROM ${stagingTable(t.targetTable)} WHERE $BatchIdCol = ?")
+      s.setQueryTimeout(StatementTimeoutSecs)
       try { s.setString(1, batchId); s.executeUpdate() }
       finally s.close()
     }
     val tagged = df.withColumn(BatchIdCol, lit(batchId))
     val props = new java.util.Properties()
     if (t.user.nonEmpty) { props.put("user", t.user); props.put("password", password) }
-    tagged.write.mode("append").jdbc(connectUrl(t), stagingTable(t.targetTable), props)
+    // Spark's JdbcUtils.savePartition sets it on every insert statement
+    tagged.write.mode("append").option("queryTimeout", StatementTimeoutSecs)
+      .jdbc(connectUrl(t), stagingTable(t.targetTable), props)
     df.columns.length.toLong // column count unused; rows counted at commit
   }
 
@@ -161,13 +169,12 @@ object JdbcWriter {
     * registry keyed on batch_id alone (created before the composite key)
     * refused another table's commit: that fails the load, never skips it.
     */
-  def commit(t: LoadTarget, password: String, batchId: String,
-             queryTimeoutSecs: Int = 0): (Boolean, Long) =
+  def commit(t: LoadTarget, password: String, batchId: String): (Boolean, Long) =
     withConnection(t, password) { conn =>
       conn.setAutoCommit(false)
       def prep(sql: String): java.sql.PreparedStatement = {
         val ps = conn.prepareStatement(sql)
-        if (queryTimeoutSecs > 0) ps.setQueryTimeout(queryTimeoutSecs)
+        ps.setQueryTimeout(StatementTimeoutSecs)
         ps
       }
       // idempotence guard: PK violation on replay → rollback + skip.
@@ -202,7 +209,7 @@ object JdbcWriter {
       if (!fresh) (false, 0L)
       else {
         val stmt = conn.createStatement()
-        if (queryTimeoutSecs > 0) stmt.setQueryTimeout(queryTimeoutSecs)
+        stmt.setQueryTimeout(StatementTimeoutSecs)
         try {
           t.presql.foreach(stmt.execute)
           if (t.truncateTarget) stmt.executeUpdate(s"DELETE FROM ${t.targetTable}")
@@ -230,12 +237,11 @@ object JdbcWriter {
     }
 
   /** Full single-target load: stage → transactional commit, with retry. */
-  def load(df: DataFrame, t: LoadTarget, password: String, batchId: String,
-           queryTimeoutSecs: Int = 0): LoadResult =
+  def load(df: DataFrame, t: LoadTarget, password: String, batchId: String): LoadResult =
     try {
       ensureAuxTables(t, password)
       retry() { stage(df, t, password, batchId) }
-      val (committed, rows) = retry() { commit(t, password, batchId, queryTimeoutSecs) }
+      val (committed, rows) = retry() { commit(t, password, batchId) }
       LoadResult(t.jdbcUrl, ok = true, rows, skipped = !committed, None)
     } catch {
       case scala.util.control.NonFatal(e) =>

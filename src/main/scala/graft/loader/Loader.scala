@@ -1,9 +1,8 @@
 package graft.loader
 
-import scala.concurrent.{Await, ExecutionContext, Future, blocking}
-import scala.concurrent.duration._
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types.StructType
+import graft.Fanout
 import graft.core._
 import graft.loader.JdbcWriter.LoadResult
 
@@ -28,7 +27,12 @@ object Loader {
 
   /** Load one flushed batch into every configured target in parallel.
     * The reference fans out with `async.map` and folds "all OK"
-    * (`index.js:909-925`); we use Futures and the same conjunction.
+    * (`index.js:909-925`); the targets run through [[Fanout.all]]. A
+    * load is never abandoned: an interrupt of the caller reaches every
+    * target load and waits for it. The budget is per statement
+    * ([[JdbcWriter.StatementTimeoutSecs]]), so a slow target rolls back
+    * database-side (ok=false, the retry loads it) instead of leaving its
+    * commit outcome unknown to the per-target dedup facts.
     *
     * `skipTarget` is the per-(file,target) dedup gate (SURVEY §7.5-7's
     * opt-in fix): a target it selects is reported ok+skipped without
@@ -44,7 +48,6 @@ object Loader {
       fileRoot: String,
       schema: Option[StructType] = None,
       resolvePassword: PasswordResolver = identity,
-      timeoutSecs: Int = 600,
       skipTarget: LoadTarget => Boolean = _ => false): BatchLoadOutcome = {
 
     val paths = cmd.entries.map(e => s"$fileRoot/${e.file}")
@@ -58,32 +61,13 @@ object Loader {
     // stopped query replays the batch on restart.
     try {
       val df = Formats.read(spark, cfg, paths, schema)
-
-      // `blocking`: a target body holds a global-pool thread through its
-      // JDBC and Spark waits; marked, the pool adds threads instead of
-      // queueing one lane's target loads behind another lane's, which
-      // would eat into their `timeoutSecs` budget
-      implicit val ec: ExecutionContext = ExecutionContext.global
-      val futures = cfg.targets.map { t =>
-        Future(blocking {
-          if (skipTarget(t))
-            LoadResult(t.jdbcUrl, ok = true, 0L, skipped = true, None)
-          else {
-            val renamed = Formats.applyColumnList(df, t.columnList)
-            // statement-level timeout = the load budget: a slow target's
-            // transaction is CANCELLED db-side (rolls back → ok=false →
-            // the retry loads it) rather than abandoned mid-flight by
-            // the Await below, which would leave its commit outcome
-            // unknown — exactly what the per-target dedup facts must
-            // never be wrong about. The Await stays as the backstop for
-            // drivers that ignore setQueryTimeout.
-            JdbcWriter.load(renamed, t.copy(columnList = None),
-              resolvePassword(t.encryptedPassword), cmd.batchId,
-              queryTimeoutSecs = timeoutSecs)
-          }
-        })
-      }
-      val results = Await.result(Future.sequence(futures), timeoutSecs.seconds)
+      val results = Fanout.all("graft-target-", cfg.targets.map { t => () =>
+        if (skipTarget(t))
+          LoadResult(t.jdbcUrl, ok = true, 0L, skipped = true, None)
+        else
+          JdbcWriter.load(Formats.applyColumnList(df, t.columnList),
+            t.copy(columnList = None), resolvePassword(t.encryptedPassword), cmd.batchId)
+      })
       val allOk = results.forall(_.ok)
       BatchLoadOutcome(cmd.batchId, cmd.s3Prefix,
         if (allOk) "complete" else "error", results, manifest)

@@ -72,21 +72,16 @@ object AdjacencyIndex {
     // concurrently so the adj write's tail doesn't serialize ahead of
     // the two node-sized writes (guide §2.6 "overlap independent
     // jobs"; the build's wall drops from the sum to ~the adj write)
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
-    val writes = Seq(
-      Future {
+    try awaitAllWrites(s"AdjacencyIndex.save($name)", Seq(
+      "adj" -> (() =>
         adj.write.mode("overwrite")
           .bucketBy(buckets, "src").sortBy("src")
-          .saveAsTable(s"${name}_adj")
-      },
-      Future {
+          .saveAsTable(s"${name}_adj")),
+      "deg" -> (() =>
         deg.write.mode("overwrite")
           .bucketBy(buckets, "node").sortBy("node")
-          .saveAsTable(s"${name}_deg")
-      },
-      Future {
+          .saveAsTable(s"${name}_deg")),
+      "meta" -> (() =>
         // deg·(deg−1) is even → shiftright is the exact halve (the
         // triangleStats arithmetic, kept identical so stored readouts
         // hash-match the live census)
@@ -94,27 +89,23 @@ object AdjacencyIndex {
             sum(shiftright(col("deg") * (col("deg") - 1), 1)).as("n_wedges"))
           .crossJoin(broadcast(und.agg(count(lit(1)).as("n_edges"))))
           .select(col("n_nodes"), col("n_edges"), col("n_wedges"))
-          .write.mode("overwrite").saveAsTable(s"${name}_meta")
-      })
-    try awaitAllWrites(s"AdjacencyIndex.save($name)",
-      Seq("adj", "deg", "meta").zip(writes))
+          .write.mode("overwrite").saveAsTable(s"${name}_meta"))))
     finally adj.unpersist(blocking = false)
   }
 
-  /** FAILURE CONTRACT for concurrent table writes (r16 ADVICE):
-    * `Future.sequence` fails fast — the await would throw while
-    * sibling writes are still running, leaving the catalog with an
-    * untracked partial subset and skipping the caller's cleanup.
-    * Instead every write SETTLES before anything is raised, and a
-    * single combined error names every failed table (suppressed
-    * siblings attached) so the caller sees ONE coherent outcome, not
-    * a race. */
+  /** FAILURE CONTRACT for concurrent table writes: run every write
+    * through [[graft.Fanout.settle]], so every write SETTLES before
+    * anything is raised — a fail-fast join would throw while sibling
+    * writes still run, leaving the catalog with an untracked partial
+    * subset and skipping the caller's cleanup, and an interrupt of the
+    * caller ends every write before it propagates. Then a single
+    * combined error names every failed table, keeps the first failure
+    * as its cause and the others suppressed, so the caller sees ONE
+    * coherent outcome, not a race. */
   private[operators] def awaitAllWrites(
-      what: String, writes: Seq[(String, scala.concurrent.Future[Unit])]): Unit = {
-    import scala.concurrent.Await
-    import scala.concurrent.duration.Duration
-    val settled = writes.map { case (t, f) =>
-      t -> Await.ready(f, Duration.Inf).value.get }
+      what: String, writes: Seq[(String, () => Unit)]): Unit = {
+    val settled = writes.map(_._1).zip(
+      graft.Fanout.settle("graft-index-write-", writes.map(_._2)))
     val failures = settled.collect { case (t, scala.util.Failure(e)) => (t, e) }
     if (failures.nonEmpty) {
       val err = new RuntimeException(

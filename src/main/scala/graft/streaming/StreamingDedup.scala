@@ -124,8 +124,10 @@ object StreamingDedup {
     * timeout path of the old API.
     *
     * Requires the RocksDB state store provider (the only provider the
-    * operator supports), which [[graft.Pipeline.Settings.rocksDbState]]
-    * already wires; state stays off-heap-bounded at any corpus rate.
+    * operator supports): the deployment sets
+    * `spark.sql.streaming.stateStore.providerClass` to
+    * `RocksDBStateStoreProvider`; state stays off-heap-bounded at any
+    * corpus rate.
     */
   def exactTws(spark: SparkSession, docs: Dataset[Doc],
                stateTtlMs: Long = 86400000L): Dataset[Admitted] = {

@@ -52,29 +52,6 @@ class PipelineLanesSpec extends AnyFunSuite {
       Seq(Seq("a-1", "a-2", "a-3"), Seq("b-1", "b-2")))
   }
 
-  test("runLanes: one lane runs inline on the calling thread") {
-    val caller = Thread.currentThread()
-    val ran = scala.collection.mutable.ArrayBuffer.empty[(Int, Thread)]
-    Pipeline.runLanes(Seq(Seq(1, 2, 3))) { i => ran += (i -> Thread.currentThread()) }
-    assert(ran.toSeq == Seq(1 -> caller, 2 -> caller, 3 -> caller))
-  }
-
-  test("runLanes: a lane's failure is rethrown only after every lane has ended") {
-    val failed = new CountDownLatch(1)
-    @volatile var otherEnded = false
-    val e = intercept[IllegalStateException] {
-      Pipeline.runLanes(Seq(Seq("fail"), Seq("wait"))) {
-        case "fail" => failed.countDown(); throw new IllegalStateException("lane one")
-        case _ =>
-          assert(failed.await(60, TimeUnit.SECONDS))
-          Thread.sleep(200) // still running when the failure is known
-          otherEnded = true
-      }
-    }
-    assert(e.getMessage == "lane one")
-    assert(otherEnded)
-  }
-
   private val schema = StructType(Seq(StructField("column_a", IntegerType)))
 
   /** Two prefixes, each loading its own table of one Derby database, with

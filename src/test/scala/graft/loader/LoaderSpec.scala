@@ -171,6 +171,43 @@ class LoaderSpec extends AnyFunSuite {
     assert(outcome.left.exists(_.isInstanceOf[InterruptedException]), s"got $outcome")
   }
 
+  test("an interrupted two-target loadBatch ends every target load before the interrupt propagates") {
+    // a target load still running after its trigger gave up would race
+    // the replay of its batch: the interrupt must reach every target
+    val entered = new java.util.concurrent.CountDownLatch(2)
+    val release = new java.util.concurrent.CountDownLatch(1)
+    val targetThreads = new java.util.concurrent.ConcurrentLinkedQueue[Thread]()
+    val ended = new java.util.concurrent.atomic.AtomicInteger(0)
+    @volatile var outcome: Either[Throwable, Loader.BatchLoadOutcome] = null
+    @volatile var endedAtReturn = -1
+    @volatile var aliveAtReturn = -1
+    val loading = new Thread(() => {
+      outcome =
+        try Right(Loader.loadBatch(spark,
+          cfg.copy(targets = Seq(target("interrupt2_a"), target("interrupt2_b"))),
+          cmd("ib2", Seq("sample0.csv")), root, Some(schema),
+          skipTarget = _ => {
+            targetThreads.add(Thread.currentThread())
+            entered.countDown()
+            try release.await() finally ended.incrementAndGet()
+            true
+          }))
+        catch { case e: Throwable => Left(e) }
+      endedAtReturn = ended.get
+      aliveAtReturn = targetThreads.toArray(Array.empty[Thread]).count(_.isAlive)
+    })
+    loading.start()
+    try {
+      assert(entered.await(60, java.util.concurrent.TimeUnit.SECONDS), "both targets started")
+      loading.interrupt()
+      loading.join(60000)
+    } finally release.countDown()
+    assert(!loading.isAlive)
+    assert(outcome.left.exists(_.isInstanceOf[InterruptedException]), s"got $outcome")
+    assert(endedAtReturn == 2, "every target load ended before the interrupt propagated")
+    assert(aliveAtReturn == 0, "no target thread outlives loadBatch")
+  }
+
   test("multi-target fan-out: one bad target fails the batch, good target still commits (§7.5.7 wart)") {
     sql("CREATE TABLE fan_good(column_a INT, column_b INT, column_c INT)")
     val bad = LoadTarget("jdbc:derby:memory:nonexistent", "", "", "fan_bad")

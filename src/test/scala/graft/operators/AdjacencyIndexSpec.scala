@@ -48,14 +48,12 @@ class AdjacencyIndexSpec extends AnyFunSuite {
   }
 
   test("concurrent-write failure contract: every write SETTLES before the combined error is raised, which names every failed table") {
-    import scala.concurrent.{Future, Promise}
-    import scala.concurrent.ExecutionContext.Implicits.global
     // slow sibling: proves awaitAllWrites does NOT fail fast — the
     // error can only carry this flag if the slow write settled first
     @volatile var slowSettled = false
-    val slow = Future { Thread.sleep(400); slowSettled = true }
-    val fast = Future { () }
-    val boom = Future { throw new IllegalStateException("disk full") }
+    val slow = () => { Thread.sleep(400); slowSettled = true }
+    val fast = () => ()
+    val boom: () => Unit = () => throw new IllegalStateException("disk full")
     val e = intercept[RuntimeException] {
       AdjacencyIndex.awaitAllWrites("save(t)",
         Seq("adj" -> slow, "deg" -> boom, "meta" -> fast))
@@ -67,11 +65,11 @@ class AdjacencyIndexSpec extends AnyFunSuite {
       s"combined error must name exactly the failed tables: ${e.getMessage}")
     assert(e.getCause.isInstanceOf[IllegalStateException])
     // two failures → both named, second attached as suppressed
-    val boom2 = Promise[Unit]().failure(new RuntimeException("quota")).future
+    val boom2: () => Unit = () => throw new RuntimeException("quota")
     val e2 = intercept[RuntimeException] {
       AdjacencyIndex.awaitAllWrites("save(t)",
-        Seq("adj" -> boom2, "deg" -> Future(()),
-          "meta" -> Future { throw new RuntimeException("lease lost") }))
+        Seq("adj" -> boom2, "deg" -> (() => ()),
+          "meta" -> (() => throw new RuntimeException("lease lost"))))
     }
     assert(e2.getMessage.contains("adj") && e2.getMessage.contains("meta"))
     assert(e2.getSuppressed.length == 1)

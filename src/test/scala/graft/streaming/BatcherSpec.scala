@@ -5,7 +5,7 @@ import org.apache.spark.api.java.Optional
 import org.apache.spark.sql.streaming.TestGroupState
 import org.scalatest.funsuite.AnyFunSuite
 import graft.core._
-import graft.GraftSession
+import graft.{GraftSession, StreamProgress}
 
 class BatcherSpec extends AnyFunSuite {
 
@@ -162,7 +162,7 @@ class BatcherSpec extends AnyFunSuite {
       assert(got.map(_.batchId).distinct.length == 2)
       // re-delivering an already-processed file must not create entries
       input.addData(Seq(ev("s1.csv", t = now), ev("s2.csv", t = now)))
-      Thread.sleep(3000)
+      StreamProgress.awaitTriggers(q, 2)
       assert(spark.table("flushes").count() == 2)
     } finally q.stop()
   }
