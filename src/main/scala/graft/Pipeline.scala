@@ -1,41 +1,71 @@
 package graft
 
 import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener, Trigger}
 import org.apache.spark.sql.types.StructType
 import graft.config.Setup
 import graft.core._
-import graft.ledger.Ledger
+import graft.ledger.{BatchLedgerEvent, FileLedgerEvent, Ledger}
 import graft.loader.Loader
 import graft.notify.{Notification, Notifier, LogNotifier}
-import graft.sources.FileEventSource
-import graft.streaming.Batcher
+import graft.sources.{FileEventSource, TickSource}
+import graft.streaming.{Batcher, BatcherState}
 
 /** The assembled engine: the reference's full Lambda lifecycle
   * (SURVEY §3.1) as one Structured Streaming query.
   *
-  *   file events → admission/dedup/batching (stateful) → FlushCommand
-  *   → foreachBatch: format-aware read → transactional JDBC fan-out
-  *   → ledger append → notification → (optional) auto-reprocess hook.
+  *   file events ∪ age ticks → foreachBatch: collect → admission/dedup/
+  *   batching on the driver → write-ahead to the ledger → lanes:
+  *   format-aware read → transactional JDBC fan-out → ledger append →
+  *   notification → (optional) auto-reprocess hook.
   *
-  * The flush-command stream is tiny control-plane data, so `collect()`
-  * inside foreachBatch is correct at any scale — the data files
-  * themselves are read and written entirely on executors.
+  * Admission runs on the driver, like the reference's one conditional
+  * DynamoDB write per event (`index.js:313-516`): the events are metadata
+  * rows (path, size, mtime), so `collect()` inside foreachBatch is correct
+  * at any scale, and the query has no stateful operator — no shuffle, no
+  * state store. The data files themselves are read and written entirely
+  * on executors.
+  *
+  * Ticks: with no stateful operator a trigger runs a batch only when a
+  * file or a tick arrives. After each batch the pipeline arms a
+  * [[TickSource]] tick for the earliest pending batch's age deadline, so
+  * the age flush fires with no file arriving; an idle pipeline with
+  * nothing pending runs no batch at all. Tick events are dropped after
+  * `collect()` and their files deleted. The ticks live under
+  * `<checkpointDir>/ticks`.
+  *
+  * Write-ahead and recovery: before any lane runs, a trigger that changed
+  * the admission state writes one ledger append — `open` for each prefix
+  * whose pending batch changed, `locked` for each flush (see
+  * [[writeAhead]]). An idle trigger writes nothing. On start the
+  * pipeline reads that record once ([[recover]]): pending
+  * batches, the dedup set and each prefix's batch counter come back, and
+  * batches last seen `locked` run again in the first trigger, where the
+  * commit registry makes a target that already committed a no-op. A
+  * replayed micro-batch therefore reads back its recorded decisions — its
+  * admitted files are duplicates — instead of deciding them again with a
+  * new clock, and a fresh checkpoint over an existing ledger reloads no
+  * processed file and reuses no batch id.
+  *
+  * Checkpoints: adding the tick source changed the query's sources, so a
+  * checkpoint written by a build with the stateful Batcher cannot be
+  * resumed; start such a pipeline on a new checkpoint directory. That is
+  * safe: the new checkpoint re-lists the watch root and the ledger drops
+  * every file it has already admitted.
   *
   * Lanes: the reference runs one Lambda invocation per S3 event, so
   * batches of different prefixes load at the same time. A trigger's
   * commands are split into lanes — connected components of commands that
   * share a target (resolved JDBC URL, lower-cased table) — so every batch
-  * of one prefix, and every prefix loading one table, keeps `collect()`
+  * of one prefix, and every prefix loading one table, keeps admission
   * order in one lane (`truncateTarget` and `presql` see the same order as
   * before). Lanes run through [[Fanout.all]]: different lanes at the
   * same time on threads made for the trigger, a trigger's only lane
   * inline on the micro-batch thread. The trigger returns only once every
-  * lane has ended; a lane failure is rethrown then, and replays like any
-  * failed trigger: the commit registry makes a target that already
-  * committed a no-op and the ledger appends re-run. Ledger compaction
-  * runs after that join, so its directory swap never races a lane's
-  * append.
+  * lane has ended; a lane failure is rethrown then and stops the query;
+  * on restart its batch is still `locked` in the ledger and runs again.
+  * Ledger compaction runs after that join, so its directory swap never
+  * races a lane's append.
   *
   * Shutdown note: `query.stop()` interrupts the micro-batch thread, which
   * interrupts every lane and waits for all of them to end; a lane's
@@ -47,9 +77,9 @@ import graft.streaming.Batcher
   * the trigger rather than becoming an `error` batch outcome, so shutdown
   * writes no error row, sends no failure notification and takes no
   * auto-reprocess. This is the designed teardown path, not data loss:
-  * the interrupted trigger never reaches the streaming commit log, so
-  * it replays on restart — the commit registry makes the JDBC load a
-  * no-op and the ledger append re-runs.
+  * the interrupted batch is still `locked` in the ledger, so it runs
+  * again on restart — the commit registry makes the JDBC load a no-op and
+  * the ledger appends re-run.
   */
 object Pipeline {
 
@@ -93,19 +123,34 @@ object Pipeline {
       resolvePassword: Loader.PasswordResolver = identity): StreamingQuery = {
 
     val ledger = new Ledger(spark, settings.ledgerDir)
-    val events = FileEventSource.stream(spark, settings.watchRoot)
-    val flushes: Dataset[FlushCommand] = Batcher.run(spark, events, configs)
-
-    var flushed = 0L // touched only by the micro-batch thread
-    flushes.writeStream
+    val ticks = new TickSource(spark, s"${settings.checkpointDir}/ticks")
+    val now = () => System.currentTimeMillis()
+    // touched only by the micro-batch thread (and here, before it starts)
+    var (state, rerun) = ledger.recorded()
+      .map { case (batches, files) => recover(configs, batches, files) }
+      .getOrElse((Map.empty[String, BatcherState], Seq.empty[FlushCommand]))
+    var flushed = 0L
+    def armAgeTick(): Unit = Batcher.nextDeadline(configs, state).foreach(ticks.arm(_, now()))
+    armAgeTick()
+    val query = FileEventSource.stream(spark, settings.watchRoot).unionByName(ticks.stream)
+      .writeStream
       .outputMode("append")
       .option("checkpointLocation", settings.checkpointDir)
       .trigger(Trigger.ProcessingTime(settings.triggerInterval))
-      .foreachBatch { (batch: Dataset[FlushCommand], _: Long) =>
-        val cmds = batch.collect().toSeq
+      .foreachBatch { (batch: Dataset[FileEvent], _: Long) =>
+        val (tickEvents, events) =
+          batch.collect().toSeq.partition(_.eventName == TickSource.EventName)
+        val (next, flushes) = Batcher.admit(configs, now)(state, events)
+        val wal = writeAhead(state, next, flushes, now())
+        if (wal.nonEmpty) ledger.appendBatches(wal)
+        state = next
+        armAgeTick()
+        val cmds = rerun ++ flushes
         Fanout.all(LaneThreadPrefix, lanes(cmds, configs).map(lane => () =>
           lane.foreach(cmd => runOne(spark, settings, configs, ledger, notifier,
             topicNotifiers, resolvePassword, cmd, attempt = 0))))
+        rerun = Seq.empty
+        ticks.consumed(tickEvents)
         // once per trigger, after the join: at most one compaction, and
         // only when the flush count crossed a multiple of CompactEvery
         val before = flushed
@@ -113,6 +158,106 @@ object Pipeline {
         if (before / CompactEvery != flushed / CompactEvery) ledger.compact()
       }
       .start()
+    spark.streams.addListener(new StreamingQueryListener {
+      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = ()
+      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit =
+        if (e.id == query.id) {
+          ticks.stop()
+          spark.streams.removeListener(this)
+        }
+    })
+    if (!query.isActive) ticks.stop()
+    query
+  }
+
+  /** The ledger records of one trigger's decisions, written before any of
+    * its flushes loads: `open` for each prefix whose pending batch changed
+    * and still holds files, `locked` for each flush. Empty when nothing
+    * changed, so an idle trigger writes nothing.
+    */
+  private def writeAhead(before: Map[String, BatcherState], after: Map[String, BatcherState],
+                         flushes: Seq[FlushCommand], at: Long): Seq[BatchRecord] = {
+    val opened = after.toSeq.sortBy(_._1).collect {
+      case (p, st) if st.entries.nonEmpty && before.get(p).forall(b =>
+          b.currentBatch != st.currentBatch || b.entries != st.entries) =>
+        BatchRecord(p, st.currentBatch, BatchStatus.Open.name, st.entries, st.sizeBytes, at,
+          updateReason = Some("admit"))
+    }
+    opened ++ flushes.map(c => BatchRecord(c.s3Prefix, c.batchId, BatchStatus.Locked.name,
+      c.entries, c.sizeBytes, at, updateReason = Some(s"flush:${c.reason}")))
+  }
+
+  /** Rebuild the admission state from the ledger: `batches` is every
+    * batch event, `files` the latest event of every file (tombstones
+    * included). Returns each prefix's state and the flushes to run again.
+    *
+    *  - A prefix's pending batch is its highest-numbered batch when that
+    *    batch's latest event is `open`; otherwise the prefix starts a new
+    *    batch past its highest recorded id, so no id is used twice.
+    *  - The dedup set holds every file recorded in a batch or as
+    *    processed, except files whose latest file event released them (an
+    *    unlink from `Ops.reprocessFile`/`reprocessPrefix`, or a
+    *    tombstone), plus every entry of a batch that is still `open` or
+    *    `locked`.
+    *  - Batches whose latest event is `locked` were flushed but not known
+    *    to have finished: they run again, and the commit registry makes a
+    *    target that already committed a no-op.
+    *
+    * A file's admission time is taken as the first batch event that lists
+    * it (a compacted log keeps only the latest, so the age clock of a
+    * recovered batch may restart later than the original admission).
+    */
+  private def recover(configs: Map[String, LoadConfig], batches: Seq[BatchLedgerEvent],
+                      files: Seq[FileLedgerEvent]): (Map[String, BatcherState], Seq[FlushCommand]) = {
+    val latest = batches.groupBy(e => (e.s3Prefix, e.batchId)).values
+      .map(_.maxBy(e => (e.lastUpdate, e.seq))).toSeq
+    val firstSeen = batches.sortBy(e => (e.lastUpdate, e.seq))
+      .foldLeft(Map.empty[(String, String), Long]) { (m, e) =>
+        e.entryFiles.foldLeft(m)((m2, f) =>
+          if (m2.contains((e.batchId, f))) m2 else m2.updated((e.batchId, f), e.lastUpdate))
+      }
+    def entriesOf(e: BatchLedgerEvent): Vector[BatchEntry] =
+      e.entryFiles.zip(e.entrySizes).map { case (f, s) =>
+        BatchEntry(f, s, firstSeen.getOrElse((e.batchId, f), e.lastUpdate)) }.toVector
+    val live = latest.filter(e =>
+      e.status == BatchStatus.Open.name || e.status == BatchStatus.Locked.name)
+
+    val released = files.filter(f => f.deleted || f.batchId.isEmpty).map(_.loadFile).toSet
+    val dedup = ((batches.flatMap(_.entryFiles) ++
+      files.filterNot(f => f.deleted || f.batchId.isEmpty).map(_.loadFile)).toSet -- released) ++
+      live.flatMap(_.entryFiles)
+    def route(file: String): Option[String] = file.split("/", 2) match {
+      case Array(b, k) => Prefix.resolve(Prefix.searchKey(b, k), configs).map(_._1)
+      case _ => None
+    }
+    val processedBy = dedup.toSeq.flatMap(f => route(f).map(_ -> f)).groupBy(_._1)
+      .map { case (p, fs) => p -> fs.map(_._2 -> 1).toMap }
+
+    val numbered = latest.flatMap(e => Batcher.seqOf(e.s3Prefix, e.batchId).map(n => (e, n)))
+      .groupBy(_._1.s3Prefix)
+    val prefixes = numbered.keySet ++ processedBy.keySet
+    val states = prefixes.map { p =>
+      val processed = processedBy.getOrElse(p, Map.empty)
+      val st = numbered.get(p).map(_.maxBy(_._2)) match {
+        case Some((e, n)) if e.status == BatchStatus.Open.name =>
+          val entries = entriesOf(e)
+          BatcherState(e.batchId, entries, e.sizeBytes,
+            if (entries.isEmpty) 0L else entries.map(_.writeDate).min, n, processed)
+        case Some((_, n)) =>
+          BatcherState(Batcher.batchId(p, n + 1), Vector.empty, 0L, 0L, n + 1, processed)
+        case None => Batcher.initialState(p).copy(processed = processed)
+      }
+      p -> st
+    }.toMap
+
+    val rerun = live.filter(e => e.status == BatchStatus.Locked.name &&
+        Prefix.resolve(e.s3Prefix, configs).isDefined)
+      .sortBy(_.seq)
+      .map(e => FlushCommand(e.s3Prefix, e.batchId, entriesOf(e), e.sizeBytes,
+        Option(e.updateReason).filter(_.startsWith("flush:")).map(_.stripPrefix("flush:"))
+          .getOrElse(FlushReason.Manual.name), e.lastUpdate))
+    (states, rerun)
   }
 
   /** Compact the ledger to latest-state rows every this many flushed
@@ -178,11 +323,8 @@ object Pipeline {
     val cfg = configFor(cmd.s3Prefix, configs).getOrElse(
       throw new IllegalStateException(s"no config for flushed prefix ${cmd.s3Prefix}"))
 
-    // lock → load → complete|error, ledger rows for each (T4/T7 lifecycle)
-    ledger.appendBatch(BatchRecord(cmd.s3Prefix, cmd.batchId, BatchStatus.Locked.name,
-      cmd.entries, cmd.sizeBytes, System.currentTimeMillis(), None, Map.empty, None,
-      Some(s"flush:${cmd.reason}")))
-
+    // the trigger's write-ahead recorded `locked`; load → complete|error
+    // (T4/T7 lifecycle)
     val schema = cfg.targets.headOption.flatMap(t => settings.schemas.get(t.targetTable))
     // per-(file,target) gate (opt-in): targets that already committed
     // every file of this batch are skipped, not re-loaded

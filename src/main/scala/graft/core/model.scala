@@ -104,8 +104,9 @@ final case class FileEvent(
     /** epoch millis the event was observed */
     eventTime: Long,
     eventName: String = "ObjectCreated:Put",
-    /** control event: clear this file's dedup entry from Batcher state
-      * instead of admitting it (processedFiles --reprocess re-injection) */
+    /** control event: clear this file's dedup entry from the admission
+      * state instead of admitting it (processedFiles --reprocess
+      * re-injection) */
     unlink: Boolean = false) {
   def loadFile: String = s"$bucket/$key"
   def inputFilename: String = key.substring(key.lastIndexOf('/') + 1)
@@ -152,10 +153,10 @@ object FlushReason {
   case object Manual extends FlushReason("manual")
 }
 
-/** Emitted downstream by the stateful batcher when a batch rotates
-  * (SURVEY §7.5.2): the load happens in `foreachBatch`, never inside the
-  * state function, so accumulation continues during the load — matching
-  * the reference's rotate-then-load behaviour (`index.js:694-806`).
+/** Emitted by the batcher when a batch rotates (SURVEY §7.5.2): the load
+  * happens in the pipeline's lanes, never inside admission, so
+  * accumulation continues during the load — matching the reference's
+  * rotate-then-load behaviour (`index.js:694-806`).
   */
 final case class FlushCommand(
     s3Prefix: String,

@@ -332,6 +332,15 @@ class Ledger(spark: SparkSession, dir: String) {
         "deleted", lit(false)).as[FileLedgerEvent]
     } else spark.emptyDataset[FileLedgerEvent]
 
+  /** What a starting pipeline resumes its admission state from (see
+    * `Pipeline.recover`): every batch event, and the latest event of every
+    * file, tombstones included. None, without running a Spark job, when
+    * nothing has been recorded yet.
+    */
+  def recorded(): Option[(Seq[BatchLedgerEvent], Seq[FileLedgerEvent])] =
+    if (!hasData(batchDir) && !hasData(fileDir)) None
+    else Some((batchLog.collect().toSeq, latestFileEvents.as[FileLedgerEvent].collect().toSeq))
+
   /** Latest event per (s3Prefix, batchId) including tombstones — the raw
     * latest-state view compaction and delete-ops work from.
     */

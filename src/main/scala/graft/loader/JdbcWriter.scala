@@ -102,16 +102,22 @@ object JdbcWriter {
     }
   }
 
+  /** A statement cancelled database-side past [[StatementTimeoutSecs]]. */
+  private def timedStatement(conn: Connection): java.sql.Statement = {
+    val stmt = conn.createStatement()
+    stmt.setQueryTimeout(StatementTimeoutSecs)
+    stmt
+  }
+
   /** Ensure staging + commit-registry tables exist, cloning the target's
     * column definitions for staging (plus the batch-id tag).
     */
   def ensureAuxTables(t: LoadTarget, password: String): Unit =
     withConnection(t, password) { conn =>
-      val stmt = conn.createStatement()
+      val stmt = timedStatement(conn)
       try {
         if (!tableExists(conn, stagingTable(t.targetTable))) {
-          val rs = conn.createStatement().executeQuery(
-            s"SELECT * FROM ${t.targetTable} WHERE 1=0")
+          val rs = stmt.executeQuery(s"SELECT * FROM ${t.targetTable} WHERE 1=0")
           val md = rs.getMetaData
           val cols = (1 to md.getColumnCount).map(i => columnDdl(md, i))
           rs.close()
@@ -133,7 +139,7 @@ object JdbcWriter {
     * parallel.
     */
   private def createRacing(conn: Connection, table: String, ddl: String): Unit = {
-    val stmt = conn.createStatement()
+    val stmt = timedStatement(conn)
     try stmt.executeUpdate(ddl)
     catch { case _: java.sql.SQLException if tableExists(conn, table) => () }
     finally stmt.close()
@@ -144,7 +150,7 @@ object JdbcWriter {
     * any rows a previous failed attempt left for this batchId — without
     * this, a stage-ok/commit-fail/retry sequence doubles the rows.
     */
-  def stage(df: DataFrame, t: LoadTarget, password: String, batchId: String): Long = {
+  def stage(df: DataFrame, t: LoadTarget, password: String, batchId: String): Unit = {
     withConnection(t, password) { conn =>
       // batchId can originate from caller input (Ops.reloadBatch) — bind
       // it, never splice it into SQL text.
@@ -160,7 +166,6 @@ object JdbcWriter {
     // Spark's JdbcUtils.savePartition sets it on every insert statement
     tagged.write.mode("append").option("queryTimeout", StatementTimeoutSecs)
       .jdbc(connectUrl(t), stagingTable(t.targetTable), props)
-    df.columns.length.toLong // column count unused; rows counted at commit
   }
 
   /** The control-connection transaction. Returns (committed?, rowsMoved).
@@ -178,7 +183,8 @@ object JdbcWriter {
         ps
       }
       // idempotence guard: PK violation on replay → rollback + skip.
-      // (no `return` in this closure — see Batcher for why)
+      // (no `return` in this closure: a NonLocalReturnControl thrown from
+      // a closure Spark runs is not treated as a failure)
       def committedBefore: Boolean = {
         val q = prep(s"SELECT 1 FROM $CommitTable WHERE batch_id = ? AND target_table = ?")
         try {
@@ -208,14 +214,13 @@ object JdbcWriter {
       }
       if (!fresh) (false, 0L)
       else {
-        val stmt = conn.createStatement()
-        stmt.setQueryTimeout(StatementTimeoutSecs)
+        val stmt = timedStatement(conn)
         try {
           t.presql.foreach(stmt.execute)
           if (t.truncateTarget) stmt.executeUpdate(s"DELETE FROM ${t.targetTable}")
           val stage = stagingTable(t.targetTable)
           val targetCols = {
-            val rs = conn.createStatement().executeQuery(s"SELECT * FROM ${t.targetTable} WHERE 1=0")
+            val rs = stmt.executeQuery(s"SELECT * FROM ${t.targetTable} WHERE 1=0")
             val md = rs.getMetaData
             val cs = (1 to md.getColumnCount).map(md.getColumnName)
             rs.close(); cs

@@ -5,6 +5,8 @@ import org.apache.spark.sql.types.StructType
 import graft.Fanout
 import graft.core._
 import graft.loader.JdbcWriter.LoadResult
+import scala.util.{Failure, Success}
+import scala.util.control.NonFatal
 
 /** Batch load orchestration — the `foreachBatch` body: one FlushCommand
   * in, format-aware read, parallel multi-target transactional writes,
@@ -27,7 +29,8 @@ object Loader {
 
   /** Load one flushed batch into every configured target in parallel.
     * The reference fans out with `async.map` and folds "all OK"
-    * (`index.js:909-925`); the targets run through [[Fanout.all]]. A
+    * (`index.js:909-925`); the targets run through [[Fanout.settle]],
+    * and a target whose task throws gets its own error result. A
     * load is never abandoned: an interrupt of the caller reaches every
     * target load and waits for it. The budget is per statement
     * ([[JdbcWriter.StatementTimeoutSecs]]), so a slow target rolls back
@@ -54,30 +57,38 @@ object Loader {
     val manifest = Manifest(cmd.entries.map(e =>
       ManifestEntry(s"$fileRoot/${e.file}", mandatory = true, e.size)))
 
-    // Any failure before/at the fan-out (e.g. a manifest file missing —
-    // every entry is mandatory, as in the reference's manifests) must
-    // yield an error outcome for the failBatch path, not an exception.
-    // An interrupt is not a failure of the batch: it propagates, so a
+    // A failure before the fan-out (e.g. a manifest file missing — every
+    // entry is mandatory, as in the reference's manifests) must yield an
+    // error outcome for the failBatch path, not an exception. An
+    // interrupt is not a failure of the batch: it propagates, so a
     // stopped query replays the batch on restart.
-    try {
-      val df = Formats.read(spark, cfg, paths, schema)
-      val results = Fanout.all("graft-target-", cfg.targets.map { t => () =>
-        if (skipTarget(t))
-          LoadResult(t.jdbcUrl, ok = true, 0L, skipped = true, None)
-        else
-          JdbcWriter.load(Formats.applyColumnList(df, t.columnList),
-            t.copy(columnList = None), resolvePassword(t.encryptedPassword), cmd.batchId)
-      })
-      val allOk = results.forall(_.ok)
-      BatchLoadOutcome(cmd.batchId, cmd.s3Prefix,
-        if (allOk) "complete" else "error", results, manifest)
-    } catch {
-      case scala.util.control.NonFatal(e) =>
-        BatchLoadOutcome(cmd.batchId, cmd.s3Prefix, "error",
-          Seq(LoadResult("(read)", ok = false, 0L, skipped = false,
-            Some(Option(e.getMessage).getOrElse(e.getClass.getName)))), manifest)
+    val read =
+      try Right(Formats.read(spark, cfg, paths, schema))
+      catch { case NonFatal(e) => Left(LoadResult("(read)", ok = false, 0L, skipped = false,
+        Some(message(e)))) }
+    read match {
+      case Left(failed) => BatchLoadOutcome(cmd.batchId, cmd.s3Prefix, "error", Seq(failed), manifest)
+      case Right(df) =>
+        // one result per target, in target order: a target whose task
+        // throws (its password resolver, its column list) fails alone
+        val settled = Fanout.settle("graft-target-", cfg.targets.map { t => () =>
+          if (skipTarget(t))
+            LoadResult(t.jdbcUrl, ok = true, 0L, skipped = true, None)
+          else
+            JdbcWriter.load(Formats.applyColumnList(df, t.columnList),
+              t.copy(columnList = None), resolvePassword(t.encryptedPassword), cmd.batchId)
+        })
+        settled.collectFirst { case Failure(e) if !NonFatal(e) => throw e }
+        val results = cfg.targets.zip(settled).map {
+          case (_, Success(r)) => r
+          case (t, Failure(e)) => LoadResult(t.jdbcUrl, ok = false, 0L, skipped = false, Some(message(e)))
+        }
+        BatchLoadOutcome(cmd.batchId, cmd.s3Prefix,
+          if (results.forall(_.ok)) "complete" else "error", results, manifest)
     }
   }
+
+  private def message(e: Throwable): String = Option(e.getMessage).getOrElse(e.getClass.getName)
 
   /** Manifest JSON identical in shape to the reference's
     * (`index.js:824-872`) — audit artifact only; the functional manifest

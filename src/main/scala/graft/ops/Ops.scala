@@ -176,9 +176,10 @@ class Ops(spark: SparkSession, ledger: Ledger) {
 
   /** resetCurrentBatch (resetCurrentBatch.js:79-152): clear the config's
     * current-batch pointer so the next append starts a fresh batch. In
-    * this engine the live pointer is Batcher streaming state (rotated
-    * automatically on flush); the config-level marker is reset for parity
-    * and for cold-start behavior after a checkpoint wipe.
+    * this engine the live pointer is the running pipeline's driver-side
+    * admission state (rotated automatically on flush, rebuilt from the
+    * ledger's `open` batches on start); the config-level marker is reset
+    * for parity only.
     */
   def resetCurrentBatch(store: graft.config.ConfigStore, prefix: String): OpResult =
     store.update(prefix, _.copy(currentBatch = "")) match {
@@ -190,11 +191,13 @@ class Ops(spark: SparkSession, ledger: Ledger) {
     * linkage in the audit log (common.js:842-916).
     *
     * Passing `watchRoot` also drops an unlink marker into the watched
-    * tree's control namespace; the running Batcher consumes it and
-    * clears the file from its in-state dedup map — without this, the
+    * tree's control namespace; the running pipeline consumes it and
+    * clears the file from its driver-side dedup set — without this, the
     * re-injected delivery would be swallowed as a duplicate (the
     * reference achieves the same by deleting the DynamoDB
-    * processed-files item before its copy-to-self re-injection).
+    * processed-files item before its copy-to-self re-injection). The
+    * ledger row written here releases the file on restart too: a
+    * starting pipeline leaves it out of the dedup set it rebuilds.
     */
   def reprocessFile(loadFile: String, watchRoot: Option[String] = None): OpResult = {
     import org.apache.spark.sql.functions.col
@@ -250,7 +253,7 @@ class Ops(spark: SparkSession, ledger: Ledger) {
 
 object Ops {
   /** Drop a `graft-control/unlink/` marker the streaming source turns
-    * into a Batcher control event (see FileEventSource.ControlDir).
+    * into an unlink control event (see FileEventSource.ControlDir).
     */
   def writeUnlinkMarker(watchRoot: String, loadFile: String): Unit = {
     val p = java.nio.file.Paths.get(watchRoot,

@@ -23,9 +23,9 @@ object FileEventSource {
 
   /** Control namespace: marker files under `<watchRoot>/graft-control/`
     * are consumed as control events, never as data. `unlink/<enc>` clears
-    * one file's dedup entry from Batcher state (the Spark analogue of
-    * the reference deleting the processed-files item so a re-injected
-    * file is admitted — `common.js:842-916`).
+    * one file's entry from the running pipeline's driver-side dedup set
+    * (the Spark analogue of the reference deleting the processed-files
+    * item so a re-injected file is admitted — `common.js:842-916`).
     *
     * The namespace must NOT be hidden: Spark's file listing
     * (InMemoryFileIndex, shared by the binaryFile batch and streaming

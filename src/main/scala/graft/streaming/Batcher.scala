@@ -1,25 +1,20 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import graft.core._
 
-/** Per-prefix pending-batch accumulation state.
+/** One prefix's pending batch and its dedup set, held on the driver.
   *
-  * `processed` is the dedup ledger fragment for this prefix — the Spark
-  * analogue of the reference's `LambdaRedshiftProcessedFiles` DynamoDB
-  * table (`/root/reference/common.js:132-147`). Single-writer-per-key
-  * state makes the reference's whole CAS/retry machinery
-  * (`index.js:313-516`: conditional writes, 100-try backoff loops)
-  * unnecessary: within one streaming query, each prefix's state is only
-  * ever mutated by one task at a time, and checkpointing gives
-  * exactly-once replay.
+  * `processed` is the dedup set for this prefix — the analogue of the
+  * reference's `LambdaRedshiftProcessedFiles` DynamoDB table
+  * (`/root/reference/common.js:132-147`), and like that table it has no
+  * cap. The pipeline's micro-batch thread is the only writer, which makes
+  * the reference's CAS/retry machinery (`index.js:313-516`: conditional
+  * writes, 100-try backoff loops) unnecessary.
   *
-  * Scale note: `processed` must not grow unboundedly at 100 TB — it is
-  * capped at `maxLedgerEntries` (LRU by insertion order); evicted entries
-  * remain queryable in the durable ledger table written downstream. The
-  * reference has the same split (hot dedup check in DynamoDB, history on
-  * the item).
+  * The durable state is the ledger, not a state store: each trigger's
+  * decisions are written ahead of its loads (`Pipeline.writeAhead`), and
+  * a starting pipeline rebuilds this state from them
+  * (`Pipeline.recover`).
   */
 final case class BatcherState(
     currentBatch: String,
@@ -27,29 +22,37 @@ final case class BatcherState(
     sizeBytes: Long,
     firstWrite: Long,
     batchSeq: Long,
-    processed: Map[String, Int],
-    processedOrder: Vector[String])
+    processed: Map[String, Int])
 
 object Batcher {
 
-  /** Max per-prefix dedup-ledger entries held in streaming state. */
-  val DefaultMaxLedgerEntries = 100000
-
   def initialState(prefix: String): BatcherState =
-    BatcherState(batchId(prefix, 0), Vector.empty, 0L, 0L, 0L, Map.empty, Vector.empty)
+    BatcherState(batchId(prefix, 0), Vector.empty, 0L, 0L, 0L, Map.empty)
 
   /** Deterministic batch ids (prefix-hash + rotation counter) rather than
-    * the reference's uuid.v4 (`index.js:759`): replayable across
-    * checkpoint recovery, unique per (prefix, rotation).
+    * the reference's uuid.v4 (`index.js:759`): unique per (prefix,
+    * rotation), and a restart continues the counter from the ledger.
     */
   def batchId(prefix: String, seq: Long): String =
-    f"b-${Integer.toHexString(prefix.hashCode)}%s-$seq%06d"
+    f"${idPrefix(prefix)}%s$seq%06d"
+
+  private def idPrefix(prefix: String): String = s"b-${Integer.toHexString(prefix.hashCode)}-"
+
+  /** The rotation counter of a [[batchId]] of `prefix`; None for any other
+    * id (e.g. an ops reload's `-r` id). */
+  private[graft] def seqOf(prefix: String, id: String): Option[Long] = {
+    val digits = id.stripPrefix(idPrefix(prefix))
+    if (digits.length < id.length && digits.nonEmpty && digits.forall(_.isDigit))
+      Some(digits.toLong)
+    else None
+  }
 
   /** The trigger predicate (`/root/reference/index.js:663-691`): flush iff
     * count ≥ batchSize ∨ bytes ≥ batchSizeBytes ∨ age > batchTimeoutSecs.
-    * Age is evaluated on real processing-time timeouts rather than the
-    * reference's trigger-file sweep hack (SURVEY §2.7 T2, §7.5.6 — we
-    * adopt the strictly stronger semantics).
+    * Age is checked on every batch, and the pipeline has a tick arrive at
+    * each pending batch's deadline ([[nextDeadline]]), rather than the
+    * reference's sweep of dummy trigger files through the data bucket
+    * (SURVEY §2.7 T2, §7.5.6 — we adopt the strictly stronger semantics).
     */
   def flushReason(cfg: LoadConfig, count: Int, bytes: Long, ageMs: Long): Option[FlushReason] =
     if (count <= 0) None
@@ -58,25 +61,22 @@ object Batcher {
     else if (cfg.batchTimeoutSecs.exists(t => ageMs > t * 1000L)) Some(FlushReason.Age)
     else None
 
-  /** The stateful core, factored for direct unit testing with
-    * `TestGroupState`. Processes this micro-batch's events for one prefix
-    * and emits zero or more [[FlushCommand]]s. The load itself happens
-    * downstream in `foreachBatch` — never here — so accumulation continues
-    * while a flushed batch loads, matching the reference's
-    * rotate-before-load (`index.js:694-806`, SURVEY §7.5.2).
+  /** One prefix's step: admit this trigger's events for `prefix`, then
+    * check the pending batch's age, returning the next state and zero or
+    * more [[FlushCommand]]s. The load itself happens in the pipeline's
+    * lanes, never here, so accumulation continues while a flushed batch
+    * loads, matching the reference's rotate-before-load
+    * (`index.js:694-806`, SURVEY §7.5.2). A prefix with no config keeps
+    * its state and flushes nothing.
     */
   def processPrefix(
       configs: Map[String, LoadConfig],
       now: () => Long)(
       prefix: String,
       events: Iterator[FileEvent],
-      state: GroupState[BatcherState]): Iterator[FlushCommand] =
+      state: BatcherState): (BatcherState, Seq[FlushCommand]) =
     Prefix.resolve(prefix, configs).map(_._2) match {
-      // NB: no `return` here — an early return inside an eta-expanded
-      // closure throws NonLocalReturnControl, a ControlThrowable that
-      // Spark's task runner does not treat as task failure, deadlocking
-      // the stream execution thread.
-      case None => Iterator.empty
+      case None => (state, Seq.empty)
       case Some(cfg) => processWithConfig(cfg, now, prefix, events, state)
     }
 
@@ -85,24 +85,18 @@ object Batcher {
       now: () => Long,
       prefix: String,
       events: Iterator[FileEvent],
-      state: GroupState[BatcherState]): Iterator[FlushCommand] = {
-    var st = state.getOption.getOrElse(initialState(prefix))
+      state: BatcherState): (BatcherState, Seq[FlushCommand]) = {
+    var st = state
     val out = Vector.newBuilder[FlushCommand]
 
-    def rotateAndEmit(reason: FlushReason): Unit = {
-      out += FlushCommand(prefix, st.currentBatch, st.entries, st.sizeBytes, reason.name, now())
-      val nextSeq = st.batchSeq + 1
-      st = st.copy(
-        currentBatch = batchId(prefix, nextSeq),
-        entries = Vector.empty, sizeBytes = 0L, firstWrite = 0L, batchSeq = nextSeq)
-    }
-
-    if (state.hasTimedOut) {
-      // age trigger (T2): fires even with no input — no dummy-file sweep
-      flushReason(cfg, st.entries.size, st.sizeBytes, now() - st.firstWrite)
-        .orElse(if (st.entries.nonEmpty) Some(FlushReason.Age) else None)
-        .foreach(rotateAndEmit)
-    }
+    def flushIfDue(): Unit =
+      flushReason(cfg, st.entries.size, st.sizeBytes, now() - st.firstWrite).foreach { reason =>
+        out += FlushCommand(prefix, st.currentBatch, st.entries, st.sizeBytes, reason.name, now())
+        val nextSeq = st.batchSeq + 1
+        st = st.copy(
+          currentBatch = batchId(prefix, nextSeq),
+          entries = Vector.empty, sizeBytes = 0L, firstWrite = 0L, batchSeq = nextSeq)
+      }
 
     events.foreach { ev =>
       if (ev.unlink) {
@@ -111,9 +105,7 @@ object Batcher {
         // Spark analogue of the reference deleting the DynamoDB
         // processed-files item (common.js:842-916). Bypasses the
         // filename filter: control targets name already-admitted files.
-        val file = ev.loadFile
-        st = st.copy(processed = st.processed - file,
-          processedOrder = st.processedOrder.filterNot(_ == file))
+        st = st.copy(processed = st.processed - ev.loadFile)
       }
       // F1 admission filter, fail-open (index.js:212-238)
       else if (Prefix.filenameMatches(ev.key, cfg.filenameFilterRegex)) {
@@ -128,53 +120,52 @@ object Batcher {
             // append, index.js:361-363): a discovery lag longer than
             // batchTimeoutSecs must not age-flush every file singly.
             val admitted = now()
-            val first = if (st.entries.isEmpty) admitted else st.firstWrite
-            val (pm, po) =
-              if (st.processedOrder.size >= DefaultMaxLedgerEntries) {
-                val evict = st.processedOrder.head
-                (st.processed - evict + (file -> 1), st.processedOrder.tail :+ file)
-              } else (st.processed + (file -> 1), st.processedOrder :+ file)
             st = st.copy(
               entries = st.entries :+ BatchEntry(file, ev.size, admitted),
               sizeBytes = st.sizeBytes + ev.size,
-              firstWrite = first,
-              processed = pm, processedOrder = po)
-            flushReason(cfg, st.entries.size, st.sizeBytes, now() - st.firstWrite)
-              .foreach(rotateAndEmit)
+              firstWrite = if (st.entries.isEmpty) admitted else st.firstWrite,
+              processed = st.processed.updated(file, 1))
+            flushIfDue()
         }
       }
     }
-
-    state.update(st)
-    // arm/refresh the age timer for whatever is still pending
-    cfg.batchTimeoutSecs.foreach { t =>
-      if (st.entries.nonEmpty) {
-        val deadline = st.firstWrite + t * 1000L - now()
-        state.setTimeoutDuration(math.max(deadline, 1L))
-      }
-    }
-    out.result().iterator
+    // age trigger (T2): fires on a trigger with no input for the prefix
+    flushIfDue()
+    (st, out.result())
   }
 
-  /** Wire the stateful batcher over a stream of file events. Configs are
-    * resolved longest-prefix-first against the (small, broadcast-by-value)
-    * config map; unresolvable events are dropped before grouping so they
-    * never create state.
+  /** One trigger's admission on the driver: route each event to its
+    * longest configured prefix, step every prefix that got events or
+    * holds a pending batch, and return the next states with the flushes
+    * in order (a prefix's flushes stay in batch order). Events no config
+    * resolves are dropped and create no state.
     */
-  def run(
-      spark: SparkSession,
-      events: Dataset[FileEvent],
+  def admit(
       configs: Map[String, LoadConfig],
-      suppression: Prefix.Suppression = Prefix.SuppressNone,
-      now: () => Long = () => System.currentTimeMillis()): Dataset[FlushCommand] = {
-    import spark.implicits._
-    events
-      .map(e => (Prefix.resolve(Prefix.searchKey(e.bucket, e.key, suppression), configs)
-                   .map(_._1).getOrElse(""), e))
-      .filter(_._1.nonEmpty)
-      .groupByKey(_._1)
-      .mapValues(_._2)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.ProcessingTimeTimeout)(
-        processPrefix(configs, now))
+      now: () => Long)(
+      states: Map[String, BatcherState],
+      events: Seq[FileEvent]): (Map[String, BatcherState], Seq[FlushCommand]) = {
+    val routed = events.flatMap(e =>
+      Prefix.resolve(Prefix.searchKey(e.bucket, e.key), configs).map(_._1 -> e))
+    val withEvents = routed.map(_._1).distinct
+    val pendingOnly = states.collect {
+      case (p, st) if st.entries.nonEmpty && !withEvents.contains(p) => p
+    }.toSeq.sorted
+    (withEvents ++ pendingOnly).foldLeft((states, Vector.empty[FlushCommand])) {
+      case ((sts, out), p) =>
+        val (st, flushes) = processPrefix(configs, now)(
+          p, routed.iterator.collect { case (`p`, e) => e }, sts.getOrElse(p, initialState(p)))
+        (sts.updated(p, st), out ++ flushes)
+    }
   }
+
+  /** When the earliest pending batch with a `batchTimeoutSecs` becomes
+    * due by age; None when no pending batch has one. */
+  def nextDeadline(configs: Map[String, LoadConfig],
+                   states: Map[String, BatcherState]): Option[Long] =
+    states.toSeq.flatMap { case (p, st) =>
+      if (st.entries.isEmpty) None
+      else Prefix.resolve(p, configs).flatMap(_._2.batchTimeoutSecs)
+        .map(t => st.firstWrite + t * 1000L + 1)
+    }.minOption
 }

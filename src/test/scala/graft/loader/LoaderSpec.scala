@@ -219,6 +219,21 @@ class LoaderSpec extends AnyFunSuite {
     assert(queryLong("SELECT count(*) FROM fan_good") == 2)
   }
 
+  test("a target whose password resolver throws fails alone; the other target's commit is reported") {
+    sql("CREATE TABLE pw_good(column_a INT, column_b INT, column_c INT)")
+    sql("CREATE TABLE pw_bad(column_a INT, column_b INT, column_c INT)")
+    val c = cfg.copy(targets = Seq(target("pw_good"), target("pw_bad").copy(encryptedPassword = "locked")))
+    val out = Loader.loadBatch(spark, c, cmd("pw1", Seq("sample0.csv")), root, Some(schema),
+      resolvePassword = p => if (p == "locked") throw new IllegalStateException("no key") else p)
+    assert(out.status == "error")
+    assert(out.results.size == 2, out.results)
+    assert(out.results.head.ok && !out.results.head.skipped && out.results.head.rows == 2, out.results)
+    assert(!out.results(1).ok && out.results(1).error.contains("no key"), out.results)
+    assert(out.results.forall(_.target == dbUrl))
+    assert(queryLong("SELECT count(*) FROM pw_good") == 2)
+    assert(queryLong("SELECT count(*) FROM pw_bad") == 0)
+  }
+
   test("per-(file,target) dedup flag: retry after partial failure loads ONLY the failed target (§7.5.7 fix)") {
     // second target lives in its OWN database (clusters are separate
     // DBs); its table doesn't exist yet, so the first attempt fails

@@ -46,22 +46,20 @@ class ReloadSpec extends AnyFunSuite {
     assert(!ops.reloadBatch("bucket/input", "open1", cfg, root, Some(schema)).ok)
   }
 
-  test("batcher dedup-ledger eviction keeps state bounded") {
-    import org.apache.spark.api.java.Optional
+  test("no cap: the first of 100,010 admitted files is still a duplicate") {
     val cfg = LoadConfig("b/in", batchSize = 1000000)
     val configs = Map("b/in" -> cfg)
-    val state = org.apache.spark.sql.streaming.TestGroupState.create[graft.streaming.BatcherState](
-      Optional.empty[graft.streaming.BatcherState](),
-      org.apache.spark.sql.streaming.GroupStateTimeout.ProcessingTimeTimeout,
-      1000L, Optional.empty[java.lang.Long]().asInstanceOf[Optional[Long]], hasTimedOut = false)
-    val n = Batcher.DefaultMaxLedgerEntries + 10
+    val n = 100000 + 10
     val events = (1 to n).iterator.map(i => FileEvent("b", s"in/f$i.csv", 1, 1000L))
-    Batcher.processPrefix(configs, () => 1000L)("b/in", events, state).foreach(_ => ())
-    val st = state.get
-    assert(st.processed.size == Batcher.DefaultMaxLedgerEntries)
-    assert(st.processedOrder.size == Batcher.DefaultMaxLedgerEntries)
-    // oldest evicted, newest retained
-    assert(!st.processed.contains("b/in/f1.csv"))
-    assert(st.processed.contains(s"b/in/f$n.csv"))
+    val (st, _) = Batcher.processPrefix(configs, () => 1000L)(
+      "b/in", events, Batcher.initialState("b/in"))
+    assert(st.processed.size == n)
+    assert(st.processed.contains("b/in/f1.csv") && st.processed.contains(s"b/in/f$n.csv"))
+    // a re-delivery of the oldest admission is counted, not admitted again
+    val (again, flushes) = Batcher.processPrefix(configs, () => 2000L)(
+      "b/in", Iterator(FileEvent("b", "in/f1.csv", 1, 2000L)), st)
+    assert(flushes.isEmpty)
+    assert(again.entries.size == n)
+    assert(again.processed("b/in/f1.csv") == 2)
   }
 }

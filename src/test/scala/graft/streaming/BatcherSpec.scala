@@ -1,11 +1,13 @@
 package graft.streaming
 
+import java.nio.file.Files
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.api.java.Optional
-import org.apache.spark.sql.streaming.TestGroupState
+import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 import graft.core._
 import graft.{GraftSession, StreamProgress}
+import graft.sources.TickSource
 
 class BatcherSpec extends AnyFunSuite {
 
@@ -19,56 +21,49 @@ class BatcherSpec extends AnyFunSuite {
   private def ev(name: String, size: Long = 100, t: Long = 1000L) =
     FileEvent("bucket", s"input/$name", size, t)
 
-  private def freshState = TestGroupState.create[BatcherState](
-    optionalState = Optional.empty[BatcherState](), timeoutConf = org.apache.spark.sql.streaming.GroupStateTimeout.ProcessingTimeTimeout,
-    batchProcessingTimeMs = 1000L, eventTimeWatermarkMs = Optional.empty[java.lang.Long]().asInstanceOf[Optional[Long]], hasTimedOut = false)
+  private def freshState = Batcher.initialState("bucket/input")
 
   test("count trigger: sample acceptance scenario — 5 files, batchSize 2 → 2 flushes + 1 pending") {
-    val state = freshState
-    val flushes = Batcher.processPrefix(configs, () => 1000L)(
-      "bucket/input", (1 to 5).map(i => ev(s"f$i.csv")).iterator, state).toList
+    val (st, flushes) = Batcher.processPrefix(configs, () => 1000L)(
+      "bucket/input", (1 to 5).map(i => ev(s"f$i.csv")).iterator, freshState)
     assert(flushes.size == 2)
     assert(flushes.forall(_.entries.size == 2))
     assert(flushes.map(_.reason).distinct == List("count"))
     assert(flushes.map(_.batchId).distinct.size == 2)
-    val st = state.get
     assert(st.entries.map(_.file) == Vector("bucket/input/f5.csv"))
     assert(st.sizeBytes == 100)
   }
 
   test("bytes trigger fires before count") {
-    val state = freshState
-    val flushes = Batcher.processPrefix(configs, () => 1000L)(
-      "bucket/input", Iterator(ev("big.csv", size = 20000)), state).toList
+    val (_, flushes) = Batcher.processPrefix(configs, () => 1000L)(
+      "bucket/input", Iterator(ev("big.csv", size = 20000)), freshState)
     assert(flushes.size == 1 && flushes.head.reason == "bytes")
   }
 
   test("duplicate file is dropped and counted (F4/T6)") {
-    val state = freshState
     val f = ev("dup.csv")
-    val flushes = Batcher.processPrefix(configs, () => 1000L)(
-      "bucket/input", Iterator(f, f, f), state).toList
+    val (st, flushes) = Batcher.processPrefix(configs, () => 1000L)(
+      "bucket/input", Iterator(f, f, f), freshState)
     assert(flushes.isEmpty)
-    val st = state.get
     assert(st.entries.size == 1)
     assert(st.processed("bucket/input/dup.csv") == 3)
   }
 
   test("unlink control event clears dedup state; re-delivery admitted as new") {
-    val state = freshState
     val f = ev("re.csv")
     // admit once, then a duplicate delivery — swallowed
-    assert(Batcher.processPrefix(configs, () => 1000L)(
-      "bucket/input", Iterator(f, f), state).toList.isEmpty)
-    assert(state.get.processed("bucket/input/re.csv") == 2)
-    assert(state.get.entries.size == 1)
+    val (s1, out1) = Batcher.processPrefix(configs, () => 1000L)(
+      "bucket/input", Iterator(f, f), freshState)
+    assert(out1.isEmpty)
+    assert(s1.processed("bucket/input/re.csv") == 2)
+    assert(s1.entries.size == 1)
     // unlink control event (from the graft-control marker)
     val unlink = FileEvent("bucket", "input/re.csv", 0, 2000L, unlink = true)
-    Batcher.processPrefix(configs, () => 2000L)("bucket/input", Iterator(unlink), state)
-    assert(!state.get.processed.contains("bucket/input/re.csv"))
+    val (s2, _) = Batcher.processPrefix(configs, () => 2000L)("bucket/input", Iterator(unlink), s1)
+    assert(!s2.processed.contains("bucket/input/re.csv"))
     // re-delivery is now a NEW admission (second entry in the batch)
-    Batcher.processPrefix(configs, () => 3000L)("bucket/input", Iterator(f), state)
-    assert(state.get.processed("bucket/input/re.csv") == 1)
+    val (s3, _) = Batcher.processPrefix(configs, () => 3000L)("bucket/input", Iterator(f), s2)
+    assert(s3.processed("bucket/input/re.csv") == 1)
   }
 
   test("control-marker path round-trips through toEvent as an unlink event") {
@@ -92,102 +87,113 @@ class BatcherSpec extends AnyFunSuite {
 
   test("filename filter: non-matching dropped, malformed regex fail-open (F1)") {
     val filtered = Map("bucket/input" -> cfg.copy(filenameFilterRegex = Some("\\.csv$")))
-    val state = freshState
-    Batcher.processPrefix(filtered, () => 1000L)(
-      "bucket/input", Iterator(ev("a.csv"), ev("skip.json")), state)
-      .foreach(_ => ())
-    assert(state.get.entries.map(_.file) == Vector("bucket/input/a.csv"))
+    val (state, _) = Batcher.processPrefix(filtered, () => 1000L)(
+      "bucket/input", Iterator(ev("a.csv"), ev("skip.json")), freshState)
+    assert(state.entries.map(_.file) == Vector("bucket/input/a.csv"))
 
     val broken = Map("bucket/input" -> cfg.copy(filenameFilterRegex = Some("[broken")))
-    val state2 = freshState
-    Batcher.processPrefix(broken, () => 1000L)(
-      "bucket/input", Iterator(ev("anything.xyz")), state2).foreach(_ => ())
-    assert(state2.get.entries.size == 1)
+    val (state2, _) = Batcher.processPrefix(broken, () => 1000L)(
+      "bucket/input", Iterator(ev("anything.xyz")), freshState)
+    assert(state2.entries.size == 1)
   }
 
-  test("age trigger on processing-time timeout (T2) flushes pending") {
+  test("age trigger on a trigger with no input (T2) flushes pending") {
     // first: accumulate one file at t=1000
-    val state = freshState
-    Batcher.processPrefix(configs, () => 1000L)(
-      "bucket/input", Iterator(ev("lone.csv", t = 1000L)), state).foreach(_ => ())
-    assert(state.get.entries.size == 1)
-    // then: timeout fires at t = 62s with no input
-    val timedOut = TestGroupState.create[BatcherState](
-      optionalState = Optional.of(state.get),
-      timeoutConf = org.apache.spark.sql.streaming.GroupStateTimeout.ProcessingTimeTimeout,
-      batchProcessingTimeMs = 62000L, eventTimeWatermarkMs = Optional.empty[java.lang.Long]().asInstanceOf[Optional[Long]], hasTimedOut = true)
-    val flushes = Batcher.processPrefix(configs, () => 62000L)(
-      "bucket/input", Iterator.empty, timedOut).toList
+    val (state, _) = Batcher.processPrefix(configs, () => 1000L)(
+      "bucket/input", Iterator(ev("lone.csv", t = 1000L)), freshState)
+    assert(state.entries.size == 1)
+    // then: a trigger at t = 62s with no input
+    val (aged, flushes) = Batcher.processPrefix(configs, () => 62000L)(
+      "bucket/input", Iterator.empty, state)
     assert(flushes.size == 1 && flushes.head.reason == "age")
     assert(flushes.head.entries.map(_.file) == Vector("bucket/input/lone.csv"))
-    assert(timedOut.get.entries.isEmpty)
+    assert(aged.entries.isEmpty)
   }
 
   test("no config resolved → no state, no output") {
-    val state = freshState
-    val flushes = Batcher.processPrefix(configs, () => 1000L)(
-      "unconfigured/prefix", Iterator(ev("x.csv")), state).toList
+    val (_, flushes) = Batcher.processPrefix(configs, () => 1000L)(
+      "unconfigured/prefix", Iterator(ev("x.csv")), freshState)
     assert(flushes.isEmpty)
+    // at trigger level such an event creates no state at all
+    val (states, out) = Batcher.admit(configs, () => 1000L)(
+      Map.empty, Seq(FileEvent("unconfigured", "prefix/x.csv", 1, 1000L)))
+    assert(states.isEmpty && out.isEmpty)
   }
 
-  test("end-to-end streaming: MemoryStream → Batcher.run → flush commands (T1)") {
+  /** Run `events` through a streaming query whose foreachBatch admits
+    * each trigger's events on the driver, as the pipeline does, and
+    * records the flushes; with `ticks`, each batch arms the next age
+    * tick and consumes the ticks it collected, as the pipeline does. */
+  private def admitting(events: Dataset[FileEvent], configs: Map[String, LoadConfig],
+                        ticks: Option[TickSource] = None) = {
+    val flushes = new java.util.concurrent.ConcurrentLinkedQueue[FlushCommand]()
+    var state = Map.empty[String, BatcherState]
+    val q = events.writeStream
+      .option("checkpointLocation", Files.createTempDirectory("graft-batcher-ckpt").toString)
+      .trigger(Trigger.ProcessingTime("250 milliseconds"))
+      .foreachBatch { (batch: Dataset[FileEvent], _: Long) =>
+        val (tickEvents, fileEvents) =
+          batch.collect().toSeq.partition(_.eventName == TickSource.EventName)
+        val now = () => System.currentTimeMillis()
+        val (next, out) = Batcher.admit(configs, now)(state, fileEvents)
+        state = next
+        ticks.foreach { t =>
+          Batcher.nextDeadline(configs, state).foreach(t.arm(_, now()))
+          t.consumed(tickEvents)
+        }
+        out.foreach(flushes.add)
+      }
+      .start()
+    (q, flushes)
+  }
+
+  test("end-to-end streaming: MemoryStream → driver admission → flush commands (T1)") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
-    // no age timeout here: with a processing-time timer armed the engine
-    // keeps scheduling timeout-check batches and processAllAvailable
-    // blocks until the timer fires (correct for production, wrong for a
-    // synchronous test) — the age path is covered by the e2e test below.
+    import scala.jdk.CollectionConverters._
     val countOnly = Map("bucket/input" -> cfg.copy(batchTimeoutSecs = None, batchSizeBytes = None))
     val input = MemoryStream[FileEvent]
     val now = System.currentTimeMillis()
-    val flushes = Batcher.run(spark, input.toDS(), countOnly)
-    val q = flushes.writeStream
-      .format("memory").queryName("flushes").outputMode("append").start()
-    // NB: processAllAvailable is unusable with ProcessingTimeTimeout —
-    // shouldRunAnotherBatch is always true for that conf, so the engine
-    // never reports "no work". Poll the sink instead.
+    val (q, flushes) = admitting(input.toDS(), countOnly)
     def awaitCount(n: Long, timeoutMs: Long = 60000): Long = {
       val deadline = System.currentTimeMillis() + timeoutMs
-      var c = spark.table("flushes").count()
-      while (c < n && System.currentTimeMillis() < deadline) {
-        Thread.sleep(250); c = spark.table("flushes").count()
-      }
-      c
+      while (flushes.size < n && System.currentTimeMillis() < deadline) Thread.sleep(250)
+      flushes.size.toLong
     }
     try {
       input.addData((1 to 5).map(i => ev(s"s$i.csv", t = now)))
       assert(awaitCount(2) == 2)
-      val got = spark.table("flushes").as[FlushCommand].collect()
+      val got = flushes.asScala.toSeq
       assert(got.forall(_.entries.size == 2))
       assert(got.map(_.batchId).distinct.length == 2)
       // re-delivering an already-processed file must not create entries
       input.addData(Seq(ev("s1.csv", t = now), ev("s2.csv", t = now)))
-      StreamProgress.awaitTriggers(q, 2)
-      assert(spark.table("flushes").count() == 2)
+      q.processAllAvailable()
+      assert(flushes.size == 2)
     } finally q.stop()
   }
 
-  test("end-to-end streaming: age timeout flushes without further input (T2)") {
+  test("end-to-end streaming: an age tick flushes without further input (T2)") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
     val aged = Map("bucket/input" -> cfg.copy(batchSize = 100, batchTimeoutSecs = Some(2)))
     val input = MemoryStream[FileEvent]
-    val flushes = Batcher.run(spark, input.toDS(), aged)
-    val q = flushes.writeStream
-      .format("memory").queryName("age_flushes").outputMode("append").start()
+    val ticks = new TickSource(spark, Files.createTempDirectory("graft-batcher-ticks").toString)
+    val (q, flushes) = admitting(input.toDS().unionByName(ticks.stream), aged, Some(ticks))
     try {
       input.addData(Seq(ev("only.csv", t = System.currentTimeMillis())))
-      // poll: the age timer fires ~2s after the first append, no dummy
-      // trigger files needed (unlike the reference's sweep hack)
+      // poll: the tick armed for the batch's deadline arrives ~2s after
+      // the first append, no dummy data files needed (unlike the
+      // reference's sweep hack)
       val deadline = System.currentTimeMillis() + 30000
-      var n = 0L
-      while (n == 0 && System.currentTimeMillis() < deadline) {
-        Thread.sleep(500)
-        n = spark.table("age_flushes").count()
-      }
-      assert(n == 1)
-      val f = spark.table("age_flushes").as[FlushCommand].head()
+      while (flushes.isEmpty && System.currentTimeMillis() < deadline) Thread.sleep(500)
+      StreamProgress.awaitTriggers(q, 2)
+      assert(flushes.size == 1)
+      val f = flushes.peek()
       assert(f.reason == "age" && f.entries.map(_.file) == Seq("bucket/input/only.csv"))
-    } finally q.stop()
+    } finally {
+      q.stop()
+      ticks.stop()
+    }
   }
 }
