@@ -97,7 +97,7 @@ class BatcherSpec extends AnyFunSuite {
     assert(state2.entries.size == 1)
   }
 
-  test("age trigger on a trigger with no input (T2) flushes pending") {
+  test("age trigger on processing-time timeout (T2) flushes pending") {
     // first: accumulate one file at t=1000
     val (state, _) = Batcher.processPrefix(configs, () => 1000L)(
       "bucket/input", Iterator(ev("lone.csv", t = 1000L)), freshState)
@@ -173,7 +173,7 @@ class BatcherSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  test("end-to-end streaming: an age tick flushes without further input (T2)") {
+  test("end-to-end streaming: age timeout flushes without further input (T2)") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
     val aged = Map("bucket/input" -> cfg.copy(batchSize = 100, batchTimeoutSecs = Some(2)))
