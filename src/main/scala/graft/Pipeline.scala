@@ -130,9 +130,9 @@ object Pipeline {
       .map { case (batches, files) => recover(configs, batches, files) }
       .getOrElse((Map.empty[String, BatcherState], Seq.empty[FlushCommand]))
     var flushed = 0L
-    def armAgeTick(): Unit = Batcher.nextDeadline(configs, state).foreach(ticks.arm(_, now()))
+    def armAgeTick(): Unit = ticks.arm(Batcher.nextDeadline(configs, state), now())
     armAgeTick()
-    val query = FileEventSource.stream(spark, settings.watchRoot).unionByName(ticks.stream)
+    val query = try FileEventSource.stream(spark, settings.watchRoot).unionByName(ticks.stream)
       .writeStream
       .outputMode("append")
       .option("checkpointLocation", settings.checkpointDir)
@@ -158,6 +158,7 @@ object Pipeline {
         if (before / CompactEvery != flushed / CompactEvery) ledger.compact()
       }
       .start()
+    catch { case e: Throwable => ticks.stop(); throw e }
     spark.streams.addListener(new StreamingQueryListener {
       override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
       override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = ()

@@ -1,6 +1,6 @@
 package graft.sources
 
-import java.util.concurrent.{ScheduledThreadPoolExecutor, TimeUnit}
+import java.util.concurrent.{ScheduledFuture, ScheduledThreadPoolExecutor, TimeUnit}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions.{col, lit}
@@ -13,7 +13,7 @@ import graft.core.FileEvent
   * the deadline; [[stream]] lists that directory, so the trigger after
   * the deadline runs a batch with no data file arriving. Between
   * deadlines no batch runs: an idle pipeline costs one listing of an
-  * empty directory per trigger.
+  * empty directory per trigger. At most one tick is armed at a time.
   *
   * A tick file carries nothing: its event is dropped after `collect()`
   * and its file deleted ([[consumed]]). The stream ignores missing files,
@@ -29,7 +29,8 @@ final class TickSource(spark: SparkSession, dir: String) {
     t.setDaemon(true)
     t
   })
-  private var armed = Long.MinValue // touched only by the micro-batch thread
+  // touched only by the micro-batch thread
+  private var armed: Option[(Long, ScheduledFuture[_])] = None
 
   /** Tick events: `eventName` is [[TickSource.EventName]], `key` the
     * tick file's path. */
@@ -43,15 +44,15 @@ final class TickSource(spark: SparkSession, dir: String) {
       .as[FileEvent]
   }
 
-  /** Have a tick arrive at `at`, unless one is already due then and has
-    * not arrived by `now`. */
-  def arm(at: Long, now: Long): Unit =
-    if (at != armed || armed <= now) {
-      armed = at
-      timer.schedule((() => {
-        val out = fs.create(new Path(root, s"tick-$at-${java.util.UUID.randomUUID()}"), true)
+  /** Have one tick arrive at `at`, cancelling a tick armed for another
+    * time; None cancels it. A tick already due is armed again. */
+  def arm(at: Option[Long], now: Long): Unit =
+    if (armed.map(_._1) != at || armed.exists(_._1 <= now)) {
+      armed.foreach(_._2.cancel(false))
+      armed = at.map(t => t -> timer.schedule((() => {
+        val out = fs.create(new Path(root, s"tick-$t-${java.util.UUID.randomUUID()}"), true)
         try out.write('x') finally out.close()
-      }): Runnable, math.max(0L, at - now), TimeUnit.MILLISECONDS)
+      }): Runnable, math.max(0L, t - now), TimeUnit.MILLISECONDS))
     }
 
   /** Delete the files of ticks a batch has collected. */

@@ -138,7 +138,7 @@ class BatcherSpec extends AnyFunSuite {
         val (next, out) = Batcher.admit(configs, now)(state, fileEvents)
         state = next
         ticks.foreach { t =>
-          Batcher.nextDeadline(configs, state).foreach(t.arm(_, now()))
+          t.arm(Batcher.nextDeadline(configs, state), now())
           t.consumed(tickEvents)
         }
         out.foreach(flushes.add)
