@@ -6,7 +6,7 @@ import graft.core._
   *
   * `processed` is the dedup set for this prefix — the analogue of the
   * reference's `LambdaRedshiftProcessedFiles` DynamoDB table
-  * (`/root/reference/common.js:132-147`), and like that table it has no
+  * (`common.js:132-147`), and like that table it has no
   * cap. The pipeline's micro-batch thread is the only writer, which makes
   * the reference's CAS/retry machinery (`index.js:313-516`: conditional
   * writes, 100-try backoff loops) unnecessary.
