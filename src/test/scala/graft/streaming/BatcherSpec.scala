@@ -147,7 +147,7 @@ class BatcherSpec extends AnyFunSuite {
     (q, flushes)
   }
 
-  test("end-to-end streaming: MemoryStream → driver admission → flush commands (T1)") {
+  test("end-to-end streaming: MemoryStream → admit → flush commands (T1)") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
     import scala.jdk.CollectionConverters._
