@@ -14,7 +14,7 @@ import graft.streaming.{Batcher, BatcherState}
 /** The assembled engine: the reference's full Lambda lifecycle
   * (SURVEY §3.1) as one Structured Streaming query.
   *
-  *   file events ∪ age ticks → foreachBatch: collect → admission/dedup/
+  *   file and tick events → foreachBatch: collect → admission/dedup/
   *   batching on the driver → write-ahead to the ledger → lanes:
   *   format-aware read → transactional JDBC fan-out → ledger append →
   *   notification → (optional) auto-reprocess hook.
@@ -26,17 +26,18 @@ import graft.streaming.{Batcher, BatcherState}
   * state store. The data files themselves are read and written entirely
   * on executors.
   *
-  * Ticks: with no stateful operator a trigger runs a batch only when a
-  * file or a tick arrives. After each batch the pipeline arms a
-  * [[TickSource]] tick for the earliest pending batch's age deadline, so
-  * the age flush fires with no file arriving; an idle pipeline with
-  * nothing pending runs no batch at all. Tick events are dropped after
-  * `collect()` and their files deleted. The ticks live under
-  * `<checkpointDir>/ticks`.
+  * Ticks: with no stateful operator a trigger runs a batch only when its
+  * listing finds something new. After each batch the pipeline arms a
+  * [[TickSource]] tick for the earliest pending batch's age deadline: a
+  * marker under the watch root's `graft-control/tick/`, listed by the
+  * same file stream, so the age flush fires with no file arriving and the
+  * query keeps one source. An idle pipeline with nothing pending runs no
+  * batch at all. Tick events are dropped after `collect()` and their
+  * markers deleted.
   *
   * Write-ahead and recovery: before any lane runs, a trigger that changed
-  * the admission state writes one ledger append — `open` for each prefix
-  * whose pending batch changed, `locked` for each flush (see
+  * the admission state writes one ledger append — `open` with the files
+  * each prefix's pending batch admitted, `locked` for each flush (see
   * [[writeAhead]]). An idle trigger writes nothing. On start the
   * pipeline reads that record once ([[recover]]): pending
   * batches, the dedup set and each prefix's batch counter come back, and
@@ -47,11 +48,13 @@ import graft.streaming.{Batcher, BatcherState}
   * new clock, and a fresh checkpoint over an existing ledger reloads no
   * processed file and reuses no batch id.
   *
-  * Checkpoints: adding the tick source changed the query's sources, so a
-  * checkpoint written by a build with the stateful Batcher cannot be
-  * resumed; start such a pipeline on a new checkpoint directory. That is
-  * safe: the new checkpoint re-lists the watch root and the ledger drops
-  * every file it has already admitted.
+  * Checkpoints: a checkpoint written by a build with the stateful
+  * Batcher must not be resumed. That build held its pending batches only
+  * in the checkpoint's state store, which this query does not read, and
+  * the resumed file source would never list those files again. Start
+  * such a pipeline on a new checkpoint directory. That is safe: the new
+  * checkpoint re-lists the watch root and the ledger drops every file it
+  * has already admitted.
   *
   * Lanes: the reference runs one Lambda invocation per S3 event, so
   * batches of different prefixes load at the same time. A trigger's
@@ -123,7 +126,8 @@ object Pipeline {
       resolvePassword: Loader.PasswordResolver = identity): StreamingQuery = {
 
     val ledger = new Ledger(spark, settings.ledgerDir)
-    val ticks = new TickSource(spark, s"${settings.checkpointDir}/ticks")
+    val ticks = new TickSource(spark, settings.watchRoot,
+      Integer.toHexString(settings.checkpointDir.hashCode))
     val now = () => System.currentTimeMillis()
     // touched only by the micro-batch thread (and here, before it starts)
     var (state, rerun) = ledger.recorded()
@@ -132,14 +136,14 @@ object Pipeline {
     var flushed = 0L
     def armAgeTick(): Unit = ticks.arm(Batcher.nextDeadline(configs, state), now())
     armAgeTick()
-    val query = try FileEventSource.stream(spark, settings.watchRoot).unionByName(ticks.stream)
+    val query = try FileEventSource.stream(spark, settings.watchRoot)
       .writeStream
       .outputMode("append")
       .option("checkpointLocation", settings.checkpointDir)
       .trigger(Trigger.ProcessingTime(settings.triggerInterval))
       .foreachBatch { (batch: Dataset[FileEvent], _: Long) =>
         val (tickEvents, events) =
-          batch.collect().toSeq.partition(_.eventName == TickSource.EventName)
+          batch.collect().toSeq.partition(_.eventName == FileEventSource.TickEvent)
         val (next, flushes) = Batcher.admit(configs, now)(state, events)
         val wal = writeAhead(state, next, flushes, now())
         if (wal.nonEmpty) ledger.appendBatches(wal)
@@ -150,7 +154,7 @@ object Pipeline {
           lane.foreach(cmd => runOne(spark, settings, configs, ledger, notifier,
             topicNotifiers, resolvePassword, cmd, attempt = 0))))
         rerun = Seq.empty
-        ticks.consumed(tickEvents)
+        ticks.consumed(tickEvents.filter(ticks.owns))
         // once per trigger, after the join: at most one compaction, and
         // only when the flush count crossed a multiple of CompactEvery
         val before = flushed
@@ -173,17 +177,19 @@ object Pipeline {
   }
 
   /** The ledger records of one trigger's decisions, written before any of
-    * its flushes loads: `open` for each prefix whose pending batch changed
-    * and still holds files, `locked` for each flush. Empty when nothing
-    * changed, so an idle trigger writes nothing.
+    * its flushes loads: `open` for each prefix whose pending batch admitted
+    * files, carrying only those files ([[Ledger.Admit]]), and `locked`,
+    * with every entry, for each flush. Empty when nothing changed, so an
+    * idle trigger writes nothing.
     */
   private def writeAhead(before: Map[String, BatcherState], after: Map[String, BatcherState],
                          flushes: Seq[FlushCommand], at: Long): Seq[BatchRecord] = {
-    val opened = after.toSeq.sortBy(_._1).collect {
-      case (p, st) if st.entries.nonEmpty && before.get(p).forall(b =>
-          b.currentBatch != st.currentBatch || b.entries != st.entries) =>
-        BatchRecord(p, st.currentBatch, BatchStatus.Open.name, st.entries, st.sizeBytes, at,
-          updateReason = Some("admit"))
+    val opened = after.toSeq.sortBy(_._1).flatMap { case (p, st) =>
+      val known = before.get(p).filter(_.currentBatch == st.currentBatch).fold(0)(_.entries.size)
+      val admitted = st.entries.drop(known)
+      if (admitted.isEmpty) None
+      else Some(BatchRecord(p, st.currentBatch, BatchStatus.Open.name, admitted, st.sizeBytes,
+        at, updateReason = Some(Ledger.Admit)))
     }
     opened ++ flushes.map(c => BatchRecord(c.s3Prefix, c.batchId, BatchStatus.Locked.name,
       c.entries, c.sizeBytes, at, updateReason = Some(s"flush:${c.reason}")))
@@ -193,9 +199,14 @@ object Pipeline {
     * batch event, `files` the latest event of every file (tombstones
     * included). Returns each prefix's state and the flushes to run again.
     *
-    *  - A prefix's pending batch is its highest-numbered batch when that
-    *    batch's latest event is `open`; otherwise the prefix starts a new
-    *    batch past its highest recorded id, so no id is used twice.
+    *  - A prefix's pending batch is its highest-numbered batch when the
+    *    pipeline's own admissions are all it has recorded: its latest
+    *    event is an [[Ledger.Admit]] `open` and it was never `locked`. A
+    *    batch an operator reopened (`Ops.unlockBatch`) may already be in
+    *    a target's commit registry, so new files must not join it. In
+    *    every other case the prefix starts a new batch past its highest
+    *    recorded id (compaction keeps that id, see [[Ledger.compact]]),
+    *    so no id is used twice.
     *  - The dedup set holds every file recorded in a batch or as
     *    processed, except files whose latest file event released them (an
     *    unlink from `Ops.reprocessFile`/`reprocessPrefix`, or a
@@ -205,23 +216,23 @@ object Pipeline {
     *    to have finished: they run again, and the commit registry makes a
     *    target that already committed a no-op.
     *
-    * A file's admission time is taken as the first batch event that lists
-    * it (a compacted log keeps only the latest, so the age clock of a
-    * recovered batch may restart later than the original admission).
+    * A file's admission time is that of the admission event that lists it
+    * (a compacted log merges a batch's admissions into its latest, so the
+    * age clock of a recovered batch may restart later than the original
+    * admission).
     */
   private def recover(configs: Map[String, LoadConfig], batches: Seq[BatchLedgerEvent],
                       files: Seq[FileLedgerEvent]): (Map[String, BatcherState], Seq[FlushCommand]) = {
-    val latest = batches.groupBy(e => (e.s3Prefix, e.batchId)).values
-      .map(_.maxBy(e => (e.lastUpdate, e.seq))).toSeq
-    val firstSeen = batches.sortBy(e => (e.lastUpdate, e.seq))
-      .foldLeft(Map.empty[(String, String), Long]) { (m, e) =>
-        e.entryFiles.foldLeft(m)((m2, f) =>
-          if (m2.contains((e.batchId, f))) m2 else m2.updated((e.batchId, f), e.lastUpdate))
-      }
-    def entriesOf(e: BatchLedgerEvent): Vector[BatchEntry] =
-      e.entryFiles.zip(e.entrySizes).map { case (f, s) =>
-        BatchEntry(f, s, firstSeen.getOrElse((e.batchId, f), e.lastUpdate)) }.toVector
-    val live = latest.filter(e =>
+    val histories = batches.groupBy(e => (e.s3Prefix, e.batchId)).values
+      .map(_.sortBy(e => (e.lastUpdate, e.seq))).toSeq
+    def isAdmit(e: BatchLedgerEvent) =
+      e.status == BatchStatus.Open.name && e.updateReason == Ledger.Admit
+    def admitted(h: Seq[BatchLedgerEvent]): Vector[BatchEntry] =
+      h.filter(isAdmit).flatMap(e => e.entryFiles.zip(e.entrySizes).map { case (f, s) =>
+        BatchEntry(f, s, e.lastUpdate) }).toVector
+    def pending(h: Seq[BatchLedgerEvent]) =
+      isAdmit(h.last) && !h.exists(_.status == BatchStatus.Locked.name)
+    val live = histories.map(_.last).filter(e =>
       e.status == BatchStatus.Open.name || e.status == BatchStatus.Locked.name)
 
     val released = files.filter(f => f.deleted || f.batchId.isEmpty).map(_.loadFile).toSet
@@ -235,15 +246,15 @@ object Pipeline {
     val processedBy = dedup.toSeq.flatMap(f => route(f).map(_ -> f)).groupBy(_._1)
       .map { case (p, fs) => p -> fs.map(_._2 -> 1).toMap }
 
-    val numbered = latest.flatMap(e => Batcher.seqOf(e.s3Prefix, e.batchId).map(n => (e, n)))
-      .groupBy(_._1.s3Prefix)
+    val numbered = histories.flatMap(h => Batcher.seqOf(h.last.s3Prefix, h.last.batchId)
+      .map(n => (h, n))).groupBy(_._1.last.s3Prefix)
     val prefixes = numbered.keySet ++ processedBy.keySet
     val states = prefixes.map { p =>
       val processed = processedBy.getOrElse(p, Map.empty)
       val st = numbered.get(p).map(_.maxBy(_._2)) match {
-        case Some((e, n)) if e.status == BatchStatus.Open.name =>
-          val entries = entriesOf(e)
-          BatcherState(e.batchId, entries, e.sizeBytes,
+        case Some((h, n)) if pending(h) =>
+          val entries = admitted(h)
+          BatcherState(h.last.batchId, entries, entries.map(_.size).sum,
             if (entries.isEmpty) 0L else entries.map(_.writeDate).min, n, processed)
         case Some((_, n)) =>
           BatcherState(Batcher.batchId(p, n + 1), Vector.empty, 0L, 0L, n + 1, processed)
@@ -252,12 +263,19 @@ object Pipeline {
       p -> st
     }.toMap
 
-    val rerun = live.filter(e => e.status == BatchStatus.Locked.name &&
-        Prefix.resolve(e.s3Prefix, configs).isDefined)
-      .sortBy(_.seq)
-      .map(e => FlushCommand(e.s3Prefix, e.batchId, entriesOf(e), e.sizeBytes,
-        Option(e.updateReason).filter(_.startsWith("flush:")).map(_.stripPrefix("flush:"))
-          .getOrElse(FlushReason.Manual.name), e.lastUpdate))
+    val rerun = histories.filter(h => h.last.status == BatchStatus.Locked.name &&
+        Prefix.resolve(h.last.s3Prefix, configs).isDefined)
+      .sortBy(_.last.seq)
+      .map { h =>
+        val e = h.last
+        val at = admitted(h).map(a => a.file -> a.writeDate).toMap
+        FlushCommand(e.s3Prefix, e.batchId,
+          e.entryFiles.zip(e.entrySizes).map { case (f, s) =>
+            BatchEntry(f, s, at.getOrElse(f, e.lastUpdate)) }.toVector,
+          e.sizeBytes,
+          Option(e.updateReason).filter(_.startsWith("flush:")).map(_.stripPrefix("flush:"))
+            .getOrElse(FlushReason.Manual.name), e.lastUpdate)
+      }
     (states, rerun)
   }
 

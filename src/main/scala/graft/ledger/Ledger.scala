@@ -11,6 +11,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.StructType
 import graft.core._
+import graft.streaming.Batcher
 
 /** Durable, queryable batch + processed-file ledger — the Spark-native
   * replacement for the reference's three DynamoDB tables
@@ -342,12 +343,22 @@ class Ledger(spark: SparkSession, dir: String) {
     else Some((batchLog.collect().toSeq, latestFileEvents.as[FileLedgerEvent].collect().toSeq))
 
   /** Latest event per (s3Prefix, batchId) including tombstones — the raw
-    * latest-state view compaction and delete-ops work from.
+    * latest-state view compaction and delete-ops work from. A batch whose
+    * latest event is a pipeline admission ([[Ledger.Admit]]) lists the
+    * entries of all its admission events, in order.
     */
   def latestBatchEvents: DataFrame = {
     val w = Window.partitionBy($"s3Prefix", $"batchId")
-      .orderBy($"lastUpdate".desc, $"seq".desc)
-    batchLog.withColumn("rn", row_number().over(w)).filter($"rn" === 1).drop("rn")
+    val admit = $"status" === BatchStatus.Open.name && $"updateReason" === Ledger.Admit
+    batchLog
+      .withColumn("admits",
+        collect_list(when(admit, struct($"seq", $"entryFiles", $"entrySizes"))).over(w))
+      .withColumn("rn", row_number().over(w.orderBy($"lastUpdate".desc, $"seq".desc)))
+      .filter($"rn" === 1)
+      .withColumn("admits", sort_array($"admits"))
+      .withColumn("entryFiles", when(admit, flatten($"admits.entryFiles")).otherwise($"entryFiles"))
+      .withColumn("entrySizes", when(admit, flatten($"admits.entrySizes")).otherwise($"entrySizes"))
+      .drop("rn", "admits")
   }
 
   /** Latest event per (s3Prefix, batchId) — the current batch state.
@@ -388,7 +399,8 @@ class Ledger(spark: SparkSession, dir: String) {
   def processedFiles: DataFrame =
     latestFileEvents.filter(!$"deleted")
 
-  /** Rewrite both logs to their latest-state rows. Run periodically (the
+  /** Rewrite both logs to their latest-state rows (a deleted batch is
+    * dropped unless it is its prefix's highest-numbered). Run periodically (the
     * Pipeline does, every `Pipeline.CompactEvery` flushes): an
     * append-per-event log accretes one small parquet file per state
     * change, and the latest-event window re-reads all of them on every
@@ -402,7 +414,19 @@ class Ledger(spark: SparkSession, dir: String) {
     * construction.
     */
   def compact(): Unit = {
-    compactOne(batchDir, () => currentBatches)
+    compactOne(batchDir, () => {
+      // each prefix's highest-numbered batch keeps its tombstone: a
+      // starting pipeline numbers its next batch past the highest id in
+      // this log, and every id once committed stays in the targets'
+      // commit registries
+      val latest = latestBatchEvents
+      val highest = latest.select($"s3Prefix", $"batchId").as[(String, String)].collect()
+        .flatMap { case (p, id) => Batcher.seqOf(p, id).map(n => (p, id, n)) }
+        .groupBy(_._1).values.map(_.maxBy(_._3)).toSeq
+      latest.filter(highest.foldLeft($"status" =!= BatchStatus.Deleted.name) {
+        case (keep, (p, id, _)) => keep || ($"s3Prefix" === p && $"batchId" === id)
+      })
+    })
     compactOne(fileDir, () => processedFiles)
   }
 
@@ -425,4 +449,14 @@ class Ledger(spark: SparkSession, dir: String) {
       if (crashAfterStep <= 3) throw new IllegalStateException("simulated crash after step 3")
       f.delete(old, true)
     }
+}
+
+object Ledger {
+  /** `updateReason` of the pipeline's write-ahead `open` events. Each
+    * carries only the entries its trigger admitted (and the batch's
+    * running `sizeBytes`), so a batch that fills one file per trigger
+    * writes each entry once; the batch's entries are those of all its
+    * admission events, in order.
+    */
+  val Admit = "admit"
 }

@@ -48,7 +48,8 @@ class Ops(spark: SparkSession, ledger: Ledger) {
     ledger.processedFiles.filter(col("loadFile") === loadFile)
   }
 
-  /** `locked|error → open` (unlockBatch.js:87-96). */
+  /** `locked|error → open` (unlockBatch.js:87-96). The pipeline adds no
+    * file to an unlocked batch: a restart starts a new batch past it. */
   def unlockBatch(prefix: String, batchId: String): OpResult =
     currentOf(prefix, batchId) match {
       case None => OpResult(ok = false, s"batch $batchId not found for $prefix")
@@ -89,7 +90,9 @@ class Ops(spark: SparkSession, ledger: Ledger) {
     * DynamoDB `delete` with `ReturnValues: ALL_OLD`
     * (batchOperations.js:193-271). The batch vanishes from every
     * current-state view immediately and from disk at the next
-    * compaction.
+    * compaction, unless it is its prefix's highest-numbered batch: that
+    * tombstone stays, so a restarted pipeline never numbers a new batch
+    * with an id a target has already committed.
     */
   def deleteBatch(prefix: String, batchId: String): (OpResult, Option[BatchLedgerEvent]) =
     currentOf(prefix, batchId) match {

@@ -26,6 +26,7 @@ object FileEventSource {
     * one file's entry from the running pipeline's driver-side dedup set
     * (the Spark analogue of the reference deleting the processed-files
     * item so a re-injected file is admitted — `common.js:842-916`).
+    * `tick/<owner>/<deadline>-<uuid>` is an age-check tick ([[TickSource]]).
     *
     * The namespace must NOT be hidden: Spark's file listing
     * (InMemoryFileIndex, shared by the binaryFile batch and streaming
@@ -40,6 +41,12 @@ object FileEventSource {
     * control marker, never loaded.
     */
   val ControlDir = "graft-control"
+
+  /** Key prefix, under [[ControlDir]], of tick markers. */
+  val TickKey = "tick/"
+
+  /** `eventName` of a tick marker: never a file event's. */
+  val TickEvent = "graft:tick"
 
   def encodeControlTarget(loadFile: String): String =
     "t-" + java.net.URLEncoder.encode(loadFile, "UTF-8")
@@ -71,6 +78,8 @@ object FileEventSource {
           case Array(b, k) => FileEvent(b, k, size, modMs, unlink = true)
           case Array(b)    => FileEvent(b, "", size, modMs, unlink = true)
         }
+      case Array(ControlDir, rest) if rest.startsWith(TickKey) =>
+        FileEvent(ControlDir, rest, size, modMs, eventName = TickEvent)
       case Array(b, k) => FileEvent(b, k, size, modMs)
       case Array(b)    => FileEvent(b, "", size, modMs)
     }

@@ -2,27 +2,29 @@ package graft.sources
 
 import java.util.concurrent.{ScheduledFuture, ScheduledThreadPoolExecutor, TimeUnit}
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.SparkSession
 import graft.core.FileEvent
 
 /** Age-check ticks for a query with no stateful operator. Such a query
-  * runs a batch only when a source has new data, so a pending batch's age
-  * flush needs something to arrive once its deadline passes. [[arm]]
-  * writes a one-byte file into `dir`, a directory the pipeline owns, at
-  * the deadline; [[stream]] lists that directory, so the trigger after
-  * the deadline runs a batch with no data file arriving. Between
-  * deadlines no batch runs: an idle pipeline costs one listing of an
-  * empty directory per trigger. At most one tick is armed at a time.
+  * runs a batch only when its file source lists something new, so a
+  * pending batch's age flush needs something to arrive once its deadline
+  * passes. [[arm]] drops a one-byte marker into the watched tree's
+  * control namespace, `<watchRoot>/graft-control/tick/<owner>/`, at the
+  * deadline; the pipeline's own file stream lists it as a tick event (see
+  * [[FileEventSource.toEvent]]), so the trigger after the deadline runs a
+  * batch with no data file arriving. At most one tick is armed at a time.
   *
-  * A tick file carries nothing: its event is dropped after `collect()`
-  * and its file deleted ([[consumed]]). The stream ignores missing files,
-  * so a replayed batch whose ticks are gone still runs.
+  * `owner` names the pipeline the ticks belong to: pipelines sharing a
+  * watch root each see every tick, and act on and delete only their own.
+  * A tick carries nothing: its event is dropped after `collect()` and its
+  * marker deleted ([[consumed]]). A replayed batch whose markers are gone
+  * still runs, since the file source's listing skips a missing path it
+  * was given by name.
   */
-final class TickSource(spark: SparkSession, dir: String) {
-  private val root = new Path(dir)
-  private val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-  fs.mkdirs(root)
+final class TickSource(spark: SparkSession, watchRoot: String, owner: String) {
+  private val key = s"${FileEventSource.TickKey}$owner/"
+  private val dir = new Path(watchRoot, s"${FileEventSource.ControlDir}/$key")
+  private val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   private val timer = new ScheduledThreadPoolExecutor(1, (r: Runnable) => {
     val t = new Thread(r, "graft-tick")
@@ -32,17 +34,9 @@ final class TickSource(spark: SparkSession, dir: String) {
   // touched only by the micro-batch thread
   private var armed: Option[(Long, ScheduledFuture[_])] = None
 
-  /** Tick events: `eventName` is [[TickSource.EventName]], `key` the
-    * tick file's path. */
-  def stream: Dataset[FileEvent] = {
-    import spark.implicits._
-    spark.readStream.format("binaryFile").schema(FileEventSource.BinaryFileSchema)
-      .option("ignoreMissingFiles", "true").load(dir)
-      .select(lit("").as("bucket"), col("path").as("key"), lit(0L).as("size"),
-        lit(0L).as("eventTime"), lit(TickSource.EventName).as("eventName"),
-        lit(false).as("unlink"))
-      .as[FileEvent]
-  }
+  /** Whether `ev` is one of this source's ticks. */
+  def owns(ev: FileEvent): Boolean =
+    ev.eventName == FileEventSource.TickEvent && ev.key.startsWith(key)
 
   /** Have one tick arrive at `at`, cancelling a tick armed for another
     * time; None cancels it. A tick already due is armed again. */
@@ -50,19 +44,21 @@ final class TickSource(spark: SparkSession, dir: String) {
     if (armed.map(_._1) != at || armed.exists(_._1 <= now)) {
       armed.foreach(_._2.cancel(false))
       armed = at.map(t => t -> timer.schedule((() => {
-        val out = fs.create(new Path(root, s"tick-$t-${java.util.UUID.randomUUID()}"), true)
+        // written under a hidden name and renamed in: a listing that met
+        // the marker half-written would record it empty, and an empty
+        // file yields no row
+        val name = s"$t-${java.util.UUID.randomUUID()}"
+        val hidden = new Path(dir, s".$name")
+        val out = fs.create(hidden, true)
         try out.write('x') finally out.close()
+        fs.rename(hidden, new Path(dir, name))
       }): Runnable, math.max(0L, t - now), TimeUnit.MILLISECONDS))
     }
 
-  /** Delete the files of ticks a batch has collected. */
-  def consumed(ticks: Seq[FileEvent]): Unit = ticks.foreach(t => fs.delete(new Path(t.key), false))
+  /** Delete the markers of ticks a batch has collected. */
+  def consumed(ticks: Seq[FileEvent]): Unit =
+    ticks.foreach(t => fs.delete(new Path(watchRoot, t.loadFile), false))
 
   /** Cancel every armed tick and end the timer thread. */
   def stop(): Unit = timer.shutdownNow()
-}
-
-object TickSource {
-  /** `eventName` of a tick: never a file event's. */
-  val EventName = "graft:tick"
 }

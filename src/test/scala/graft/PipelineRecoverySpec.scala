@@ -148,10 +148,10 @@ class PipelineRecoverySpec extends AnyFunSuite {
     val q1 = rig.start(rig.checkpoint())
     val first = try {
       awaitUntil("f0, f1 loaded and recorded", 120)(rig.completes().size == 1 && rig.processed() == 2)
-      // f2 waits in an open batch: one whole trigger after the one in
-      // flight admits it and writes its write-ahead
+      // f2 waits in an open batch, recorded by its trigger's write-ahead
       rig.drop("f2.csv", 4)
-      StreamProgress.awaitTriggers(q1, 2)
+      awaitUntil("f2's batch recorded open", 60)(
+        rig.status(Batcher.batchId("bucket/input", 1)) == "open")
       rig.completes().map(_.batchId)
     } finally q1.stop()
     assert(rig.rows() == 2)
@@ -173,6 +173,77 @@ class PipelineRecoverySpec extends AnyFunSuite {
       assert(rig.rows() == 4 && rig.sum() == 15, "every file's row landed once")
       assert(rig.registry() == 2)
     } finally q2.stop()
+  }
+
+  test("delete the complete batches, compact, restart: a new file gets an id never used") {
+    val rig = new Rig("delcompact", batchSize = 1)
+    val ckpt = rig.checkpoint()
+    val q1 = rig.start(ckpt)
+    try {
+      (0 to 1).foreach { i =>
+        rig.drop(s"d$i.csv", 1 << i)
+        awaitUntil(s"d$i loaded and recorded", 120)(rig.completes().size == i + 1)
+      }
+      awaitUntil("both recorded", 60)(rig.processed() == 2)
+    } finally q1.stop()
+    val ledger = new Ledger(spark, rig.ledgerDir)
+    new graft.ops.Ops(spark, ledger).deleteBatches("complete", dryRun = false)
+    ledger.compact()
+
+    val q2 = rig.start(ckpt)
+    try {
+      rig.drop("d2.csv", 4)
+      awaitUntil("d2 loaded", 120)(rig.completes().size == 3)
+      assert(rig.completes().last.batchId == Batcher.batchId("bucket/input", 2))
+      assert(rig.rows() == 3 && rig.sum() == 7, "d2's row landed")
+      assert(rig.registry() == 3)
+    } finally q2.stop()
+  }
+
+  test("an unlocked batch that committed takes no new file: the restart loads it in a new batch") {
+    val rig = new Rig("unlocked", batchSize = 1)
+    val ckpt = rig.checkpoint()
+    val id = Batcher.batchId("bucket/input", 0)
+    // the lane fails writing the manifest, after the JDBC commit
+    val blocker = Paths.get(s"${rig.ledgerLocal}/manifests/$id.json")
+    Files.createDirectories(blocker)
+    rig.drop("u0.csv", 5)
+    val q1 = rig.start(ckpt)
+    try awaitFailure(q1) finally q1.stop()
+    assert(rig.rows() == 1 && rig.status(id) == "locked")
+    Files.delete(blocker)
+    assert(new graft.ops.Ops(spark, new Ledger(spark, rig.ledgerDir)).unlockBatch("bucket/input", id).ok)
+
+    val q2 = rig.start(ckpt)
+    try {
+      rig.drop("u1.csv", 7)
+      awaitUntil("u1 loaded", 120)(rig.completes().nonEmpty)
+      StreamProgress.awaitTriggers(q2, 2)
+      assert(rig.completes().map(_.batchId) == Seq(Batcher.batchId("bucket/input", 1)))
+      assert(rig.rows() == 2 && rig.sum() == 12, "u1's row landed")
+      assert(rig.status(id) == "open", "the unlocked batch was not loaded again")
+    } finally q2.stop()
+  }
+
+  test("write-ahead: each open event carries only its trigger's admissions") {
+    val rig = new Rig("delta", batchSize = 3)
+    val id = Batcher.batchId("bucket/input", 0)
+    val q = rig.start(rig.checkpoint())
+    def opens() = rig.ledger.batchLog.collect().filter(_.status == "open").sortBy(_.seq)
+      .map(_.entryFiles.toSeq).toSeq
+    try {
+      rig.drop("e0.csv", 1)
+      awaitUntil("e0 recorded", 60)(rig.status(id) == "open")
+      rig.drop("e1.csv", 2)
+      awaitUntil("e1 recorded", 60)(opens().size == 2)
+      assert(opens() == Seq(Seq("bucket/input/e0.csv"), Seq("bucket/input/e1.csv")))
+      assert(rig.ledger.describeBatch("bucket/input", id).collect().head
+        .getAs[scala.collection.Seq[String]]("entryFiles").toSeq ==
+        Seq("bucket/input/e0.csv", "bucket/input/e1.csv"))
+      rig.drop("e2.csv", 4)
+      awaitUntil("the batch loads", 120)(rig.completes().size == 1)
+      assert(rig.rows() == 3 && rig.sum() == 7)
+    } finally q.stop()
   }
 
   test("per-target outcomes: a target whose password fails is the only one the retry loads") {

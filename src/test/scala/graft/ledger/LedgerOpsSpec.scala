@@ -89,6 +89,35 @@ class LedgerOpsSpec extends AnyFunSuite {
     assert(ledger.batchLog.collect().map(_.batchId).toSeq == Seq("keep1"))
   }
 
+  test("compaction keeps each prefix's highest-numbered tombstone, drops the rest") {
+    val ledger = freshLedger()
+    val ids = (0 to 2).map(graft.streaming.Batcher.batchId("b/k", _))
+    ids.foreach(id => ledger.appendBatch(rec(id, BatchStatus.Complete, at = 1000)))
+    new Ops(spark, ledger).deleteBatches("complete", dryRun = false)
+    ledger.compact()
+    assert(ledger.currentBatches.count() == 0)
+    assert(ledger.batchLog.collect().map(e => e.batchId -> e.status).toSeq ==
+      Seq(ids(2) -> "deleted"), "only the highest id survives, as a tombstone")
+  }
+
+  test("admission events: an open batch lists every admitted entry, before and after compaction") {
+    val ledger = freshLedger()
+    def admit(files: Seq[String], at: Long) =
+      ledger.appendBatch(rec("b1", BatchStatus.Open, files, at).copy(updateReason = Some(Ledger.Admit)))
+    def entries() = ledger.describeBatch("b/k", "b1").collect().head
+      .getAs[scala.collection.Seq[String]]("entryFiles").toSeq
+    admit(Seq("b/k/f1.csv", "b/k/f2.csv"), 1000)
+    admit(Seq("b/k/f3.csv"), 2000)
+    assert(entries() == Seq("b/k/f1.csv", "b/k/f2.csv", "b/k/f3.csv"))
+    ledger.compact()
+    assert(ledger.batchLog.count() == 1)
+    admit(Seq("b/k/f4.csv"), 3000)
+    assert(entries() == Seq("b/k/f1.csv", "b/k/f2.csv", "b/k/f3.csv", "b/k/f4.csv"))
+    // a later event of another kind carries the whole list itself
+    ledger.appendBatch(rec("b1", BatchStatus.Locked, Seq("b/k/f1.csv", "b/k/f4.csv"), 4000))
+    assert(entries() == Seq("b/k/f1.csv", "b/k/f4.csv"))
+  }
+
   test("ops: deleteProcessedFile tombstones the dedup entry (processedFiles --delete)") {
     val ledger = freshLedger()
     val ops = new Ops(spark, ledger)

@@ -7,7 +7,7 @@ import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 import graft.core._
 import graft.{GraftSession, StreamProgress}
-import graft.sources.TickSource
+import graft.sources.{FileEventSource, TickSource}
 
 class BatcherSpec extends AnyFunSuite {
 
@@ -133,13 +133,13 @@ class BatcherSpec extends AnyFunSuite {
       .trigger(Trigger.ProcessingTime("250 milliseconds"))
       .foreachBatch { (batch: Dataset[FileEvent], _: Long) =>
         val (tickEvents, fileEvents) =
-          batch.collect().toSeq.partition(_.eventName == TickSource.EventName)
+          batch.collect().toSeq.partition(_.eventName == FileEventSource.TickEvent)
         val now = () => System.currentTimeMillis()
         val (next, out) = Batcher.admit(configs, now)(state, fileEvents)
         state = next
         ticks.foreach { t =>
           t.arm(Batcher.nextDeadline(configs, state), now())
-          t.consumed(tickEvents)
+          t.consumed(tickEvents.filter(t.owns))
         }
         out.foreach(flushes.add)
       }
@@ -174,14 +174,13 @@ class BatcherSpec extends AnyFunSuite {
   }
 
   test("end-to-end streaming: age timeout flushes without further input (T2)") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
     val aged = Map("bucket/input" -> cfg.copy(batchSize = 100, batchTimeoutSecs = Some(2)))
-    val input = MemoryStream[FileEvent]
-    val ticks = new TickSource(spark, Files.createTempDirectory("graft-batcher-ticks").toString)
-    val (q, flushes) = admitting(input.toDS().unionByName(ticks.stream), aged, Some(ticks))
+    val root = Files.createTempDirectory("graft-batcher-watch").toString
+    val ticks = new TickSource(spark, root, "spec")
+    val (q, flushes) = admitting(FileEventSource.stream(spark, root), aged, Some(ticks))
     try {
-      input.addData(Seq(ev("only.csv", t = System.currentTimeMillis())))
+      Files.createDirectories(java.nio.file.Paths.get(root, "bucket", "input"))
+      Files.write(java.nio.file.Paths.get(root, "bucket", "input", "only.csv"), "1\n".getBytes)
       // poll: the tick armed for the batch's deadline arrives ~2s after
       // the first append, no dummy data files needed (unlike the
       // reference's sweep hack)
