@@ -399,9 +399,9 @@ class Ledger(spark: SparkSession, dir: String) {
   def processedFiles: DataFrame =
     latestFileEvents.filter(!$"deleted")
 
-  /** Rewrite both logs to their latest-state rows (a deleted batch is
-    * dropped unless it is its prefix's highest-numbered). Run periodically (the
-    * Pipeline does, every `Pipeline.CompactEvery` flushes): an
+  /** Rewrite both logs to their latest-state rows; a deleted batch is
+    * dropped unless it is its prefix's highest-numbered. Run periodically
+    * (the Pipeline does, every `Pipeline.CompactEvery` flushes): an
     * append-per-event log accretes one small parquet file per state
     * change, and the latest-event window re-reads all of them on every
     * ops query. Compaction = the DynamoDB tables' current-state shape,
@@ -419,13 +419,12 @@ class Ledger(spark: SparkSession, dir: String) {
       // starting pipeline numbers its next batch past the highest id in
       // this log, and every id once committed stays in the targets'
       // commit registries
-      val latest = latestBatchEvents
-      val highest = latest.select($"s3Prefix", $"batchId").as[(String, String)].collect()
-        .flatMap { case (p, id) => Batcher.seqOf(p, id).map(n => (p, id, n)) }
-        .groupBy(_._1).values.map(_.maxBy(_._3)).toSeq
-      latest.filter(highest.foldLeft($"status" =!= BatchStatus.Deleted.name) {
-        case (keep, (p, id, _)) => keep || ($"s3Prefix" === p && $"batchId" === id)
-      })
+      val seqOf = udf((p: String, id: String) => Batcher.seqOf(p, id))
+      latestBatchEvents
+        .withColumn("n", seqOf($"s3Prefix", $"batchId"))
+        .withColumn("top", max($"n").over(Window.partitionBy($"s3Prefix")))
+        .filter($"status" =!= BatchStatus.Deleted.name || $"n" === $"top")
+        .drop("n", "top")
     })
     compactOne(fileDir, () => processedFiles)
   }

@@ -37,8 +37,8 @@ object FileEventSource {
     *
     * RESERVED NAME: because the namespace is visible, the first path
     * segment `graft-control` under a watch root cannot be used as a data
-    * bucket — any `graft-control/unlink/...` object is consumed as a
-    * control marker, never loaded.
+    * bucket — any `graft-control/unlink/...` or `graft-control/tick/...`
+    * object is consumed as a control marker, never loaded.
     */
   val ControlDir = "graft-control"
 
