@@ -40,13 +40,14 @@ import graft.streaming.{Batcher, BatcherState}
   * each prefix's pending batch admitted, `locked` for each flush (see
   * [[writeAhead]]). An idle trigger writes nothing. On start the
   * pipeline reads that record once ([[recover]]): pending
-  * batches, the dedup set and each prefix's batch counter come back, and
-  * batches last seen `locked` run again in the first trigger, where the
-  * commit registry makes a target that already committed a no-op. A
-  * replayed micro-batch therefore reads back its recorded decisions — its
-  * admitted files are duplicates — instead of deciding them again with a
-  * new clock, and a fresh checkpoint over an existing ledger reloads no
-  * processed file and reuses no batch id.
+  * batches and the dedup set come back, and batches last seen `locked`
+  * run again in the first trigger, where the commit registry makes a
+  * target that already committed a no-op. A replayed micro-batch
+  * therefore reads back its recorded decisions — its admitted files are
+  * duplicates — instead of deciding them again with a new clock, and a
+  * fresh checkpoint over an existing ledger reloads no processed file.
+  * Batch ids are random ([[Batcher.newBatchId]]) and recorded before
+  * anything loads under them, so no id is computed twice.
   *
   * Checkpoints: a checkpoint written by a build with the stateful
   * Batcher must not be resumed. That build held its pending batches only
@@ -130,9 +131,9 @@ object Pipeline {
       Integer.toHexString(settings.checkpointDir.hashCode))
     val now = () => System.currentTimeMillis()
     // touched only by the micro-batch thread (and here, before it starts)
-    var (state, rerun) = ledger.recorded()
+    var (state, processed, rerun) = ledger.recorded()
       .map { case (batches, files) => recover(configs, batches, files) }
-      .getOrElse((Map.empty[String, BatcherState], Seq.empty[FlushCommand]))
+      .getOrElse((Map.empty[String, BatcherState], Set.empty[String], Seq.empty[FlushCommand]))
     var flushed = 0L
     def armAgeTick(): Unit = ticks.arm(Batcher.nextDeadline(configs, state), now())
     armAgeTick()
@@ -144,10 +145,11 @@ object Pipeline {
       .foreachBatch { (batch: Dataset[FileEvent], _: Long) =>
         val (tickEvents, events) =
           batch.collect().toSeq.partition(_.eventName == FileEventSource.TickEvent)
-        val (next, flushes) = Batcher.admit(configs, now)(state, events)
+        val (next, seen, flushes) = Batcher.admit(configs, now)(state, processed, events)
         val wal = writeAhead(state, next, flushes, now())
         if (wal.nonEmpty) ledger.appendBatches(wal)
         state = next
+        processed = seen
         armAgeTick()
         val cmds = rerun ++ flushes
         Fanout.all(LaneThreadPrefix, lanes(cmds, configs).map(lane => () =>
@@ -197,16 +199,16 @@ object Pipeline {
 
   /** Rebuild the admission state from the ledger: `batches` is every
     * batch event, `files` the latest event of every file (tombstones
-    * included). Returns each prefix's state and the flushes to run again.
+    * included). Returns each prefix's pending batch, the dedup set and
+    * the flushes to run again.
     *
-    *  - A prefix's pending batch is its highest-numbered batch when the
-    *    pipeline's own admissions are all it has recorded: its latest
-    *    event is an [[Ledger.Admit]] `open` and it was never `locked`. A
-    *    batch an operator reopened (`Ops.unlockBatch`) may already be in
-    *    a target's commit registry, so new files must not join it. In
-    *    every other case the prefix starts a new batch past its highest
-    *    recorded id (compaction keeps that id, see [[Ledger.compact]]),
-    *    so no id is used twice.
+    *  - A batch is pending when the pipeline's own admissions are all it
+    *    has recorded: its latest event is an [[Ledger.Admit]] `open` and
+    *    it was never `locked`. A batch an operator reopened
+    *    (`Ops.unlockBatch`) may already be in a target's commit registry,
+    *    so new files must not join it. A prefix with more than one
+    *    pending batch resumes the one whose latest event came last; every
+    *    other prefix starts a new batch when a file arrives.
     *  - The dedup set holds every file recorded in a batch or as
     *    processed, except files whose latest file event released them (an
     *    unlink from `Ops.reprocessFile`/`reprocessPrefix`, or a
@@ -222,7 +224,8 @@ object Pipeline {
     * admission).
     */
   private def recover(configs: Map[String, LoadConfig], batches: Seq[BatchLedgerEvent],
-                      files: Seq[FileLedgerEvent]): (Map[String, BatcherState], Seq[FlushCommand]) = {
+                      files: Seq[FileLedgerEvent])
+      : (Map[String, BatcherState], Set[String], Seq[FlushCommand]) = {
     val histories = batches.groupBy(e => (e.s3Prefix, e.batchId)).values
       .map(_.sortBy(e => (e.lastUpdate, e.seq))).toSeq
     def isAdmit(e: BatchLedgerEvent) =
@@ -230,8 +233,6 @@ object Pipeline {
     def admitted(h: Seq[BatchLedgerEvent]): Vector[BatchEntry] =
       h.filter(isAdmit).flatMap(e => e.entryFiles.zip(e.entrySizes).map { case (f, s) =>
         BatchEntry(f, s, e.lastUpdate) }).toVector
-    def pending(h: Seq[BatchLedgerEvent]) =
-      isAdmit(h.last) && !h.exists(_.status == BatchStatus.Locked.name)
     val live = histories.map(_.last).filter(e =>
       e.status == BatchStatus.Open.name || e.status == BatchStatus.Locked.name)
 
@@ -239,29 +240,16 @@ object Pipeline {
     val dedup = ((batches.flatMap(_.entryFiles) ++
       files.filterNot(f => f.deleted || f.batchId.isEmpty).map(_.loadFile)).toSet -- released) ++
       live.flatMap(_.entryFiles)
-    def route(file: String): Option[String] = file.split("/", 2) match {
-      case Array(b, k) => Prefix.resolve(Prefix.searchKey(b, k), configs).map(_._1)
-      case _ => None
-    }
-    val processedBy = dedup.toSeq.flatMap(f => route(f).map(_ -> f)).groupBy(_._1)
-      .map { case (p, fs) => p -> fs.map(_._2 -> 1).toMap }
 
-    val numbered = histories.flatMap(h => Batcher.seqOf(h.last.s3Prefix, h.last.batchId)
-      .map(n => (h, n))).groupBy(_._1.last.s3Prefix)
-    val prefixes = numbered.keySet ++ processedBy.keySet
-    val states = prefixes.map { p =>
-      val processed = processedBy.getOrElse(p, Map.empty)
-      val st = numbered.get(p).map(_.maxBy(_._2)) match {
-        case Some((h, n)) if pending(h) =>
-          val entries = admitted(h)
-          BatcherState(h.last.batchId, entries, entries.map(_.size).sum,
-            if (entries.isEmpty) 0L else entries.map(_.writeDate).min, n, processed)
-        case Some((_, n)) =>
-          BatcherState(Batcher.batchId(p, n + 1), Vector.empty, 0L, 0L, n + 1, processed)
-        case None => Batcher.initialState(p).copy(processed = processed)
+    val states = histories
+      .filter(h => isAdmit(h.last) && !h.exists(_.status == BatchStatus.Locked.name))
+      .groupBy(_.last.s3Prefix)
+      .map { case (p, hs) =>
+        val h = hs.maxBy(_.last.seq)
+        val entries = admitted(h)
+        p -> BatcherState(h.last.batchId, entries, entries.map(_.size).sum,
+          if (entries.isEmpty) 0L else entries.map(_.writeDate).min)
       }
-      p -> st
-    }.toMap
 
     val rerun = histories.filter(h => h.last.status == BatchStatus.Locked.name &&
         Prefix.resolve(h.last.s3Prefix, configs).isDefined)
@@ -276,7 +264,7 @@ object Pipeline {
           Option(e.updateReason).filter(_.startsWith("flush:")).map(_.stripPrefix("flush:"))
             .getOrElse(FlushReason.Manual.name), e.lastUpdate)
       }
-    (states, rerun)
+    (states, dedup, rerun)
   }
 
   /** Compact the ledger to latest-state rows every this many flushed

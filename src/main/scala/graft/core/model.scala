@@ -131,8 +131,7 @@ final case class BatchRecord(
     /** per-target load result keyed by jdbc url (`index.js:920-925`) */
     targetStatus: Map[String, String] = Map.empty,
     errorMessage: Option[String] = None,
-    updateReason: Option[String] = None,
-    schemaVersion: Int = 1)
+    updateReason: Option[String] = None)
 
 /** Processed-file ledger row — the dedup record
   * (`common.js:132-147`, `index.js:247-306`).

@@ -11,7 +11,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.StructType
 import graft.core._
-import graft.streaming.Batcher
 
 /** Durable, queryable batch + processed-file ledger — the Spark-native
   * replacement for the reference's three DynamoDB tables
@@ -189,20 +188,19 @@ class Ledger(spark: SparkSession, dir: String) {
       maxSeq(hasData(fileDir), () => fileLog.toDF())))
   }
 
-  def appendBatch(rec: BatchRecord, reason: String = ""): Unit =
-    appendBatches(Seq(rec), reason)
+  def appendBatch(rec: BatchRecord): Unit = appendBatches(Seq(rec))
 
   /** One parquet append for a whole batch-record set — bulk ops (e.g.
     * deleteBatches) write one file, not one per doomed row.
     */
-  def appendBatches(recs: Seq[BatchRecord], reason: String = ""): Unit =
+  def appendBatches(recs: Seq[BatchRecord]): Unit =
     appendRows(batchDir, batchCodec, recs.map { rec =>
       BatchLedgerEvent(
         rec.s3Prefix, rec.batchId, rec.status,
         rec.entries.map(_.file), rec.entries.map(_.size), rec.sizeBytes,
         rec.manifestFile.getOrElse(""), rec.targetStatus,
         rec.errorMessage.getOrElse(""),
-        if (reason.nonEmpty) reason else rec.updateReason.getOrElse(""),
+        rec.updateReason.getOrElse(""),
         rec.lastUpdate, seqCounter.incrementAndGet(), today(rec.lastUpdate))
     })
 
@@ -399,8 +397,8 @@ class Ledger(spark: SparkSession, dir: String) {
   def processedFiles: DataFrame =
     latestFileEvents.filter(!$"deleted")
 
-  /** Rewrite both logs to their latest-state rows; a deleted batch is
-    * dropped unless it is its prefix's highest-numbered. Run periodically
+  /** Rewrite both logs to their latest-state rows, dropping deleted
+    * batches and tombstoned files. Run periodically
     * (the Pipeline does, every `Pipeline.CompactEvery` flushes): an
     * append-per-event log accretes one small parquet file per state
     * change, and the latest-event window re-reads all of them on every
@@ -414,18 +412,7 @@ class Ledger(spark: SparkSession, dir: String) {
     * construction.
     */
   def compact(): Unit = {
-    compactOne(batchDir, () => {
-      // each prefix's highest-numbered batch keeps its tombstone: a
-      // starting pipeline numbers its next batch past the highest id in
-      // this log, and every id once committed stays in the targets'
-      // commit registries
-      val seqOf = udf((p: String, id: String) => Batcher.seqOf(p, id))
-      latestBatchEvents
-        .withColumn("n", seqOf($"s3Prefix", $"batchId"))
-        .withColumn("top", max($"n").over(Window.partitionBy($"s3Prefix")))
-        .filter($"status" =!= BatchStatus.Deleted.name || $"n" === $"top")
-        .drop("n", "top")
-    })
+    compactOne(batchDir, () => currentBatches)
     compactOne(fileDir, () => processedFiles)
   }
 

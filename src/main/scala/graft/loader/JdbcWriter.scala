@@ -212,13 +212,23 @@ object JdbcWriter {
             false
         } finally ins.close()
       }
-      if (!fresh) (false, 0L)
-      else {
+      val stage = stagingTable(t.targetTable)
+      // the staged rows of this batch go in the commit's transaction, or,
+      // on a replay, on their own: `stage` wrote them before the registry
+      // said the batch was in
+      def dropStaged(): Unit = {
+        val del = prep(s"DELETE FROM $stage WHERE $BatchIdCol = ?")
+        try { del.setString(1, batchId); del.executeUpdate() } finally del.close()
+      }
+      if (!fresh) {
+        dropStaged()
+        conn.commit()
+        (false, 0L)
+      } else {
         val stmt = timedStatement(conn)
         try {
           t.presql.foreach(stmt.execute)
           if (t.truncateTarget) stmt.executeUpdate(s"DELETE FROM ${t.targetTable}")
-          val stage = stagingTable(t.targetTable)
           val targetCols = {
             val rs = stmt.executeQuery(s"SELECT * FROM ${t.targetTable} WHERE 1=0")
             val md = rs.getMetaData
@@ -230,8 +240,7 @@ object JdbcWriter {
             s"INSERT INTO ${t.targetTable} ($colList) " +
               s"SELECT $colList FROM $stage WHERE $BatchIdCol = ?")
           val rows = try { ins.setString(1, batchId); ins.executeUpdate() } finally ins.close()
-          val del = prep(s"DELETE FROM $stage WHERE $BatchIdCol = ?")
-          try { del.setString(1, batchId); del.executeUpdate() } finally del.close()
+          dropStaged()
           t.postsql.foreach(stmt.execute)
           conn.commit()
           (true, rows.toLong)

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.core._
 import graft.ledger.{BatchLedgerEvent, Ledger}
+import graft.sources.FileEventSource
 
 /** Operational command surface — the reference's CLI family
   * (`/root/reference/` `unlockBatch.js`, `resetCurrentBatch.js`,
@@ -18,6 +19,8 @@ class Ops(spark: SparkSession, ledger: Ledger) {
                             reinject: Seq[String] = Seq.empty)
 
   private def now(): Long = System.currentTimeMillis()
+
+  private def hadoopConf = spark.sparkContext.hadoopConfiguration
 
   private def currentOf(prefix: String, batchId: String): Option[BatchLedgerEvent] = {
     import org.apache.spark.sql.functions.col
@@ -49,7 +52,8 @@ class Ops(spark: SparkSession, ledger: Ledger) {
   }
 
   /** `locked|error → open` (unlockBatch.js:87-96). The pipeline adds no
-    * file to an unlocked batch: a restart starts a new batch past it. */
+    * file to an unlocked batch: after a restart new files go to a new
+    * batch. */
   def unlockBatch(prefix: String, batchId: String): OpResult =
     currentOf(prefix, batchId) match {
       case None => OpResult(ok = false, s"batch $batchId not found for $prefix")
@@ -90,9 +94,7 @@ class Ops(spark: SparkSession, ledger: Ledger) {
     * DynamoDB `delete` with `ReturnValues: ALL_OLD`
     * (batchOperations.js:193-271). The batch vanishes from every
     * current-state view immediately and from disk at the next
-    * compaction, unless it is its prefix's highest-numbered batch: that
-    * tombstone stays, so a restarted pipeline never numbers a new batch
-    * with an id a target has already committed.
+    * compaction.
     */
   def deleteBatch(prefix: String, batchId: String): (OpResult, Option[BatchLedgerEvent]) =
     currentOf(prefix, batchId) match {
@@ -213,7 +215,7 @@ class Ops(spark: SparkSession, ledger: Ledger) {
         val prev = row.getAs[scala.collection.Seq[String]]("previousBatches").toSeq
         ledger.appendFile(ProcessedFile(loadFile, now(), 0, None,
           if (prevBatch.nonEmpty) prev :+ prevBatch else prev), now())
-        watchRoot.foreach(Ops.writeUnlinkMarker(_, loadFile))
+        watchRoot.foreach(FileEventSource.writeUnlinkMarker(hadoopConf, _, loadFile))
         OpResult(ok = true, s"$loadFile queued for reprocessing", Seq(loadFile))
     }
   }
@@ -229,7 +231,7 @@ class Ops(spark: SparkSession, ledger: Ledger) {
                       regexFilter: Option[String] = None): OpResult = {
     import org.apache.spark.sql.functions.{broadcast, col}
     val re = regexFilter.map(_.r)
-    val listed = graft.sources.FileEventSource.list(spark, watchRoot)
+    val listed = FileEventSource.list(spark, watchRoot)
       .filter(e => !e.unlink)
       .map(e => s"${e.bucket}/${e.key}")
       .filter(f => f.startsWith(prefix) && re.forall(_.findFirstIn(f).isDefined))
@@ -247,24 +249,9 @@ class Ops(spark: SparkSession, ledger: Ledger) {
         if (prevBatch.nonEmpty) prev :+ prevBatch else prev)
     }
     ledger.appendFiles(unlinked, at)
-    unlinked.foreach(f => Ops.writeUnlinkMarker(watchRoot, f.loadFile))
+    unlinked.foreach(f => FileEventSource.writeUnlinkMarker(hadoopConf, watchRoot, f.loadFile))
     OpResult(ok = unlinked.nonEmpty,
       s"${unlinked.size} of $listedCount listed files queued for reprocessing under $prefix",
       unlinked.map(_.loadFile))
-  }
-}
-
-object Ops {
-  /** Drop a `graft-control/unlink/` marker the streaming source turns
-    * into an unlink control event (see FileEventSource.ControlDir).
-    */
-  def writeUnlinkMarker(watchRoot: String, loadFile: String): Unit = {
-    val p = java.nio.file.Paths.get(watchRoot,
-      graft.sources.FileEventSource.ControlDir, "unlink",
-      graft.sources.FileEventSource.encodeControlTarget(loadFile))
-    java.nio.file.Files.createDirectories(p.getParent)
-    // one byte, not zero: Spark's scan planning drops empty file splits,
-    // so a 0-byte marker would list but never produce a row
-    java.nio.file.Files.write(p, Array[Byte]('x'))
   }
 }

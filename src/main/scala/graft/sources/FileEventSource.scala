@@ -1,5 +1,7 @@
 package graft.sources
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{ChecksumFileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.FileEvent
@@ -42,6 +44,9 @@ object FileEventSource {
     */
   val ControlDir = "graft-control"
 
+  /** Key prefix, under [[ControlDir]], of unlink markers. */
+  val UnlinkKey = "unlink/"
+
   /** Key prefix, under [[ControlDir]], of tick markers. */
   val TickKey = "tick/"
 
@@ -50,6 +55,31 @@ object FileEventSource {
 
   def encodeControlTarget(loadFile: String): String =
     "t-" + java.net.URLEncoder.encode(loadFile, "UTF-8")
+
+  /** Drop the control marker `<watchRoot>/graft-control/<key>` through
+    * the Hadoop `FileSystem` of `watchRoot`. The marker is written under
+    * a hidden name and renamed in: a listing that met it half-written
+    * would record it empty, and an empty file yields no row. It holds one
+    * byte for the same reason — Spark's scan planning drops empty file
+    * splits.
+    */
+  def writeControlMarker(conf: Configuration, watchRoot: String, key: String): Unit = {
+    val marker = new Path(watchRoot, s"$ControlDir/$key")
+    val hidden = new Path(marker.getParent, s".${marker.getName}")
+    val fs = marker.getFileSystem(conf) match {
+      // a one-byte marker needs no checksum file beside it
+      case c: ChecksumFileSystem => c.getRawFileSystem
+      case f => f
+    }
+    val out = fs.create(hidden, true)
+    try out.write('x') finally out.close()
+    if (!fs.rename(hidden, marker))
+      throw new java.io.IOException(s"control marker not written: rename $hidden -> $marker failed")
+  }
+
+  /** Drop the unlink marker of `loadFile` (see [[ControlDir]]). */
+  def writeUnlinkMarker(conf: Configuration, watchRoot: String, loadFile: String): Unit =
+    writeControlMarker(conf, watchRoot, UnlinkKey + encodeControlTarget(loadFile))
 
   /** Parse `<root>/<key>` into (bucket, key) like the reference's s3Info
     * projection (`index.js:1576-1604`): bucket = first path segment after
@@ -71,9 +101,9 @@ object FileEventSource {
       if (decodeS3Keys) java.net.URLDecoder.decode(stripped.replace("+", "%2B"), "UTF-8")
       else stripped
     decoded.split("/", 2) match {
-      case Array(ControlDir, rest) if rest.startsWith("unlink/") =>
+      case Array(ControlDir, rest) if rest.startsWith(UnlinkKey) =>
         val target = java.net.URLDecoder.decode(
-          rest.stripPrefix("unlink/").stripPrefix("t-"), "UTF-8")
+          rest.stripPrefix(UnlinkKey).stripPrefix("t-"), "UTF-8")
         target.split("/", 2) match {
           case Array(b, k) => FileEvent(b, k, size, modMs, unlink = true)
           case Array(b)    => FileEvent(b, "", size, modMs, unlink = true)
@@ -95,19 +125,17 @@ object FileEventSource {
     StructField("content", BinaryType)))
 
   /** Streaming dataset of file events under `watchRoot/<bucket>/<key...>`. */
-  def stream(spark: SparkSession, watchRoot: String, globFilter: Option[String] = None): Dataset[FileEvent] =
+  def stream(spark: SparkSession, watchRoot: String): Dataset[FileEvent] =
     toEvents(spark.readStream.format("binaryFile").schema(BinaryFileSchema)
-      .options(listing(globFilter)).load(watchRoot), watchRoot)
+      .options(Listing).load(watchRoot), watchRoot)
 
   /** Batch listing of the same shape — used by reprocessing ops (S4) and
     * tests. */
-  def list(spark: SparkSession, watchRoot: String, globFilter: Option[String] = None): Dataset[FileEvent] =
-    toEvents(spark.read.format("binaryFile")
-      .options(listing(globFilter)).load(watchRoot), watchRoot)
+  def list(spark: SparkSession, watchRoot: String): Dataset[FileEvent] =
+    toEvents(spark.read.format("binaryFile").options(Listing).load(watchRoot), watchRoot)
 
   /** The listing options both readers share. */
-  private def listing(globFilter: Option[String]): Map[String, String] =
-    Map("recursiveFileLookup" -> "true") ++ globFilter.map("pathGlobFilter" -> _)
+  private val Listing = Map("recursiveFileLookup" -> "true")
 
   /** The projection both readers share: binaryFile rows → events,
     * metadata only (content is never read). */

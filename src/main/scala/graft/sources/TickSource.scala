@@ -23,8 +23,8 @@ import graft.core.FileEvent
   */
 final class TickSource(spark: SparkSession, watchRoot: String, owner: String) {
   private val key = s"${FileEventSource.TickKey}$owner/"
-  private val dir = new Path(watchRoot, s"${FileEventSource.ControlDir}/$key")
-  private val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private val conf = spark.sparkContext.hadoopConfiguration
+  private val fs = new Path(watchRoot).getFileSystem(conf)
 
   private val timer = new ScheduledThreadPoolExecutor(1, (r: Runnable) => {
     val t = new Thread(r, "graft-tick")
@@ -43,16 +43,9 @@ final class TickSource(spark: SparkSession, watchRoot: String, owner: String) {
   def arm(at: Option[Long], now: Long): Unit =
     if (armed.map(_._1) != at || armed.exists(_._1 <= now)) {
       armed.foreach(_._2.cancel(false))
-      armed = at.map(t => t -> timer.schedule((() => {
-        // written under a hidden name and renamed in: a listing that met
-        // the marker half-written would record it empty, and an empty
-        // file yields no row
-        val name = s"$t-${java.util.UUID.randomUUID()}"
-        val hidden = new Path(dir, s".$name")
-        val out = fs.create(hidden, true)
-        try out.write('x') finally out.close()
-        fs.rename(hidden, new Path(dir, name))
-      }): Runnable, math.max(0L, t - now), TimeUnit.MILLISECONDS))
+      armed = at.map(t => t -> timer.schedule((() =>
+        FileEventSource.writeControlMarker(conf, watchRoot, s"$key$t-${java.util.UUID.randomUUID()}")
+      ): Runnable, math.max(0L, t - now), TimeUnit.MILLISECONDS))
     }
 
   /** Delete the markers of ticks a batch has collected. */

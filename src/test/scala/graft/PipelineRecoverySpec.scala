@@ -10,7 +10,6 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.core._
 import graft.ledger.{FlakyRenameFileSystem, Ledger}
 import graft.notify.CollectingNotifier
-import graft.streaming.Batcher
 
 /** Exactly-once at the driver-side admission boundary: a trigger writes
   * its decisions to the ledger before any of its loads, and a starting
@@ -66,6 +65,19 @@ class PipelineRecoverySpec extends AnyFunSuite {
         .map(_.getAs[String]("status")).getOrElse("")
       catch { case _: Throwable => "" }
     def completes(): Seq[Notification] = notifier.received.filter(_.status == "complete")
+    /** Every batch id the ledger records, and those of its `status`
+      * events, in record order. */
+    def ids(): Set[String] = ledger.batchLog.collect().map(_.batchId).toSet
+    def ids(status: String): Seq[String] =
+      try ledger.batchLog.collect().filter(_.status == status).sortBy(_.seq)
+        .map(_.batchId).distinct.toSeq
+      catch { case _: Throwable => Seq.empty }
+
+    /** Fail every lane at its manifest write — after its JDBC commit,
+      * before its `complete` append — by taking the manifests directory's
+      * path with a plain file; [[unblockManifests]] undoes it. */
+    def blockManifests(): Unit = Files.write(Paths.get(s"$ledgerLocal/manifests"), Array[Byte]())
+    def unblockManifests(): Unit = Files.delete(Paths.get(s"$ledgerLocal/manifests"))
   }
   private type Notification = graft.notify.Notification
 
@@ -116,18 +128,15 @@ class PipelineRecoverySpec extends AnyFunSuite {
   test("a lane fails after its JDBC commit: the locked batch re-runs as a registry no-op") {
     val rig = new Rig("lanefail", batchSize = 1)
     val ckpt = rig.checkpoint()
-    val id = Batcher.batchId("bucket/input", 0)
-    // the batch's manifest path is taken by a directory: the lane fails
-    // writing it, after the JDBC commit and before the `complete` append
-    val blocker = Paths.get(s"${rig.ledgerLocal}/manifests/$id.json")
-    Files.createDirectories(blocker)
+    rig.blockManifests()
     rig.drop("s0.csv", 5)
     val q1 = rig.start(ckpt)
     try awaitFailure(q1) finally q1.stop()
     assert(rig.rows() == 1, "the target committed before the lane failed")
+    val Seq(id) = rig.ids("locked")
     assert(rig.status(id) == "locked")
     assert(rig.processed() == 0)
-    Files.delete(blocker)
+    rig.unblockManifests()
 
     val q2 = rig.start(ckpt)
     try {
@@ -150,11 +159,12 @@ class PipelineRecoverySpec extends AnyFunSuite {
       awaitUntil("f0, f1 loaded and recorded", 120)(rig.completes().size == 1 && rig.processed() == 2)
       // f2 waits in an open batch, recorded by its trigger's write-ahead
       rig.drop("f2.csv", 4)
-      awaitUntil("f2's batch recorded open", 60)(
-        rig.status(Batcher.batchId("bucket/input", 1)) == "open")
+      awaitUntil("f2's batch recorded open", 60)(rig.ids("open").exists(id =>
+        !rig.completes().exists(_.batchId == id) && rig.status(id) == "open"))
       rig.completes().map(_.batchId)
     } finally q1.stop()
     assert(rig.rows() == 2)
+    val Seq(open) = rig.ids("open").filter(rig.status(_) == "open")
 
     // a new file while down; a new checkpoint re-lists all four
     rig.drop("f3.csv", 8)
@@ -165,7 +175,8 @@ class PipelineRecoverySpec extends AnyFunSuite {
       StreamProgress.awaitTriggers(q2, 2)
       assert(rig.completes().size == 2, "one batch after the restart")
       val second = rig.completes().map(_.batchId).filterNot(first.contains)
-      assert(second.size == 1, s"the restart's batch has an id never used before: ${rig.completes()}")
+      assert(second == Seq(open),
+        s"the restart flushed the open batch, under its recorded id: ${rig.completes()}")
       val files = rig.ledger.describeBatch("bucket/input", second.head).collect().head
         .getAs[scala.collection.Seq[String]]("entryFiles").toSet
       assert(files == Set("bucket/input/f2.csv", "bucket/input/f3.csv"),
@@ -186,6 +197,7 @@ class PipelineRecoverySpec extends AnyFunSuite {
       }
       awaitUntil("both recorded", 60)(rig.processed() == 2)
     } finally q1.stop()
+    val held = rig.ids()
     val ledger = new Ledger(spark, rig.ledgerDir)
     new graft.ops.Ops(spark, ledger).deleteBatches("complete", dryRun = false)
     ledger.compact()
@@ -194,49 +206,53 @@ class PipelineRecoverySpec extends AnyFunSuite {
     try {
       rig.drop("d2.csv", 4)
       awaitUntil("d2 loaded", 120)(rig.completes().size == 3)
-      assert(rig.completes().last.batchId == Batcher.batchId("bucket/input", 2))
+      assert(!held.contains(rig.completes().last.batchId),
+        s"d2's batch id ${rig.completes().last.batchId} is new: ledger held $held")
       assert(rig.rows() == 3 && rig.sum() == 7, "d2's row landed")
-      assert(rig.registry() == 3)
+      assert(rig.registry() == 3, "one registry row per flushed batch")
     } finally q2.stop()
   }
 
   test("an unlocked batch that committed takes no new file: the restart loads it in a new batch") {
     val rig = new Rig("unlocked", batchSize = 1)
     val ckpt = rig.checkpoint()
-    val id = Batcher.batchId("bucket/input", 0)
     // the lane fails writing the manifest, after the JDBC commit
-    val blocker = Paths.get(s"${rig.ledgerLocal}/manifests/$id.json")
-    Files.createDirectories(blocker)
+    rig.blockManifests()
     rig.drop("u0.csv", 5)
     val q1 = rig.start(ckpt)
     try awaitFailure(q1) finally q1.stop()
+    val Seq(id) = rig.ids("locked")
     assert(rig.rows() == 1 && rig.status(id) == "locked")
-    Files.delete(blocker)
+    rig.unblockManifests()
     assert(new graft.ops.Ops(spark, new Ledger(spark, rig.ledgerDir)).unlockBatch("bucket/input", id).ok)
+    val held = rig.ids()
 
     val q2 = rig.start(ckpt)
     try {
       rig.drop("u1.csv", 7)
       awaitUntil("u1 loaded", 120)(rig.completes().nonEmpty)
       StreamProgress.awaitTriggers(q2, 2)
-      assert(rig.completes().map(_.batchId) == Seq(Batcher.batchId("bucket/input", 1)))
+      val Seq(fresh) = rig.completes().map(_.batchId)
+      assert(!held.contains(fresh), s"u1's batch id $fresh is new: ledger held $held")
       assert(rig.rows() == 2 && rig.sum() == 12, "u1's row landed")
+      assert(rig.registry() == 2, "one registry row per flushed batch")
       assert(rig.status(id) == "open", "the unlocked batch was not loaded again")
     } finally q2.stop()
   }
 
   test("write-ahead: each open event carries only its trigger's admissions") {
     val rig = new Rig("delta", batchSize = 3)
-    val id = Batcher.batchId("bucket/input", 0)
     val q = rig.start(rig.checkpoint())
     def opens() = rig.ledger.batchLog.collect().filter(_.status == "open").sortBy(_.seq)
       .map(_.entryFiles.toSeq).toSeq
     try {
       rig.drop("e0.csv", 1)
-      awaitUntil("e0 recorded", 60)(rig.status(id) == "open")
+      awaitUntil("e0 recorded", 60)(rig.ids("open").nonEmpty)
+      val Seq(id) = rig.ids("open")
       rig.drop("e1.csv", 2)
       awaitUntil("e1 recorded", 60)(opens().size == 2)
       assert(opens() == Seq(Seq("bucket/input/e0.csv"), Seq("bucket/input/e1.csv")))
+      assert(rig.ids("open") == Seq(id), "both admissions joined one batch")
       assert(rig.ledger.describeBatch("bucket/input", id).collect().head
         .getAs[scala.collection.Seq[String]]("entryFiles").toSeq ==
         Seq("bucket/input/e0.csv", "bucket/input/e1.csv"))

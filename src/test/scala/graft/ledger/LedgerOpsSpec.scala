@@ -89,17 +89,6 @@ class LedgerOpsSpec extends AnyFunSuite {
     assert(ledger.batchLog.collect().map(_.batchId).toSeq == Seq("keep1"))
   }
 
-  test("compaction keeps each prefix's highest-numbered tombstone, drops the rest") {
-    val ledger = freshLedger()
-    val ids = (0 to 2).map(graft.streaming.Batcher.batchId("b/k", _))
-    ids.foreach(id => ledger.appendBatch(rec(id, BatchStatus.Complete, at = 1000)))
-    new Ops(spark, ledger).deleteBatches("complete", dryRun = false)
-    ledger.compact()
-    assert(ledger.currentBatches.count() == 0)
-    assert(ledger.batchLog.collect().map(e => e.batchId -> e.status).toSeq ==
-      Seq(ids(2) -> "deleted"), "only the highest id survives, as a tombstone")
-  }
-
   test("admission events: an open batch lists every admitted entry, before and after compaction") {
     val ledger = freshLedger()
     def admit(files: Seq[String], at: Long) =

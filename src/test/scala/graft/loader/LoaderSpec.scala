@@ -85,6 +85,8 @@ class LoaderSpec extends AnyFunSuite {
     val replay = Loader.loadBatch(spark, c, cmd("rb1", Seq("sample0.csv")), root, Some(schema))
     assert(replay.status == "complete" && replay.results.head.skipped)
     assert(queryLong("SELECT count(*) FROM replay_t") == 2)
+    assert(queryLong("SELECT count(*) FROM replay_t_graft_stage") == 0,
+      "the replay's staged rows are dropped")
   }
 
   test("one batch into two tables of one database: both get their rows; a replay is a no-op for both") {

@@ -51,15 +51,15 @@ class ReloadSpec extends AnyFunSuite {
     val configs = Map("b/in" -> cfg)
     val n = 100000 + 10
     val events = (1 to n).iterator.map(i => FileEvent("b", s"in/f$i.csv", 1, 1000L))
-    val (st, _) = Batcher.processPrefix(configs, () => 1000L)(
-      "b/in", events, Batcher.initialState("b/in"))
-    assert(st.processed.size == n)
-    assert(st.processed.contains("b/in/f1.csv") && st.processed.contains(s"b/in/f$n.csv"))
+    val (st, seen, _) = Batcher.processPrefix(configs, () => 1000L)(
+      "b/in", events, Batcher.initialState(), Set.empty)
+    assert(seen.size == n)
+    assert(seen.contains("b/in/f1.csv") && seen.contains(s"b/in/f$n.csv"))
     // a re-delivery of the oldest admission is counted, not admitted again
-    val (again, flushes) = Batcher.processPrefix(configs, () => 2000L)(
-      "b/in", Iterator(FileEvent("b", "in/f1.csv", 1, 2000L)), st)
+    val (again, seenAgain, flushes) = Batcher.processPrefix(configs, () => 2000L)(
+      "b/in", Iterator(FileEvent("b", "in/f1.csv", 1, 2000L)), st, seen)
     assert(flushes.isEmpty)
-    assert(again.entries.size == n)
-    assert(again.processed("b/in/f1.csv") == 2)
+    assert(again == st && again.entries.size == n, "the re-delivery is not admitted")
+    assert(seenAgain == seen)
   }
 }

@@ -13,6 +13,10 @@ class FileEventSourceSpec extends AnyFunSuite {
 
   lazy val spark = GraftSession.local(4)
 
+  /** The marker writer `Ops.reprocessFile`/`reprocessPrefix` use. */
+  private def unlink(root: String, loadFile: String): Unit =
+    FileEventSource.writeUnlinkMarker(spark.sparkContext.hadoopConfiguration, root, loadFile)
+
   test("unlink marker written by Ops is DISCOVERED by the batch listing") {
     val root = Files.createTempDirectory("graft-fes").toString
     Files.createDirectories(Paths.get(s"$root/bucket/input"))
@@ -20,8 +24,8 @@ class FileEventSourceSpec extends AnyFunSuite {
     // target whose encoded name starts with '_' — the case the t- prefix
     // exists for (URLEncoder leaves '_' unescaped; the listing would
     // silently drop a bare `_bucket%2F...` marker file)
-    graft.ops.Ops.writeUnlinkMarker(root, "bucket/input/data.csv")
-    graft.ops.Ops.writeUnlinkMarker(root, "_bucket/input/other.csv")
+    unlink(root, "bucket/input/data.csv")
+    unlink(root, "_bucket/input/other.csv")
 
     val events = FileEventSource.list(spark, root).collect().toSeq
     val unlinks = events.filter(_.unlink)
@@ -37,7 +41,7 @@ class FileEventSourceSpec extends AnyFunSuite {
     val ckpt = Files.createTempDirectory("graft-fes-ckpt").toString
     Files.createDirectories(Paths.get(s"$root/bucket/input"))
     Files.write(Paths.get(s"$root/bucket/input/a.csv"), "1\n".getBytes)
-    graft.ops.Ops.writeUnlinkMarker(root, "bucket/input/a.csv")
+    unlink(root, "bucket/input/a.csv")
 
     val q = FileEventSource.stream(spark, root)
       .writeStream.format("memory").queryName("fes_stream")

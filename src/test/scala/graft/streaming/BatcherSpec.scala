@@ -21,11 +21,11 @@ class BatcherSpec extends AnyFunSuite {
   private def ev(name: String, size: Long = 100, t: Long = 1000L) =
     FileEvent("bucket", s"input/$name", size, t)
 
-  private def freshState = Batcher.initialState("bucket/input")
+  private def freshState = Batcher.initialState()
 
   test("count trigger: sample acceptance scenario — 5 files, batchSize 2 → 2 flushes + 1 pending") {
-    val (st, flushes) = Batcher.processPrefix(configs, () => 1000L)(
-      "bucket/input", (1 to 5).map(i => ev(s"f$i.csv")).iterator, freshState)
+    val (st, _, flushes) = Batcher.processPrefix(configs, () => 1000L)(
+      "bucket/input", (1 to 5).map(i => ev(s"f$i.csv")).iterator, freshState, Set.empty)
     assert(flushes.size == 2)
     assert(flushes.forall(_.entries.size == 2))
     assert(flushes.map(_.reason).distinct == List("count"))
@@ -35,35 +35,41 @@ class BatcherSpec extends AnyFunSuite {
   }
 
   test("bytes trigger fires before count") {
-    val (_, flushes) = Batcher.processPrefix(configs, () => 1000L)(
-      "bucket/input", Iterator(ev("big.csv", size = 20000)), freshState)
+    val (_, _, flushes) = Batcher.processPrefix(configs, () => 1000L)(
+      "bucket/input", Iterator(ev("big.csv", size = 20000)), freshState, Set.empty)
     assert(flushes.size == 1 && flushes.head.reason == "bytes")
   }
 
-  test("duplicate file is dropped and counted (F4/T6)") {
+  test("duplicate file is dropped (F4/T6)") {
     val f = ev("dup.csv")
-    val (st, flushes) = Batcher.processPrefix(configs, () => 1000L)(
-      "bucket/input", Iterator(f, f, f), freshState)
+    // batchSize 2: an admitted duplicate would flush a batch
+    val (st, seen, flushes) = Batcher.processPrefix(configs, () => 1000L)(
+      "bucket/input", Iterator(f, f, f), freshState, Set.empty)
     assert(flushes.isEmpty)
-    assert(st.entries.size == 1)
-    assert(st.processed("bucket/input/dup.csv") == 3)
+    assert(st.entries.map(_.file) == Vector("bucket/input/dup.csv"))
+    assert(seen == Set("bucket/input/dup.csv"))
   }
 
   test("unlink control event clears dedup state; re-delivery admitted as new") {
     val f = ev("re.csv")
     // admit once, then a duplicate delivery — swallowed
-    val (s1, out1) = Batcher.processPrefix(configs, () => 1000L)(
-      "bucket/input", Iterator(f, f), freshState)
+    val (s1, seen1, out1) = Batcher.processPrefix(configs, () => 1000L)(
+      "bucket/input", Iterator(f, f), freshState, Set.empty)
     assert(out1.isEmpty)
-    assert(s1.processed("bucket/input/re.csv") == 2)
+    assert(seen1 == Set("bucket/input/re.csv"))
     assert(s1.entries.size == 1)
     // unlink control event (from the graft-control marker)
     val unlink = FileEvent("bucket", "input/re.csv", 0, 2000L, unlink = true)
-    val (s2, _) = Batcher.processPrefix(configs, () => 2000L)("bucket/input", Iterator(unlink), s1)
-    assert(!s2.processed.contains("bucket/input/re.csv"))
-    // re-delivery is now a NEW admission (second entry in the batch)
-    val (s3, _) = Batcher.processPrefix(configs, () => 3000L)("bucket/input", Iterator(f), s2)
-    assert(s3.processed("bucket/input/re.csv") == 1)
+    val (s2, seen2, _) = Batcher.processPrefix(configs, () => 2000L)(
+      "bucket/input", Iterator(unlink), s1, seen1)
+    assert(!seen2.contains("bucket/input/re.csv"))
+    // re-delivery is now a NEW admission: the batch's second entry, so
+    // batchSize 2 flushes it
+    val (_, seen3, out3) = Batcher.processPrefix(configs, () => 3000L)(
+      "bucket/input", Iterator(f), s2, seen2)
+    assert(seen3 == Set("bucket/input/re.csv"))
+    assert(out3.map(_.entries.map(_.file)) ==
+      Seq(Vector("bucket/input/re.csv", "bucket/input/re.csv")))
   }
 
   test("control-marker path round-trips through toEvent as an unlink event") {
@@ -87,37 +93,37 @@ class BatcherSpec extends AnyFunSuite {
 
   test("filename filter: non-matching dropped, malformed regex fail-open (F1)") {
     val filtered = Map("bucket/input" -> cfg.copy(filenameFilterRegex = Some("\\.csv$")))
-    val (state, _) = Batcher.processPrefix(filtered, () => 1000L)(
-      "bucket/input", Iterator(ev("a.csv"), ev("skip.json")), freshState)
+    val (state, _, _) = Batcher.processPrefix(filtered, () => 1000L)(
+      "bucket/input", Iterator(ev("a.csv"), ev("skip.json")), freshState, Set.empty)
     assert(state.entries.map(_.file) == Vector("bucket/input/a.csv"))
 
     val broken = Map("bucket/input" -> cfg.copy(filenameFilterRegex = Some("[broken")))
-    val (state2, _) = Batcher.processPrefix(broken, () => 1000L)(
-      "bucket/input", Iterator(ev("anything.xyz")), freshState)
+    val (state2, _, _) = Batcher.processPrefix(broken, () => 1000L)(
+      "bucket/input", Iterator(ev("anything.xyz")), freshState, Set.empty)
     assert(state2.entries.size == 1)
   }
 
   test("age trigger on processing-time timeout (T2) flushes pending") {
     // first: accumulate one file at t=1000
-    val (state, _) = Batcher.processPrefix(configs, () => 1000L)(
-      "bucket/input", Iterator(ev("lone.csv", t = 1000L)), freshState)
+    val (state, seen, _) = Batcher.processPrefix(configs, () => 1000L)(
+      "bucket/input", Iterator(ev("lone.csv", t = 1000L)), freshState, Set.empty)
     assert(state.entries.size == 1)
     // then: a trigger at t = 62s with no input
-    val (aged, flushes) = Batcher.processPrefix(configs, () => 62000L)(
-      "bucket/input", Iterator.empty, state)
+    val (aged, _, flushes) = Batcher.processPrefix(configs, () => 62000L)(
+      "bucket/input", Iterator.empty, state, seen)
     assert(flushes.size == 1 && flushes.head.reason == "age")
     assert(flushes.head.entries.map(_.file) == Vector("bucket/input/lone.csv"))
     assert(aged.entries.isEmpty)
   }
 
   test("no config resolved → no state, no output") {
-    val (_, flushes) = Batcher.processPrefix(configs, () => 1000L)(
-      "unconfigured/prefix", Iterator(ev("x.csv")), freshState)
+    val (_, _, flushes) = Batcher.processPrefix(configs, () => 1000L)(
+      "unconfigured/prefix", Iterator(ev("x.csv")), freshState, Set.empty)
     assert(flushes.isEmpty)
     // at trigger level such an event creates no state at all
-    val (states, out) = Batcher.admit(configs, () => 1000L)(
-      Map.empty, Seq(FileEvent("unconfigured", "prefix/x.csv", 1, 1000L)))
-    assert(states.isEmpty && out.isEmpty)
+    val (states, seen, out) = Batcher.admit(configs, () => 1000L)(
+      Map.empty, Set.empty, Seq(FileEvent("unconfigured", "prefix/x.csv", 1, 1000L)))
+    assert(states.isEmpty && seen.isEmpty && out.isEmpty)
   }
 
   /** Run `events` through a streaming query whose foreachBatch admits
@@ -128,6 +134,7 @@ class BatcherSpec extends AnyFunSuite {
                         ticks: Option[TickSource] = None) = {
     val flushes = new java.util.concurrent.ConcurrentLinkedQueue[FlushCommand]()
     var state = Map.empty[String, BatcherState]
+    var processed = Set.empty[String]
     val q = events.writeStream
       .option("checkpointLocation", Files.createTempDirectory("graft-batcher-ckpt").toString)
       .trigger(Trigger.ProcessingTime("250 milliseconds"))
@@ -135,8 +142,9 @@ class BatcherSpec extends AnyFunSuite {
         val (tickEvents, fileEvents) =
           batch.collect().toSeq.partition(_.eventName == FileEventSource.TickEvent)
         val now = () => System.currentTimeMillis()
-        val (next, out) = Batcher.admit(configs, now)(state, fileEvents)
+        val (next, seen, out) = Batcher.admit(configs, now)(state, processed, fileEvents)
         state = next
+        processed = seen
         ticks.foreach { t =>
           t.arm(Batcher.nextDeadline(configs, state), now())
           t.consumed(tickEvents.filter(t.owns))
