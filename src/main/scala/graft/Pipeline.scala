@@ -68,8 +68,8 @@ import graft.streaming.{Batcher, BatcherState}
   * inline on the micro-batch thread. The trigger returns only once every
   * lane has ended; a lane failure is rethrown then and stops the query;
   * on restart its batch is still `locked` in the ledger and runs again.
-  * Ledger compaction runs after that join, so its directory swap never
-  * races a lane's append.
+  * Ledger compaction runs after that join, so it never deletes the
+  * in-progress file of a lane's append.
   *
   * Shutdown note: `query.stop()` interrupts the micro-batch thread, which
   * interrupts every lane and waits for all of them to end; a lane's
@@ -218,16 +218,17 @@ object Pipeline {
     *    to have finished: they run again, and the commit registry makes a
     *    target that already committed a no-op.
     *
-    * A file's admission time is that of the admission event that lists it
-    * (a compacted log merges a batch's admissions into its latest, so the
-    * age clock of a recovered batch may restart later than the original
-    * admission).
+    * A file's admission time is that of the admission event that lists it;
+    * compaction keeps every admission event of a pending batch, so a
+    * recovered batch's age clock runs from its first admission. A
+    * compaction cut before its deletes leaves an event twice, so each
+    * history counts identical events once.
     */
   private def recover(configs: Map[String, LoadConfig], batches: Seq[BatchLedgerEvent],
                       files: Seq[FileLedgerEvent])
       : (Map[String, BatcherState], Set[String], Seq[FlushCommand]) = {
     val histories = batches.groupBy(e => (e.s3Prefix, e.batchId)).values
-      .map(_.sortBy(e => (e.lastUpdate, e.seq))).toSeq
+      .map(_.distinct.sortBy(e => (e.lastUpdate, e.seq))).toSeq
     def isAdmit(e: BatchLedgerEvent) =
       e.status == BatchStatus.Open.name && e.updateReason == Ledger.Admit
     def admitted(h: Seq[BatchLedgerEvent]): Vector[BatchEntry] =

@@ -3,7 +3,7 @@ package graft.ledger
 import org.apache.hadoop.fs.Path
 import org.apache.hadoop.mapreduce.{Job, TaskAttemptID}
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
-import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.encoders.encoderFor
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
@@ -32,12 +32,13 @@ import graft.core._
   * job: the driver writes one parquet file per `eventDate` under a
   * hidden in-progress name and makes it visible with one atomic rename,
   * keeping it near the milliseconds the reference's per-event DynamoDB
-  * write costs — a job's scheduling alone outweighs the rows. Only
-  * [[compact]] runs a Spark job. The writer is Spark's own
-  * `ParquetFileFormat` output writer, reached through
+  * write costs — a job's scheduling alone outweighs the rows. The writer
+  * is Spark's own `ParquetFileFormat` output writer, reached through
   * `org.apache.spark.sql.execution.datasources`, so appended files carry
   * the same parquet schema and footer metadata as a Spark write and the
-  * log reads back as one table whichever path wrote each file.
+  * log reads back as one table whichever path wrote each file. It is the
+  * only code that writes ledger parquet: [[compact]] appends its rows
+  * through it too, then deletes the files they supersede.
   *
   * Every append carries a monotonic `seq` (single-writer): `lastUpdate`
   * has millisecond grain, and transitions like reprocessing→reprocessed
@@ -97,11 +98,6 @@ class Ledger(spark: SparkSession, dir: String) {
 
   private def today(ts: Long) = new java.sql.Date(ts - ts % 86400000L)
 
-  private def pathExists(p: String): Boolean = {
-    val hp = new org.apache.hadoop.fs.Path(p)
-    hp.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(hp)
-  }
-
   /** A stop() that interrupts an in-flight append can leave the log dir
     * existing but holding only uncommitted droppings (a hidden
     * in-progress file, or `_temporary` from a log written by a Spark
@@ -112,7 +108,8 @@ class Ledger(spark: SparkSession, dir: String) {
     * when at least one visible parquet file exists, hidden meaning a
     * name starting with `.` or `_` as in Spark's file listing; the
     * listing is metadata-only and the log's file count is bounded by
-    * compaction.
+    * compaction, which also gates on it: a log of droppings alone is
+    * left for the compaction after its next append.
     */
   private def hasData(p: String): Boolean = {
     val hp = new Path(p)
@@ -133,44 +130,15 @@ class Ledger(spark: SparkSession, dir: String) {
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   /** Hadoop signals most rename failures by returning false, not
-    * throwing; a silent false here followed by a delete would destroy the
-    * only complete copy of the log, so every swap step must abort on it —
-    * and so must an append, whose events would otherwise be reported
-    * written while still invisible.
+    * throwing; an append must abort on it, or its events would be
+    * reported written while still invisible — and a compaction would go
+    * on to delete the files its invisible rows were to replace.
     */
   private def renameOrAbort(f: org.apache.hadoop.fs.FileSystem,
                             src: org.apache.hadoop.fs.Path,
                             dst: org.apache.hadoop.fs.Path): Unit =
     if (!f.rename(src, dst))
-      throw new java.io.IOException(s"ledger swap aborted: rename $src -> $dst returned false")
-
-  /** Finish an interrupted [[compact]] swap. The swap order (write
-    * `.compact` → rename live aside to `.old` → rename `.compact` in →
-    * delete `.old`) guarantees a complete copy of the log exists on disk
-    * at every step; this replays the remaining steps so a crash at any
-    * point leaves the ledger readable on next construction:
-    *  - live + stale `.compact`/`.old` → drop the leftovers;
-    *  - live missing, `.compact` present (complete by write order) →
-    *    rename it in;
-    *  - live missing, only `.old` → restore it.
-    */
-  private def recoverSwap(d: String): Unit = {
-    val live = new org.apache.hadoop.fs.Path(d)
-    val tmp = new org.apache.hadoop.fs.Path(d + ".compact")
-    val old = new org.apache.hadoop.fs.Path(d + ".old")
-    val f = fs(live)
-    if (f.exists(live)) {
-      if (f.exists(tmp)) f.delete(tmp, true)
-      if (f.exists(old)) f.delete(old, true)
-    } else if (f.exists(tmp)) {
-      renameOrAbort(f, tmp, live)
-      if (f.exists(old)) f.delete(old, true)
-    } else if (f.exists(old)) {
-      renameOrAbort(f, old, live)
-    }
-  }
-  recoverSwap(batchDir)
-  recoverSwap(fileDir)
+      throw new java.io.IOException(s"ledger append aborted: rename $src -> $dst returned false")
 
   /** Monotonic append counter, resumed from the on-disk log (single
     * writer by design — the streaming pipeline; ops commands run against
@@ -216,8 +184,9 @@ class Ledger(spark: SparkSession, dir: String) {
 
   /** Append committed (file, target) facts — one parquet file per call
     * (the [[appendFiles]] small-files rule). Written by the pipeline
-    * only under `perTargetFileDedup`; no compaction applies (immutable
-    * facts, no latest-state projection to collapse).
+    * only under `perTargetFileDedup`. The facts are immutable, so
+    * [[compact]] has no latest-state projection to apply: it merges
+    * every fact into one file per `eventDate`.
     */
   def appendTargetFiles(evs: Seq[(String, String, String, String)],
                         atMs: Long): Unit =
@@ -255,7 +224,7 @@ class Ledger(spark: SparkSession, dir: String) {
     * driver. Each file is written under a hidden in-progress name inside
     * its `eventDate=` directory, then renamed to a visible `part-` name:
     * a crash before the rename leaves a file every reader ignores (see
-    * [[hasData]]) and the next [[compact]] drops. The directory name is
+    * [[hasData]]) and the next [[compact]] deletes. The directory name is
     * formatted from the encoded date's epoch day — the value the column
     * reads back as — never from the JVM time zone.
     */
@@ -341,23 +310,25 @@ class Ledger(spark: SparkSession, dir: String) {
     else Some((batchLog.collect().toSeq, latestFileEvents.as[FileLedgerEvent].collect().toSeq))
 
   /** Latest event per (s3Prefix, batchId) including tombstones — the raw
-    * latest-state view compaction and delete-ops work from. A batch whose
-    * latest event is a pipeline admission ([[Ledger.Admit]]) lists the
-    * entries of all its admission events, in order.
+    * latest-state view delete-ops work from. A batch whose latest event
+    * is a pipeline admission ([[Ledger.Admit]]) lists the entries of all
+    * its admission events, in order, each once: a compaction cut before
+    * its deletes leaves an admission event twice, under one `seq`.
     */
   def latestBatchEvents: DataFrame = {
     val w = Window.partitionBy($"s3Prefix", $"batchId")
-    val admit = $"status" === BatchStatus.Open.name && $"updateReason" === Ledger.Admit
     batchLog
       .withColumn("admits",
-        collect_list(when(admit, struct($"seq", $"entryFiles", $"entrySizes"))).over(w))
+        collect_set(when(isAdmit, struct($"seq", $"entryFiles", $"entrySizes"))).over(w))
       .withColumn("rn", row_number().over(w.orderBy($"lastUpdate".desc, $"seq".desc)))
       .filter($"rn" === 1)
       .withColumn("admits", sort_array($"admits"))
-      .withColumn("entryFiles", when(admit, flatten($"admits.entryFiles")).otherwise($"entryFiles"))
-      .withColumn("entrySizes", when(admit, flatten($"admits.entrySizes")).otherwise($"entrySizes"))
+      .withColumn("entryFiles", when(isAdmit, flatten($"admits.entryFiles")).otherwise($"entryFiles"))
+      .withColumn("entrySizes", when(isAdmit, flatten($"admits.entrySizes")).otherwise($"entrySizes"))
       .drop("rn", "admits")
   }
+
+  private def isAdmit = $"status" === BatchStatus.Open.name && $"updateReason" === Ledger.Admit
 
   /** Latest event per (s3Prefix, batchId) — the current batch state.
     * `seq` breaks same-millisecond ties deterministically; deleted
@@ -397,43 +368,64 @@ class Ledger(spark: SparkSession, dir: String) {
   def processedFiles: DataFrame =
     latestFileEvents.filter(!$"deleted")
 
-  /** Rewrite both logs to their latest-state rows, dropping deleted
-    * batches and tombstoned files. Run periodically
-    * (the Pipeline does, every `Pipeline.CompactEvery` flushes): an
-    * append-per-event log accretes one small parquet file per state
-    * change, and the latest-event window re-reads all of them on every
-    * ops query. Compaction = the DynamoDB tables' current-state shape,
-    * with history traded for bounded scan cost.
-    *
-    * Crash-safe single-writer swap: write `<dir>.compact`, rename the
-    * live dir aside to `<dir>.old`, rename `.compact` in, delete `.old`.
-    * A complete copy of the log exists on disk between every pair of
-    * steps; [[recoverSwap]] finishes an interrupted swap at next
-    * construction.
+  /** Rewrite each log to the rows that still decide its state: the
+    * batch log to [[compactedBatches]], the file log to
+    * [[processedFiles]] (tombstoned files dropped), the target-file log
+    * to its distinct facts. Run periodically (the Pipeline does, every
+    * `Pipeline.CompactEvery` flushes): an append-per-event log accretes
+    * one small parquet file per state change, and the latest-event
+    * window re-reads all of them on every ops query. Compaction = the
+    * DynamoDB tables' current-state shape, with history traded for
+    * bounded scan cost. Each log is rewritten by [[compactOne]].
     */
   def compact(): Unit = {
-    compactOne(batchDir, () => currentBatches)
-    compactOne(fileDir, () => processedFiles)
+    compactOne(batchDir, batchCodec, () => compactedBatches)
+    compactOne(fileDir, fileCodec, () => processedFiles.as[FileLedgerEvent])
+    compactOne(targetFileDir, targetFileCodec, () => targetFileLog.distinct())
   }
 
-  /** `crashAfterStep` is a test seam: throw after step N (1=tmp written,
-    * 2=live renamed aside, 3=tmp renamed in) to exercise recovery.
+  /** The batch events compaction keeps: every [[Ledger.Admit]] event of
+    * a batch whose latest event is one, so a recovered pending batch
+    * keeps each entry's own admission time; for every other batch its
+    * latest event, unless that is `deleted`. The copies of an event a
+    * compaction cut before its deletes leaves count once (compared on
+    * every column but the map, which Spark cannot compare; pre-upgrade
+    * events share `seq` 0, so `seq` alone is no key).
     */
-  private[ledger] def compactOne(d: String, current: () => DataFrame,
-                                 crashAfterStep: Int = Int.MaxValue): Unit =
-    if (pathExists(d)) {
-      val live = new org.apache.hadoop.fs.Path(d)
-      val tmp = new org.apache.hadoop.fs.Path(d + ".compact")
-      val old = new org.apache.hadoop.fs.Path(d + ".old")
-      val f = fs(live)
-      current().coalesce(1).write.mode(SaveMode.Overwrite)
-        .partitionBy("eventDate").parquet(tmp.toString)
-      if (crashAfterStep <= 1) throw new IllegalStateException("simulated crash after step 1")
-      renameOrAbort(f, live, old)
-      if (crashAfterStep <= 2) throw new IllegalStateException("simulated crash after step 2")
-      renameOrAbort(f, tmp, live)
-      if (crashAfterStep <= 3) throw new IllegalStateException("simulated crash after step 3")
-      f.delete(old, true)
+  private def compactedBatches: Dataset[BatchLedgerEvent] = {
+    val w = Window.partitionBy($"s3Prefix", $"batchId").orderBy($"lastUpdate".desc, $"seq".desc)
+    val log = batchLog
+    log.dropDuplicates(log.columns.filterNot(_ == "targetStatus").toSeq)
+      .withColumn("rn", row_number().over(w))
+      .withColumn("pending", first(isAdmit).over(w))
+      .filter(($"pending" && isAdmit) ||
+        ($"rn" === 1 && $"status" =!= BatchStatus.Deleted.name))
+      .drop("rn", "pending")
+      .as[BatchLedgerEvent]
+  }
+
+  /** Compact one log as one more append: list every file under `d`
+    * (hidden in-progress ones included), collect `current()` on the
+    * driver, write it through [[appendRows]] with each row's own `seq`
+    * and `eventDate`, then delete the listed files oldest first and every
+    * empty partition directory. A crash before the append's rename
+    * deletes nothing; after it, kept rows read twice under one `seq`,
+    * which the latest-state views collapse. Oldest first, a crash among
+    * the deletes never leaves an event whose later tombstone is gone. A
+    * file appended after the listing is never deleted; an append whose
+    * in-progress file was listed fails loudly at its own rename.
+    */
+  private def compactOne[T](d: String, codec: LogCodec[T], current: () => Dataset[T]): Unit =
+    if (hasData(d)) {
+      val root = new Path(d)
+      val f = fs(root)
+      def files(p: Path): Seq[org.apache.hadoop.fs.FileStatus] =
+        f.listStatus(p).toSeq.flatMap(s => if (s.isDirectory) files(s.getPath) else Seq(s))
+      val superseded = files(root).sortBy(_.getModificationTime)
+      appendRows(d, codec, current().collect().toSeq)
+      superseded.foreach(s => f.delete(s.getPath, false))
+      f.listStatus(root).filter(s => s.isDirectory && f.listStatus(s.getPath).isEmpty)
+        .foreach(s => f.delete(s.getPath, false))
     }
 }
 

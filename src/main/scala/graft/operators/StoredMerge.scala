@@ -241,9 +241,9 @@ object StoredMerge {
                     owner: String = WriterLease.jvmOwner): Unit =
     upsertBucketsImpl(spark, path, updates, keyCols, nBuckets, owner)
 
-  /** `crashAfterStep` is a test seam (the Ledger `compactOne` recipe):
-    * throw after step N (1=tmp written, 2=first live renamed aside,
-    * 3=first tmp renamed in) to exercise [[recoverMerge]].
+  /** `crashAfterStep` is a test seam: throw after step N (1=tmp
+    * written, 2=first live renamed aside, 3=first tmp renamed in) to
+    * exercise [[recoverMerge]].
     */
   private[graft] def upsertBucketsImpl(spark: SparkSession, path: String,
       updates: DataFrame, keyCols: Seq[String], nBuckets: Int,

@@ -184,6 +184,15 @@ object WriterLease {
   private def content(owner: String, expiresAtMs: Long): String =
     s"$owner\n$expiresAtMs"
 
+  /** One JVM-local mutex per lock path, held across the read, write and
+    * depth update of [[acquire]], [[refresh]] and [[release]]: a
+    * predecessor's async release can then never delete the lock while a
+    * same-owner successor's re-entry is rewriting it. */
+  private val pathMutexes = new java.util.concurrent.ConcurrentHashMap[String, Object]()
+
+  private def exclusively[T](lp: String)(body: => T): T =
+    pathMutexes.computeIfAbsent(lp, _ => new Object).synchronized(body)
+
   /** Acquire (or re-enter) the lease. Returns true if FRESHLY acquired
     * (hold depth 0 → 1); false if re-entered by the same owner (depth
     * incremented, expiry refreshed). Every acquire must be balanced by
@@ -197,6 +206,11 @@ object WriterLease {
               store: LockStore = null): Boolean = {
     val s = storeOf(spark, store)
     val lp = lockPathOf(path)
+    exclusively(lp)(acquireExclusively(spark, path, owner, ttlMs, s, lp))
+  }
+
+  private def acquireExclusively(spark: SparkSession, path: String, owner: String,
+                                 ttlMs: Long, s: LockStore, lp: String): Boolean = {
     val now = System.currentTimeMillis()
     val (raw, parsed) = readRaw(s, lp)
     parsed match {
@@ -218,9 +232,9 @@ object WriterLease {
                 "refresh — the prior hold expired and moved on; exactly " +
                 "one writer may hold it")
           case RefreshOutcome.LockGone =>
-            // our lock vanished mid-refresh — a prior same-owner hold's
-            // async release (the documented restart race). Retake it
-            // FRESH: exclusive create settles any rival loudly.
+            // our lock vanished mid-refresh, deleted outside this JVM's
+            // lease calls (the path mutex orders a same-JVM release).
+            // Retake it FRESH: exclusive create settles any rival loudly.
             try s.createExclusive(lp, content(owner, now + ttlMs))
             catch {
               case _: java.io.IOException =>
@@ -302,26 +316,12 @@ object WriterLease {
               store: LockStore = null): Unit = {
     val s = storeOf(spark, store)
     val lp = lockPathOf(path)
-    val (raw, parsed) = readRaw(s, lp)
-    if (parsed.exists(_.owner == owner)) {
-      refreshRaw(s, lp, owner, ttlMs, raw)
-      // RESURRECTION GUARD (r16, found by the ops refusal spec): on the
-      // file backend replaceIf is read-compare-overwrite — an async
-      // heartbeat's overwrite can land right AFTER a concurrent
-      // same-JVM release deleted the lock (the streaming idle-refresh
-      // listener has no stop gate, unlike withLease's beat), leaving an
-      // orphan lock that blocks successors for a full TTL. Depth is the
-      // JVM-local truth: if no hold remains for (lock, owner), this
-      // refresh outlived its lease — undo our own rewrite. deleteIf on
-      // the re-read bytes keeps a same-owner successor's fresh lock
-      // safe except in a same-millisecond collision, where the
-      // successor's next re-entry retakes the lock exclusively (the
-      // LockGone path).
-      if (!holdDepth.containsKey((lp, owner))) {
-        val (raw2, parsed2) = readRaw(s, lp)
-        if (parsed2.exists(_.owner == owner))
-          raw2.foreach(r => s.deleteIf(lp, r))
-      }
+    // under the path's mutex a same-JVM release either ran before the
+    // read (the lock is gone: no-op) or runs after the rewrite, so a
+    // heartbeat can never resurrect a lock its holder just released
+    exclusively(lp) {
+      val (raw, parsed) = readRaw(s, lp)
+      if (parsed.exists(_.owner == owner)) refreshRaw(s, lp, owner, ttlMs, raw)
     }
   }
 
@@ -384,17 +384,19 @@ object WriterLease {
               store: LockStore = null): Unit = {
     val s = storeOf(spark, store)
     val lp = lockPathOf(path)
-    holder(spark, path, s) match {
-      case Some(h) if h.owner == owner =>
-        val depth = holdDepth.merge((lp, owner), -1, _ + _)
-        if (depth == null || depth <= 0) {
-          holdDepth.remove((lp, owner))
-          s.delete(lp)
-        }
-      case Some(h) =>
-        throw new IllegalStateException(
-          s"refusing to release $path's lease: held by ${h.owner}, not $owner")
-      case None => holdDepth.remove((lp, owner)); ()
+    exclusively(lp) {
+      readRaw(s, lp)._2 match {
+        case Some(h) if h.owner == owner =>
+          val depth = holdDepth.merge((lp, owner), -1, _ + _)
+          if (depth == null || depth <= 0) {
+            holdDepth.remove((lp, owner))
+            s.delete(lp)
+          }
+        case Some(h) =>
+          throw new IllegalStateException(
+            s"refusing to release $path's lease: held by ${h.owner}, not $owner")
+        case None => holdDepth.remove((lp, owner)); ()
+      }
     }
   }
 

@@ -29,15 +29,20 @@ class Ops(spark: SparkSession, ledger: Ledger) {
       .as[BatchLedgerEvent].collect().headOption
   }
 
-  private def transition(ev: BatchLedgerEvent, to: BatchStatus, reason: String): Unit =
-    ledger.appendBatch(BatchRecord(
+  /** The record that moves batch `ev` to `to`, keeping its entries,
+    * manifest, target outcomes and error. */
+  private def record(ev: BatchLedgerEvent, to: BatchStatus, reason: String): BatchRecord =
+    BatchRecord(
       ev.s3Prefix, ev.batchId, to.name,
       ev.entryFiles.zip(ev.entrySizes).map { case (f, s) => BatchEntry(f, s, 0L) },
       ev.sizeBytes, now(),
       Option(ev.manifestFile).filter(_.nonEmpty),
       ev.targetStatus,
       Option(ev.errorMessage).filter(_.nonEmpty),
-      Some(reason)))
+      Some(reason))
+
+  private def transition(ev: BatchLedgerEvent, to: BatchStatus, reason: String): Unit =
+    ledger.appendBatch(record(ev, to, reason))
 
   /** Ledger read surface, re-exposed so the CLI (and embedders holding
     * only an Ops) reach the query commands without a second handle. */
@@ -120,15 +125,8 @@ class Ops(spark: SparkSession, ledger: Ledger) {
       var df = ledger.currentBatches.filter(col("status") === status)
       afterMs.foreach(a => df = df.filter(col("lastUpdate") >= a))
       beforeMs.foreach(b => df = df.filter(col("lastUpdate") <= b))
-      val evs = df.as[BatchLedgerEvent].collect()
-      ledger.appendBatches(evs.toSeq.map(ev => BatchRecord(
-        ev.s3Prefix, ev.batchId, BatchStatus.Deleted.name,
-        ev.entryFiles.zip(ev.entrySizes).map { case (f, s) => BatchEntry(f, s, 0L) },
-        ev.sizeBytes, now(),
-        Option(ev.manifestFile).filter(_.nonEmpty),
-        ev.targetStatus,
-        Option(ev.errorMessage).filter(_.nonEmpty),
-        Some("deleteBatches"))))
+      ledger.appendBatches(df.as[BatchLedgerEvent].collect().toSeq
+        .map(record(_, BatchStatus.Deleted, "deleteBatches")))
     }
     doomed
   }

@@ -262,6 +262,36 @@ class PipelineRecoverySpec extends AnyFunSuite {
     } finally q.stop()
   }
 
+  test("a compacted pending batch keeps its admission times: after a restart each file flushes with its own") {
+    val rig = new Rig("ageclock", batchSize = 3)
+    val ckpt = rig.checkpoint()
+    def admits() =
+      try rig.ledger.batchLog.collect().filter(e => e.updateReason == Ledger.Admit).sortBy(_.seq).toSeq
+      catch { case _: Throwable => Seq.empty }
+    val q1 = rig.start(ckpt)
+    val f1At = try {
+      rig.drop("f1.csv", 1)
+      awaitUntil("f1 admitted", 60)(admits().size == 1)
+      rig.drop("f2.csv", 2)
+      awaitUntil("f2 admitted", 60)(admits().size == 2)
+      val Seq(a1, a2) = admits()
+      assert(a1.entryFiles == Seq("bucket/input/f1.csv") && a1.lastUpdate < a2.lastUpdate,
+        "two triggers admitted the two files")
+      a1.lastUpdate
+    } finally q1.stop()
+    rig.ledger.compact()
+
+    val q2 = rig.start(ckpt)
+    try {
+      rig.drop("f3.csv", 4)
+      awaitUntil("the batch loads and is recorded", 120)(rig.completes().size == 1 && rig.processed() == 3)
+      val f1 = rig.ledger.processedFiles.collect()
+        .find(_.getAs[String]("loadFile") == "bucket/input/f1.csv").get
+      assert(f1.getAs[Long]("receiveDateTime") == f1At, "f1 keeps its own admission time")
+      assert(rig.rows() == 3 && rig.sum() == 7)
+    } finally q2.stop()
+  }
+
   test("per-target outcomes: a target whose password fails is the only one the retry loads") {
     val name = "pertarget"
     val root = Files.createTempDirectory(s"graft-$name").toString

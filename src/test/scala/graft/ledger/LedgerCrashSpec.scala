@@ -7,34 +7,44 @@ import graft.core._
 import graft.GraftSession
 
 /** Hadoop signals most rename failures by RETURNING FALSE, not throwing.
-  * This local filesystem makes the two compaction-swap renames, or an
-  * append's in-progress → visible rename, do exactly that (selected by
-  * name shape, so parquet write-commit renames inside the `.compact` dir
-  * are untouched), driving the real swap and append code through the
-  * failure mode the crash seams can't reach.
+  * This local filesystem makes an append's in-progress → visible rename
+  * do exactly that (`fail-append`), or throws from `delete` once
+  * `deletesLeft` deletes have gone through (`fail-delete`, the state a
+  * crash part way through a compaction's deletes leaves behind), driving
+  * the real append and compaction code through failure points no
+  * exception from the code under test can reach. `beforeDelete` runs
+  * once, just before the next delete.
   */
 class FlakyRenameFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
+  import FlakyRenameFileSystem._
   override def getScheme: String = "flaky"
   override def getUri: java.net.URI = java.net.URI.create("flaky:///")
   override def rename(src: org.apache.hadoop.fs.Path,
-                      dst: org.apache.hadoop.fs.Path): Boolean = {
-    val aside = dst.getName.endsWith(".old")
-    val in = src.getName.endsWith(".compact") && !dst.getName.endsWith(".compact")
-    FlakyRenameFileSystem.mode match {
-      case "fail-aside" if aside => false
-      case "fail-in" if in => false
-      // an append's in-progress file never made visible: the state a
-      // crash between its write and its rename leaves behind
-      case "fail-append" if src.getName.startsWith(".") => false
-      case _ => super.rename(src, dst)
+                      dst: org.apache.hadoop.fs.Path): Boolean =
+    // an append's in-progress file never made visible: the state a crash
+    // between its write and its rename leaves behind
+    if (mode == "fail-append" && src.getName.startsWith(".")) false
+    else super.rename(src, dst)
+  override def delete(p: org.apache.hadoop.fs.Path, recursive: Boolean): Boolean = {
+    val hook = beforeDelete
+    beforeDelete = () => ()
+    hook()
+    if (mode == "fail-delete") {
+      if (deletesLeft <= 0) throw new java.io.IOException(s"simulated crash before deleting $p")
+      deletesLeft -= 1
     }
+    super.delete(p, recursive)
   }
 }
-object FlakyRenameFileSystem { @volatile var mode: String = "off" }
+object FlakyRenameFileSystem {
+  @volatile var mode: String = "off"
+  @volatile var deletesLeft: Int = 0
+  @volatile var beforeDelete: () => Unit = () => ()
+}
 
-/** Crash-safety of the compaction swap and read-side schema migration of
-  * pre-upgrade ledgers — both must leave a readable ledger after
-  * reconstruction, never an empty or unreadable one.
+/** Crash-safety of compaction and appends, and read-side schema
+  * migration of pre-upgrade ledgers — each must leave a readable ledger
+  * after reconstruction, never an empty or unreadable one.
   */
 class LedgerCrashSpec extends AnyFunSuite {
 
@@ -54,56 +64,132 @@ class LedgerCrashSpec extends AnyFunSuite {
     l
   }
 
-  for (step <- 1 to 3)
-    test(s"compaction crash after step $step: next construction recovers full state") {
-      val dir = Files.createTempDirectory(s"graft-crash$step").toString
-      val l = seeded(dir)
-      intercept[IllegalStateException] {
-        l.compactOne(s"$dir/batches", () => l.currentBatches, crashAfterStep = step)
+  /** [[seeded]] plus every kind of row compaction drops or merges: a
+    * deleted batch and a tombstoned file (each tombstone written after the
+    * events it hides, by the ops commands), a pending batch of two
+    * admission events, and target facts. Seven batch-log files. */
+  private def history(dir: String): Ledger = {
+    val l = seeded(dir)
+    val ops = new graft.ops.Ops(spark, l)
+    l.appendBatch(rec("b3", BatchStatus.Open, 4000))
+    assert(ops.deleteBatch("b/k", "b3")._1.ok)
+    def admit(file: String, at: Long) = l.appendBatch(BatchRecord("b/k", "b4",
+      BatchStatus.Open.name, Seq(BatchEntry(file, 10, at)), 10L, at, updateReason = Some(Ledger.Admit)))
+    admit("b/k/a1.csv", 5000)
+    admit("b/k/a2.csv", 6000)
+    l.appendFiles(Seq(ProcessedFile("b/k/gone.csv", 4000, 1, Some("b3"))), 4000)
+    assert(ops.deleteProcessedFile("b/k/gone.csv")._1.ok)
+    l.appendTargetFiles(Seq(("b/k/b1.csv", "jdbc:x", "t", "b1")), 2000)
+    l.appendTargetFiles(Seq(("b/k/b2.csv", "jdbc:x", "t", "b2"), ("b/k/b1.csv", "jdbc:y", "t", "b1")), 3000)
+    l
+  }
+
+  /** Everything a reader of the ledger sees. */
+  private def readState(l: Ledger) = (
+    l.currentBatches.collect().map(_.toString).toSeq.sorted,
+    l.processedFiles.collect().map(_.toString).toSeq.sorted,
+    l.targetsFullyLoaded(Seq("b/k/b1.csv")),
+    l.targetsFullyLoaded(Seq("b/k/b1.csv", "b/k/b2.csv")))
+
+  /** A new Ledger (fresh process analogue) reads `expected`, lists the
+    * pending batch's entries once each, and its next compaction leaves one
+    * visible parquet file per `eventDate` and nothing else. */
+  private def recovers(dir: String, local: java.nio.file.Path, expected: AnyRef): Unit = {
+    val l2 = new Ledger(spark, dir)
+    assert(readState(l2) == expected)
+    assert(l2.describeBatch("b/k", "b4").collect().head
+      .getAs[scala.collection.Seq[String]]("entryFiles").toSeq == Seq("b/k/a1.csv", "b/k/a2.csv"))
+    l2.compact()
+    assert(readState(new Ledger(spark, dir)) == expected)
+    Seq("batches", "files", "target_files").foreach { log =>
+      val root = local.resolve(log)
+      val days = Files.list(root).iterator().asScala.toSeq
+      assert(days.nonEmpty && days.forall(d => Files.isDirectory(d) &&
+        d.getFileName.toString.startsWith("eventDate=")), s"$log holds only partitions: $days")
+      days.foreach { d =>
+        val names = fileNames(d)
+        assert(names.size == 1 && names.head.startsWith("part-") && names.head.endsWith(".parquet"),
+          s"$d holds one compacted file: $names")
       }
-      // a NEW Ledger (fresh process analogue) must see the full state
+    }
+  }
+
+  test("compaction crash point 1: its append cut before the rename leaves the log as it was") {
+    val (dir, local) = flakyDir("graft-crash1")
+    try {
+      val expected = readState(history(dir))
+      FlakyRenameFileSystem.mode = "fail-append"
+      intercept[java.io.IOException](new Ledger(spark, dir).compact())
+      FlakyRenameFileSystem.mode = "off"
+      recovers(dir, local, expected)
+    } finally FlakyRenameFileSystem.mode = "off"
+  }
+
+  test("compaction crash point 2: after its append, before any delete, every row reads once") {
+    val (dir, local) = flakyDir("graft-crash2")
+    try {
+      val expected = readState(history(dir))
+      FlakyRenameFileSystem.mode = "fail-delete"
+      FlakyRenameFileSystem.deletesLeft = 0
+      intercept[java.io.IOException](new Ledger(spark, dir).compact())
+      FlakyRenameFileSystem.mode = "off"
+      // the compacted copy sits beside every file it supersedes
+      assert(fileNames(local.resolve("batches")).count(_.endsWith(".parquet")) == 7 + 1)
+      recovers(dir, local, expected)
+    } finally FlakyRenameFileSystem.mode = "off"
+  }
+
+  test("compaction crash point 3: after some of its deletes, no dropped row comes back") {
+    // every cut of the batch log's seven file deletes and its empty-day
+    // delete: deleting oldest first never leaves b3's open event without
+    // its later tombstone
+    for (done <- 1 to 7) {
+      val (dir, local) = flakyDir(s"graft-crash3-$done")
+      try {
+        val expected = readState(history(dir))
+        FlakyRenameFileSystem.mode = "fail-delete"
+        FlakyRenameFileSystem.deletesLeft = done
+        intercept[java.io.IOException](new Ledger(spark, dir).compact())
+        FlakyRenameFileSystem.mode = "off"
+        recovers(dir, local, expected)
+      } finally FlakyRenameFileSystem.mode = "off"
+    }
+  }
+
+  test("rename returning FALSE aborts the compaction before any delete touches the log") {
+    val (dir, local) = flakyDir("graft-flaky")
+    try {
+      val l = seeded(dir)
+      val before = fileNames(local)
+      FlakyRenameFileSystem.mode = "fail-append"
+      val ex = intercept[java.io.IOException](l.compact())
+      assert(ex.getMessage.contains("rename"))
+      FlakyRenameFileSystem.mode = "off"
+      // every file is still there; the only new one is the hidden cut append
+      val after = fileNames(local)
+      assert(before.forall(after.contains) && after.diff(before).forall(_.startsWith(".")))
       val l2 = new Ledger(spark, dir)
       assert(l2.currentBatches.count() == 2)
       assert(l2.describeBatch("b/k", "b1").collect().head.getAs[String]("status") == "complete")
       assert(l2.processedFiles.count() == 2)
-      // no swap debris left behind
-      assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(s"$dir/batches.old")))
-      // a subsequent full compact still works
-      l2.compact()
-      assert(new Ledger(spark, dir).currentBatches.count() == 2)
-    }
-
-  test("rename returning FALSE aborts the swap before any delete touches the log") {
-    spark.sparkContext.hadoopConfiguration.set(
-      "fs.flaky.impl", classOf[FlakyRenameFileSystem].getName)
-    val dir = "flaky:" + Files.createTempDirectory("graft-flaky").toString
-    FlakyRenameFileSystem.mode = "off"
-    val l = seeded(dir)
-    try {
-      // rename-aside fails silently → compactOne must throw, and the live
-      // log must survive untouched (pre-fix, execution fell through)
-      FlakyRenameFileSystem.mode = "fail-aside"
-      val ex = intercept[java.io.IOException] {
-        l.compactOne(s"$dir/batches", () => l.currentBatches)
-      }
-      assert(ex.getMessage.contains("rename"))
-      FlakyRenameFileSystem.mode = "off"
-      val l2 = new Ledger(spark, dir)
-      assert(l2.currentBatches.count() == 2)
-
-      // rename-IN fails after live was moved aside: abort, then the next
-      // construction's recoverSwap must ALSO abort on a false rename
-      // rather than fall through — and complete once renames work again
-      FlakyRenameFileSystem.mode = "fail-in"
-      intercept[java.io.IOException] {
-        l2.compactOne(s"$dir/batches", () => l2.currentBatches)
-      }
-      intercept[java.io.IOException] { new Ledger(spark, dir) }
-      FlakyRenameFileSystem.mode = "off"
-      val l3 = new Ledger(spark, dir)
-      assert(l3.currentBatches.count() == 2)
-      assert(l3.processedFiles.count() == 2)
     } finally FlakyRenameFileSystem.mode = "off"
+  }
+
+  test("an append from a second Ledger while compaction runs survives it") {
+    val (dir, local) = flakyDir("graft-concurrent")
+    try {
+      val l = seeded(dir)
+      // lands after compaction listed its files, before its first delete
+      FlakyRenameFileSystem.beforeDelete = () =>
+        new Ledger(spark, dir).appendBatch(rec("late", BatchStatus.Open, 9000))
+      l.compact()
+      val l2 = new Ledger(spark, dir)
+      assert(l2.describeBatch("b/k", "late").count() == 1)
+      assert(l2.currentBatches.count() == 3 && l2.processedFiles.count() == 2)
+      l2.compact()
+      assert(new Ledger(spark, dir).currentBatches.count() == 3)
+      assert(fileNames(local.resolve("batches")).size == 1)
+    } finally FlakyRenameFileSystem.beforeDelete = () => ()
   }
 
   test("pre-upgrade ledger (no seq/deleted columns) reads with defaults") {
@@ -130,6 +216,10 @@ class LedgerCrashSpec extends AnyFunSuite {
     l.appendBatch(rec("b1", BatchStatus.Error, 2000)) // same ms as old latest
     assert(l.describeBatch("b/k", "b1").collect().head.getAs[String]("status") == "error",
       "new event wins the same-millisecond tie via seq > 0")
+    // compaction keeps the latest of the migrated events, which share seq 0
+    l.compact()
+    assert(l.batchLog.collect().map(_.status).toSeq == Seq("error"))
+    assert(l.processedFiles.count() == 1)
   }
 
   private def flakyDir(prefix: String): (String, java.nio.file.Path) = {
@@ -153,15 +243,15 @@ class LedgerCrashSpec extends AnyFunSuite {
     val (dir, local) = flakyDir("graft-flaky-append")
     val day = 86400000L
     try {
-      // the swap-rename faults touch compaction only: appends still commit
-      for (mode <- Seq("off", "fail-aside", "fail-in")) {
+      // the delete fault touches compaction only: appends still commit
+      for ((mode, i) <- Seq("off", "fail-delete", "off").zipWithIndex) {
         FlakyRenameFileSystem.mode = mode
         val l = new Ledger(spark, dir)
-        l.appendBatches(Seq(rec(s"$mode-a", BatchStatus.Open, 1000),
-          rec(s"$mode-b", BatchStatus.Open, 3 * day + 1000)))
-        l.appendFiles(Seq(ProcessedFile(s"b/k/$mode.csv", 1000, 1, Some(s"$mode-a"))), 1000)
-        l.tombstoneFile(s"b/k/$mode.csv", 2000)
-        l.appendTargetFiles(Seq((s"b/k/$mode.csv", "jdbc:x", "t", s"$mode-a")), 1000)
+        l.appendBatches(Seq(rec(s"$i-a", BatchStatus.Open, 1000),
+          rec(s"$i-b", BatchStatus.Open, 3 * day + 1000)))
+        l.appendFiles(Seq(ProcessedFile(s"b/k/$i.csv", 1000, 1, Some(s"$i-a"))), 1000)
+        l.tombstoneFile(s"b/k/$i.csv", 2000)
+        l.appendTargetFiles(Seq((s"b/k/$i.csv", "jdbc:x", "t", s"$i-a")), 1000)
       }
       FlakyRenameFileSystem.mode = "off"
       val l = new Ledger(spark, dir)

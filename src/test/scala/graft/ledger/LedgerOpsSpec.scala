@@ -99,7 +99,9 @@ class LedgerOpsSpec extends AnyFunSuite {
     admit(Seq("b/k/f3.csv"), 2000)
     assert(entries() == Seq("b/k/f1.csv", "b/k/f2.csv", "b/k/f3.csv"))
     ledger.compact()
-    assert(ledger.batchLog.count() == 1)
+    // both admission events remain, each with its own admission time
+    assert(ledger.batchLog.collect().map(e => e.entryFiles.toSeq -> e.lastUpdate).sortBy(_._2).toSeq ==
+      Seq(Seq("b/k/f1.csv", "b/k/f2.csv") -> 1000L, Seq("b/k/f3.csv") -> 2000L))
     admit(Seq("b/k/f4.csv"), 3000)
     assert(entries() == Seq("b/k/f1.csv", "b/k/f2.csv", "b/k/f3.csv", "b/k/f4.csv"))
     // a later event of another kind carries the whole list itself
@@ -257,6 +259,28 @@ class LedgerOpsSpec extends AnyFunSuite {
     ledger.appendBatch(rec("b2", BatchStatus.Locked, at = 3000))
     assert(ledger.describeBatch("b/k", "b2").collect().head
       .getAs[String]("status") == "locked")
+  }
+
+  test("ledger: compaction merges the target-file log into one file per eventDate") {
+    val dir = Files.createTempDirectory("graft-ledger").toString
+    val ledger = new Ledger(spark, dir)
+    val day = 86400000L
+    ledger.appendTargetFiles(Seq(("b/k/f1.csv", "jdbc:x", "t", "b1")), 1000)
+    ledger.appendTargetFiles(Seq(("b/k/f2.csv", "jdbc:x", "t", "b2"),
+      ("b/k/f1.csv", "jdbc:y", "t", "b1")), 2000)
+    ledger.appendTargetFiles(Seq(("b/k/f3.csv", "jdbc:x", "t", "b3")), day + 1000)
+    val gates = Seq(Seq("b/k/f1.csv"), Seq("b/k/f1.csv", "b/k/f2.csv"),
+      Seq("b/k/f1.csv", "b/k/f2.csv", "b/k/f3.csv"))
+    val before = gates.map(ledger.targetsFullyLoaded)
+    assert(before == Seq(Set(("jdbc:x", "t"), ("jdbc:y", "t")), Set(("jdbc:x", "t")), Set(("jdbc:x", "t"))))
+    ledger.compact()
+    val days = Files.list(java.nio.file.Paths.get(dir, "target_files")).iterator().asScala
+      .filter(Files.isDirectory(_)).toSeq
+    assert(days.size == 2)
+    days.foreach(d => assert(Files.list(d).iterator().asScala
+      .count(_.getFileName.toString.endsWith(".parquet")) == 1, s"$d holds one parquet file"))
+    assert(gates.map(ledger.targetsFullyLoaded) == before)
+    assert(ledger.targetFileLog.count() == 4)
   }
 
   test("keystore: AES-GCM round-trips single/array/map; wrong context fails (kmsCrypto parity)") {

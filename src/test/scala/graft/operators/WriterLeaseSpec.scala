@@ -302,6 +302,56 @@ class WriterLeaseSpec extends AnyFunSuite {
     WriterLease.release(spark, path2, "job", store = base)
   }
 
+  test("a restarting holder's re-entry and its predecessor's release of the same owner never interleave") {
+    // a restarting query re-enters the lease its predecessor still holds
+    // (one writerId) while the predecessor's release runs on another
+    // thread. The re-entry rewrites the lock, and the file backend's
+    // rewrite is create-then-chmod: a release deleting the lock between
+    // the two fails the chmod. This store's overwrite stops between its
+    // create and its chmod until the release has finished or is parked.
+    class RewriteStore extends LockStore {
+      val m = new java.util.concurrent.ConcurrentHashMap[String, String]()
+      @volatile var midOverwrite: () => Unit = () => ()
+      def read(lp: String): Option[String] = Option(m.get(lp))
+      def createExclusive(lp: String, c: String): Unit =
+        if (m.putIfAbsent(lp, c) != null)
+          throw new java.io.IOException(s"lock exists: $lp")
+      def overwrite(lp: String, c: String): Unit = {
+        m.put(lp, c)
+        val hook = midOverwrite
+        midOverwrite = () => ()
+        hook()
+        if (!m.containsKey(lp))
+          throw new java.io.FileNotFoundException(s"chmod: cannot access '$lp': No such file or directory")
+      }
+      def delete(lp: String): Unit = { m.remove(lp); () }
+    }
+    val store = new RewriteStore
+    val path = s"mem://state/restart${System.nanoTime()}"
+    // run the release path once first, so the racing release below loads
+    // no class and parks on nothing but the lease itself
+    assert(WriterLease.acquire(spark, path + "-warm", owner = "job", store = store))
+    WriterLease.release(spark, path + "-warm", "job", store = store)
+
+    assert(WriterLease.acquire(spark, path, owner = "job", store = store), "the predecessor's hold")
+    val failure = new java.util.concurrent.atomic.AtomicReference[Throwable]()
+    val releaser = new Thread(() =>
+      try WriterLease.release(spark, path, "job", store = store)
+      catch { case t: Throwable => failure.set(t) })
+    store.midOverwrite = () => {
+      releaser.start()
+      val parked = Set(Thread.State.BLOCKED, Thread.State.WAITING, Thread.State.TERMINATED)
+      while (!parked(releaser.getState)) Thread.onSpinWait()
+    }
+    assert(!WriterLease.acquire(spark, path, owner = "job", store = store), "the successor re-enters")
+    releaser.join()
+    assert(failure.get == null)
+    assert(WriterLease.holder(spark, path, store = store).exists(_.owner == "job"),
+      "the predecessor's release leaves the successor's hold")
+    WriterLease.release(spark, path, "job", store = store)
+    assert(WriterLease.holder(spark, path, store = store).isEmpty)
+  }
+
   test("upsertBuckets under a foreign lease: fails loudly BEFORE touching state; proceeds after release") {
     val path = tmpDir("ub")
     StoredMerge.writeBuckets(Seq((1L, "v1"), (2L, "v2")).toDF("k", "v"),
