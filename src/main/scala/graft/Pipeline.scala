@@ -33,7 +33,8 @@ import graft.streaming.{Batcher, BatcherState}
   * same file stream, so the age flush fires with no file arriving and the
   * query keeps one source. An idle pipeline with nothing pending runs no
   * batch at all. Tick events are dropped after `collect()` and their
-  * markers deleted.
+  * markers deleted, and so are the unlink markers of this pipeline's
+  * files once admission has read them (see `Ops.reprocessFile`).
   *
   * Write-ahead and recovery: before any lane runs, a trigger that changed
   * the admission state writes one ledger append — `open` with the files
@@ -157,6 +158,13 @@ object Pipeline {
             topicNotifiers, resolvePassword, cmd, attempt = 0))))
         rerun = Seq.empty
         ticks.consumed(tickEvents.filter(ticks.owns))
+        // an unlink marker is read once: the ledger row `Ops` wrote before
+        // it releases the file across restarts. Markers of files no prefix
+        // of this pipeline loads stay for the pipeline sharing the root.
+        events.filter(e => e.unlink &&
+            Prefix.resolve(Prefix.searchKey(e.bucket, e.key), configs).isDefined)
+          .foreach(e => FileEventSource.deleteUnlinkMarker(
+            spark.sparkContext.hadoopConfiguration, settings.watchRoot, e.loadFile))
         // once per trigger, after the join: at most one compaction, and
         // only when the flush count crossed a multiple of CompactEvery
         val before = flushed

@@ -15,7 +15,11 @@ import graft.core.LoadTarget
   * the write is split:
   *
   *  1. executors append rows (tagged with batch_id) to a staging table in
-  *     parallel — the scalable part, any number of tasks;
+  *     parallel — the scalable part. The write opens one connection per
+  *     `spark.sql.files.maxPartitionBytes` (128 MB) of input, never more
+  *     than the read has partitions ([[stagingWriters]]): a batch's targets
+  *     load at once, and one writer per file would have them contend in
+  *     the target database;
   *  2. one control connection runs the transaction:
   *     `presql; [truncate]; INSERT INTO target SELECT ... FROM staging
   *     WHERE batch_id = ?; DELETE staging rows; postsql; commit` guarded
@@ -40,20 +44,27 @@ object JdbcWriter {
   val StatementTimeoutSecs = 600
 
   /** Quadratic backoff with cap, reference-style (`index.js:385,53`):
-    * min(try² · 10, 200) ms.
+    * min(try² · 10, 200) ms, on a failure [[transient]] names.
     */
   def retry[T](tries: Int = 5)(f: => T): T = {
     var attempt = 0
     var last: Throwable = null
     while (attempt < tries) {
       try return f
-      catch { case e: java.sql.SQLTransientException =>
+      catch { case e: Exception if transient(e) =>
         last = e; attempt += 1
         Thread.sleep(math.min(attempt.toLong * attempt * 10, 200))
       }
     }
     throw last
   }
+
+  /** Whether a `SQLTransientException` is anywhere in `e`'s cause chain:
+    * an executor's failure reaches the driver wrapped in a
+    * `SparkException`. */
+  private[loader] def transient(e: Throwable): Boolean =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).take(16)
+      .exists(_.isInstanceOf[java.sql.SQLTransientException])
 
   /** Connection-time URL resolution: the C11 incident override
     * (`GRAFT_OVERRIDE_DBSTRING`, reference `index.js:1245-1250`) is
@@ -145,10 +156,11 @@ object JdbcWriter {
     finally stmt.close()
   }
 
-  /** Stage rows in parallel from executors. Staging appends happen
-    * outside the commit transaction, so a retried load must first purge
-    * any rows a previous failed attempt left for this batchId — without
-    * this, a stage-ok/commit-fail/retry sequence doubles the rows.
+  /** Stage rows in parallel from executors, through [[stagingWriters]]
+    * connections. Staging appends happen outside the commit transaction,
+    * so a retried load must first purge any rows a previous failed attempt
+    * left for this batchId — without this, a stage-ok/commit-fail/retry
+    * sequence doubles the rows.
     */
   def stage(df: DataFrame, t: LoadTarget, password: String, batchId: String): Unit = {
     withConnection(t, password) { conn =>
@@ -163,9 +175,25 @@ object JdbcWriter {
     val tagged = df.withColumn(BatchIdCol, lit(batchId))
     val props = new java.util.Properties()
     if (t.user.nonEmpty) { props.put("user", t.user); props.put("password", password) }
-    // Spark's JdbcUtils.savePartition sets it on every insert statement
+    // Spark's JdbcUtils.savePartition sets it on every insert statement;
+    // numPartitions only ever coalesces the read's partitions
     tagged.write.mode("append").option("queryTimeout", StatementTimeoutSecs)
+      .option("numPartitions", stagingWriters(df))
       .jdbc(connectUrl(t), stagingTable(t.targetTable), props)
+  }
+
+  /** The staging write's connection count: one per
+    * `spark.sql.files.maxPartitionBytes` of the frame's estimated size,
+    * at least one. The file scan packs files by a 4 MB open cost, so a
+    * batch of small files reads as one partition per file; three target
+    * loads of a 4-file batch then ran 12 writers on 4 task slots, and
+    * they contended in the target database. A frame of unknown size
+    * estimates Spark's default size, so it keeps the read's width.
+    */
+  private[loader] def stagingWriters(df: DataFrame): Int = {
+    val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
+    val perWriter = BigInt(df.sparkSession.sessionState.conf.filesMaxPartitionBytes.max(1L))
+    ((bytes + perWriter - 1) / perWriter).max(1).min(Int.MaxValue).toInt
   }
 
   /** The control-connection transaction. Returns (committed?, rowsMoved).

@@ -200,7 +200,9 @@ class Ops(spark: SparkSession, ledger: Ledger) {
     * reference achieves the same by deleting the DynamoDB
     * processed-files item before its copy-to-self re-injection). The
     * ledger row written here releases the file on restart too: a
-    * starting pipeline leaves it out of the dedup set it rebuilds.
+    * starting pipeline leaves it out of the dedup set it rebuilds. So the
+    * pipeline deletes the marker once it has read it; a fresh checkpoint
+    * would otherwise list it again and release the file after its reload.
     */
   def reprocessFile(loadFile: String, watchRoot: Option[String] = None): OpResult = {
     import org.apache.spark.sql.functions.col

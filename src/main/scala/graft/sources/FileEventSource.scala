@@ -27,7 +27,8 @@ object FileEventSource {
     * are consumed as control events, never as data. `unlink/<enc>` clears
     * one file's entry from the running pipeline's driver-side dedup set
     * (the Spark analogue of the reference deleting the processed-files
-    * item so a re-injected file is admitted — `common.js:842-916`).
+    * item so a re-injected file is admitted — `common.js:842-916`); the
+    * pipeline whose prefix holds the file deletes it after reading it.
     * `tick/<owner>/<deadline>-<uuid>` is an age-check tick ([[TickSource]]).
     *
     * The namespace must NOT be hidden: Spark's file listing
@@ -77,9 +78,19 @@ object FileEventSource {
       throw new java.io.IOException(s"control marker not written: rename $hidden -> $marker failed")
   }
 
+  private def unlinkKey(loadFile: String): String = UnlinkKey + encodeControlTarget(loadFile)
+
   /** Drop the unlink marker of `loadFile` (see [[ControlDir]]). */
   def writeUnlinkMarker(conf: Configuration, watchRoot: String, loadFile: String): Unit =
-    writeControlMarker(conf, watchRoot, UnlinkKey + encodeControlTarget(loadFile))
+    writeControlMarker(conf, watchRoot, unlinkKey(loadFile))
+
+  /** Delete the unlink marker of `loadFile` once a pipeline has consumed
+    * it: a fresh checkpoint lists the whole watch root again, and a marker
+    * left there would release the file a second time after it loaded. */
+  def deleteUnlinkMarker(conf: Configuration, watchRoot: String, loadFile: String): Unit = {
+    val marker = new Path(watchRoot, s"$ControlDir/${unlinkKey(loadFile)}")
+    marker.getFileSystem(conf).delete(marker, false)
+  }
 
   /** Parse `<root>/<key>` into (bucket, key) like the reference's s3Info
     * projection (`index.js:1576-1604`): bucket = first path segment after

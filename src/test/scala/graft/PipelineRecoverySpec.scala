@@ -292,6 +292,46 @@ class PipelineRecoverySpec extends AnyFunSuite {
     } finally q2.stop()
   }
 
+  test("reprocess, reload, restart on a fresh checkpoint: the file's row is in the target once") {
+    val rig = new Rig("unlinkonce", batchSize = 1)
+    val file = Paths.get(s"${rig.root}/bucket/input/r.csv")
+    // the target is missing, so the file's batch fails
+    rig.conn.createStatement().execute("DROP TABLE unlinkonce")
+    rig.drop("r.csv", 3)
+    val q1 = rig.start(rig.checkpoint())
+    try awaitUntil("r's batch and its retry fail", 120)(
+      rig.notifier.received.count(_.status == "error") == 2 && rig.processed() == 1)
+    finally q1.stop()
+    rig.conn.createStatement().execute("CREATE TABLE unlinkonce(column_a INT)")
+    assert(new graft.ops.Ops(spark, new Ledger(spark, rig.ledgerDir))
+      .reprocessFile("bucket/input/r.csv", Some(rig.root)).ok)
+    val Seq(marker) = Files.list(Paths.get(rig.root, "graft-control", "unlink")).toArray.toSeq
+      .map(_.asInstanceOf[java.nio.file.Path])
+
+    // the reload: a fresh checkpoint lists the file and its marker
+    val q2 = rig.start(rig.checkpoint())
+    try {
+      awaitUntil("r reloads", 120)(rig.completes().size == 1)
+      StreamProgress.awaitTriggers(q2, 2)
+    } finally q2.stop()
+    assert(rig.rows() == 1 && rig.registry() == 1)
+    assert(!Files.exists(marker), "the pipeline deleted the marker it read")
+
+    // a fresh checkpoint again; the file is delivered once more after
+    // the first trigger, and is a duplicate
+    val away = Files.createTempFile("graft-unlinkonce", ".csv")
+    Files.move(file, away, java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    val q3 = rig.start(rig.checkpoint())
+    try {
+      StreamProgress.awaitTriggers(q3, 2)
+      Files.move(away, file)
+      StreamProgress.awaitTriggers(q3, 2)
+      assert(rig.rows() == 1 && rig.sum() == 3, "the file's row is in the target once")
+      assert(rig.registry() == 1, "no batch committed after the reload")
+      assert(rig.completes().size == 1)
+    } finally q3.stop()
+  }
+
   test("per-target outcomes: a target whose password fails is the only one the retry loads") {
     val name = "pertarget"
     val root = Files.createTempDirectory(s"graft-$name").toString

@@ -335,6 +335,113 @@ class LoaderSpec extends AnyFunSuite {
     assert(count(urlA) == 0, "configured target untouched while override active")
   }
 
+  /** The tasks of every Spark job `body` runs on this thread. Listener
+    * events arrive asynchronously, so a marker job run after `body`
+    * fences them: by its start event, every earlier job's has arrived.
+    */
+  private def tasksOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val scope = java.util.UUID.randomUUID().toString
+    val tasks = new java.util.concurrent.atomic.AtomicInteger()
+    val fenced = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(js.properties).map(_.getProperty(ScopeKey)) match {
+          case Some(`scope`) => tasks.addAndGet(js.stageInfos.map(_.numTasks).sum)
+          case Some(s) if s == s"$scope-fence" => fenced.countDown()
+          case _ => ()
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(ScopeKey, scope)
+      body
+      sc.setLocalProperty(ScopeKey, s"$scope-fence")
+      sc.parallelize(Seq(1), 1).count()
+      assert(fenced.await(60, java.util.concurrent.TimeUnit.SECONDS), "the fence job was seen")
+      tasks.get
+    } finally {
+      sc.setLocalProperty(ScopeKey, null)
+      sc.removeSparkListener(listener)
+    }
+  }
+  private val ScopeKey = "graft.test.scope"
+
+  /** (rows, checksum) of a three-int-column table, and of a frame. */
+  private val checksumSql =
+    "CAST(column_a AS BIGINT) * 1000003 + CAST(column_b AS BIGINT) * 1009 + column_c"
+  private def tableSums(table: String): (Long, Long) = {
+    val c = DriverManager.getConnection(dbUrl)
+    try {
+      val rs = c.createStatement().executeQuery(s"SELECT count(*), sum($checksumSql) FROM $table")
+      rs.next(); (rs.getLong(1), rs.getLong(2))
+    } finally c.close()
+  }
+  private def frameSums(df: org.apache.spark.sql.DataFrame): (Long, Long) = {
+    val r = df.selectExpr("count(*)", s"sum($checksumSql)").collect().head
+    (r.getLong(0), r.getLong(1))
+  }
+
+  test("a multi-file batch under one maxPartitionBytes stages through one writer") {
+    sql("CREATE TABLE onewriter_t(column_a INT, column_b INT, column_c INT)")
+    val t = target("onewriter_t")
+    val df = Formats.read(spark, cfg, (0 until 5).map(i => s"$root/bucket/input/sample$i.csv"),
+      Some(schema))
+    assert(df.rdd.getNumPartitions > 1, "the read packs the files into several partitions")
+    JdbcWriter.ensureAuxTables(t, "")
+    assert(tasksOf(JdbcWriter.stage(df, t, "", "ow1")) == 1, "one staging writer")
+    assert(JdbcWriter.commit(t, "", "ow1") == (true, 10L))
+    assert(tableSums("onewriter_t") == frameSums(df))
+  }
+
+  test("the staging writers are ceil(bytes / maxPartitionBytes), never more than the read's partitions") {
+    sql("CREATE TABLE manywriters_t(column_a INT, column_b INT, column_c INT)")
+    val t = target("manywriters_t")
+    val d = Files.createTempDirectory("graft-writers").toString
+    val files = (0 until 4).map { f =>
+      val p = Paths.get(s"$d/part$f.csv")
+      Files.write(p, (0 until 300).map(i => s"$f|$i|${f * 1000 + i}\n").mkString.getBytes)
+      p.toString
+    }
+    val key = "spark.sql.files.maxPartitionBytes"
+    val saved = spark.conf.getOption(key)
+    // a writer per ~2.5 files' bytes: fewer writers than files, more than one
+    val perWriter = files.map(f => Files.size(Paths.get(f))).sum * 2 / 5
+    spark.conf.set(key, perWriter)
+    try {
+      val df = Formats.read(spark, cfg, files, Some(schema))
+      val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
+      val expected = ((bytes + perWriter - 1) / perWriter).toInt
+      val read = df.rdd.getNumPartitions
+      assert(1 < expected && expected < read, s"$expected writers for $read read partitions")
+      JdbcWriter.ensureAuxTables(t, "")
+      assert(tasksOf(JdbcWriter.stage(df, t, "", "mw1")) == expected)
+      assert(JdbcWriter.commit(t, "", "mw1") == (true, 1200L))
+      assert(tableSums("manywriters_t") == frameSums(df))
+    } finally saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  test("retry retries a transient failure raised in a task, and only a transient one") {
+    // a task's exception reaches the driver wrapped in a SparkException
+    def failTasks(e: () => Exception): Unit =
+      spark.sparkContext.parallelize(1 to 4, 4).foreachPartition(_ => throw e())
+    var attempts = 0
+    val out = JdbcWriter.retry() {
+      attempts += 1
+      if (attempts == 1)
+        failTasks(() => new java.sql.SQLTransientConnectionException("connection reset"))
+      "staged"
+    }
+    assert(out == "staged" && attempts == 2, s"$attempts attempts")
+    var permanent = 0
+    val e = intercept[org.apache.spark.SparkException](JdbcWriter.retry() {
+      permanent += 1
+      failTasks(() => new java.sql.SQLSyntaxErrorException("no such table"))
+    })
+    assert(permanent == 1, "a non-transient failure is not retried")
+    assert(e.getCause.isInstanceOf[java.sql.SQLSyntaxErrorException], e)
+  }
+
   test("manifest JSON matches reference shape (S5)") {
     val m = Manifest(Seq(ManifestEntry("file:/a/b.csv", mandatory = true, 24)))
     assert(Loader.manifestJson(m) ==

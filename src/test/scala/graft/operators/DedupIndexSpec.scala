@@ -30,6 +30,18 @@ class DedupIndexSpec extends AnyFunSuite {
       spark.sql(s"DROP TABLE IF EXISTS ${tbl}_bloom")
     }
 
+  /** A clean batch's buckets are definite bloom misses, bar a false
+    * positive: at most one of its buckets (8 per doc) survives the prune.
+    * A saturated filter passes all of them, so it still fails this.
+    */
+  private def assertPrunesClean(tbl: String, batch: org.apache.spark.sql.DataFrame,
+                                clue: String): Unit = {
+    val bk = DedupIndex.batchBuckets(batch, "doc_id", "text")
+    val total = bk.count()
+    val kept = DedupIndex.bloomPrune(spark, tbl, bk).count()
+    assert(total >= 8 && kept <= 1, s"$clue: $kept of $total buckets survive the prune")
+  }
+
   private def newBatch = {
     import spark.implicits._
     val base = corpus.orderBy("doc_id").limit(1)
@@ -108,9 +120,7 @@ class DedupIndexSpec extends AnyFunSuite {
         (930002L, "second novel fragment regarding alpine glacier dynamics"))
         .toDF("doc_id", "text")
       assert(DedupIndex.dedupAgainstStored(spark, tbl, clean, "doc_id", "text").count() == 0)
-      assert(DedupIndex.bloomPrune(spark, tbl,
-        DedupIndex.batchBuckets(clean, "doc_id", "text")).count() == 0,
-        "a clean batch prunes to zero buckets before any stored-table join")
+      assertPrunesClean(tbl, clean, "a clean batch prunes before any stored-table join")
       // dirty batch: identical results with the bloom present vs dropped
       val dirty = newBatch
       val withBloom = DedupIndex.dedupAgainstStored(spark, tbl, dirty, "doc_id", "text")
@@ -130,10 +140,9 @@ class DedupIndexSpec extends AnyFunSuite {
       DedupIndex.saveCorpus(spark, corpus, "doc_id", "text", tbl)
       val fresh = Seq((940001L, "entirely new content on desert varnish microbiomes today"))
         .toDF("doc_id", "text")
-      // the fresh batch's buckets all miss the stored bloom
+      // the fresh batch's buckets miss the stored bloom
+      assertPrunesClean(tbl, fresh, "the buckets of a fresh doc are misses")
       val freshBuckets = DedupIndex.batchBuckets(fresh, "doc_id", "text")
-      assert(DedupIndex.bloomPrune(spark, tbl, freshBuckets).count() == 0,
-        "every bucket of a fresh doc is a definite miss")
       // after appending the fresh doc, its buckets are bloom hits
       DedupIndex.appendCorpus(spark, fresh, "doc_id", "text", tbl)
       assert(DedupIndex.bloomPrune(spark, tbl, freshBuckets).count() == freshBuckets.count(),
@@ -185,9 +194,7 @@ class DedupIndexSpec extends AnyFunSuite {
       // passed everything): a disjoint batch's buckets all miss
       val fresh = Seq((980001L, "unrelated closing fragment regarding " +
         "tidal marsh sediment transport")).toDF("doc_id", "text")
-      assert(DedupIndex.bloomPrune(spark, tbl,
-        DedupIndex.batchBuckets(fresh, "doc_id", "text")).count() == 0,
-        "rebuilt (unsaturated) filter prunes a fresh batch to zero")
+      assertPrunesClean(tbl, fresh, "the rebuilt (unsaturated) filter prunes a fresh batch")
     }
   }
 
@@ -218,9 +225,7 @@ class DedupIndexSpec extends AnyFunSuite {
       DedupIndex.rebuildBloom(spark, tbl)
       val clean = Seq((960001L, "utterly fresh musings on tidal bore surfing conditions"))
         .toDF("doc_id", "text")
-      assert(DedupIndex.bloomPrune(spark, tbl,
-        DedupIndex.batchBuckets(clean, "doc_id", "text")).count() == 0,
-        "rebuilt bloom prunes a clean batch to zero buckets again")
+      assertPrunesClean(tbl, clean, "the rebuilt bloom prunes a clean batch again")
     }
   }
 
@@ -458,9 +463,7 @@ class DedupIndexSpec extends AnyFunSuite {
       // prunes correctly over the upgraded corpus
       val clean = Seq((30L, "zxqv blorp wug snarf glip norb quux zelch vrump"))
         .toDF("doc_id", "text")
-      val pruned = DedupIndex.bloomPrune(spark, tbl,
-        DedupIndex.batchBuckets(clean, "doc_id", "text"))
-      assert(pruned.count() == 0, "a clean batch must prune to zero buckets")
+      assertPrunesClean(tbl, clean, "a clean batch prunes over the upgraded corpus")
     }
   }
 
