@@ -34,7 +34,11 @@ import graft.streaming.{Batcher, BatcherState}
   * query keeps one source. An idle pipeline with nothing pending runs no
   * batch at all. Tick events are dropped after `collect()` and their
   * markers deleted, and so are the unlink markers of this pipeline's
-  * files once admission has read them (see `Ops.reprocessFile`).
+  * files once admission has read them (see `Ops.reprocessFile`). Both
+  * deletes run inside the batch, before Spark commits its offsets: a
+  * batch replayed after a crash in between names the deleted markers,
+  * and the file source's listing skips a missing path, so the replay
+  * runs without them.
   *
   * Write-ahead and recovery: before any lane runs, a trigger that changed
   * the admission state writes one ledger append — `open` with the files
@@ -161,8 +165,7 @@ object Pipeline {
         // an unlink marker is read once: the ledger row `Ops` wrote before
         // it releases the file across restarts. Markers of files no prefix
         // of this pipeline loads stay for the pipeline sharing the root.
-        events.filter(e => e.unlink &&
-            Prefix.resolve(Prefix.searchKey(e.bucket, e.key), configs).isDefined)
+        Batcher.route(configs, events).collect { case (_, e) if e.unlink => e }
           .foreach(e => FileEventSource.deleteUnlinkMarker(
             spark.sparkContext.hadoopConfiguration, settings.watchRoot, e.loadFile))
         // once per trigger, after the join: at most one compaction, and

@@ -15,11 +15,11 @@ import graft.core.LoadTarget
   * the write is split:
   *
   *  1. executors append rows (tagged with batch_id) to a staging table in
-  *     parallel — the scalable part. The write opens one connection per
-  *     `spark.sql.files.maxPartitionBytes` (128 MB) of input, never more
+  *     parallel — the scalable part. The write opens an equal share of the
+  *     task slots among the target loads in flight, never more connections
   *     than the read has partitions ([[stagingWriters]]): a batch's targets
-  *     load at once, and one writer per file would have them contend in
-  *     the target database;
+  *     and the pipeline's lanes load at once, and one writer per file each
+  *     would have them contend in the target database;
   *  2. one control connection runs the transaction:
   *     `presql; [truncate]; INSERT INTO target SELECT ... FROM staging
   *     WHERE batch_id = ?; DELETE staging rows; postsql; commit` guarded
@@ -59,12 +59,16 @@ object JdbcWriter {
     throw last
   }
 
-  /** Whether a `SQLTransientException` is anywhere in `e`'s cause chain:
-    * an executor's failure reaches the driver wrapped in a
-    * `SparkException`. */
-  private[loader] def transient(e: Throwable): Boolean =
-    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).take(16)
-      .exists(_.isInstanceOf[java.sql.SQLTransientException])
+  /** Whether a `SQLTransientException` is anywhere in `e`'s cause chain
+    * (an executor's failure reaches the driver wrapped in a
+    * `SparkException`) and no `SQLTimeoutException` is: a statement
+    * cancelled past [[StatementTimeoutSecs]] used up the load's budget,
+    * so the target rolls back and reports instead of running it again. */
+  private[loader] def transient(e: Throwable): Boolean = {
+    val chain = Iterator.iterate(e)(_.getCause).takeWhile(_ != null).take(16).toSeq
+    chain.exists(_.isInstanceOf[java.sql.SQLTransientException]) &&
+      !chain.exists(_.isInstanceOf[java.sql.SQLTimeoutException])
+  }
 
   /** Connection-time URL resolution: the C11 incident override
     * (`GRAFT_OVERRIDE_DBSTRING`, reference `index.js:1245-1250`) is
@@ -182,19 +186,27 @@ object JdbcWriter {
       .jdbc(connectUrl(t), stagingTable(t.targetTable), props)
   }
 
-  /** The staging write's connection count: one per
-    * `spark.sql.files.maxPartitionBytes` of the frame's estimated size,
-    * at least one. The file scan packs files by a 4 MB open cost, so a
-    * batch of small files reads as one partition per file; three target
-    * loads of a 4-file batch then ran 12 writers on 4 task slots, and
-    * they contended in the target database. A frame of unknown size
-    * estimates Spark's default size, so it keeps the read's width.
-    */
-  private[loader] def stagingWriters(df: DataFrame): Int = {
-    val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    val perWriter = BigInt(df.sparkSession.sessionState.conf.filesMaxPartitionBytes.max(1L))
-    ((bytes + perWriter - 1) / perWriter).max(1).min(Int.MaxValue).toInt
+  /** Target loads running in this process: [[Loader.loadBatch]] counts
+    * its targets in for the length of its fan-out, and the pipeline's
+    * lanes and `Ops.reloadBatch` load batches at the same time. */
+  private val loadsInFlight = new java.util.concurrent.atomic.AtomicInteger
+
+  /** Run `f` with `targets` more target loads counted in flight. */
+  def loading[T](targets: Int)(f: => T): T = {
+    loadsInFlight.addAndGet(targets)
+    try f finally loadsInFlight.addAndGet(-targets)
   }
+
+  /** The staging write's connection count: the task slots shared equally
+    * among the target loads in flight, at least one. The file scan packs
+    * files by a 4 MB open cost, so a batch of small files reads as one
+    * partition per file; three concurrent target loads of a 4-file batch
+    * then ran 12 writers on 4 slots, and they contended in the target
+    * database. A load running alone keeps the read's width, whatever the
+    * batch's size or format; `numPartitions` never widens a read.
+    */
+  private[loader] def stagingWriters(df: DataFrame): Int =
+    math.max(1, df.sparkSession.sparkContext.defaultParallelism / math.max(1, loadsInFlight.get))
 
   /** The control-connection transaction. Returns (committed?, rowsMoved).
     * A (batch_id, target_table) already present in the registry ⇒

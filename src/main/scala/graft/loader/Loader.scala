@@ -71,13 +71,17 @@ object Loader {
       case Right(df) =>
         // one result per target, in target order: a target whose task
         // throws (its password resolver, its column list) fails alone
-        val settled = Fanout.settle("graft-target-", cfg.targets.map { t => () =>
-          if (skipTarget(t))
-            LoadResult(t.jdbcUrl, ok = true, 0L, skipped = true, None)
-          else
-            JdbcWriter.load(Formats.applyColumnList(df, t.columnList),
-              t.copy(columnList = None), resolvePassword(t.encryptedPassword), cmd.batchId)
-        })
+        // the targets load at once and share the task slots
+        // (JdbcWriter.stagingWriters)
+        val settled = JdbcWriter.loading(cfg.targets.size) {
+          Fanout.settle("graft-target-", cfg.targets.map { t => () =>
+            if (skipTarget(t))
+              LoadResult(t.jdbcUrl, ok = true, 0L, skipped = true, None)
+            else
+              JdbcWriter.load(Formats.applyColumnList(df, t.columnList),
+                t.copy(columnList = None), resolvePassword(t.encryptedPassword), cmd.batchId)
+          })
+        }
         settled.collectFirst { case Failure(e) if !NonFatal(e) => throw e }
         val results = cfg.targets.zip(settled).map {
           case (_, Success(r)) => r

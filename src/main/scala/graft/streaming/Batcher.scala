@@ -141,8 +141,7 @@ object Batcher {
       states: Map[String, BatcherState],
       processed: Set[String],
       events: Seq[FileEvent]): (Map[String, BatcherState], Set[String], Seq[FlushCommand]) = {
-    val routed = events.flatMap(e =>
-      Prefix.resolve(Prefix.searchKey(e.bucket, e.key), configs).map(_._1 -> e))
+    val routed = route(configs, events)
     val withEvents = routed.map(_._1).distinct
     val pendingOnly = states.collect {
       case (p, st) if st.entries.nonEmpty && !withEvents.contains(p) => p
@@ -154,6 +153,12 @@ object Batcher {
         (sts.updated(p, st), seenNext, out ++ flushes)
     }
   }
+
+  /** Each event with the longest configured prefix it falls under, in
+    * event order; an event no config resolves is left out. This is the
+    * rule for which events a pipeline owns. */
+  def route(configs: Map[String, LoadConfig], events: Seq[FileEvent]): Seq[(String, FileEvent)] =
+    events.flatMap(e => Prefix.resolve(Prefix.searchKey(e.bucket, e.key), configs).map(_._1 -> e))
 
   /** When the earliest pending batch with a `batchTimeoutSecs` becomes
     * due by age; None when no pending batch has one. */

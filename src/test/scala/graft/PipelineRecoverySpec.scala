@@ -309,13 +309,33 @@ class PipelineRecoverySpec extends AnyFunSuite {
       .map(_.asInstanceOf[java.nio.file.Path])
 
     // the reload: a fresh checkpoint lists the file and its marker
-    val q2 = rig.start(rig.checkpoint())
+    val ckpt2 = rig.checkpoint()
+    val q2 = rig.start(ckpt2)
     try {
       awaitUntil("r reloads", 120)(rig.completes().size == 1)
       StreamProgress.awaitTriggers(q2, 2)
     } finally q2.stop()
     assert(rig.rows() == 1 && rig.registry() == 1)
     assert(!Files.exists(marker), "the pipeline deleted the marker it read")
+
+    // a crash after the marker's delete, before Spark committed the
+    // batch's offsets: the restart replays the batch that listed it
+    val commits = Paths.get(ckpt2, "commits")
+    val last = Files.list(commits).toArray.map(_.asInstanceOf[java.nio.file.Path].getFileName.toString)
+      .filter(n => n.nonEmpty && n.forall(_.isDigit)).map(_.toLong).max
+    assert(new String(Files.readAllBytes(Paths.get(ckpt2, "sources", "0", last.toString)))
+      .contains("graft-control/unlink/"), "the last batch listed the marker")
+    Files.delete(commits.resolve(last.toString))
+    Files.deleteIfExists(commits.resolve(s".$last.crc"))
+    val q2b = rig.start(ckpt2)
+    try {
+      awaitUntil("the replayed batch commits", 120)(
+        Files.exists(commits.resolve(last.toString)) || !q2b.isActive)
+      assert(q2b.isActive, s"the replay failed: ${q2b.exception}")
+      StreamProgress.awaitTriggers(q2b, 2)
+      assert(rig.rows() == 1 && rig.registry() == 1 && rig.completes().size == 1,
+        "the replay loads nothing again")
+    } finally q2b.stop()
 
     // a fresh checkpoint again; the file is delivered once more after
     // the first trigger, and is a duplicate

@@ -382,43 +382,54 @@ class LoaderSpec extends AnyFunSuite {
     (r.getLong(0), r.getLong(1))
   }
 
-  test("a multi-file batch under one maxPartitionBytes stages through one writer") {
+  private def sampleRead(files: Int) =
+    Formats.read(spark, cfg, (0 until files).map(i => s"$root/bucket/input/sample$i.csv"),
+      Some(schema))
+
+  test("a multi-file batch staged while every task slot has a load stages through one writer") {
     sql("CREATE TABLE onewriter_t(column_a INT, column_b INT, column_c INT)")
     val t = target("onewriter_t")
-    val df = Formats.read(spark, cfg, (0 until 5).map(i => s"$root/bucket/input/sample$i.csv"),
-      Some(schema))
+    val df = sampleRead(5)
     assert(df.rdd.getNumPartitions > 1, "the read packs the files into several partitions")
     JdbcWriter.ensureAuxTables(t, "")
-    assert(tasksOf(JdbcWriter.stage(df, t, "", "ow1")) == 1, "one staging writer")
+    val slots = spark.sparkContext.defaultParallelism
+    assert(JdbcWriter.loading(slots)(tasksOf(JdbcWriter.stage(df, t, "", "ow1"))) == 1,
+      "one staging writer")
     assert(JdbcWriter.commit(t, "", "ow1") == (true, 10L))
     assert(tableSums("onewriter_t") == frameSums(df))
   }
 
-  test("the staging writers are ceil(bytes / maxPartitionBytes), never more than the read's partitions") {
-    sql("CREATE TABLE manywriters_t(column_a INT, column_b INT, column_c INT)")
-    val t = target("manywriters_t")
-    val d = Files.createTempDirectory("graft-writers").toString
-    val files = (0 until 4).map { f =>
-      val p = Paths.get(s"$d/part$f.csv")
-      Files.write(p, (0 until 300).map(i => s"$f|$i|${f * 1000 + i}\n").mkString.getBytes)
-      p.toString
+  test("the staging writers are the slots' share of the loads in flight, never more than the read's partitions") {
+    sql("CREATE TABLE sharedwriters_t(column_a INT, column_b INT, column_c INT)")
+    val t = target("sharedwriters_t", truncate = true)
+    JdbcWriter.ensureAuxTables(t, "")
+    val slots = spark.sparkContext.defaultParallelism
+    // (loads in flight besides this one, files read)
+    Seq((0, 5), (1, 5), (0, 2), (2 * slots, 5)).foreach { case (others, files) =>
+      val df = sampleRead(files)
+      val writers = math.min(df.rdd.getNumPartitions, math.max(1, slots / (others + 1)))
+      val id = s"sw-$others-$files"
+      val staged = JdbcWriter.loading(1)(JdbcWriter.loading(others)(
+        tasksOf(JdbcWriter.stage(df, t, "", id))))
+      assert(staged == writers, s"$others other loads, $files files")
+      assert(JdbcWriter.commit(t, "", id) == (true, 2L * files))
+      assert(tableSums("sharedwriters_t") == frameSums(df))
     }
-    val key = "spark.sql.files.maxPartitionBytes"
-    val saved = spark.conf.getOption(key)
-    // a writer per ~2.5 files' bytes: fewer writers than files, more than one
-    val perWriter = files.map(f => Files.size(Paths.get(f))).sum * 2 / 5
-    spark.conf.set(key, perWriter)
-    try {
-      val df = Formats.read(spark, cfg, files, Some(schema))
-      val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
-      val expected = ((bytes + perWriter - 1) / perWriter).toInt
-      val read = df.rdd.getNumPartitions
-      assert(1 < expected && expected < read, s"$expected writers for $read read partitions")
-      JdbcWriter.ensureAuxTables(t, "")
-      assert(tasksOf(JdbcWriter.stage(df, t, "", "mw1")) == expected)
-      assert(JdbcWriter.commit(t, "", "mw1") == (true, 1200L))
-      assert(tableSums("manywriters_t") == frameSums(df))
-    } finally saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  test("loadBatch counts its targets in flight: four targets on four slots stage one writer each") {
+    val tables = (0 until 4).map(i => s"fanwriters_t$i")
+    tables.foreach(n => sql(s"CREATE TABLE $n(column_a INT, column_b INT, column_c INT)"))
+    val c = cfg.copy(targets = tables.map(target(_)))
+    val files = (0 until 5).map(i => s"sample$i.csv")
+    var out: Loader.BatchLoadOutcome = null
+    val staged = tasksOf { out = Loader.loadBatch(spark, c, cmd("fw1", files), root, Some(schema)) }
+    assert(out.status == "complete" && out.results.map(_.rows) == Seq.fill(4)(10L))
+    val slots = spark.sparkContext.defaultParallelism
+    assert(staged == 4 * math.min(sampleRead(5).rdd.getNumPartitions, math.max(1, slots / 4)),
+      "the targets share the slots, not one writer per file each")
+    val expected = frameSums(sampleRead(5))
+    tables.foreach(n => assert(tableSums(n) == expected, n))
   }
 
   test("retry retries a transient failure raised in a task, and only a transient one") {
@@ -440,6 +451,14 @@ class LoaderSpec extends AnyFunSuite {
     })
     assert(permanent == 1, "a non-transient failure is not retried")
     assert(e.getCause.isInstanceOf[java.sql.SQLSyntaxErrorException], e)
+    // a statement cancelled past its timeout used up the load's budget
+    var timedOut = 0
+    val t = intercept[org.apache.spark.SparkException](JdbcWriter.retry() {
+      timedOut += 1
+      failTasks(() => new java.sql.SQLTimeoutException("statement cancelled"))
+    })
+    assert(timedOut == 1, "a timed-out statement is not retried")
+    assert(t.getCause.isInstanceOf[java.sql.SQLTimeoutException], t)
   }
 
   test("manifest JSON matches reference shape (S5)") {
