@@ -1,8 +1,9 @@
 package graft.loader
 
+import java.nio.charset.StandardCharsets.UTF_8
+import java.security.MessageDigest
 import java.sql.{Connection, DriverManager}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 import graft.core.LoadTarget
 
 /** Transactional JDBC load with pre/post hooks and exactly-once commit —
@@ -14,16 +15,18 @@ import graft.core.LoadTarget
   * and Spark may replay `foreachBatch` after failure (SURVEY §7.5.1), so
   * the write is split:
   *
-  *  1. executors append rows (tagged with batch_id) to a staging table in
-  *     parallel — the scalable part. The write opens an equal share of the
-  *     task slots among the target loads in flight, never more connections
-  *     than the read has partitions ([[stagingWriters]]): a batch's targets
-  *     and the pipeline's lanes load at once, and one writer per file each
-  *     would have them contend in the target database;
+  *  1. executors append rows to the batch's own staging table
+  *     ([[stagingTable]]) in parallel — the scalable part. The write opens
+  *     an equal share of the task slots among the target loads in flight,
+  *     never more connections than the read has partitions
+  *     ([[stagingWriters]]): a batch's targets and the pipeline's lanes
+  *     load at once, and one writer per file each would have them contend
+  *     in the target database;
   *  2. one control connection runs the transaction:
-  *     `presql; [truncate]; INSERT INTO target SELECT ... FROM staging
-  *     WHERE batch_id = ?; DELETE staging rows; postsql; commit` guarded
-  *     by a commit-registry insert whose PK makes replays no-ops.
+  *     `presql; [truncate]; INSERT INTO target SELECT ... FROM staging;
+  *     DROP TABLE staging; postsql; commit` guarded by a commit-registry
+  *     insert whose PK makes replays no-ops. The staging table is gone
+  *     exactly when the batch committed.
   *
   * This mirrors the reference's manifest-COPY (server-side set move, not
   * row-by-row through the driver) and adds the idempotence the reference
@@ -34,11 +37,18 @@ object JdbcWriter {
   final case class LoadResult(target: String, ok: Boolean, rows: Long,
                               skipped: Boolean, error: Option[String])
 
-  val BatchIdCol = "graft_batch_id"
-  def stagingTable(target: String): String = target + "_graft_stage"
+  /** The staging table of one (target, batch), in the target's schema:
+    * `<target>_gs_<first 16 hex digits of SHA-256(batchId)>`. A batch id
+    * can come from a caller (`Ops.reloadBatch`), so it never appears in
+    * SQL text; its digest is a plain identifier whatever the id holds.
+    */
+  def stagingTable(target: String, batchId: String): String =
+    target + "_gs_" + MessageDigest.getInstance("SHA-256").digest(batchId.getBytes(UTF_8))
+      .take(8).map(b => f"${b & 0xff}%02x").mkString
+
   val CommitTable = "graft_batch_commits"
 
-  /** The load budget, per statement: every staging purge, staging write
+  /** The load budget, per statement: every staging DDL, staging write
     * and commit statement is cancelled database-side past it (the
     * reference's `statement_timeout`, `index.js:1085-1096`). */
   val StatementTimeoutSecs = 600
@@ -117,6 +127,14 @@ object JdbcWriter {
     }
   }
 
+  /** `f` of each column of `table`, read from an empty query's metadata. */
+  private def targetColumns[T](stmt: java.sql.Statement, table: String)(
+      f: (java.sql.ResultSetMetaData, Int) => T): Seq[T] = {
+    val rs = stmt.executeQuery(s"SELECT * FROM $table WHERE 1=0")
+    try { val md = rs.getMetaData; (1 to md.getColumnCount).map(f(md, _)) }
+    finally rs.close()
+  }
+
   /** A statement cancelled database-side past [[StatementTimeoutSecs]]. */
   private def timedStatement(conn: Connection): java.sql.Statement = {
     val stmt = conn.createStatement()
@@ -124,29 +142,17 @@ object JdbcWriter {
     stmt
   }
 
-  /** Ensure staging + commit-registry tables exist, cloning the target's
-    * column definitions for staging (plus the batch-id tag).
+  /** Ensure the commit-registry table exists. Staging tables belong to
+    * one batch each: [[stage]] creates them and [[commit]] drops them.
     */
   def ensureAuxTables(t: LoadTarget, password: String): Unit =
     withConnection(t, password) { conn =>
-      val stmt = timedStatement(conn)
-      try {
-        if (!tableExists(conn, stagingTable(t.targetTable))) {
-          val rs = stmt.executeQuery(s"SELECT * FROM ${t.targetTable} WHERE 1=0")
-          val md = rs.getMetaData
-          val cols = (1 to md.getColumnCount).map(i => columnDdl(md, i))
-          rs.close()
-          stmt.executeUpdate(
-            s"CREATE TABLE ${stagingTable(t.targetTable)} (" +
-              cols.mkString(", ") + s", $BatchIdCol VARCHAR(128))")
-        }
-        // keyed per (batch, table): one prefix may load several tables
-        // of one database, and each table commits the batch once
-        if (!tableExists(conn, CommitTable)) createRacing(conn, CommitTable,
-          s"CREATE TABLE $CommitTable (batch_id VARCHAR(128) NOT NULL, " +
-            "target_table VARCHAR(128) NOT NULL, committed_at TIMESTAMP, " +
-            "PRIMARY KEY (batch_id, target_table))")
-      } finally stmt.close()
+      // keyed per (batch, table): one prefix may load several tables
+      // of one database, and each table commits the batch once
+      if (!tableExists(conn, CommitTable)) createRacing(conn, CommitTable,
+        s"CREATE TABLE $CommitTable (batch_id VARCHAR(128) NOT NULL, " +
+          "target_table VARCHAR(128) NOT NULL, committed_at TIMESTAMP, " +
+          "PRIMARY KEY (batch_id, target_table))")
     }
 
   /** CREATE that tolerates losing the race to a concurrent creator:
@@ -161,29 +167,52 @@ object JdbcWriter {
   }
 
   /** Stage rows in parallel from executors, through [[stagingWriters]]
-    * connections. Staging appends happen outside the commit transaction,
-    * so a retried load must first purge any rows a previous failed attempt
-    * left for this batchId — without this, a stage-ok/commit-fail/retry
-    * sequence doubles the rows.
+    * connections, into the batch's own [[stagingTable]], created here
+    * from the target's column definitions. Staging happens outside the
+    * commit transaction, so a previous failed attempt of this batch may
+    * have left its table, rows and all: the `CREATE` then fails, and the
+    * table is dropped and created again — without this, a
+    * stage-ok/commit-fail/retry sequence doubles the rows. The common
+    * path does not probe for the table.
     */
   def stage(df: DataFrame, t: LoadTarget, password: String, batchId: String): Unit = {
+    val stg = stagingTable(t.targetTable, batchId)
     withConnection(t, password) { conn =>
-      // batchId can originate from caller input (Ops.reloadBatch) — bind
-      // it, never splice it into SQL text.
-      val s = conn.prepareStatement(
-        s"DELETE FROM ${stagingTable(t.targetTable)} WHERE $BatchIdCol = ?")
-      s.setQueryTimeout(StatementTimeoutSecs)
-      try { s.setString(1, batchId); s.executeUpdate() }
-      finally s.close()
+      val stmt = timedStatement(conn)
+      try {
+        val ddl = s"CREATE TABLE $stg (" +
+          targetColumns(stmt, t.targetTable)(columnDdl).mkString(", ") + ")"
+        try stmt.executeUpdate(ddl)
+        catch { case e: java.sql.SQLException =>
+          try stmt.executeUpdate(s"DROP TABLE $stg")
+          catch { case d: java.sql.SQLException => e.addSuppressed(d); throw e }
+          stmt.executeUpdate(ddl)
+        }
+      } finally stmt.close()
     }
-    val tagged = df.withColumn(BatchIdCol, lit(batchId))
     val props = new java.util.Properties()
     if (t.user.nonEmpty) { props.put("user", t.user); props.put("password", password) }
-    // Spark's JdbcUtils.savePartition sets it on every insert statement;
-    // numPartitions only ever coalesces the read's partitions
-    tagged.write.mode("append").option("queryTimeout", StatementTimeoutSecs)
-      .option("numPartitions", stagingWriters(df))
-      .jdbc(connectUrl(t), stagingTable(t.targetTable), props)
+    // Spark's JdbcUtils.savePartition sets it on every insert statement.
+    // The coalesce is here, not in the `numPartitions` option: for that
+    // option `saveTable` reads `df.rdd.getNumPartitions`, which plans the
+    // file scan a second time and broadcasts its Hadoop configuration
+    // again.
+    df.coalesce(stagingWriters(df)).write.mode("append")
+      .option("queryTimeout", StatementTimeoutSecs)
+      .jdbc(connectUrl(t), stg, props)
+  }
+
+  /** Drop a staging table left behind, if there is one: by a stage whose
+    * batch had committed before, or by a load that gave up. Best effort,
+    * in its own transaction: a `DROP` that fails leaves the table for
+    * the next [[stage]] of that batch to replace.
+    */
+  private def dropLeftover(conn: Connection, stg: String): Unit = {
+    conn.setAutoCommit(true)
+    val stmt = timedStatement(conn)
+    try stmt.executeUpdate(s"DROP TABLE $stg")
+    catch { case _: java.sql.SQLException => () }
+    finally stmt.close()
   }
 
   /** Target loads running in this process: [[Loader.loadBatch]] counts
@@ -203,16 +232,18 @@ object JdbcWriter {
     * partition per file; three concurrent target loads of a 4-file batch
     * then ran 12 writers on 4 slots, and they contended in the target
     * database. A load running alone keeps the read's width, whatever the
-    * batch's size or format; `numPartitions` never widens a read.
+    * batch's size or format; a coalesce never widens a read.
     */
   private[loader] def stagingWriters(df: DataFrame): Int =
     math.max(1, df.sparkSession.sparkContext.defaultParallelism / math.max(1, loadsInFlight.get))
 
   /** The control-connection transaction. Returns (committed?, rowsMoved).
-    * A (batch_id, target_table) already present in the registry ⇒
-    * replay ⇒ clean no-op. A unique violation without that row means a
-    * registry keyed on batch_id alone (created before the composite key)
-    * refused another table's commit: that fails the load, never skips it.
+    * It moves every row of the batch's [[stagingTable]] into the target
+    * and drops the table. A (batch_id, target_table) already present in
+    * the registry ⇒ replay ⇒ clean no-op, besides dropping the table. A
+    * unique violation without that row means a registry keyed on
+    * batch_id alone (created before the composite key) refused another
+    * table's commit: that fails the load, never skips it.
     */
   def commit(t: LoadTarget, password: String, batchId: String): (Boolean, Long) =
     withConnection(t, password) { conn =>
@@ -252,35 +283,23 @@ object JdbcWriter {
             false
         } finally ins.close()
       }
-      val stage = stagingTable(t.targetTable)
-      // the staged rows of this batch go in the commit's transaction, or,
-      // on a replay, on their own: `stage` wrote them before the registry
-      // said the batch was in
-      def dropStaged(): Unit = {
-        val del = prep(s"DELETE FROM $stage WHERE $BatchIdCol = ?")
-        try { del.setString(1, batchId); del.executeUpdate() } finally del.close()
-      }
+      val stg = stagingTable(t.targetTable, batchId)
+      // the staging table goes in the commit's transaction, or, on a
+      // replay, on its own: `stage` made it before the registry said the
+      // batch was in
       if (!fresh) {
-        dropStaged()
-        conn.commit()
+        dropLeftover(conn, stg)
         (false, 0L)
       } else {
         val stmt = timedStatement(conn)
         try {
           t.presql.foreach(stmt.execute)
           if (t.truncateTarget) stmt.executeUpdate(s"DELETE FROM ${t.targetTable}")
-          val targetCols = {
-            val rs = stmt.executeQuery(s"SELECT * FROM ${t.targetTable} WHERE 1=0")
-            val md = rs.getMetaData
-            val cs = (1 to md.getColumnCount).map(md.getColumnName)
-            rs.close(); cs
-          }
-          val colList = t.columnList.map(_.mkString(", ")).getOrElse(targetCols.mkString(", "))
-          val ins = prep(
-            s"INSERT INTO ${t.targetTable} ($colList) " +
-              s"SELECT $colList FROM $stage WHERE $BatchIdCol = ?")
-          val rows = try { ins.setString(1, batchId); ins.executeUpdate() } finally ins.close()
-          dropStaged()
+          val colList = t.columnList.getOrElse(
+            targetColumns(stmt, t.targetTable)(_.getColumnName(_))).mkString(", ")
+          val rows = stmt.executeUpdate(
+            s"INSERT INTO ${t.targetTable} ($colList) SELECT $colList FROM $stg")
+          stmt.executeUpdate(s"DROP TABLE $stg")
           t.postsql.foreach(stmt.execute)
           conn.commit()
           (true, rows.toLong)
@@ -290,7 +309,9 @@ object JdbcWriter {
       }
     }
 
-  /** Full single-target load: stage → transactional commit, with retry. */
+  /** Full single-target load: stage → transactional commit, with retry.
+    * A load that gives up drops its staging table, best effort; `commit`
+    * itself keeps it, since `retry` runs `commit` again against it. */
   def load(df: DataFrame, t: LoadTarget, password: String, batchId: String): LoadResult =
     try {
       ensureAuxTables(t, password)
@@ -299,6 +320,8 @@ object JdbcWriter {
       LoadResult(t.jdbcUrl, ok = true, rows, skipped = !committed, None)
     } catch {
       case scala.util.control.NonFatal(e) =>
+        try withConnection(t, password)(dropLeftover(_, stagingTable(t.targetTable, batchId)))
+        catch { case scala.util.control.NonFatal(_) => () }
         LoadResult(t.jdbcUrl, ok = false, 0L, skipped = false,
           Some(Option(e.getMessage).getOrElse(e.getClass.getName)))
     }

@@ -32,6 +32,17 @@ class LoaderSpec extends AnyFunSuite {
   }
   private def sql(q: String): Unit = sqlAt(dbUrl, q)
   private def queryLong(q: String): Long = queryLongAt(dbUrl, q)
+  /** Names of the tables of `url` that match the `LIKE` pattern `like`
+    * (Derby stores unquoted names in upper case). */
+  private def tablesAt(url: String, like: String): Seq[String] = {
+    val c = DriverManager.getConnection(url)
+    try {
+      val rs = c.getMetaData.getTables(null, null, like, null)
+      try Iterator.continually(rs).takeWhile(_.next()).map(_.getString("TABLE_NAME")).toList
+      finally rs.close()
+    } finally c.close()
+  }
+  private def tables(like: String): Seq[String] = tablesAt(dbUrl, like)
 
   private lazy val root: String = {
     val dir = Files.createTempDirectory("graft-loader").toString
@@ -73,8 +84,8 @@ class LoaderSpec extends AnyFunSuite {
     assert(queryLong("SELECT count(*) FROM lambda_sample") == 8)
     // loaded values are exactly rows 7..30
     assert(queryLong("SELECT sum(column_a)+sum(column_b)+sum(column_c) FROM lambda_sample") == (7 to 30).sum)
-    // staging drained
-    assert(queryLong("SELECT count(*) FROM lambda_sample_graft_stage") == 0)
+    // every batch's staging table dropped
+    assert(tables("LAMBDA_SAMPLE_GS%").isEmpty)
   }
 
   test("replayed batch is a no-op (exactly-once under foreachBatch retry)") {
@@ -85,8 +96,7 @@ class LoaderSpec extends AnyFunSuite {
     val replay = Loader.loadBatch(spark, c, cmd("rb1", Seq("sample0.csv")), root, Some(schema))
     assert(replay.status == "complete" && replay.results.head.skipped)
     assert(queryLong("SELECT count(*) FROM replay_t") == 2)
-    assert(queryLong("SELECT count(*) FROM replay_t_graft_stage") == 0,
-      "the replay's staged rows are dropped")
+    assert(tables("REPLAY_T_GS%").isEmpty, "the replay's staging table is dropped")
   }
 
   test("one batch into two tables of one database: both get their rows; a replay is a no-op for both") {
@@ -98,8 +108,7 @@ class LoaderSpec extends AnyFunSuite {
     val first = Loader.loadBatch(spark, c, cmd("tw1", Seq("sample0.csv")), root, Some(schema))
     assert(first.status == "complete", first.results)
     assert(first.results.forall(r => r.ok && !r.skipped && r.rows == 2), first.results)
-    tables.foreach(t =>
-      assert(queryLongAt(url, s"SELECT count(*) FROM ${t}_graft_stage") == 0, t))
+    tables.foreach(t => assert(tablesAt(url, s"${t.toUpperCase}_GS%").isEmpty, t))
     val replay = Loader.loadBatch(spark, c, cmd("tw1", Seq("sample0.csv")), root, Some(schema))
     assert(replay.status == "complete" && replay.results.forall(_.skipped), replay.results)
     tables.foreach(t => assert(queryLongAt(url, s"SELECT count(*) FROM $t") == 2, t))
@@ -143,11 +152,13 @@ class LoaderSpec extends AnyFunSuite {
     assert(out.status == "error")
     assert(out.results.head.error.isDefined)
     assert(queryLong("SELECT count(*) FROM rollback_t") == 0)
+    assert(tables("ROLLBACK_T_GS%").isEmpty, "the failed load drops its staging table")
     // a later good batch with a new id still loads (registry rolled back too)
     val ok = Loader.loadBatch(spark, c.copy(targets = Seq(target("rollback_t"))),
       cmd("fb2", Seq("sample1.csv")), root, Some(schema))
     assert(ok.status == "complete")
     assert(queryLong("SELECT count(*) FROM rollback_t") == 2)
+    assert(tables("ROLLBACK_T_GS%").isEmpty)
   }
 
   test("an interrupted loadBatch propagates the interrupt instead of an error outcome") {
@@ -430,6 +441,61 @@ class LoaderSpec extends AnyFunSuite {
       "the targets share the slots, not one writer per file each")
     val expected = frameSums(sampleRead(5))
     tables.foreach(n => assert(tableSums(n) == expected, n))
+  }
+
+  test("the staging write plans the batch's read once") {
+    sql("CREATE TABLE oneplan_t(column_a INT, column_b INT, column_c INT)")
+    val t = target("oneplan_t")
+    JdbcWriter.ensureAuxTables(t, "")
+    val sc = spark.sparkContext
+    def nextBroadcastId(): Long = { val b = sc.broadcast(0); try b.id finally b.destroy() }
+    val df = sampleRead(5)
+    assert(df.rdd.getNumPartitions > 1, "the read packs the files into several partitions")
+    val before = nextBroadcastId()
+    // every slot has a load: the write coalesces the read to one writer
+    JdbcWriter.loading(sc.defaultParallelism)(JdbcWriter.stage(df, t, "", "op1"))
+    // each plan of the file scan broadcasts its Hadoop configuration, and
+    // the write's one job its task binary
+    assert(nextBroadcastId() - before - 1 == 2, "one scan plan, one job")
+    assert(JdbcWriter.commit(t, "", "op1") == (true, 10L))
+    assert(tableSums("oneplan_t") == frameSums(df))
+  }
+
+  test("a batch staged twice, as after a failed first attempt, commits its rows once") {
+    sql("CREATE TABLE restage_t(column_a INT, column_b INT, column_c INT)")
+    val t = target("restage_t")
+    val df = sampleRead(3)
+    JdbcWriter.ensureAuxTables(t, "")
+    JdbcWriter.stage(df, t, "", "x")
+    JdbcWriter.stage(df, t, "", "x")
+    assert(JdbcWriter.commit(t, "", "x") == (true, 6L))
+    assert(tableSums("restage_t") == frameSums(df))
+    assert(tables("RESTAGE_T_GS%").isEmpty, "no staging table remains")
+  }
+
+  test("two batches of one target staged before either commits: each commit moves its own rows") {
+    sql("CREATE TABLE twobatch_t(column_a INT, column_b INT, column_c INT)")
+    val t = target("twobatch_t")
+    val (d1, d2) = (sampleRead(1), sampleRead(3))
+    JdbcWriter.ensureAuxTables(t, "")
+    JdbcWriter.stage(d1, t, "", "b1")
+    JdbcWriter.stage(d2, t, "", "b2")
+    assert(JdbcWriter.commit(t, "", "b1") == (true, 2L))
+    assert(tableSums("twobatch_t") == frameSums(d1))
+    assert(JdbcWriter.commit(t, "", "b2") == (true, 6L))
+    assert(tableSums("twobatch_t") == frameSums(d1.union(d2)))
+    assert(tables("TWOBATCH_T_GS%").isEmpty, "no staging table remains")
+  }
+
+  test("stagingTable: one plain identifier per (target, batch), in the target's schema") {
+    val a = JdbcWriter.stagingTable("t", "batch-1")
+    assert(a.matches("t_gs_[0-9a-f]{16}"), a)
+    assert(JdbcWriter.stagingTable("t", "batch-1") == a, "deterministic")
+    assert(JdbcWriter.stagingTable("t", "batch-2") != a)
+    assert(JdbcWriter.stagingTable("sch.t", "batch-1").matches("sch\\.t_gs_[0-9a-f]{16}"))
+    Seq("it's", "a b", "a;b", "x'; DROP TABLE t; --").foreach { id =>
+      assert(JdbcWriter.stagingTable("t", id).matches("t_gs_[0-9a-f]{16}"), id)
+    }
   }
 
   test("retry retries a transient failure raised in a task, and only a transient one") {
