@@ -9,7 +9,7 @@ import graft.ledger.{BatchLedgerEvent, FileLedgerEvent, Ledger}
 import graft.loader.Loader
 import graft.notify.{Notification, Notifier, LogNotifier}
 import graft.sources.{FileEventSource, TickSource}
-import graft.streaming.{Batcher, BatcherState}
+import graft.streaming.{Batcher, BatcherState, LocalCheckpointFileManager}
 
 /** The assembled engine: the reference's full Lambda lifecycle
   * (SURVEY §3.1) as one Structured Streaming query.
@@ -89,6 +89,22 @@ import graft.streaming.{Batcher, BatcherState}
   * the interrupted batch is still `locked` in the ledger, so it runs
   * again on restart — the commit registry makes the JDBC load a no-op and
   * the ledger appends re-run.
+  *
+  * Control files start no process: every trigger writes Structured
+  * Streaming's offset, source and commit logs, and every flush a
+  * manifest and ledger files. Without native Hadoop, Hadoop's local file
+  * system starts a `chmod` for each file and directory it makes and
+  * `FileContext` `readlink`s for each rename, all on the micro-batch
+  * thread. So on `file:` paths the manifests go through
+  * [[graft.core.NioLocalFileSystem]] (as do the ledger's appends and the
+  * tick markers), and [[start]] installs
+  * [[graft.streaming.LocalCheckpointFileManager]] on the session unless
+  * the session already names a checkpoint manager. That setting is
+  * session-wide: every query the session starts afterwards uses it. It is
+  * acceptable because the manager is a drop-in — the same files and
+  * names, the same atomicity, and every non-local path handled by Spark's
+  * own manager — so a checkpoint written under either resumes under the
+  * other.
   */
 object Pipeline {
 
@@ -131,7 +147,10 @@ object Pipeline {
       topicNotifiers: Map[String, Notifier] = Map.empty,
       resolvePassword: Loader.PasswordResolver = identity): StreamingQuery = {
 
+    LocalCheckpointFileManager.install(spark)
     val ledger = new Ledger(spark, settings.ledgerDir)
+    val manifestFs = LocalFiles.checksummed(new org.apache.hadoop.fs.Path(settings.ledgerDir),
+      spark.sparkContext.hadoopConfiguration)
     val ticks = new TickSource(spark, settings.watchRoot,
       Integer.toHexString(settings.checkpointDir.hashCode))
     val now = () => System.currentTimeMillis()
@@ -158,7 +177,7 @@ object Pipeline {
         armAgeTick()
         val cmds = rerun ++ flushes
         Fanout.all(LaneThreadPrefix, lanes(cmds, configs).map(lane => () =>
-          lane.foreach(cmd => runOne(spark, settings, configs, ledger, notifier,
+          lane.foreach(cmd => runOne(spark, settings, configs, ledger, manifestFs, notifier,
             topicNotifiers, resolvePassword, cmd, attempt = 0))))
         rerun = Seq.empty
         ticks.consumed(tickEvents.filter(ticks.owns))
@@ -318,13 +337,13 @@ object Pipeline {
   /** Name prefix of lane threads. */
   private[graft] val LaneThreadPrefix = "graft-lane-"
 
-  /** Through the ledger path's Hadoop `FileSystem`, like the ledger
-    * itself: a URI `ledgerDir` (`file:`, `hdfs:`, …) keeps its manifests
-    * beside its ledger. */
-  private def writeManifest(spark: SparkSession, dir: String, batchId: String,
+  /** Through `fs`, the ledger path's file system ([[LocalFiles.checksummed]]),
+    * like the ledger itself: a URI `ledgerDir` (`file:`, `hdfs:`, …)
+    * keeps its manifests beside its ledger. */
+  private def writeManifest(fs: org.apache.hadoop.fs.FileSystem, dir: String, batchId: String,
                             json: String): String = {
     val p = new org.apache.hadoop.fs.Path(dir, s"$batchId.json")
-    val out = p.getFileSystem(spark.sparkContext.hadoopConfiguration).create(p, true)
+    val out = fs.create(p, true)
     try out.write(json.getBytes(java.nio.charset.StandardCharsets.UTF_8)) finally out.close()
     p.toString
   }
@@ -334,6 +353,7 @@ object Pipeline {
       settings: Settings,
       configs: Map[String, LoadConfig],
       ledger: Ledger,
+      manifestFs: org.apache.hadoop.fs.FileSystem,
       notifier: Notifier,
       topicNotifiers: Map[String, Notifier],
       resolvePassword: Loader.PasswordResolver,
@@ -367,11 +387,11 @@ object Pipeline {
 
     // S5 manifest audit artifact; S12 failed-manifest copy on error
     val manifestJson = Loader.manifestJson(outcome.manifest)
-    val manifestPath = writeManifest(spark,
+    val manifestPath = writeManifest(manifestFs,
       s"${settings.ledgerDir}/manifests", cmd.batchId, manifestJson)
     val failedManifestPath =
       if (outcome.status == "error")
-        Some(writeManifest(spark, s"${settings.ledgerDir}/failed-manifests", cmd.batchId,
+        Some(writeManifest(manifestFs, s"${settings.ledgerDir}/failed-manifests", cmd.batchId,
           manifestJson))
       else None
 
@@ -411,7 +431,7 @@ object Pipeline {
     // T8: failure-driven auto-retry, no SNS hop needed
     if (outcome.status == "error" && !suppressed && attempt < settings.maxAutoReprocess &&
         outcome.results.flatMap(_.error).forall(settings.reprocessSupported)) {
-      runOne(spark, settings, configs, ledger, notifier, topicNotifiers,
+      runOne(spark, settings, configs, ledger, manifestFs, notifier, topicNotifiers,
         resolvePassword, cmd.copy(reason = FlushReason.Manual.name), attempt + 1)
     }
   }

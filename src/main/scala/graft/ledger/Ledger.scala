@@ -38,7 +38,12 @@ import graft.core._
   * the same parquet schema and footer metadata as a Spark write and the
   * log reads back as one table whichever path wrote each file. It is the
   * only code that writes ledger parquet: [[compact]] appends its rows
-  * through it too, then deletes the files they supersede.
+  * through it too, then deletes the files they supersede. On a `file:`
+  * ledger that writer runs over [[graft.core.NioLocalFileSystem]], mapped
+  * on the append's own Hadoop configuration only: the same part files,
+  * `.crc` siblings and modes, without the `chmod` process Hadoop starts
+  * for each file and directory when native Hadoop is missing. Any other
+  * scheme writes through its own file system.
   *
   * Every append carries a monotonic `seq` (single-writer): `lastUpdate`
   * has millisecond grain, and transitions like reprocessing→reprocessed
@@ -128,6 +133,10 @@ class Ledger(spark: SparkSession, dir: String) {
 
   private def fs(p: org.apache.hadoop.fs.Path) =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** Whether the ledger is on a `file:` path: its parquet appends then
+    * write through [[LocalFiles]]' file system, which starts no process. */
+  private val local = LocalFiles.isLocal(new Path(dir), spark.sparkContext.hadoopConfiguration)
 
   /** Hadoop signals most rename failures by returning false, not
     * throwing; an append must abort on it, or its events would be
@@ -232,6 +241,7 @@ class Ledger(spark: SparkSession, dir: String) {
     if (events.nonEmpty) {
       val job = Job.getInstance(spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
         .sessionState.newHadoopConf())
+      if (local) LocalFiles.mapLocalScheme(job.getConfiguration)
       val writers = new ParquetFileFormat().prepareWrite(spark, job, Map.empty, codec.dataSchema)
       val ctx = new TaskAttemptContextImpl(job.getConfiguration, new TaskAttemptID())
       val name = s"part-00000-${java.util.UUID.randomUUID()}.c000${writers.getFileExtension(ctx)}"

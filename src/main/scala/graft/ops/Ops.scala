@@ -249,7 +249,8 @@ class Ops(spark: SparkSession, ledger: Ledger) {
         if (prevBatch.nonEmpty) prev :+ prevBatch else prev)
     }
     ledger.appendFiles(unlinked, at)
-    unlinked.foreach(f => FileEventSource.writeUnlinkMarker(hadoopConf, watchRoot, f.loadFile))
+    val markerFs = FileEventSource.markerFs(hadoopConf, watchRoot)
+    unlinked.foreach(f => FileEventSource.writeUnlinkMarker(markerFs, watchRoot, f.loadFile))
     OpResult(ok = unlinked.nonEmpty,
       s"${unlinked.size} of $listedCount listed files queued for reprocessing under $prefix",
       unlinked.map(_.loadFile))

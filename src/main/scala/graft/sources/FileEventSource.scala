@@ -1,10 +1,10 @@
 package graft.sources
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{ChecksumFileSystem, Path}
+import org.apache.hadoop.fs.{ChecksumFileSystem, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.FileEvent
+import graft.core.{FileEvent, LocalFiles}
 
 /** File-arrival event stream — the Spark replacement for the reference's
   * S3 `ObjectCreated` → Lambda wiring (`/root/reference/index.js:1548-1604`).
@@ -58,20 +58,28 @@ object FileEventSource {
     "t-" + java.net.URLEncoder.encode(loadFile, "UTF-8")
 
   /** Drop the control marker `<watchRoot>/graft-control/<key>` through
-    * the Hadoop `FileSystem` of `watchRoot`. The marker is written under
-    * a hidden name and renamed in: a listing that met it half-written
-    * would record it empty, and an empty file yields no row. It holds one
-    * byte for the same reason — Spark's scan planning drops empty file
-    * splits.
+    * the raw form of `watchRoot`'s file system ([[markerFs]]). The marker
+    * is written under a hidden name and renamed in: a listing that met it
+    * half-written would record it empty, and an empty file yields no row.
+    * It holds one byte for the same reason — Spark's scan planning drops
+    * empty file splits.
     */
-  def writeControlMarker(conf: Configuration, watchRoot: String, key: String): Unit = {
-    val marker = new Path(watchRoot, s"$ControlDir/$key")
-    val hidden = new Path(marker.getParent, s".${marker.getName}")
-    val fs = marker.getFileSystem(conf) match {
+  def writeControlMarker(conf: Configuration, watchRoot: String, key: String): Unit =
+    writeControlMarker(markerFs(conf, watchRoot), watchRoot, key)
+
+  /** The file system control markers under `watchRoot` are written
+    * through: the raw form of [[LocalFiles.checksummed]]. */
+  def markerFs(conf: Configuration, watchRoot: String): FileSystem =
+    LocalFiles.checksummed(new Path(watchRoot), conf) match {
       // a one-byte marker needs no checksum file beside it
       case c: ChecksumFileSystem => c.getRawFileSystem
       case f => f
     }
+
+  /** [[writeControlMarker]] through a file system the caller holds. */
+  def writeControlMarker(fs: FileSystem, watchRoot: String, key: String): Unit = {
+    val marker = new Path(watchRoot, s"$ControlDir/$key")
+    val hidden = new Path(marker.getParent, s".${marker.getName}")
     val out = fs.create(hidden, true)
     try out.write('x') finally out.close()
     if (!fs.rename(hidden, marker))
@@ -83,6 +91,10 @@ object FileEventSource {
   /** Drop the unlink marker of `loadFile` (see [[ControlDir]]). */
   def writeUnlinkMarker(conf: Configuration, watchRoot: String, loadFile: String): Unit =
     writeControlMarker(conf, watchRoot, unlinkKey(loadFile))
+
+  /** [[writeUnlinkMarker]] through a file system the caller holds. */
+  def writeUnlinkMarker(fs: FileSystem, watchRoot: String, loadFile: String): Unit =
+    writeControlMarker(fs, watchRoot, unlinkKey(loadFile))
 
   /** Delete the unlink marker of `loadFile` once a pipeline has consumed
     * it: a fresh checkpoint lists the whole watch root again, and a marker

@@ -25,6 +25,7 @@ final class TickSource(spark: SparkSession, watchRoot: String, owner: String) {
   private val key = s"${FileEventSource.TickKey}$owner/"
   private val conf = spark.sparkContext.hadoopConfiguration
   private val fs = new Path(watchRoot).getFileSystem(conf)
+  private val markerFs = FileEventSource.markerFs(conf, watchRoot)
 
   private val timer = new ScheduledThreadPoolExecutor(1, (r: Runnable) => {
     val t = new Thread(r, "graft-tick")
@@ -44,7 +45,7 @@ final class TickSource(spark: SparkSession, watchRoot: String, owner: String) {
     if (armed.map(_._1) != at || armed.exists(_._1 <= now)) {
       armed.foreach(_._2.cancel(false))
       armed = at.map(t => t -> timer.schedule((() =>
-        FileEventSource.writeControlMarker(conf, watchRoot, s"$key$t-${java.util.UUID.randomUUID()}")
+        FileEventSource.writeControlMarker(markerFs, watchRoot, s"$key$t-${java.util.UUID.randomUUID()}")
       ): Runnable, math.max(0L, t - now), TimeUnit.MILLISECONDS))
     }
 

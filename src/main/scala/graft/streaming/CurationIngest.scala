@@ -190,14 +190,11 @@ object CurationIngest {
     * matches a committed `last_batch`, leaving the plain read.
     */
   def curateBatch(spark: SparkSession, docs: DataFrame,
-                  cfg: Config, batchId: Long): (DataFrame, DataFrame) = {
-    val (labeled, manifest, _) =
-      curateBatchImpl(spark, docs, cfg, batchId, materialize = false)
-    (labeled, manifest)
-  }
+                  cfg: Config, batchId: Long): (DataFrame, DataFrame) =
+    curateBatchImpl(spark, docs, cfg, batchId, pinned = None)
 
-  /** `materialize = true` is [[processBatch]]'s form (r15, from the
-    * drain's stage decomposition, `DRAIN_STAGES_r15.json`): the
+  /** `pinned = Some(buffer)` is [[processBatch]]'s materialized form
+    * (r15, from the drain's stage decomposition, `DRAIN_STAGES_r15.json`): the
     * admission DAG feeds the scrubbed frame into THREE legs (dedup
     * probe, LM score, label join) and the labeled frame into THREE
     * consumers (labeled sink, manifest sink, state commit) — left
@@ -213,18 +210,20 @@ object CurationIngest {
     * This differs from the REJECTED signature pinning
     * ([[commitBatch]]'s recompute-over-materialize note): that saved
     * one cheap codegen'd projection; this saves measured re-executions
-    * of the drain's dominant phase. Ad-hoc/batch callers keep
-    * `materialize = false` — identical rows, zero pinned residue (the
+    * of the drain's dominant phase. Ad-hoc/batch callers pass
+    * `pinned = None` — identical rows, zero pinned residue (the
     * declared-query surface stays cache-clean).
     *
-    * Returns (labeled, manifest, innerFrames): `innerFrames` are the
-    * PRE-checkpoint plans whose leaves carry every block this batch
-    * pinned — the caller's release walk needs them because each
-    * checkpoint truncates the lineage above it.
+    * Returns (labeled, manifest). Each plan whose leaves carry a block
+    * this batch pins goes into `pinned` as soon as it exists, the
+    * PRE-checkpoint plans included — the caller's release walk needs
+    * them because each checkpoint truncates the lineage above it, and
+    * it needs them as built so far when this call throws half-way.
     */
   private[graft] def curateBatchImpl(spark: SparkSession, docs: DataFrame,
       cfg: Config, batchId: Long,
-      materialize: Boolean): (DataFrame, DataFrame, Seq[DataFrame]) = {
+      pinned: Option[scala.collection.mutable.Buffer[DataFrame]]): (DataFrame, DataFrame) = {
+    val materialize = pinned.isDefined
     val model = NgramLM.load(spark, cfg.lmTable)
     val cleaned = docs
       .select(col("doc_id").cast("long").as("doc_id"),
@@ -242,7 +241,9 @@ object CurationIngest {
           .withColumn("__contam", coalesce(col("__contam"), lit(false)))
       case None => cleaned.withColumn("__contam", lit(false))
     }
+    pinned.foreach(_ += flagged0)
     val flagged = if (materialize) flagged0.localCheckpoint() else flagged0
+    pinned.foreach(_ += flagged)
     val probeDocs = flagged.filter(!col("__contam"))
     // SNAPSHOT-BY-WATERMARK (the r11 judge's crash-replay hole): probe
     // only corpus rows from batches the offsets high-water has
@@ -257,6 +258,7 @@ object CurationIngest {
         committedBatch = committed)
       .select(col("new_id").as("doc_id")).distinct()
       .withColumn("__dup", lit(true))
+    pinned.foreach(_ += dupIds) // the probe's checkpointed pair frame
     // empty-after-scrub docs have no grams and no score row: they gate
     // out as drop:quality (coalesce to below any positive cut).
     // Materialized form scores off the checkpointed scrub (same rows —
@@ -278,7 +280,9 @@ object CurationIngest {
           .otherwise(Curation.splitAssign(col("doc_id"))))
       .select(col("doc_id"), col("clean"), col("n_tok"), col("score"),
         col("bucket"))
+    pinned.foreach(_ += labeled0)
     val labeled = if (materialize) labeled0.localCheckpoint() else labeled0
+    pinned.foreach(_ += labeled)
     val admitted = labeled.filter(!col("bucket").startsWith("drop:"))
     // REPLAY-ADJUSTED pack bases: an offset bucket whose last_batch
     // already carries THIS batch (a crash mid-offsets-swap advanced
@@ -306,7 +310,8 @@ object CurationIngest {
       budget = cfg.budget,
       baseOffsets = base,
       slices = cfg.packSlices)
-    (labeled, manifest, if (materialize) Seq(flagged0, labeled0) else Nil)
+    pinned.foreach(_ += manifest) // the sliced pack's checkpointed input
+    (labeled, manifest)
   }
 
   /** Apply a processed batch's state updates — admitted docs append to
@@ -464,15 +469,18 @@ object CurationIngest {
     // materialized labeled rows — the admission chain executes once per
     // batch instead of once per consumer (the drain's measured
     // dominant overhead, DRAIN_STAGES_r15.json)
-    val (labeled, manifest, inner) =
-      curateBatchImpl(spark, batch, cfg, effBatch, materialize = true)
-    // the release walk runs in the FINALLY (r15 ADVICE): a sink write
-    // or commit failure (the lease/provenance refusals, any transient
-    // throw) would otherwise leak this attempt's three localCheckpoint
-    // pins in executor storage until JVM exit — and a long-retrying
-    // stream accumulates one set per attempt. Unpersisting an ABORTED
-    // attempt's checkpoints is safe: the replay recomputes from source.
+    val pinned = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    // the release walk runs in the FINALLY (r15 ADVICE): a curation
+    // throw after the first checkpoint (a missing stored table, an
+    // interrupt), a sink write or commit failure (the lease/provenance
+    // refusals, any transient throw) would otherwise leak this
+    // attempt's localCheckpoint pins in executor storage until JVM
+    // exit — and a long-retrying stream accumulates one set per
+    // attempt. Unpersisting an ABORTED attempt's checkpoints is safe:
+    // the replay recomputes from source.
     try {
+      val (labeled, manifest) =
+        curateBatchImpl(spark, batch, cfg, effBatch, pinned = Some(pinned))
       labeled.write.mode("overwrite").parquet(s"$labeledDir/batch_id=$batchId")
       manifest.write.mode("overwrite").parquet(s"$manifestDir/batch_id=$batchId")
       commitBatch(spark, labeled, batchId, cfg)
@@ -487,12 +495,12 @@ object CurationIngest {
       // unpersist on a never-persisted RDD (a memory-source batch) is a
       // no-op. On success, safe after the commit: nothing recomputes a
       // committed batch's frames.
-      // `inner` (the PRE-checkpoint scrub/labeled plans) must be in the
-      // walk: each checkpoint TRUNCATES the lineage above it — the
-      // labeled checkpoint hides the scrub checkpoint and the dedup
-      // probe's checkpointed pair frame; only the pre-checkpoint plans
-      // still carry those LogicalRDD leaves.
-      (Seq(labeled, manifest) ++ inner)
+      // `pinned` holds the PRE-checkpoint scrub/labeled plans too: each
+      // checkpoint TRUNCATES the lineage above it — the labeled
+      // checkpoint hides the scrub checkpoint and the dedup probe's
+      // checkpointed pair frame; only the pre-checkpoint plans still
+      // carry those LogicalRDD leaves.
+      pinned.toSeq
         .flatMap(_.queryExecution.analyzed.collect {
           case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
         })
@@ -545,6 +553,8 @@ object CurationIngest {
           "NgramLM.fit always carry one")
     }
     graft.operators.WriterLease.acquire(spark, jobCfg.offsetsPath, jobCfg.writerId)
+    // checkpoint files on local paths start no process (see Pipeline)
+    LocalCheckpointFileManager.install(spark)
     val query = try {
       // a crash between upsertBuckets' renames leaves the offsets
       // table refusing reads (StoredMerge's r11 reader contract) —

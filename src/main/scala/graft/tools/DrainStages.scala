@@ -153,8 +153,8 @@ object DrainStages {
       sideN += 1
       val cfg = freshSide(s"old$sideN")
       timed(s"batch_old_shape") {
-        val (labeled0, manifest0, _) = CurationIngest.curateBatchImpl(
-          spark, raw, cfg, 0L, materialize = false)
+        val (labeled0, manifest0) = CurationIngest.curateBatchImpl(
+          spark, raw, cfg, 0L, pinned = None)
         val l = labeled0.localCheckpoint()
         l.write.mode("overwrite").parquet(s"$work/labeled_old/batch_id=0")
         manifest0.write.mode("overwrite").parquet(s"$work/manifest_old/batch_id=0")

@@ -780,10 +780,7 @@ class OperatorsSpec extends AnyFunSuite {
       input.addData(Seq(
         (1L, s"a streamed document that quotes $leaked13 inside its body of words"),
         (2L, "a clean streamed document with entirely original content throughout here")))
-      val deadline = System.currentTimeMillis() + 60000
-      while (spark.table("contam_stream").isEmpty && System.currentTimeMillis() < deadline)
-        Thread.sleep(250)
-      Thread.sleep(1500)
+      q.processAllAvailable()
       val counts = Contamination.contaminationCounts(spark.table("contam_stream"))
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
       assert(counts.toSeq == Seq((1L, 1L, 1L)),

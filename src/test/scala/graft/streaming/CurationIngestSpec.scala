@@ -237,6 +237,22 @@ class CurationIngestSpec extends AnyFunSuite {
       st.map(r => (r.getLong(0), r.getLong(1))).toSet, st.length.toLong)
   }
 
+  test("a batch whose curation throws after its first checkpoint leaves no pinned block behind") {
+    // the dedup table is missing: the scrub checkpoint is pinned, then
+    // the stored-corpus probe throws
+    val cfg = freshState("leak").copy(dedupTable = s"ci_missing_${System.nanoTime()}_dedup")
+    val out = java.nio.file.Files.createTempDirectory("ci_leak").toString
+    val pinnedBefore = spark.sparkContext.getPersistentRDDs.keySet
+    intercept[Exception] {
+      CurationIngest.processBatch(spark, day1.take(4).toDF("doc_id", "text"), 0L, cfg,
+        s"$out/labeled", s"$out/manifest")
+    }
+    assert((spark.sparkContext.getPersistentRDDs.keySet -- pinnedBefore).isEmpty,
+      "a failed batch must release what it pinned: " +
+        (spark.sparkContext.getPersistentRDDs -- pinnedBefore).values
+          .map(r => s"id=${r.id} str=${r.toString}").mkString("; "))
+  }
+
   test("crash at EVERY commit step: the foreachBatch replay reproduces bit-identical sinks, offsets, and corpus") {
     val docs = day1.take(44)
     val (b0, b1) = docs.splitAt(4)

@@ -22,6 +22,19 @@ class StreamingDedupSpec extends AnyFunSuite {
     c
   }
 
+  /** Start a query whose `processAllAvailable()` returns once its input
+    * is drained. These operators use processing-time timeouts, which
+    * make every trigger run a (no-data) batch, and `processAllAvailable()`
+    * waits for a trigger that runs none; so the query starts with
+    * no-data batches off. Its state TTL is a day, so no timeout falls
+    * due while a spec runs and the no-data batches would do nothing. */
+  private def startSettling(w: org.apache.spark.sql.streaming.DataStreamWriter[_])
+      : org.apache.spark.sql.streaming.StreamingQuery = {
+    val key = "spark.sql.streaming.noDataMicroBatches.enabled"
+    spark.conf.set(key, "false")
+    try w.start() finally spark.conf.unset(key) // the query keeps its own copy
+  }
+
   test("exact streaming dedup admits first-seen content, drops replays across batches") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
@@ -100,15 +113,15 @@ class StreamingDedupSpec extends AnyFunSuite {
     val far = Array.fill(64)(rnd.nextGaussian().toFloat)
     val input = MemoryStream[Vec]
     val claims = StreamingDedup.embeddingClaims(spark, input.toDS(), bits = 16, bands = 2)
-    val q = claims.writeStream
-      .format("memory").queryName("sdedup_emb").outputMode("append").start()
+    val q = startSettling(claims.writeStream
+      .format("memory").queryName("sdedup_emb").outputMode("append"))
     try {
       input.addData(Seq(Vec(1, base)))
       assert(awaitCount("sdedup_emb", 2) == 2, "first vector claims both bands")
       // later batch: near-dup collides in every band -> zero claims;
       // far vector claims at least one unseen band
       input.addData(Seq(Vec(2, nearDup), Vec(3, far)))
-      Thread.sleep(3000)
+      q.processAllAvailable()
       val byDoc = spark.table("sdedup_emb").as[Claim].collect()
         .groupBy(_.doc_id).view.mapValues(_.length).toMap
       assert(byDoc(1L) == 2)
@@ -128,8 +141,8 @@ class StreamingDedupSpec extends AnyFunSuite {
       "lambda mu nu xi omicron pi rho sigma tau upsilon"
     val input = MemoryStream[Doc]
     val claims = StreamingDedup.nearDupClaims(spark, input.toDS(), k = 32, bands = 8)
-    val q = claims.writeStream
-      .format("memory").queryName("sdedup_claims").outputMode("append").start()
+    val q = startSettling(claims.writeStream
+      .format("memory").queryName("sdedup_claims").outputMode("append"))
     try {
       input.addData(Seq(Doc(10, base), Doc(11, "completely different words here okay then")))
       assert(awaitCount("sdedup_claims", 16) == 16) // both docs claim all 8 bands
@@ -140,7 +153,7 @@ class StreamingDedupSpec extends AnyFunSuite {
       // a near-duplicate of doc 10 (one word changed) in a later batch:
       // most/all of its bands collide with already-claimed buckets
       input.addData(Seq(Doc(12, base.replace("omicron", "OMICRON"))))
-      Thread.sleep(3000)
+      q.processAllAvailable()
       val claimed12 = spark.table("sdedup_claims").as[Claim].collect()
         .filter(_.doc_id == 12L).length
       assert(claimed12 < 8, s"near-dup claimed $claimed12 bands — should collide on most")
@@ -157,15 +170,15 @@ class StreamingDedupSpec extends AnyFunSuite {
       .toDF("doc_id", "text")
     val initial = StreamingDedup.exactSeedState(corpus, "doc_id", "text", nowMs = 1000L)
     val input = MemoryStream[Doc]
-    val q = StreamingDedup.exactSeeded(spark, input.toDS(), initial)
-      .writeStream.format("memory").queryName("sdedup_seeded").outputMode("append").start()
+    val q = startSettling(StreamingDedup.exactSeeded(spark, input.toDS(), initial)
+      .writeStream.format("memory").queryName("sdedup_seeded").outputMode("append"))
     try {
       // doc 20 replays corpus content the STREAM never saw; 21 is new
       input.addData(Seq(
         Doc(20, "SEEDED corpus document one  "), // normalizes to corpus doc 10
         Doc(21, "genuinely new streaming content")))
       assert(awaitCount("sdedup_seeded", 1) == 1)
-      Thread.sleep(2000)
+      q.processAllAvailable()
       assert(spark.table("sdedup_seeded").as[Admitted].collect().map(_.doc_id).toSet
         == Set(21L), "corpus replay suppressed by seeded state, fresh doc admitted")
     } finally q.stop()
@@ -188,21 +201,18 @@ class StreamingDedupSpec extends AnyFunSuite {
     val input = MemoryStream[Doc]
     val claims = StreamingDedup.nearDupClaimsSeeded(spark, input.toDS(), initial,
       k = 32, bands = 8)
-    val q = claims.writeStream
-      .format("memory").queryName("sdedup_seeded_claims").outputMode("append").start()
+    val q = startSettling(claims.writeStream
+      .format("memory").queryName("sdedup_seeded_claims").outputMode("append"))
     try {
       // near-dup of stored doc 10 + a fresh doc, in the FIRST batch the
       // stream ever processes
       input.addData(Seq(
         Doc(20, base.replace("omicron", "OMICRON")),
         Doc(21, "fresh words never indexed before at all right")))
-      val deadline = System.currentTimeMillis() + 60000
       def admittedNow() = StreamingDedup.admitted(
         spark.table("sdedup_seeded_claims"), bands = 8)
         .collect().map(_.getLong(0)).toSet
-      while (!admittedNow().contains(21L) && System.currentTimeMillis() < deadline)
-        Thread.sleep(250)
-      Thread.sleep(2000)
+      q.processAllAvailable()
       val claimed20 = spark.table("sdedup_seeded_claims").as[Claim].collect()
         .filter(_.doc_id == 20L).length
       assert(claimed20 < 8, s"stored-corpus collision must block bands, claimed $claimed20")
